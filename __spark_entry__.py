@@ -151,21 +151,11 @@ def q_topk(spark, d):
     )
 
 
-def q_distinct(spark, d):
-    return relational.distinct_values(_t(spark, d, "customer"), ["c_mktsegment"])
-
-
 def q_setops(spark, d):
     c = _t(spark, d, "customer")
     rich = c.filter("c_acctbal > 5000").select("c_custkey")
     building = c.filter("c_mktsegment = 'BUILDING'").select("c_custkey")
     return relational.intersect(rich, building)
-
-
-def q_union_names(spark, d):
-    c = _t(spark, d, "customer").select(F.col("c_name").alias("name"))
-    s = _t(spark, d, "supplier").select(F.col("s_name").alias("name"))
-    return relational.union_all(c, s).distinct()
 
 
 def q_window_rank(spark, d):
@@ -204,17 +194,6 @@ def q_rollup(spark, d):
         mode="rollup",
     )
     return out.select("l_returnflag", "l_linestatus", F.round("sum_qty", 2).alias("sum_qty"), "n")
-
-
-def q_cube(spark, d):
-    o = _t(spark, d, "orders")
-    out = relational.aggregate(
-        o,
-        ["o_orderstatus", "o_orderpriority"],
-        [("count", "o_orderkey", "n"), ("sum", "o_totalprice", "sum_price")],
-        mode="cube",
-    )
-    return out.select("o_orderstatus", "o_orderpriority", "n", F.round("sum_price", 2).alias("sum_price"))
 
 
 def q_scalar_funcs(spark, d):
@@ -287,10 +266,6 @@ def q_tumbling_window(spark, d):
     return events.tumbling_window_agg(
         _t(spark, d, "events"), "10 minutes", group_extra=["event_type"]
     )
-
-
-def q_sliding_window(spark, d):
-    return events.sliding_window_agg(_t(spark, d, "events"), "10 minutes", "5 minutes")
 
 
 def q_session_window(spark, d):
@@ -509,12 +484,6 @@ def q_anti_join(spark, d):
     o = _t(spark, d, "orders")
     j = relational.chain_join([c, o], ["c_custkey = o_custkey"], how="left_anti")
     return j.select("c_custkey", "c_name")
-
-
-def q_except(spark, d):
-    c = _t(spark, d, "customer").select("c_custkey")
-    o = _t(spark, d, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return relational.except_(c, o)
 
 
 def q_asof_join(spark, d):
@@ -1245,14 +1214,6 @@ def q_grouping_sets(spark, d):
     )
 
 
-def q_ntile(spark, d):
-    o = _t(spark, d, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
-    keys = [F.desc("o_totalprice"), F.asc("o_orderkey")]
-    out = relational.ranked(o, ["o_orderpriority"], keys, "ntile:4", "quartile")
-    out = relational.ranked(out, ["o_orderpriority"], keys, "dense_rank", "drk")
-    return out.select("o_orderkey", "o_orderpriority", "quartile", "drk")
-
-
 def q_running_sum(spark, d):
     o = _t(spark, d, "orders").select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
     out = relational.running_agg(
@@ -1771,18 +1732,6 @@ LIMIT 20
 """
 
 
-def q_map_props(spark, d):
-    """Map surface (§2.6): JSON → MapType → explode to (key, value) rows —
-    map_keys/map_values/explode over a real fixture column."""
-    ev = _t(spark, d, "events")
-    m = ev.select(
-        "event_id",
-        F.from_json("props", "map<string,int>").alias("pm"),
-    )
-    ex = m.select("event_id", F.explode("pm").alias("prop_key", "prop_val"))
-    return ex.select("event_id", "prop_key", F.col("prop_val").cast("long").alias("prop_val"))
-
-
 def q_latest_per_key(spark, d):
     """Keep-latest-row-per-key (argmax dedup) — the standard CDC/log
     compaction shape: one window, one shuffle on the key."""
@@ -1821,18 +1770,6 @@ def q_minhash_portable(spark, d):
     return dedup.minhash_lsh_candidates_portable(docs)
 
 
-def q_token_histogram(spark, d):
-    """Corpus token-count histogram via width_bucket — the fixed-bucket
-    shape whose shuffle is O(buckets), not O(rows)."""
-    docs = _t(spark, d, "documents")
-    m = docs.select(
-        F.width_bucket(text.token_count("text"), F.lit(0), F.lit(500), F.lit(20)).alias(
-            "bucket"
-        )
-    )
-    return m.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
 def q_length_trim(spark, d):
     """Percentile-trimmed filter (drop the tails outside [p05, p95] of
     n_chars): the scalar-subquery pattern as a broadcast join of a 1-row
@@ -1860,26 +1797,6 @@ def q_topk_per_group(spark, d):
     )
     return relational.top_k_per_group(
         per_user, ["event_type"], [F.desc("n"), F.asc("user_id")], k=5
-    )
-
-
-def q_window_first_last(spark, d):
-    """Analytic window frame surface: first/last/nth value over an explicit
-    unbounded frame."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, d, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.first("event_type").over(w).alias("first_type"),
-        F.last("event_type").over(w).alias("last_type"),
-        F.nth_value("event_type", 2).over(w).alias("second_type"),
     )
 
 
@@ -3105,11 +3022,11 @@ def q_dialect_final(spark, d):
     idiom (the reference's CREATE TABLE carries the ENGINE clause,
     server/server.js:586-589).  The fixture has no duplicate
     (user_id, event_type, ts) triples, so the max-version row is unique
-    and the result hash-deterministic.  Oracle: DuckDB max_by per key."""
-    from clickhouse_flatfile_tool_spark.dialect import (
-        final_tables,
-        translate_clickhouse_sql,
-    )
+    and the result hash-deterministic.  Oracle: DuckDB max_by per key.
+    The DataFrame comes from the SQL endpoints' own statement front end
+    (``api._prepare`` + ``api._select_frame``), so the oracle proves the
+    code ``api.query`` runs, minus its page/collect tail."""
+    from clickhouse_flatfile_tool_spark import api
     from clickhouse_flatfile_tool_spark.operators import mergetree
 
     _t(spark, d, "events").select(
@@ -3127,10 +3044,7 @@ def q_dialect_final(spark, d):
         "round(sum(value), 6) AS sum_latest "
         "FROM mt_events FINAL GROUP BY event_type ORDER BY event_type"
     )
-    # the api.query pre-pass, inlined (driver queries return DataFrames)
-    for t in final_tables(ch_sql):
-        mergetree.final_read(spark, t).createOrReplaceTempView(f"{t}__final")
-    return spark.sql(translate_clickhouse_sql(ch_sql))
+    return api._select_frame(spark, api._prepare(spark, ch_sql))[0]
 
 
 def q_summap_merge(spark, d):
@@ -5529,20 +5443,6 @@ def q_stream_stateful(spark, d):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def q_stream_tws(spark, d):
-    """Spark 4 transformWithStateInPandas custom stateful op (typed
-    ValueState per user) — rows-only; batch equivalence in pytest."""
-    tmp = tempfile.mkdtemp(prefix="cfts_stws_")
-    out_dir, ckpt = os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
-    try:
-        stream = stream_ops.read_event_stream(spark, os.path.join(d, "events.parquet"))
-        result = stream_ops.user_event_stats_tws(stream)
-        stream_ops.run_available_now(result, out_dir, ckpt)
-        return spark.read.parquet(out_dir)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def q_stream_interval_join(spark, d):
     """Watermarked stream-stream join (purchases ⋈ clicks within 10 min by
     user) — rows-only check; the batch twin is event_range_join."""
@@ -6412,8 +6312,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # protobuf exists (tests/test_events_streaming.py::
         # test_user_event_stats_tws); the same per-user aggregation
         # semantics are driver-proven via stream_stateful
-        # (applyInPandasWithState).  q_stream_tws is kept importable so the
-        # pytest variant and external users can still call it.
+        # (applyInPandasWithState).
     }
     # hoist the declared window to the front (dict.update on existing keys
     # keeps head's insertion order, so the remainder follows in base order)
@@ -7038,7 +6937,6 @@ def _logistic_duck_cte(n_iters: int = 8) -> str:
 
 def oracle_sql() -> dict[str, str]:
     tumble = "make_timestamp(CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) * 1000000)"
-    slide5 = "CAST(floor(epoch(ts) / 300) * 300 AS BIGINT)"
     csv_path = _ensure_csv_quoted_fixture()  # oracle reads the same bytes
     out = {
         "csv_quoted": (
@@ -7076,13 +6974,9 @@ def oracle_sql() -> dict[str, str]:
             "SELECT o_orderkey, o_totalprice FROM orders "
             "ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"
         ),
-        "distinct": "SELECT DISTINCT c_mktsegment FROM customer",
         "setops": (
             "SELECT c_custkey FROM customer WHERE c_acctbal > 5000 "
             "INTERSECT SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'"
-        ),
-        "union_names": (
-            "SELECT c_name AS name FROM customer UNION SELECT s_name AS name FROM supplier"
         ),
         "window_rank": (
             "SELECT * FROM (SELECT o_custkey, o_orderkey, o_totalprice, "
@@ -7099,11 +6993,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, "
             "count(l_orderkey) AS n FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"
         ),
-        "cube": (
-            "SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n, "
-            "round(sum(o_totalprice), 2) AS sum_price "
-            "FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)"
-        ),
         "left_join": (
             "SELECT c_custkey, c_name, count(o_orderkey) AS n_orders, "
             "round(coalesce(sum(o_totalprice), 0), 2) AS sum_spend "
@@ -7118,9 +7007,6 @@ def oracle_sql() -> dict[str, str]:
         "anti_join": (
             "SELECT c_custkey, c_name FROM customer "
             "WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"
-        ),
-        "except": (
-            "SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders"
         ),
         "asof_join": (
             "WITH p AS (SELECT event_id, user_id, ts FROM events "
@@ -7152,11 +7038,6 @@ def oracle_sql() -> dict[str, str]:
             "WHERE event_type = 'click') c "
             "ON p.user_id = c.user_id AND c.ep <= p.ep AND p.ep < c.ep + 600000000 "
             "GROUP BY p.event_id"
-        ),
-        "map_props": (
-            "SELECT event_id, 'k' AS prop_key, "
-            "CAST(json_extract(props, '$.k') AS BIGINT) AS prop_val "
-            "FROM events WHERE json_extract(props, '$.k') IS NOT NULL"
         ),
         "latest_per_key": (
             "SELECT user_id, event_id, event_type FROM ("
@@ -7702,12 +7583,6 @@ SELECT doc_id, lang FROM c WHERE cum <= 6000
             "count(l_orderkey) AS n FROM lineitem GROUP BY GROUPING SETS "
             "((l_returnflag, l_linestatus), (l_returnflag), ())"
         ),
-        "ntile": (
-            "SELECT o_orderkey, o_orderpriority, "
-            "ntile(4) OVER w AS quartile, dense_rank() OVER w AS drk "
-            "FROM orders WINDOW w AS "
-            "(PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)"
-        ),
         "running_sum": (
             "SELECT o_custkey, o_orderkey, "
             "round(sum(o_totalprice) OVER (PARTITION BY o_custkey "
@@ -7750,14 +7625,6 @@ SELECT doc_id, lang FROM c WHERE cum <= 6000
             "event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value, "
             "(((sum(round(value * 100))::BIGINT * 200) + count(*)) // (count(*) * 2))::DOUBLE / 10000.0 AS avg_value "
             "FROM events GROUP BY 1, 2, 3"
-        ),
-        "sliding_window": (
-            "WITH b AS ("
-            f"  SELECT make_timestamp({slide5} * 1000000) AS ws, value FROM events"
-            "  UNION ALL "
-            f"  SELECT make_timestamp(({slide5} - 300) * 1000000) AS ws, value FROM events"
-            ") SELECT ws AS window_start, ws + INTERVAL 10 MINUTE AS window_end, "
-            "count(*) AS n_events, round(sum(value), 2) AS sum_value FROM b GROUP BY ws"
         ),
         "session_window": _SESSION_ORACLE,
         # greedy 2-step subsequence: earliest step-1 event, then ANY strictly
@@ -9831,15 +9698,6 @@ FROM ranked WHERE rk <= 5
         "connected_components": _CC_ORACLE,
         "dedup_cc": _CC_DEDUP_ORACLE,
         "minhash_portable": _MINHASH_PORTABLE_ORACLE,
-        "token_histogram": (
-            # DuckDB has no width_bucket; PostgreSQL semantics spelled out:
-            # v>=max -> n+1, else floor(v/step)+1 (min=0, max=500, n=20)
-            "SELECT CASE WHEN t >= 500 THEN 21 "
-            "ELSE CAST(floor(t / 25.0) AS BIGINT) + 1 END AS bucket, "
-            "count(*) AS n_docs FROM ("
-            "SELECT len(str_split_regex(trim(text), '\\s+')) AS t FROM documents"
-            ") GROUP BY 1"
-        ),
         "length_trim": (
             "WITH b AS (SELECT quantile_cont(n_chars, 0.05) AS lo, "
             "quantile_cont(n_chars, 0.95) AS hi FROM documents) "
@@ -9851,14 +9709,6 @@ FROM ranked WHERE rk <= 5
             "SELECT event_type, user_id, count(*) AS n, round(sum(value), 2) AS sum_value, "
             "row_number() OVER (PARTITION BY event_type ORDER BY count(*) DESC, user_id) AS rk "
             "FROM events GROUP BY event_type, user_id) WHERE rk <= 5"
-        ),
-        "window_first_last": (
-            "SELECT user_id, event_id, "
-            "first_value(event_type) OVER w AS first_type, "
-            "last_value(event_type) OVER w AS last_type, "
-            "nth_value(event_type, 2) OVER w AS second_type "
-            "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
         ),
         "cosine_topk": _COSINE_ORACLE,
         "embedding_norm": (

@@ -108,7 +108,6 @@ BENCH_QUERIES = [
     "fuzzy_pairs",
     "any_join",
     "pq_topk",
-    "shared_spans",
     "bm25_rank",
     "hybrid_rrf",
     "ccnet_buckets",

@@ -15,13 +15,23 @@ Responses follow the reference's ``{"success": bool, ...}`` envelope.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_flatfile_tool_spark.operators import relational
+from clickhouse_flatfile_tool_spark.dialect import (
+    bind_parameters,
+    drop_dictionary,
+    drop_join_table,
+    final_tables,
+    register_dictionary,
+    register_join_table,
+    translate_clickhouse_sql,
+)
+from clickhouse_flatfile_tool_spark.operators import mergetree, relational
 from clickhouse_flatfile_tool_spark.progress import ProgressTracker, error_payload
 from clickhouse_flatfile_tool_spark.schema import resolve_csv_schema
 from clickhouse_flatfile_tool_spark.sinks.writers import (
@@ -163,15 +173,25 @@ def explain(spark: SparkSession, sql: str, mode: str = "formatted") -> dict:
     user runs before pointing a query at 100 TB (does the filter push
     down? did the dimension broadcast?).  ClickHouse's own EXPLAIN
     family is the parity surface."""
-    from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql
-    from clickhouse_flatfile_tool_spark.plans import explain_str
-
     try:
-        translated = translate_clickhouse_sql(sql, spark=spark)
-        plan = explain_str(spark.sql(translated), mode=mode)
-        return {"success": True, "translated_sql": translated, "plan": plan}
+        return _explain_prepared(spark, _prepare(spark, sql), mode)
     except Exception as e:  # noqa: BLE001
         return error_payload(e)
+
+
+def _explain_prepared(
+    spark: SparkSession, sql: str, mode: str = "formatted"
+) -> dict:
+    """:func:`explain`'s body for a statement :func:`_prepare` has already
+    seen (``query``'s EXPLAIN route)."""
+    from clickhouse_flatfile_tool_spark.plans import explain_str
+
+    df, translated, _ = _select_frame(spark, sql)
+    return {
+        "success": True,
+        "translated_sql": translated,
+        "plan": explain_str(df, mode=mode),
+    }
 
 
 def joinable_tables(spark: SparkSession) -> dict:
@@ -239,9 +259,6 @@ def _create_materialized_view(
     body (sum/min/max/count states ARE their partial values in the
     Spark analog; ``uniqState`` is an HLL sketch binary).  SummingMerge-
     Tree registers its aggregate aliases as sum columns."""
-    from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql
-    from clickhouse_flatfile_tool_spark.operators import mergetree
-
     states = {
         alias: _STATE_KINDS[kind.lower()]
         for kind, alias in re.findall(
@@ -281,6 +298,48 @@ def _create_materialized_view(
     }
 
 
+def _prepare(
+    spark: SparkSession, sql: str, params: dict | None = None
+) -> str:
+    """The statement front end every SQL endpoint shares (``query`` before
+    any route, ``explain``, ``query_profile``): bind ClickHouse
+    ``{name:Type}`` query parameters (the ``param_p=`` HTTP convention —
+    typed-literal substitution, injection-safe), point the table
+    functions (``file``, ``generateRandom``, ``merge``) and ``system.*``
+    references at session temp views, and materialize ``<t>__final`` for
+    every ``FROM t FINAL`` — the post-merge view from the table's
+    registered engine (ClickHouse's read-time merge, one hash agg per
+    table) that the dialect rewrite points the statement at."""
+    if params:
+        sql = bind_parameters(sql, params)
+    for materialize in (
+        _materialize_file_calls,
+        _materialize_generate_random,
+        _materialize_merge_calls,
+        _materialize_system_tables,
+    ):
+        sql = materialize(spark, sql)
+    for t in final_tables(sql):
+        mergetree.final_read(spark, t).createOrReplaceTempView(f"{t}__final")
+    return sql
+
+
+def _select_frame(
+    spark: SparkSession, sql: str
+) -> tuple[DataFrame, str | None, str | None]:
+    """A prepared query's DataFrame as ``(df, translated SQL, projection
+    used)``.  optimize_use_projections first: a plain grouped aggregate
+    over a table with a matching registered projection reads the cells,
+    not the scan (the rewrite ClickHouse's optimizer does per part; no
+    translated SQL then); otherwise the dialect translation runs on
+    Spark."""
+    routed = _try_projection_route(sql)
+    if routed is not None:
+        return routed[0], None, routed[1]
+    translated = translate_clickhouse_sql(sql, spark=spark)
+    return spark.sql(translated), translated, None
+
+
 def query(
     spark: SparkSession,
     sql: str,
@@ -295,48 +354,10 @@ def query(
     executes on Spark.  Results are page-clamped like ``preview`` so the
     driver never materializes an unbounded result (the reference collects
     everything, SURVEY §2.11)."""
-    from clickhouse_flatfile_tool_spark.dialect import (
-        final_tables,
-        translate_clickhouse_sql,
-    )
-    from clickhouse_flatfile_tool_spark.operators import mergetree
-
     try:
-        if params:
-            # ClickHouse {name:Type} query parameters (the param_p= HTTP
-            # convention) — typed-literal substitution, injection-safe
-            from clickhouse_flatfile_tool_spark.dialect import bind_parameters
-
-            sql = bind_parameters(sql, params)
-        # Table-function materializers run FIRST so every later route
-        # (INSERT bodies, CTAS, INTO OUTFILE, plain SELECTs) sees the
-        # substituted view names.
-        # file('path'[, 'Format']) table function — THE flat-file idiom of
-        # the reference's domain: each call site materializes a temp view
-        # through the matching reader and the statement points at it
-        if re.search(r"(?i)\bfile\s*\(\s*'", sql):
-            sql = _materialize_file_calls(spark, sql)
-        # generateRandom('schema'[, seed]) — CH's synthetic-data table
-        # function (the SQL-native analog of the reference's sample-data
-        # bootstrap): typed deterministic pseudo-random columns over a
-        # lazy range; like CH's, it is unbounded — callers LIMIT
-        if re.search(r"(?i)\bgenerateRandom\s*\(\s*'", sql):
-            sql = _materialize_generate_random(spark, sql)
-        # merge('db', 'name_regex') — CH's union-of-matching-tables
-        # function; '^t\\d+' style patterns union every catalog table
-        # whose name matches (by name, missing columns NULL-filled)
-        if re.search(r"(?i)\bmerge\s*\(\s*'", sql):
-            sql = _materialize_merge_calls(spark, sql)
-        # system tables — ClickHouse clients introspect through SQL
-        # (``SELECT … FROM system.tables``), not a separate API.  The
-        # referenced ones materialize as session temp views from the
-        # Spark catalog (+ the engine registry for the ENGINE column)
-        # and the statement is pointed at them; system.numbers is a lazy
-        # 10^9-row range (CH's is infinite — both rely on LIMIT).
-        if re.search(
-            r"(?i)\bsystem\.(tables|columns|one|numbers|databases|dictionaries)\b", sql
-        ):
-            sql = _materialize_system_tables(spark, sql)
+        # prepared FIRST so every later route (INSERT bodies, CTAS, views,
+        # EXPLAIN, INTO OUTFILE, plain SELECTs) sees the same statement
+        sql = _prepare(spark, sql, params)
         # DDL routing — ClickHouse clients send everything through one
         # endpoint: ADD PROJECTION executes here (it only needs the
         # catalog); mutations/TTL need a storage path, so the error says
@@ -357,10 +378,6 @@ def query(
             sql,
         )
         if vm:
-            from clickhouse_flatfile_tool_spark.dialect import (
-                translate_clickhouse_sql,
-            )
-
             name, body = vm.groups()
             spark.sql(
                 translate_clickhouse_sql(body, spark=spark)
@@ -429,9 +446,10 @@ def query(
         )
         if ex:
             # CH's EXPLAIN variants all answer "what will run" — map AST/
-            # PLAN/PIPELINE/ESTIMATE to the pre-flight /explain endpoint
-            # (formatted physical plan); SYNTAX returns the translated
-            # SQL, CH's rewritten-query semantics
+            # PLAN/PIPELINE/ESTIMATE to the pre-flight /explain body
+            # (formatted physical plan; the statement is already
+            # prepared); SYNTAX returns the translated SQL, CH's
+            # rewritten-query semantics
             if (ex.group(1) or "").upper() == "SYNTAX":
                 return {
                     "success": True,
@@ -443,7 +461,7 @@ def query(
                         }
                     ],
                 }
-            return explain(spark, ex.group(2))
+            return _explain_prepared(spark, ex.group(2))
         if re.match(r"(?is)^\s*USE\s+\w+\s*;?\s*$", sql):
             # single-database session (the reference's `database` param
             # selects one DB per connection) — accept and no-op
@@ -505,10 +523,6 @@ def query(
             # works like CH's dictionary-as-table reads.  LAYOUT/LIFETIME
             # are storage hints with no analog here (Catalyst decides the
             # physical probe) — accepted and ignored.
-            from clickhouse_flatfile_tool_spark.dialect import (
-                register_dictionary,
-            )
-
             ine, dname, cols_s, key_col, src_table = cd.groups()
             if spark.catalog.tableExists(dname):
                 if ine:
@@ -530,8 +544,6 @@ def query(
             sql,
         )
         if dd:
-            from clickhouse_flatfile_tool_spark.dialect import drop_dictionary
-
             existed = drop_dictionary(dd.group(2))
             # only drop the temp view when it really was a registered
             # dictionary — an unconditional drop deleted an unrelated
@@ -569,42 +581,7 @@ def query(
                 raise ValueError(f"table {name!r} already exists")
             df = spark.sql(translate_clickhouse_sql(body, spark=spark))
             df.createOrReplaceTempView(name)
-            from clickhouse_flatfile_tool_spark.operators.mergetree import (
-                _ENGINE_KINDS,
-                register_table_engine,
-            )
-
-            key_cols = [
-                c.strip()
-                for c in (order or "").strip().strip("()").split(",")
-                if c.strip() and c.strip() != "tuple"
-            ]
-            if engine in _ENGINE_KINDS or engine == "MergeTree":
-                ea = [
-                    a.strip() for a in (eargs or "").split(",") if a.strip()
-                ]
-                kw: dict = {}
-                if engine == "ReplacingMergeTree" and ea:
-                    kw["version_cols"] = ea
-                elif engine in (
-                    "CollapsingMergeTree", "VersionedCollapsingMergeTree"
-                ) and ea:
-                    kw["sign_col"] = ea[0]
-                    kw["version_cols"] = ea[1:]
-                elif engine == "SummingMergeTree":
-                    kw["sum_cols"] = ea
-                register_table_engine(name, engine, key_cols, **kw)
-            elif engine == "Join":
-                from clickhouse_flatfile_tool_spark.dialect import (
-                    register_join_table,
-                )
-
-                ja = [a.strip() for a in (eargs or "").split(",") if a.strip()]
-                # Exactly (strictness, kind, key): composite-key tables
-                # stay unregistered so joinGet errors by name instead of
-                # silently resolving on the first key alone.
-                if len(ja) == 3:
-                    register_join_table(name, name, ja[2])
+            _register_engine(name, engine, eargs, order)
             return {
                 "success": True, "table": name, "created": True,
                 "rows": df.count(),
@@ -613,14 +590,8 @@ def query(
             r"(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", sql
         )
         if dt:
-            from clickhouse_flatfile_tool_spark.operators.mergetree import (
-                _ENGINE_REGISTRY,
-            )
-
-            from clickhouse_flatfile_tool_spark.dialect import drop_join_table
-
             existed = spark.catalog.dropTempView(dt.group(2))
-            _ENGINE_REGISTRY.pop(dt.group(2).lower(), None)
+            mergetree._ENGINE_REGISTRY.pop(dt.group(2).lower(), None)
             drop_join_table(dt.group(2))
             if not existed and not dt.group(1):
                 raise ValueError(f"table {dt.group(2)!r} does not exist")
@@ -634,15 +605,11 @@ def query(
             # MergeTree ORDER BY tuple() — the reference's own CREATE,
             # server.js:586-589); Spark's SHOW CREATE rejects temp views
             t = scm.group(1)
-            from clickhouse_flatfile_tool_spark.operators.mergetree import (
-                _ENGINE_REGISTRY,
-            )
-
             cols = ", ".join(
                 f"`{f['name']}` {f['clickhouse_type']}"
                 for f in describe_table(spark, t)
             )
-            eng = _ENGINE_REGISTRY.get(t.lower(), {})
+            eng = mergetree._ENGINE_REGISTRY.get(t.lower(), {})
             engine = eng.get("engine", "MergeTree")
             order = (
                 "(" + ", ".join(eng["key_cols"]) + ")"
@@ -670,17 +637,13 @@ def query(
                 raise ValueError(
                     f"RENAME TABLE: {src!r} is not a registered temp view"
                 )
-            from clickhouse_flatfile_tool_spark.operators.mergetree import (
-                _ENGINE_REGISTRY,
-            )
-
             spark.table(src).createOrReplaceTempView(dst)
             spark.catalog.dropTempView(src)
             # carry the engine semantics (FINAL / OPTIMIZE / SHOW CREATE)
             # across the rename, like DROP/CREATE maintain the registry
-            eng = _ENGINE_REGISTRY.pop(src.lower(), None)
+            eng = mergetree._ENGINE_REGISTRY.pop(src.lower(), None)
             if eng is not None:
-                _ENGINE_REGISTRY[dst.lower()] = eng
+                mergetree._ENGINE_REGISTRY[dst.lower()] = eng
             return {"success": True, "renamed": {src: dst}}
         tm = re.match(
             r"(?is)^\s*TRUNCATE\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*;?\s*$",
@@ -695,25 +658,7 @@ def query(
         sm = re.match(r"(?is)^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", sql)
         if sm:
             return columns(spark, "clickhouse", sm.group(1))
-        # optimize_use_projections: a plain grouped aggregate over a table
-        # with a matching registered projection reads the cells, not the
-        # scan (the rewrite ClickHouse's optimizer does per part)
-        routed = _try_projection_route(sql)
-        used_projection = None
-        if routed is not None:
-            df, used_projection = routed
-            translated = None
-        else:
-            # FROM t FINAL: materialize each table's post-merge view from
-            # its registered engine before the dialect rewrite points the
-            # query at <t>__final (ClickHouse's read-time merge, one hash
-            # agg per table)
-            for t in final_tables(sql):
-                mergetree.final_read(spark, t).createOrReplaceTempView(
-                    f"{t}__final"
-                )
-            translated = translate_clickhouse_sql(sql, spark=spark)
-            df = spark.sql(translated)
+        df, translated, used_projection = _select_frame(spark, sql)
         size = max(1, min(int(page_size), relational.MAX_PAGE_SIZE))
         offset = (max(1, int(page)) - 1) * size
         rows = df.offset(offset).limit(size).collect()
@@ -741,16 +686,11 @@ def _create_table(
     reference's own DDL shape (server.js:586-589): an EMPTY temp view
     with the ClickHouse types mapped through the schema mapper, plus an
     engine-registry entry so ``FROM t FINAL``, ``SHOW CREATE TABLE`` and
-    the mergetree read paths resolve.  Engine args follow CH: Replacing
-    (version[, is_deleted]) → version columns, Collapsing (sign) → sign
-    column, Summing ((cols)) → summed columns.  Column DEFAULT/CODEC
-    clauses are not parsed (api.mutate's ADD COLUMN handles defaults)."""
+    the mergetree read paths resolve (:func:`_register_engine`).  Column
+    DEFAULT/CODEC clauses are not parsed (api.mutate's ADD COLUMN handles
+    defaults)."""
     from pyspark.sql import types as T
 
-    from clickhouse_flatfile_tool_spark.operators.mergetree import (
-        _ENGINE_KINDS,
-        register_table_engine,
-    )
     from clickhouse_flatfile_tool_spark.schema import clickhouse_to_spark
 
     if spark.catalog.tableExists(name):
@@ -768,23 +708,32 @@ def _create_table(
     spark.createDataFrame([], T.StructType(fields)).createOrReplaceTempView(
         name
     )
+    _register_engine(name, engine, engine_args, order_by)
+    return {"success": True, "table": name, "created": True}
+
+
+def _register_engine(
+    name: str, engine: str, engine_args: str | None, order_by: str | None
+) -> None:
+    """The ``ENGINE = X(…) [ORDER BY …]`` clause of both CREATE TABLE
+    forms (explicit columns and AS SELECT): MergeTree-family engines
+    register with the mergetree registry, ``Join`` with the joinGet
+    rewrite.  Engine args follow CH: Replacing (version[, is_deleted]) →
+    version columns, Collapsing (sign[, version]) → sign column, Summing
+    ((cols)) → summed columns."""
     key_cols = [
         c.strip()
         for c in (order_by or "").strip().strip("()").split(",")
         if c.strip() and c.strip() != "tuple"
     ]
-    if engine in _ENGINE_KINDS or engine == "MergeTree":
-        args = [
-            a.strip().strip("()")
-            for a in (engine_args or "").split(",")
-            if a.strip()
-        ]
+    args = [
+        a.strip().strip("()") for a in (engine_args or "").split(",") if a.strip()
+    ]
+    if engine in mergetree._ENGINE_KINDS or engine == "MergeTree":
         kw: dict = {}
         if engine == "ReplacingMergeTree":
-            kw["version_cols"] = args[:1]
             # (ver, is_deleted) soft-delete form keeps both
-            if len(args) == 2:
-                kw["version_cols"] = args
+            kw["version_cols"] = args[:2]
         elif engine in ("CollapsingMergeTree", "VersionedCollapsingMergeTree"):
             if args:
                 kw["sign_col"] = args[0]
@@ -792,22 +741,14 @@ def _create_table(
                 kw["version_cols"] = args[1:]
         elif engine == "SummingMergeTree":
             kw["sum_cols"] = args
-        register_table_engine(name, engine, key_cols, **kw)
+        mergetree.register_table_engine(name, engine, key_cols, **kw)
     elif engine == "Join":
-        # ENGINE = Join(strictness, kind, key[, ...]) — register for the
-        # joinGet rewrite (r6).  Only the first key column routes (CH
-        # joinGet itself takes one probe expression per key; composite
-        # keys pass through unregistered and error by name).
-        from clickhouse_flatfile_tool_spark.dialect import register_join_table
-
-        jargs = [a.strip() for a in (engine_args or "").split(",") if a.strip()]
-        # == 3, not >= 3: a composite-key Join(ANY, LEFT, k1, k2) must NOT
-        # register on k1 alone — a 3-arg joinGet would then probe the wrong
-        # key.  Unregistered composite tables error by name, matching the
-        # documented scope in the comment above.
-        if len(jargs) == 3:
-            register_join_table(name, name, jargs[2])
-    return {"success": True, "table": name, "created": True}
+        # ENGINE = Join(strictness, kind, key) — register for the joinGet
+        # rewrite (r6).  Exactly 3 args: a composite-key Join(ANY, LEFT,
+        # k1, k2) must NOT register on k1 alone (a 3-arg joinGet would
+        # probe the wrong key); it stays unregistered and errors by name.
+        if len(args) == 3:
+            register_join_table(name, name, args[2])
 
 
 def _split_top_level_commas(s: str) -> list[str]:
@@ -837,8 +778,6 @@ def _insert_into_view(
     own rule) and cast column-by-column, NULL-filling unmentioned
     columns.  VALUES bodies parse through ``SELECT * FROM VALUES`` after
     the dialect rewrite, so CH functions work inside tuples."""
-    from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql
-
     if not spark.catalog.tableExists(table):
         raise ValueError(f"INSERT INTO {table}: table does not exist")
     target = spark.table(table)
@@ -906,7 +845,10 @@ def _sub_outside_literals(pat: re.Pattern, repl, sql: str) -> str:
     string literal untouched — the table-function materializers and the
     system-table rewrite must not fire on ``SELECT 'system.one'`` or on a
     literal that merely CONTAINS ``file('x.csv')`` (which would trigger a
-    real file read and corrupt the literal)."""
+    real file read and corrupt the literal).  Without a match the
+    statement comes back unchanged."""
+    if not pat.search(sql):
+        return sql
     spans = _literal_spans(sql)
 
     def guarded(m: re.Match) -> str:
@@ -925,8 +867,6 @@ def _materialize_file_calls(spark: SparkSession, sql: str) -> str:
     ext check, server.js:259-261).  Unknown formats raise the structured
     error upstream.  The view name hashes path+format, so repeated
     references reuse one registration and Catalyst sees one scan."""
-    import hashlib
-
     from clickhouse_flatfile_tool_spark.sources import files as fsrc
 
     pat = re.compile(r"(?i)\bfile\s*\(\s*'([^']+)'\s*(?:,\s*'(\w+)'\s*)?\)")
@@ -981,8 +921,6 @@ def _materialize_generate_random(spark: SparkSession, sql: str) -> str:
     over ~8 years from the epoch of 2020-01-01.  Values are
     engine-specific (CH seeds its own generator) — the contract is the
     SCHEMA and determinism-under-seed, like CH's docs state."""
-    import hashlib as _hl
-
     from clickhouse_flatfile_tool_spark.schema import clickhouse_to_spark
 
     pat = re.compile(
@@ -1020,7 +958,7 @@ def _materialize_generate_random(spark: SparkSession, sql: str) -> str:
             else:
                 expr = f"hex({h})"
             cols.append(f"{expr} AS `{cname}`")
-        name = "genrand__" + _hl.md5(
+        name = "genrand__" + hashlib.md5(
             f"{schema_s}|{seed}".encode()
         ).hexdigest()[:10]
         spark.range(1_000_000_000).selectExpr(
@@ -1037,8 +975,6 @@ def _materialize_merge_calls(spark: SparkSession, sql: str) -> str:
     pattern, with a CH-parity ``_table`` virtual column naming each row's
     source.  Missing columns NULL-fill (allowMissingColumns), matching
     CH's behavior for divergent physical schemas."""
-    import hashlib
-
     pat = re.compile(r"(?i)\bmerge\s*\(\s*'([^']*)'\s*,\s*'([^']+)'\s*\)")
 
     def repl(m: re.Match) -> str:
@@ -1063,89 +999,83 @@ def _materialize_merge_calls(spark: SparkSession, sql: str) -> str:
     return _sub_outside_literals(pat, repl, sql)
 
 
-def _materialize_system_tables(spark: SparkSession, sql: str) -> str:
-    """Build the referenced ``system.*`` views from the session catalog and
-    rewrite the statement to point at them (``system.tables`` →
-    ``system__tables`` — a dot-free name the translator handles like any
-    table).  Shapes follow ClickHouse's commonly-queried columns:
+_SYSTEM_TABLE_PAT = re.compile(
+    r"(?i)\bsystem\.(tables|columns|one|numbers|databases|dictionaries)\b"
+)
 
-    * ``system.tables``: database, name, engine — engine from the
+
+def _materialize_system_tables(spark: SparkSession, sql: str) -> str:
+    """ClickHouse clients introspect through SQL (``SELECT … FROM
+    system.tables``), not a separate API: build each referenced
+    ``system.*`` view from the session catalog and rewrite the statement
+    to point at it (``system.tables`` → ``system__tables`` — a dot-free
+    name the translator handles like any table)."""
+    built: set[str] = set()
+
+    def view(m: re.Match) -> str:
+        name = m.group(1).lower()
+        if name not in built:
+            built.add(name)
+            _system_table(spark, name).createOrReplaceTempView(f"system__{name}")
+        return f"system__{name}"
+
+    return _sub_outside_literals(_SYSTEM_TABLE_PAT, view, sql)
+
+
+def _system_table(spark: SparkSession, name: str) -> DataFrame:
+    """One ``system.*`` table.  Shapes follow ClickHouse's commonly-queried
+    columns:
+
+    * ``tables``: database, name, engine — engine from the
       :mod:`mergetree` registry ('View' for unregistered temp views, the
       reference's own tables default to 'MergeTree' on creation).
-    * ``system.columns``: database, table, name, type (DESCRIBE across
-      every catalog table, CH type names via the schema mapper).
-    * ``system.one``: the 1-row (dummy UInt8 0) table behind bare SELECTs.
-    * ``system.numbers``: lazily generated ascending ``number`` — bounded
-      at 10^9 rows here (ClickHouse's is infinite; both need LIMIT)."""
-    from clickhouse_flatfile_tool_spark.operators.mergetree import (
-        _ENGINE_REGISTRY,
-    )
-
-    sys_pat = re.compile(
-        r"(?i)\bsystem\.(tables|columns|one|numbers|databases|dictionaries)\b"
-    )
-    lit_spans = _literal_spans(sql)
-    wanted = {
-        m.group(1).lower()
-        for m in sys_pat.finditer(sql)
-        if not any(a <= m.start() < b for a, b in lit_spans)
-    }
-    if "tables" in wanted:
+    * ``columns``: database, table, name, type (DESCRIBE across every
+      catalog table, CH type names via the schema mapper).
+    * ``one``: the 1-row (dummy UInt8 0) table behind bare SELECTs.
+    * ``databases``: the catalog's database names.
+    * ``numbers``: lazily generated ascending ``number`` — bounded at
+      10^9 rows here (ClickHouse's is infinite; both need LIMIT).
+    * ``dictionaries``: name, source, key of each CREATE DICTIONARY."""
+    if name == "tables":
         rows = [
             (
                 "default",
                 t,
-                _ENGINE_REGISTRY.get(t.lower(), {}).get("engine", "View"),
+                mergetree._ENGINE_REGISTRY.get(t.lower(), {}).get("engine", "View"),
             )
             for t in list_tables(spark)
         ]
-        spark.createDataFrame(
+        return spark.createDataFrame(
             rows or [("default", "", "")],
             "database string, name string, engine string",
-        ).filter(F.col("name") != "").createOrReplaceTempView(
-            "system__tables"
-        )
-    if "columns" in wanted:
+        ).filter(F.col("name") != "")
+    if name == "columns":
         rows = [
             ("default", t, f["name"], f["clickhouse_type"])
             for t in list_tables(spark)
             for f in describe_table(spark, t)
         ]
-        spark.createDataFrame(
+        return spark.createDataFrame(
             rows or [("default", "", "", "")],
             "database string, table string, name string, type string",
-        ).filter(F.col("table") != "").createOrReplaceTempView(
-            "system__columns"
-        )
-    if "one" in wanted:
-        spark.sql("SELECT CAST(0 AS SMALLINT) AS dummy").createOrReplaceTempView(
-            "system__one"
-        )
-    if "databases" in wanted:
-        spark.createDataFrame(
+        ).filter(F.col("table") != "")
+    if name == "one":
+        return spark.sql("SELECT CAST(0 AS SMALLINT) AS dummy")
+    if name == "databases":
+        return spark.createDataFrame(
             [(db.name,) for db in spark.catalog.listDatabases()]
             or [("default",)],
             "name string",
-        ).createOrReplaceTempView("system__databases")
-    if "numbers" in wanted:
-        spark.range(1_000_000_000).selectExpr(
-            "id AS number"
-        ).createOrReplaceTempView("system__numbers")
-    if "dictionaries" in wanted:
-        from clickhouse_flatfile_tool_spark.dialect import _DICTIONARIES
-
-        rows = [
-            (n, t, k) for n, (t, k) in sorted(_DICTIONARIES.items())
-        ]
-        spark.createDataFrame(
-            rows or [("", "", "")],
-            "name string, source string, key string",
-        ).filter(F.col("name") != "").createOrReplaceTempView(
-            "system__dictionaries"
         )
-    return _sub_outside_literals(
-        sys_pat, lambda m: f"system__{m.group(1).lower()}", sql
-    )
+    if name == "numbers":
+        return spark.range(1_000_000_000).selectExpr("id AS number")
+    from clickhouse_flatfile_tool_spark.dialect import _DICTIONARIES
+
+    rows = [(n, t, k) for n, (t, k) in sorted(_DICTIONARIES.items())]
+    return spark.createDataFrame(
+        rows or [("", "", "")],
+        "name string, source string, key string",
+    ).filter(F.col("name") != "")
 
 
 # per-table projection registries for the projection endpoints (session-
@@ -1283,45 +1213,8 @@ def query_profile(
 
     from pyspark.sql import Observation
 
-    from clickhouse_flatfile_tool_spark.dialect import (
-        bind_parameters,
-        translate_clickhouse_sql,
-    )
-
     try:
-        if params:
-            sql = bind_parameters(sql, params)
-        # Table-function materializers run FIRST so every later route
-        # (INSERT bodies, CTAS, INTO OUTFILE, plain SELECTs) sees the
-        # substituted view names.
-        # file('path'[, 'Format']) table function — THE flat-file idiom of
-        # the reference's domain: each call site materializes a temp view
-        # through the matching reader and the statement points at it
-        if re.search(r"(?i)\bfile\s*\(\s*'", sql):
-            sql = _materialize_file_calls(spark, sql)
-        # generateRandom('schema'[, seed]) — CH's synthetic-data table
-        # function (the SQL-native analog of the reference's sample-data
-        # bootstrap): typed deterministic pseudo-random columns over a
-        # lazy range; like CH's, it is unbounded — callers LIMIT
-        if re.search(r"(?i)\bgenerateRandom\s*\(\s*'", sql):
-            sql = _materialize_generate_random(spark, sql)
-        # merge('db', 'name_regex') — CH's union-of-matching-tables
-        # function; '^t\\d+' style patterns union every catalog table
-        # whose name matches (by name, missing columns NULL-filled)
-        if re.search(r"(?i)\bmerge\s*\(\s*'", sql):
-            sql = _materialize_merge_calls(spark, sql)
-        # system tables — ClickHouse clients introspect through SQL
-        # (``SELECT … FROM system.tables``), not a separate API.  The
-        # referenced ones materialize as session temp views from the
-        # Spark catalog (+ the engine registry for the ENGINE column)
-        # and the statement is pointed at them; system.numbers is a lazy
-        # 10^9-row range (CH's is infinite — both rely on LIMIT).
-        if re.search(
-            r"(?i)\bsystem\.(tables|columns|one|numbers|databases|dictionaries)\b", sql
-        ):
-            sql = _materialize_system_tables(spark, sql)
-        translated = translate_clickhouse_sql(sql, spark=spark)
-        df = spark.sql(translated)
+        df, translated, _ = _select_frame(spark, _prepare(spark, sql, params))
         obs = Observation()
         observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         t0 = _time.time()

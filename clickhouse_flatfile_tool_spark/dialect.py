@@ -4389,9 +4389,10 @@ _FINAL_PAT = re.compile(r"(?i)\b(FROM|JOIN)\s+(\w+)((?:\s+AS\s+\w+)?)\s+FINAL\b"
 
 def _rewrite_final(chunk: str) -> str:
     """``FROM t [AS a] FINAL`` → ``FROM t__final [AS a]``: ClickHouse's
-    read-time merge.  The ``__final`` view is materialized by ``api.query``
-    from the table's registered engine (operators.mergetree.
-    register_table_engine / final_read) before execution; bare
+    read-time merge.  The ``__final`` view is materialized by the SQL
+    endpoints' shared front end (``api._prepare``, behind ``api.query``,
+    ``api.explain`` and ``api.query_profile``) from the table's registered
+    engine (operators.mergetree.register_table_engine / final_read); bare
     ``translate_clickhouse_sql`` callers get the renamed reference and
     Spark's own missing-view error if they skipped registration."""
     return _FINAL_PAT.sub(
@@ -4401,7 +4402,8 @@ def _rewrite_final(chunk: str) -> str:
 
 def final_tables(sql: str) -> list[str]:
     """Table names read with FINAL in ``sql`` (literal-masked scan) — the
-    api.query pre-pass uses this to materialize each ``<t>__final`` view."""
+    SQL endpoints' shared front end (``api._prepare``) uses this to
+    materialize each ``<t>__final`` view."""
     masked = "".join(
         seg for is_lit, seg in _split_literals(sql) if not is_lit
     )

@@ -56,19 +56,6 @@ def exact_dedup_canonical(
 # shingling (shared by MinHash / Jaccard)
 # ---------------------------------------------------------------------------
 
-def word_shingles(text_col: str | Column = "text", n: int = 3) -> Column:
-    """Distinct word n-gram shingle set as an array<string> column —
-    built-in ``transform`` over a sequence of start offsets, JVM-side.
-
-    CAUTION: embedding this directly over a raw text column makes Catalyst
-    re-evaluate the ``split`` per element (O(tokens²) per doc — measured 5×
-    slowdown on the fixture).  Prefer :func:`shingle_postings` /
-    :func:`shingle_sets`, which materialize the words array first.
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return _shingles_from_words(F.split(F.trim(F.lower(c)), r"\s+"), n)
-
-
 def _shingles_from_words(words: Column, n: int) -> Column:
     """Shingle array via n shifted slices zipped together.  The obvious form
     — ``transform(sequence(...), i -> slice(words, i+1, n))`` — re-evaluates

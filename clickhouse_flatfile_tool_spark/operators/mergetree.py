@@ -190,10 +190,11 @@ def mv_refresh(
 #
 # ClickHouse resolves FINAL from the table's engine declaration; Spark has
 # no engine metadata, so the API keeps a small registry mapping table/view
-# names to their merge semantics.  ``api.query`` consults it whenever the
-# incoming SQL contains ``FROM <t> FINAL`` (the everyday ClickHouse idiom
-# for "give me the post-merge state now") and materializes a ``<t>__final``
-# temp view that the dialect rewrite points the query at.
+# names to their merge semantics.  The SQL endpoints' shared front end
+# (``api._prepare``) consults it whenever the incoming SQL contains
+# ``FROM <t> FINAL`` (the everyday ClickHouse idiom for "give me the
+# post-merge state now") and materializes a ``<t>__final`` temp view that
+# the dialect rewrite points the query at.
 
 _ENGINE_REGISTRY: dict[str, dict] = {}
 

@@ -714,3 +714,98 @@ def test_drop_dictionary_if_exists_spares_unrelated_view(spark):
     assert r["success"] and not r["dropped"]
     assert spark.table("not_a_dict").count() == 3
     spark.catalog.dropTempView("not_a_dict")
+
+
+_FRONT_ENDS = {
+    "query": api.query,
+    "explain": api.explain,
+    "query_profile": api.query_profile,
+    "query_explain": lambda spark, sql: api.query(spark, "EXPLAIN " + sql),
+}
+
+
+@pytest.mark.parametrize("endpoint", list(_FRONT_ENDS))
+def test_endpoints_share_one_statement_front_end(spark, tmp_path, endpoint):
+    """query, explain, query_profile and query('EXPLAIN …') prepare a
+    statement the same way: file() reads, system.one, FROM t FINAL on a
+    table registered right here (no earlier query made its __final view)
+    and a projection-routed aggregate all work through every one of them."""
+    run = _FRONT_ENDS[endpoint]
+    csv = tmp_path / "fe.csv"
+    csv.write_text("id,name\n1,a\n2,b\n")
+    t, p = f"fe_final_{endpoint}", f"fe_proj_{endpoint}"
+    assert api.query(
+        spark,
+        f"CREATE TABLE {t} (id Int64, v Float64, ver UInt32) "
+        "ENGINE = ReplacingMergeTree(ver) ORDER BY id",
+    )["success"]
+    api.query(spark, f"INSERT INTO {t} VALUES (1, 10.0, 1), (1, 20.0, 2), (2, 5.0, 1)")
+    spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("b", 4.0)], "g string, v double"
+    ).createOrReplaceTempView(p)
+    api.add_projection(
+        spark, f"ALTER TABLE {p} ADD PROJECTION pg (SELECT g, sum(v) GROUP BY g)"
+    )
+    agg = f"SELECT g, sum(v) AS s FROM {p} GROUP BY g ORDER BY g"
+    expected = {
+        f"SELECT count() AS n FROM file('{csv}')": [{"n": 2}],
+        "SELECT 1 AS a FROM system.one": [{"a": 1}],
+        f"SELECT id, v FROM {t} FINAL ORDER BY id": [
+            {"id": 1, "v": 20.0}, {"id": 2, "v": 5.0},
+        ],
+        agg: [{"g": "a", "s": 3.0}, {"g": "b", "s": 4.0}],
+    }
+    try:
+        for sql, rows in expected.items():
+            out = run(spark, sql)
+            assert out["success"], (sql, out)
+            if endpoint == "query":
+                assert out["data"] == rows, sql
+            elif endpoint == "query_profile":
+                assert out["result_rows"] == len(rows), sql
+            else:
+                assert "Physical Plan" in out["plan"], sql
+        if endpoint == "query_profile":
+            routed = api.query(spark, agg)
+            assert routed["used_projection"] == "pg"
+            assert run(spark, agg)["result_rows"] == len(routed["data"])
+    finally:
+        api._PROJECTION_SETS.pop(p, None)
+        api.query(spark, f"DROP TABLE IF EXISTS {t}")
+
+
+def test_final_inside_view_ctas_insert_and_outfile(spark, tmp_path):
+    """FROM t FINAL inside CREATE VIEW, CTAS, INSERT … SELECT and
+    SELECT … INTO OUTFILE reads the table's current post-merge state,
+    including rows inserted after an earlier FINAL read."""
+    q = lambda s: api.query(spark, s)  # noqa: E731
+    q(
+        "CREATE TABLE fin_src (id Int64, v Float64, ver UInt32) "
+        "ENGINE = ReplacingMergeTree(ver) ORDER BY id"
+    )
+    q("INSERT INTO fin_src VALUES (1, 10.0, 1), (1, 20.0, 2), (2, 5.0, 1)")
+    merged = [{"id": 1, "v": 20.0}, {"id": 2, "v": 5.0}]
+    try:
+        assert q("CREATE VIEW fin_v AS SELECT id, v FROM fin_src FINAL")["success"]
+        assert q("SELECT id, v FROM fin_v ORDER BY id")["data"] == merged
+        r = q(
+            "CREATE TABLE fin_ctas ENGINE = MergeTree() ORDER BY id "
+            "AS SELECT id, v FROM fin_src FINAL"
+        )
+        assert r["success"] and r["rows"] == 2, r
+        q("CREATE TABLE fin_dst (id Int64, v Float64) ENGINE = MergeTree() ORDER BY id")
+        r = q("INSERT INTO fin_dst SELECT id, v FROM fin_src FINAL")
+        assert r["success"] and r["inserted"] == 2, r
+        out = tmp_path / "fin.csv"
+        r = q(f"SELECT id, v FROM fin_src FINAL ORDER BY id INTO OUTFILE '{out}'")
+        assert r["success"] and r["rows"] == 2, r
+        assert out.read_text().splitlines() == ["id,v", "1,20.0", "2,5.0"]
+        # a later insert reaches the next FINAL read: no stale __final view
+        q("INSERT INTO fin_src VALUES (2, 7.0, 2)")
+        assert q("CREATE VIEW fin_v2 AS SELECT id, v FROM fin_src FINAL")["success"]
+        assert q("SELECT v FROM fin_v2 WHERE id = 2")["data"] == [{"v": 7.0}]
+    finally:
+        for t in ("fin_src", "fin_ctas", "fin_dst"):
+            q(f"DROP TABLE IF EXISTS {t}")
+        for v in ("fin_v", "fin_v2"):
+            q(f"DROP VIEW IF EXISTS {v}")
