@@ -2326,7 +2326,7 @@ def q_max_intersections(spark, d):
 
 def q_sequence_match(spark, d):
     """ClickHouse sequenceMatch through the dialect translator
-    (dialect.py::_rewrite_sequence_funcs): per user, does a view precede
+    (dialect.py::_sequence_match_make): per user, does a view precede
     a purchase ((?1).*(?2)) and does view→click→purchase occur in order
     ((?1).*(?2).*(?3)) — a codegen aggregate fold over the per-key
     sequence, clocked by the unique event_id (CH accepts any UInt time
@@ -4070,7 +4070,7 @@ def q_mutual_nn(spark, d):
 
 def q_dialect_funnel(spark, d):
     """ClickHouse ``windowFunnel(W)(ts, c1..ck)`` through the SQL dialect
-    (dialect.py::_rewrite_window_funnel): per user, max funnel level for
+    (dialect.py::_window_funnel_make): per user, max funnel level for
     view→click→purchase within a 24 h window — translated to ONE codegen
     ``aggregate`` fold over the time-sorted events (O(E·k) per key; the
     kept per-level anchor is maximal, so the fold is exact for default
@@ -4090,7 +4090,7 @@ def q_dialect_funnel(spark, d):
 def q_sequence_next_node(spark, d):
     """ClickHouse ``sequenceNextNode(direction, base)(ts, val, base_cond,
     cond1..condK)`` through the SQL dialect
-    (dialect.py::_rewrite_sequence_next_node): per user, the event type
+    (dialect.py::_sequence_next_node_make): per user, the event type
     FOLLOWING the first consecutive view→click pair — CH's next-action
     journey aggregate, rendered as one time-sorted collect_list + pure
     index probes.  Ties on ts break by event value (the struct sort), so
@@ -5017,7 +5017,7 @@ def q_url_funcs(spark, d):
     """ClickHouse URL-function family (domain/protocol/path/queryString/
     fragment/extractURLParameter/topLevelDomain/domainWithoutWWW/
     cutQueryString) through the dialect translator → Spark parse_url parts
-    (dialect.py _WRAPS + _rewrite_extract_url_parameter).  URLs are
+    (dialect.py _WRAPS rows + the extractURLParameter _CALLS row).  URLs are
     synthesized deterministically from documents so the DuckDB oracle can
     re-parse them with anchored regexes."""
     from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql

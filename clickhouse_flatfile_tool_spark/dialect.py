@@ -9,6 +9,14 @@ renames plus a paren-matching rewriter for functions that become a different
 ``date_trunc('day', x)``) — which a flat regex cannot do safely under
 nesting.
 
+One engine, :func:`_rewrite_call`, does every call-shaped rewrite.  It is
+driven by ordered name tables — ``_EARLY_CALLS``, ``_CALLS``,
+``_LITERAL_CALLS`` and ``_WRAPS`` — in which each ClickHouse name has one
+row: a template (arity plus format string) or a ``make`` function for the
+rewrites that need code.  :func:`_translate_once` runs the tables between
+the passes that do more than rewrite calls (clauses, joins, bracket
+syntax, the schema-aware ``empty()`` sites).
+
 Deliberately NOT a SQL parser: translation is name-level, never touches the
 inside of string literals, and unknown functions pass through untouched
 (Spark then errors with its own message).  Known name-level limits:
@@ -18,11 +26,11 @@ SparkSession is passed (``translate_clickhouse_sql(sql, spark=...)`` — the
 ``length()`` form fails analysis, array/map-typed arguments are resolved to
 ``size()`` via analysis feedback, so ClickHouse's array ``empty()`` works
 through the SQL endpoint.  Schema-free translation keeps the documented
-String-only limitation.  Two ClickHouse combinator forms
-ARE handled because they are common in real queries: the ``-If`` suffix
-(``sumIf(x, cond)`` → ``sum(CASE WHEN cond THEN x END)``) and curried
-quantiles (``quantile(0.5)(x)`` → ``percentile(x, 0.5)``).  ``-Array``/
-``-State``/``-Merge`` combinators stay out of scope.
+String-only limitation.  Combinator forms are rows like any other name:
+the ``-If`` suffix (``sumIf(x, cond)`` → ``sum(CASE WHEN cond THEN x
+END)``), curried (parametric) aggregates (``quantile(0.5)(x)`` →
+``percentile(x, 0.5)``) and the ``-Array``/``-Distinct``/``-State``/
+``-Merge``/``-ForEach``/``-OrDefault``/``-Resample`` families.
 
 Bracket syntax is translated too (``_rewrite_array_literals``): ``[1,2,3]``
 literals → ``array(...)`` and — because ClickHouse indexes 1-based while
@@ -33,9 +41,12 @@ convention on both engines.
 
 from __future__ import annotations
 
+import functools
+import math
 import re
 
-# name(x) → prefix + x + suffix, paren-matched
+# name(x) → prefix + x + suffix, the argument text kept as written; run
+# through _rewrite_call after every other table (see _translate_once)
 _WRAPS: list[tuple[str, str, str]] = [
     ("toStartOfMinute", "date_trunc('minute', ", ")"),
     ("toStartOfHour", "date_trunc('hour', ", ")"),
@@ -93,11 +104,7 @@ _WRAPS: list[tuple[str, str, str]] = [
     ("cutFragment", "regexp_replace(", ", '#.*$', '')"),
     ("toYYYYMMDD", "CAST(date_format(", ", 'yyyyMMdd') AS INT)"),
     ("bitNot", "(~(", "))"),
-    # ClickHouse splitByWhitespace drops leading/trailing runs; trim + \s+
-    # split matches that for non-empty input (empty string still yields [''])
-    ("splitByWhitespace", "split(trim(", "), '\\\\s+')"),
     ("base64Decode", "CAST(unbase64(", ") AS STRING)"),
-    ("toRelativeDayNum", "datediff(", ", DATE'1970-01-01')"),
     # arraySum/arrayAvg accumulate in DOUBLE (ClickHouse keeps integer sums
     # integer — cast the result back where exactness matters)
     ("arraySum", "aggregate(", ", CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)"),
@@ -118,8 +125,7 @@ _WRAPS: list[tuple[str, str, str]] = [
     ("SHA256", "unhex(sha2(", ", 256))"),
     ("negate", "(-(", "))"),
     # CH isInfinite is false for NaN (abs(NaN) != inf in IEEE compares,
-    # matching); isFinite is in _rewrite_misc_calls (references its arg
-    # twice)
+    # matching); isFinite is a _CALLS row (references its arg twice)
     ("isInfinite", "(abs(", ") = double('Infinity'))"),
     ("toUUID", "CAST(", " AS STRING)"),
     # batch 19 ------------------------------------------------------------
@@ -199,8 +205,6 @@ _WRAPS: list[tuple[str, str, str]] = [
      "'\\\\?(\\\\s*,\\\\s*\\\\?)+', '?..')"),
     # toNullable is a type-system no-op here (Spark columns are nullable)
     ("toNullable", "(", ")"),
-    # interval constructors (DayTime intervals for sub-month units,
-    # YearMonth for the calendar units — both add to timestamps/dates)
     # batch 17 ------------------------------------------------------------
     # URL depth: CH's "first significant subdomain" rule is exactly
     # com|net|org|co → third-level label, otherwise second-level
@@ -233,14 +237,7 @@ _WRAPS: list[tuple[str, str, str]] = [
      "+ 1288834974657)"),
     ("dateTimeToSnowflake", "shiftleft(unix_millis(", ") - 1288834974657, 22)"),
     ("medianTiming", "approx_percentile(", ", 0.5)"),
-    ("toIntervalSecond", "make_dt_interval(0, 0, 0, ", ")"),
-    ("toIntervalMinute", "make_dt_interval(0, 0, ", ")"),
-    ("toIntervalHour", "make_dt_interval(0, ", ")"),
-    ("toIntervalDay", "make_dt_interval(", ")"),
-    ("toIntervalWeek", "make_dt_interval((", ") * 7)"),
-    ("toIntervalMonth", "make_interval(0, ", ")"),
     ("toIntervalQuarter", "make_interval(0, (", ") * 3)"),
-    ("toIntervalYear", "make_interval(", ")"),
 ]
 
 # same-shape renames (arity and semantics line up)
@@ -269,8 +266,6 @@ _RENAMES: list[tuple[str, str]] = [
     ("groupBitXor", "bit_xor"),
     ("medianExact", "median"),
     # string/array functions with matching arity AND argument order
-    ("positionUTF8", "instr"),      # Spark strings are UTF-8 native
-    ("position", "instr"),          # both (haystack, needle), 1-based
     ("match", "regexp_like"),       # both (haystack, pattern)
     ("has", "array_contains"),      # both (array, elem)
     ("indexOf", "array_position"),  # both (array, elem), 1-based, 0 = absent
@@ -336,6 +331,7 @@ _RENAMES: list[tuple[str, str]] = [
     # \bany\( pattern cannot touch it.)
     ("anyLast", "last"),
     ("any", "first"),
+    ("countIf", "count_if"),  # the -If combinator Spark spells natively
     # Spark strings are UTF-8 native; the UTF8-suffixed CH variants are the
     # same operation
     ("lengthUTF8", "length"),
@@ -388,8 +384,8 @@ _RENAMES: list[tuple[str, str]] = [
     # for space) variants — exactly CH's *FormComponent pair
     ("encodeURLFormComponent", "url_encode"),
     ("decodeURLFormComponent", "url_decode"),
-    # batch 24: algebraic aggregates ARE their own state (see
-    # _rewrite_batch24_calls docstring); merging count states sums them
+    # algebraic aggregates ARE their own state (see the -State/-Merge
+    # _CALLS rows); merging count states sums them
     ("sumState", "sum"),
     ("sumMerge", "sum"),
     ("sumSimpleState", "sum"),
@@ -529,6 +525,9 @@ _ZERO_ARG: list[tuple[str, str]] = [
     # (the typeof stance); this engine reports a fixed host/uptime
     ("hostName()", "'localhost'"),
     ("uptime()", "CAST(0 AS BIGINT)"),
+    # engine-random (values never comparable; pytest range checks)
+    ("rand32()", "CAST(floor(rand() * 4294967296) AS BIGINT)"),
+    ("rand64()", "CAST(floor(rand() * 9223372036854775807) AS BIGINT)"),
 ]
 
 
@@ -623,25 +622,6 @@ def _split_literals(sql: str) -> list[tuple[bool, str]]:
     return out
 
 
-def _wrap(chunk: str, name: str, prefix: str, suffix: str) -> str:
-    """Rewrite every ``name(<args>)`` to ``prefix<args>suffix``, matching the
-    close paren through arbitrary nesting."""
-    pat = re.compile(r"\b" + name + r"\(")
-    m = pat.search(chunk)
-    while m:
-        depth, j = 1, m.end()
-        while j < len(chunk) and depth:
-            if chunk[j] == "(":
-                depth += 1
-            elif chunk[j] == ")":
-                depth -= 1
-            j += 1
-        inner = chunk[m.end() : j - 1]
-        chunk = chunk[: m.start()] + prefix + inner + suffix + chunk[j:]
-        m = pat.search(chunk, m.start() + len(prefix))
-    return chunk
-
-
 def _match_paren(chunk: str, start: int) -> int:
     """Index just past the ``)`` closing the ``(`` at ``start``."""
     depth, j = 1, start + 1
@@ -673,16 +653,6 @@ def _split_top_comma(args: str) -> list[str]:
     return parts
 
 
-# ClickHouse -If combinator → conditional aggregate.  countIf is 1-arg
-# (count_if exists in Spark); the rest are (expr, cond) 2-arg forms.
-_IF_COMBINATORS = {
-    "sumIf": "sum",
-    "avgIf": "avg",
-    "minIf": "min",
-    "maxIf": "max",
-}
-
-
 # Ceiling on a statement chunk's size after any single rewrite splice.
 # Rewrite templates that splice an argument at MULTIPLE sites grow
 # multiplicatively under self-nesting — reinterpretAsUInt64 ∘
@@ -709,11 +679,28 @@ _REWRITE_GROWTH_FACTOR = 8
 _TRANSLATE_ENTRY_LEN = 0
 
 
-def _rewrite_call(chunk: str, name: str, make) -> str:
-    """Shared scaffolding for every call-shaped rewrite: find ``name(…)``,
-    split its top-level arguments, and replace the call with
-    ``make(args)`` — ``make`` returns ``None`` to leave a call untouched
-    (malformed arity passes through for Spark to error on by name).
+@functools.lru_cache(maxsize=None)
+def _call_pat(name: str) -> re.Pattern:
+    """``\\bname\\(``, compiled once per name (the call tables hold ~570
+    names — more than ``re``'s own 512-pattern cache)."""
+    return re.compile(r"\b" + name + r"\(")
+
+
+_OVER_PAT = re.compile(r"\s*OVER\s*(\(|\w+)", re.IGNORECASE)
+
+
+def _rewrite_call(chunk: str, name: str, make, form: str = "args") -> str:
+    """The one call-rewrite engine: find ``name(…)``, hand its arguments
+    to ``make`` and replace the call with the result — ``make`` returns
+    ``None`` to leave a call untouched (malformed arity passes through for
+    Spark to error on by name).  ``form`` says what ``make`` receives:
+
+    * ``"args"`` — the top-level arguments, split and stripped;
+    * ``"raw"`` — the argument text exactly as written;
+    * ``"curried"`` — ``name(params)(args)`` as two raw texts; ``args`` is
+      ``None`` for a plain ``name(params)`` call;
+    * ``"over"`` — the split arguments plus the ``OVER (…)``/``OVER w``
+      text that must follow the call (no OVER: the call is left alone).
 
     Matches are processed INNERMOST-FIRST: nested calls start later in the
     text, so the last non-skipped match can contain no nested occurrence,
@@ -723,7 +710,9 @@ def _rewrite_call(chunk: str, name: str, make) -> str:
     terminates.  Every splice is checked against ``_MAX_REWRITE_CHARS`` —
     a template whose expansion multiplies under nesting fails loudly here,
     at translate time, with the offender's name."""
-    pat = re.compile(r"\b" + name + r"\(")
+    if name + "(" not in chunk:
+        return chunk
+    pat = _call_pat(name)
     skipped: set[int] = set()
     while True:
         matches = [m for m in pat.finditer(chunk) if m.start() not in skipped]
@@ -731,7 +720,30 @@ def _rewrite_call(chunk: str, name: str, make) -> str:
             return chunk
         m = matches[-1]
         end = _match_paren(chunk, m.end() - 1)
-        repl = make(_split_top_comma(chunk[m.end() : end - 1]))
+        inner = chunk[m.end() : end - 1]
+        if form == "raw":
+            repl = make(inner)
+        elif form == "curried":
+            if end < len(chunk) and chunk[end] == "(":
+                x_end = _match_paren(chunk, end)
+                repl = make(inner, chunk[end + 1 : x_end - 1])
+                end = x_end
+            else:
+                repl = make(inner, None)
+        elif form == "over":
+            ov = _OVER_PAT.match(chunk, end)
+            repl = None
+            if ov:
+                ov_end = (
+                    _match_paren(chunk, ov.end() - 1)
+                    if ov.group(1) == "("
+                    else ov.end()
+                )
+                repl = make(_split_top_comma(inner), chunk[end:ov_end])
+                if repl is not None:
+                    end = ov_end
+        else:
+            repl = make(_split_top_comma(inner))
         if repl is None:
             skipped.add(m.start())
             continue
@@ -753,162 +765,58 @@ def _rewrite_call(chunk: str, name: str, make) -> str:
                    for s in skipped if s < m.start() or s >= end}
 
 
-def _rewrite_int_div(chunk: str) -> str:
-    """``intDiv(a, b)`` → floor division on longs.  ClickHouse intDiv rounds
-    toward -inf; Spark's ``DIV`` truncates toward zero, so a sign/remainder
-    correction subtracts 1 when the signs differ and the division is inexact.
-    Stays in 64-bit integer arithmetic end-to-end — ``FLOOR((a)/(b))`` over
-    double division diverges from true integer division once the operands
-    pass 2^53.  Operands are cast to BIGINT first (matching ClickHouse,
-    which defines intDiv on integers).  The template references each
-    argument 3× (DIV, remainder test, sign test), so a non-deterministic
-    argument (``rand()``) would be evaluated per reference; ClickHouse SQL
-    users don't write that, and a subquery can't be spliced textually."""
-
-    def make(args):
-        if len(args) != 2:
-            return None
-        a = f"CAST({args[0]} AS BIGINT)"
-        b = f"CAST({args[1]} AS BIGINT)"
-        return (
-            f"(({a} DIV {b}) + (CASE WHEN ({a} % {b}) != 0 "
-            f"AND (({a} < 0) != ({b} < 0)) THEN -1 ELSE 0 END))"
-        )
-
-    return _rewrite_call(chunk, "intDiv", make)
+def _curried(make):
+    """Mark ``make(params, args)`` for the ``"curried"`` form."""
+    make.form = "curried"
+    return make
 
 
-def _rewrite_if_combinators(chunk: str) -> str:
-    chunk = re.sub(r"\bcountIf\(", "count_if(", chunk)
-    # (template, needs_distinct) — the CASE makes non-matching rows NULL,
-    # which every aggregate here ignores; anyIf needs an explicit
-    # ignore-nulls first_value, uniqIf a DISTINCT over the CASE
-    shapes = {
-        **{src: f"{agg}(CASE WHEN {{cond}} THEN {{expr}} END)"
-           for src, agg in _IF_COMBINATORS.items()},
-        "anyIf": "first_value(CASE WHEN {cond} THEN {expr} END, true)",
-        "uniqIf": "count(DISTINCT CASE WHEN {cond} THEN {expr} END)",
-        "uniqExactIf": "count(DISTINCT CASE WHEN {cond} THEN {expr} END)",
-        # r6: the CASE nulls out non-matching rows; percentile and
-        # collect_list both ignore NULLs, so the conditional forms
-        # compose the same way as sum/avg
-        "medianIf": "percentile(CASE WHEN {cond} THEN {expr} END, 0.5)",
-        "medianExactIf": "percentile(CASE WHEN {cond} THEN {expr} END, 0.5)",
-        "groupArrayIf": "collect_list(CASE WHEN {cond} THEN {expr} END)",
-        "groupUniqArrayIf": (
-            "array_distinct(collect_list(CASE WHEN {cond} THEN {expr} END))"
-        ),
-    }
-    # two-argument aggregates: BOTH args null out on a false condition
-    # (max_by/min_by ignore rows whose ordering value is NULL)
-    def arg_if(fn):
-        def make(args):
-            if len(args) != 3:
-                return None
-            a, b, cond = args
-            return (
-                f"{fn}(CASE WHEN {cond} THEN {a} END, "
-                f"CASE WHEN {cond} THEN {b} END)"
-            )
-        return make
+def _over(make):
+    """Mark ``make(args, over)`` for the ``"over"`` form."""
+    make.form = "over"
+    return make
 
-    chunk = _rewrite_call(chunk, "argMaxIf", arg_if("max_by"))
-    chunk = _rewrite_call(chunk, "argMinIf", arg_if("min_by"))
 
-    for src, template in shapes.items():
-        pat = re.compile(r"\b" + src + r"\(")
-        m = pat.search(chunk)
-        while m:
-            end = _match_paren(chunk, m.end() - 1)
-            args = _split_top_comma(chunk[m.end() : end - 1])
-            if len(args) == 2:
-                expr, cond = args
-                repl = template.format(cond=cond, expr=expr)
-                chunk = chunk[: m.start()] + repl + chunk[end:]
-                m = pat.search(chunk, m.start() + len(repl))
-            else:  # malformed arity: leave for Spark to error on
-                m = pat.search(chunk, end)
+def _raw(make):
+    """Mark ``make(text)`` for the ``"raw"`` form."""
+    make.form = "raw"
+    return make
+
+
+def _template(arity, template):
+    """``template.format(*args)`` when the call has ``arity`` arguments."""
+    return lambda args: template.format(*args) if len(args) == arity else None
+
+
+def _table(rows) -> list[tuple[str, object, str]]:
+    """Normalize call-table rows to ``(name, make, form)``.  A row is
+    ``(name, make)`` — a function, its form set by ``_curried``/``_over``/
+    ``_raw`` — or ``(name, (arity, template))`` (:func:`_template`)."""
+    out = []
+    for name, rewrite in rows:
+        make = _template(*rewrite) if isinstance(rewrite, tuple) else rewrite
+        out.append((name, make, getattr(make, "form", "args")))
+    return out
+
+
+def _apply_calls(chunk: str, table) -> str:
+    """Run every table row through :func:`_rewrite_call`, in order."""
+    for name, make, form in table:
+        chunk = _rewrite_call(chunk, name, make, form)
     return chunk
 
 
-def _rewrite_multi_if(chunk: str) -> str:
-    """``multiIf(c1, v1, c2, v2, …, else)`` → a CASE WHEN chain (odd arity:
-    condition/value pairs plus the final else)."""
-
-    def make(args):
-        if len(args) >= 3 and len(args) % 2 == 1:
-            whens = " ".join(
-                f"WHEN {args[i]} THEN {args[i + 1]}"
-                for i in range(0, len(args) - 1, 2)
-            )
-            return f"(CASE {whens} ELSE {args[-1]} END)"
-        return None
-
-    return _rewrite_call(chunk, "multiIf", make)
+def _wrap_make(prefix: str, suffix: str):
+    return _raw(lambda text: prefix + text + suffix)
 
 
-def _rewrite_split_by_char(chunk: str) -> str:
-    """``splitByChar(sep, s)`` / ``splitByString(sep, s)`` → ``split(s,
-    sep)`` with the separator wrapped in ``\\Q…\\E`` so Spark's regex
-    ``split`` treats it literally (ClickHouse splits on the raw string —
-    a '.' or '|' separator must not become a regex)."""
-
-    def make(args):
-        if len(args) != 2:
-            return None
-        sep, s = args
-        return f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))"
-
-    for name in ("splitByChar", "splitByString"):
-        chunk = _rewrite_call(chunk, name, make)
-
-    def regexp_make(args):
-        # splitByRegexp keeps the pattern AS a regex (arg order swaps)
-        if len(args) != 2:
-            return None
-        return f"split({args[1]}, {args[0]})"
-
-    chunk = _rewrite_call(chunk, "splitByRegexp", regexp_make)
-
-    def alpha_make(args):
-        # alphaTokens: maximal a-zA-Z runs; splitting leaves '' stubs at
-        # the edges, filtered out to match CH.  \P{Alpha} (ASCII, Java
-        # regex) instead of a [^...] class — generated brackets would be
-        # re-parsed as a CH array literal by a later rewrite stage
-        if len(args) != 1:
-            return None
-        return (
-            f"filter(split({args[0]}, '\\\\P{{Alpha}}+'), __t -> __t != '')"
-        )
-
-    return _rewrite_call(chunk, "alphaTokens", alpha_make)
-
-
-def _rewrite_array_string_concat(chunk: str) -> str:
-    """``arrayStringConcat(arr[, sep])`` → ``array_join(arr, sep)`` (Spark
-    requires the separator; ClickHouse defaults to '')."""
-
-    def make(args):
-        if len(args) == 1:
-            return f"array_join({args[0]}, '')"
-        if len(args) == 2:
-            return f"array_join({args[0]}, {args[1]})"
-        return None
-
-    return _rewrite_call(chunk, "arrayStringConcat", make)
-
-
-# ClickHouse higher-order array functions put the LAMBDA FIRST
-# (arrayMap(x -> e, arr)); Spark puts the array first (transform(arr,
-# x -> e)).  Same lambda syntax (`->`) on both sides, so only the argument
-# order moves.  Two-array arrayMap (ClickHouse zips the arrays) maps to
-# Spark's zip_with.
-_LAMBDA_FNS = {
-    "arrayMap": "transform",
-    "arrayFilter": "filter",
-    "arrayExists": "exists",
-    "arrayAll": "forall",
-}
+# _WRAPS in table form (raw argument text, so any arity keeps its text)
+# and _RENAMES as patterns compiled once; both run last, in finish()
+_WRAP_CALLS = _table((name, _wrap_make(p, s)) for name, p, s in _WRAPS)
+_RENAME_PATS = [
+    (re.compile(r"\b" + src + r"\("), dst + "(") for src, dst in _RENAMES
+]
+_COUNT_STAR_PAT = re.compile(r"\bcount\(\s*\)", re.IGNORECASE)
 
 
 # ClickHouse formatDateTime %-codes → Java SimpleDateFormat-style patterns
@@ -926,576 +834,737 @@ _DATEDIFF_UNITS = {
 }
 
 
-def _rewrite_literal_aware(chunk: str, literals: list[str]) -> str:
-    """Rewrites that must read/transform a string-literal argument (which is
-    masked as \\x00i\\x00 at this stage): the callback resolves the mask via
-    ``literals`` and may append a NEW literal for the replacement.
+class _Literals:
+    """A statement's masked string literals, as the literal-aware rewrites
+    see them: ``resolve`` reads a masked (``\\x00i\\x00``) argument back,
+    ``new`` appends a literal for a replacement and returns its mask."""
 
-    * ``formatDateTime(x, '%Y-%m-%d')`` → ``date_format(x, 'yyyy-MM-dd')``
-      (`_CH_FMT` code table).
-    * ``dateDiff('day', a, b)`` / ``date_diff`` → ``timestampdiff(DAY, a,
-      b)`` — the unit moves from a string literal to a keyword.
-    """
-    lit_pat = re.compile("^\x00(\\d+)\x00$")
+    _MASK = re.compile("^\x00(\\d+)\x00$")
 
-    def resolve(arg):
-        m = lit_pat.match(arg.strip())
-        return literals[int(m.group(1))] if m else None
+    def __init__(self, literals: list[str]):
+        self.literals = literals
 
-    def new_lit(value: str) -> str:
+    def resolve(self, arg: str) -> str | None:
+        m = self._MASK.match(arg.strip())
+        return self.literals[int(m.group(1))] if m else None
+
+    def new(self, value: str) -> str:
         # literals are stored in SOURCE form (the final restore wraps with
         # bare quotes, no escaping), so embedded quotes must be doubled here
-        literals.append(value.replace("'", "''"))
-        return f"\x00{len(literals) - 1}\x00"
+        self.literals.append(value.replace("'", "''"))
+        return f"\x00{len(self.literals) - 1}\x00"
 
-    def fmt_to_java(fmt: str) -> str:
-        # ClickHouse treats every non-% character as a LITERAL; Java
-        # patterns treat letters as pattern codes — so literal runs that
-        # contain letters must be single-quoted ('T' in ISO-8601, 'h' in
-        # '%Hh'), with embedded quotes doubled.  Unknown %-codes keep
-        # their raw text but are quoted too, never silently reinterpreted.
-        parts = []  # (text, is_literal); adjacent literals merge so the
-        # Java quoting below emits ONE '...' run (adjacent quoted runs
-        # would read as an escaped quote)
-        for tok in re.findall("%.|%|[^%]+", fmt):
-            if tok.startswith("%") and tok in _CH_FMT and tok != "%%":
-                parts.append((_CH_FMT[tok], False))
-            else:
-                text_seg = _CH_FMT[tok] if tok == "%%" else tok
-                if parts and parts[-1][1]:
-                    parts[-1] = (parts[-1][0] + text_seg, True)
-                else:
-                    parts.append((text_seg, True))
-        out = []
-        for text_seg, is_literal in parts:
-            if is_literal and re.search("[A-Za-z']", text_seg):
-                out.append("'" + text_seg.replace("'", "''") + "'")
-            else:
-                out.append(text_seg)
-        return "".join(out)
 
-    def fmt_make(args):
+def _fmt_to_java(fmt: str) -> str:
+    # ClickHouse treats every non-% character as a LITERAL; Java patterns
+    # treat letters as pattern codes — so literal runs that contain letters
+    # must be single-quoted ('T' in ISO-8601, 'h' in '%Hh'), with embedded
+    # quotes doubled.  Unknown %-codes keep their raw text but are quoted
+    # too, never silently reinterpreted.
+    parts = []  # (text, is_literal); adjacent literals merge so the
+    # Java quoting below emits ONE '...' run (adjacent quoted runs would
+    # read as an escaped quote)
+    for tok in re.findall("%.|%|[^%]+", fmt):
+        if tok.startswith("%") and tok in _CH_FMT and tok != "%%":
+            parts.append((_CH_FMT[tok], False))
+        else:
+            text_seg = _CH_FMT[tok] if tok == "%%" else tok
+            if parts and parts[-1][1]:
+                parts[-1] = (parts[-1][0] + text_seg, True)
+            else:
+                parts.append((text_seg, True))
+    out = []
+    for text_seg, is_literal in parts:
+        if is_literal and re.search("[A-Za-z']", text_seg):
+            out.append("'" + text_seg.replace("'", "''") + "'")
+        else:
+            out.append(text_seg)
+    return "".join(out)
+
+
+def _format_date_time_make(args, lits):
+    # formatDateTime(x, '%Y-%m-%d') → date_format(x, 'yyyy-MM-dd')
+    # (_CH_FMT code table)
+    if len(args) != 2:
+        return None
+    fmt = lits.resolve(args[1])
+    if fmt is None:
+        return None
+    return f"date_format({args[0]}, {lits.new(_fmt_to_java(fmt))})"
+
+
+def _parse_date_time_make(try_form: bool):
+    # parseDateTime(s, '%Y-%m-%d…') — the MySQL-%-syntax parser, sharing
+    # formatDateTime's code table in reverse direction.  OrNull →
+    # try_to_timestamp (NULL on unparseable, as CH); the plain form
+    # raises, matching CH under spark.sql.ansi.  Timezone 3rd arg /
+    # Joda-syntax variants pass through.
+    def make(args, lits):
         if len(args) != 2:
             return None
-        fmt = resolve(args[1])
+        fmt = lits.resolve(args[1])
         if fmt is None:
             return None
-        return f"date_format({args[0]}, {new_lit(fmt_to_java(fmt))})"
+        fn = "try_to_timestamp" if try_form else "to_timestamp"
+        return f"{fn}({args[0]}, {lits.new(_fmt_to_java(fmt))})"
 
-    def parse_dt_make(try_form: bool):
-        # parseDateTime(s, '%Y-%m-%d…') — the MySQL-%-syntax parser,
-        # sharing formatDateTime's code table in reverse direction.
-        # OrNull → try_to_timestamp (NULL on unparseable, as CH);
-        # the plain form raises, matching CH under spark.sql.ansi.
-        # Timezone 3rd arg / Joda-syntax variants pass through.
-        def make(args):
-            if len(args) != 2:
-                return None
-            fmt = resolve(args[1])
-            if fmt is None:
-                return None
-            fn = "try_to_timestamp" if try_form else "to_timestamp"
-            return f"{fn}({args[0]}, {new_lit(fmt_to_java(fmt))})"
+    return make
 
-        return make
 
-    def diff_make(args):
-        if len(args) != 3:
-            return None
-        unit = resolve(args[0])
-        if unit is None or unit.lower() not in _DATEDIFF_UNITS:
-            return None
-        kw = _DATEDIFF_UNITS[unit.lower()]
-        return f"timestampdiff({kw}, {args[1]}, {args[2]})"
-
-    def age_make(args):
-        # age('unit', start, end) — COMPLETE units between (dateDiff
-        # counts boundary crossings; age counts full elapsed units).
-        # Month-family: calendar month delta minus one when the end
-        # hasn't reached the start's (clamped) day-of-month — the
-        # add-months clamp means Jan 30 → Feb 28 IS a complete month,
-        # which months_between's both-last-day rule misses, hence the
-        # explicit threshold least(day(start), last day of end's month).
-        # Time units are integer division of the epoch difference.
-        # Defined for end ≥ start (CH's contract); both operands are
-        # referenced several times (column-backed caveat).
-        if len(args) != 3:
-            return None
-        unit = resolve(args[0])
-        if unit is None:
-            return None
-        u, s, e = unit.lower(), args[1], args[2]
-        month_div = {"year": 12, "quarter": 3, "month": 1}
-        if u in month_div:
-            base = (
-                f"((year({e}) * 12 + month({e})) - "
-                f"(year({s}) * 12 + month({s})))"
-            )
-            thr = f"least(day({s}), day(last_day({e})))"
-
-            def tod(x):
-                return (
-                    f"(unix_timestamp({x}) - "
-                    f"unix_timestamp(date_trunc('day', {x})))"
-                )
-
-            incomplete = (
-                f"(day({e}) < {thr} OR (day({e}) = {thr} "
-                f"AND {tod(e)} < {tod(s)}))"
-            )
-            return (
-                f"CAST(({base} - if({incomplete}, 1, 0)) "
-                f"DIV {month_div[u]} AS BIGINT)"
-            )
-        sec_div = {"week": 604800, "day": 86400, "hour": 3600,
-                   "minute": 60, "second": 1}
-        if u in sec_div:
-            return (
-                f"((unix_timestamp({e}) - unix_timestamp({s})) "
-                f"DIV {sec_div[u]})"
-            )
+def _date_diff_make(args, lits):
+    # dateDiff('day', a, b) / date_diff → timestampdiff(DAY, a, b) — the
+    # unit moves from a string literal to a keyword
+    if len(args) != 3:
         return None
+    unit = lits.resolve(args[0])
+    if unit is None or unit.lower() not in _DATEDIFF_UNITS:
+        return None
+    kw = _DATEDIFF_UNITS[unit.lower()]
+    return f"timestampdiff({kw}, {args[1]}, {args[2]})"
 
-    def extract_groups_make(args):
-        # extractGroups(h, 'pattern') — array of the FIRST match's
-        # capture groups; no match → empty array.  Literal patterns only
-        # (the group count must be known at translation time); the
-        # haystack is referenced N+1 times (column-backed caveat).
+
+def _age_make(args, lits):
+    # age('unit', start, end) — COMPLETE units between (dateDiff counts
+    # boundary crossings; age counts full elapsed units).  Month-family:
+    # calendar month delta minus one when the end hasn't reached the
+    # start's (clamped) day-of-month — the add-months clamp means Jan 30 →
+    # Feb 28 IS a complete month, which months_between's both-last-day
+    # rule misses, hence the explicit threshold least(day(start), last day
+    # of end's month).  Time units are integer division of the epoch
+    # difference.  Defined for end ≥ start (CH's contract); both operands
+    # are referenced several times (column-backed caveat).
+    if len(args) != 3:
+        return None
+    unit = lits.resolve(args[0])
+    if unit is None:
+        return None
+    u, s, e = unit.lower(), args[1], args[2]
+    month_div = {"year": 12, "quarter": 3, "month": 1}
+    if u in month_div:
+        base = (
+            f"((year({e}) * 12 + month({e})) - "
+            f"(year({s}) * 12 + month({s})))"
+        )
+        thr = f"least(day({s}), day(last_day({e})))"
+
+        def tod(x):
+            return (
+                f"(unix_timestamp({x}) - "
+                f"unix_timestamp(date_trunc('day', {x})))"
+            )
+
+        incomplete = (
+            f"(day({e}) < {thr} OR (day({e}) = {thr} "
+            f"AND {tod(e)} < {tod(s)}))"
+        )
+        return (
+            f"CAST(({base} - if({incomplete}, 1, 0)) "
+            f"DIV {month_div[u]} AS BIGINT)"
+        )
+    sec_div = {"week": 604800, "day": 86400, "hour": 3600,
+               "minute": 60, "second": 1}
+    if u in sec_div:
+        return (
+            f"((unix_timestamp({e}) - unix_timestamp({s})) "
+            f"DIV {sec_div[u]})"
+        )
+    return None
+
+
+def _extract_groups_make(args, lits):
+    # extractGroups(h, 'pattern') — array of the FIRST match's capture
+    # groups; no match → empty array.  Literal patterns only (the group
+    # count must be known at translation time); the haystack is
+    # referenced N+1 times (column-backed caveat).
+    if len(args) != 2:
+        return None
+    patt = lits.resolve(args[1])
+    if patt is None:
+        return None
+    n = _count_capture_groups(patt)
+    if n == 0:
+        return None
+    gets = ", ".join(
+        f"regexp_extract({args[0]}, {args[1]}, {i})"
+        for i in range(1, n + 1)
+    )
+    return (
+        f"(CASE WHEN regexp_like({args[0]}, {args[1]}) "
+        f"THEN array({gets}) ELSE CAST(array() AS ARRAY<STRING>) END)"
+    )
+
+
+def _tuple_element_make(args, lits):
+    # tupleElement(t, 2) → (t).col2 — Spark's struct() names positional
+    # fields col1..colN, matching CH's 1-based index; tupleElement(t,
+    # 'name') → (t).`name`.  Only literal selectors resolve at translation
+    # time; dynamic ones pass through.
+    if len(args) != 2:
+        return None
+    t, sel = args[0], args[1].strip()
+    if re.fullmatch(r"\d+", sel):
+        return f"(({t}).col{sel})"
+    name = lits.resolve(sel)
+    if name is not None and re.fullmatch(r"\w+", name):
+        return f"(({t}).`{name}`)"
+    return None
+
+
+def _array_reduce_make(args, lits):
+    # arrayReduce('agg', arr) — aggregate-by-name over an array.  The
+    # common names map to built-ins; sum/avg accumulate in DOUBLE (the
+    # arraySum caveat).  Unknown aggregate names pass through.
+    if len(args) != 2:
+        return None
+    agg = lits.resolve(args[0])
+    if agg is None:
+        return None
+    arr = args[1]
+    forms = {
+        "max": f"array_max({arr})",
+        "min": f"array_min({arr})",
+        "sum": f"aggregate({arr}, CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)",
+        "avg": (
+            f"(aggregate({arr}, CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)"
+            f" / nullif(size({arr}), 0))"
+        ),
+        "count": f"size({arr})",
+        "uniqexact": f"size(array_distinct({arr}))",
+    }
+    return forms.get(agg.lower())
+
+
+def _array_reduce_in_ranges_make(args, lits):
+    # arrayReduceInRanges('agg', ranges, arr) — one reduce per (start,
+    # length) tuple (1-based; negative starts count from the end, as Spark
+    # slice); reuses the arrayReduce name->fold table
+    if len(args) != 3:
+        return None
+    sliced = (
+        f"slice({args[2]}, CAST(__r.col1 AS INT), CAST(__r.col2 AS INT))"
+    )
+    inner = _array_reduce_make([args[0], sliced], lits)
+    if inner is None:
+        return None
+    return f"transform({args[1]}, __r -> {inner})"
+
+
+def _extract_make(args, lits):
+    # CH extract(haystack, pattern): first capture group when the pattern
+    # has one, else the whole match.  The 1-arg SQL-standard form
+    # extract(YEAR FROM ts) has one comma-free argument and passes
+    # through untouched.
+    if len(args) != 2:
+        return None
+    patt = lits.resolve(args[1])
+    if patt is None:
+        return None
+    has_group = bool(re.search(r"(?<!\\)\((?!\?)", patt))
+    return f"regexp_extract({args[0]}, {args[1]}, {1 if has_group else 0})"
+
+
+_DATE_NAME_PARTS = {
+    "year": "CAST(year({t}) AS STRING)",
+    "quarter": "CAST(quarter({t}) AS STRING)",
+    "month": "date_format({t}, 'MMMM')",
+    "week": "CAST(weekofyear({t}) AS STRING)",
+    "dayofyear": "CAST(dayofyear({t}) AS STRING)",
+    "day": "CAST(dayofmonth({t}) AS STRING)",
+    "weekday": "date_format({t}, 'EEEE')",
+    "hour": "CAST(hour({t}) AS STRING)",
+    "minute": "CAST(minute({t}) AS STRING)",
+    "second": "CAST(second({t}) AS STRING)",
+}
+
+
+def _date_name_make(args, lits):
+    # dateName('part', ts) → the named/numbered part AS STRING; only
+    # literal parts resolve at translation time
+    if len(args) != 2:
+        return None
+    part = lits.resolve(args[0])
+    if part is None:
+        return None
+    tpl = _DATE_NAME_PARTS.get(part.lower())
+    return tpl.format(t=args[1]) if tpl else None
+
+
+def _accurate_cast_make(try_form: bool):
+    # accurateCast(x, 'Type') / accurateCastOrNull — the CH type string
+    # maps through the schema mapper; CH raises on overflow where Spark's
+    # ANSI CAST also raises (OrNull → try_cast → NULL, matching exactly)
+    def make(args, lits):
         if len(args) != 2:
             return None
-        patt = resolve(args[1])
+        tname = lits.resolve(args[1])
+        if tname is None:
+            return None
+        from clickhouse_flatfile_tool_spark.schema import clickhouse_to_spark
+
+        dt, _ = clickhouse_to_spark(tname)
+        fn = "try_cast" if try_form else "CAST"
+        return f"{fn}({args[0]} AS {dt.simpleString()})"
+
+    return make
+
+
+def _dict_get_make(args, lits):
+    # dictGet('dict', 'attr', key) → a correlated scalar subquery on the
+    # registered dictionary table; Catalyst decorrelates it into a
+    # (broadcastable) left outer join — the executor-local hash probe CH's
+    # dictionary layout gives.  Missing keys yield NULL (CH's
+    # dictGetOrNull; plain dictGet THROWS there — a per-row throw isn't
+    # reproducible distributed, documented divergence; use
+    # dictGetOrDefault for CH-portable behavior).  Single-attribute form
+    # only (tuple attrs pass through); unknown dictionaries pass through
+    # and error by name.
+    if len(args) != 3:
+        return None
+    dname, attr = lits.resolve(args[0]), lits.resolve(args[1])
+    if dname is None or attr is None:
+        return None
+    reg = _DICTIONARIES.get(dname.lower())
+    if reg is None or not re.fullmatch(r"\w+", attr):
+        return None
+    table, key_col = reg
+    # the dictionary side is a derived table that RENAMES its columns to
+    # reserved names: with the raw table, a probe column sharing the key
+    # column's name (the canonical CH pattern — dictGet with PRIMARY KEY
+    # user_id probed by fact.user_id) is captured by the inner scope,
+    # turning the predicate into a tautology (verified: dictHas
+    # returned true for absent keys; dictGet hit
+    # SCALAR_SUBQUERY_TOO_MANY_ROWS)
+    return (
+        f"(SELECT __dv FROM (SELECT `{key_col}` AS __dk, "
+        f"`{attr}` AS __dv FROM {table}) WHERE __dk = ({args[2]}))"
+    )
+
+
+def _dict_get_or_default_make(args, lits):
+    if len(args) != 4:
+        return None
+    inner = _dict_get_make(args[:3], lits)
+    return None if inner is None else f"coalesce({inner}, {args[3]})"
+
+
+def _dict_get_typed_make(cast_to: str):
+    # typed dictGet variants — the dictGet probe with the name's declared
+    # result type pinned by CAST (CH coerces the stored attribute to the
+    # named type; same NULL-on-missing-key stance)
+    def make(args, lits):
+        inner = _dict_get_make(args, lits)
+        return None if inner is None else f"CAST({inner} AS {cast_to})"
+
+    return make
+
+
+def _dict_has_make(args, lits):
+    if len(args) != 2:
+        return None
+    dname = lits.resolve(args[0])
+    if dname is None:
+        return None
+    reg = _DICTIONARIES.get(dname.lower())
+    if reg is None:
+        return None
+    table, key_col = reg
+    # derived-table rename for the same scope-capture reason as _dict_get_make
+    return (
+        f"((SELECT count(1) FROM (SELECT `{key_col}` AS __dk "
+        f"FROM {table}) WHERE __dk = ({args[1]})) > 0)"
+    )
+
+
+def _join_get_make(args, lits):
+    # joinGet('join_table', 'attr', key) — the Join-engine probe:
+    # same derived-table scalar-subquery shape as dictGet, against the
+    # Join-engine registry (CREATE TABLE … ENGINE = Join(ANY, LEFT, k)
+    # routes here via api.query).  Missing keys yield NULL (CH
+    # joinGetOrNull; plain joinGet ships the type default — NULL is the
+    # house encoding, the dictGet note).
+    if len(args) != 3:
+        return None
+    tname, attr = lits.resolve(args[0]), lits.resolve(args[1])
+    if tname is None or attr is None:
+        return None
+    reg = _JOIN_TABLES.get(tname.lower())
+    if reg is None or not re.fullmatch(r"\w+", attr):
+        return None
+    table, key_col = reg
+    return (
+        f"(SELECT __jv FROM (SELECT `{key_col}` AS __jk, "
+        f"`{attr}` AS __jv FROM {table}) WHERE __jk = ({args[2]}))"
+    )
+
+
+def _extract_all_groups_make(horizontal: bool):
+    # all-match group extraction.  Vertical (the default CH name
+    # extractAllGroups is its alias) = match-major array<array>: one inner
+    # array of N groups per match.  Horizontal = group-major: N inner
+    # arrays, each all matches' values for one group.  Literal patterns
+    # only (group count resolved at translation time, the extractGroups
+    # stance); haystack referenced once per shape below.
+    def make(args, lits):
+        if len(args) != 2:
+            return None
+        patt = lits.resolve(args[1])
         if patt is None:
             return None
         n = _count_capture_groups(patt)
         if n == 0:
             return None
+        if horizontal:
+            per_group = ", ".join(
+                f"transform(regexp_extract_all({args[0]}, {args[1]}, 0), "
+                f"__m -> regexp_extract(__m, {args[1]}, {i}))"
+                for i in range(1, n + 1)
+            )
+            return f"array({per_group})"
         gets = ", ".join(
-            f"regexp_extract({args[0]}, {args[1]}, {i})"
+            f"regexp_extract(__m, {args[1]}, {i})"
             for i in range(1, n + 1)
         )
         return (
-            f"(CASE WHEN regexp_like({args[0]}, {args[1]}) "
-            f"THEN array({gets}) ELSE CAST(array() AS ARRAY<STRING>) END)"
+            f"transform(regexp_extract_all({args[0]}, {args[1]}, 0), "
+            f"__m -> array({gets}))"
         )
 
-    def tuple_elem_make(args):
-        # tupleElement(t, 2) → (t).col2 — Spark's struct() names
-        # positional fields col1..colN, matching CH's 1-based index;
-        # tupleElement(t, 'name') → (t).`name`.  Only literal selectors
-        # resolve at translation time; dynamic ones pass through.
-        if len(args) != 2:
-            return None
-        t, sel = args[0], args[1].strip()
-        if re.fullmatch(r"\d+", sel):
-            return f"(({t}).col{sel})"
-        name = resolve(sel)
-        if name is not None and re.fullmatch(r"\w+", name):
-            return f"(({t}).`{name}`)"
+    return make
+
+
+def _cut_url_parameter_make(args, lits):
+    # cutURLParameter(url, 'name') — strips name=value and one adjoining
+    # separator; a lone '?p=v' leaves the '?' (CH renders 'http://x/?'
+    # for the last parameter cut)
+    if len(args) != 2:
         return None
+    name = lits.resolve(args[1])
+    if name is None:
+        return None
+    esc = re.escape(name)
+    # Spark string literals process backslash escapes — double every
+    # regex backslash at the SQL-source level
+    dbl = "\\\\"
 
-    def array_reduce_make(args):
-        # arrayReduce('agg', arr) — aggregate-by-name over an array.  The
-        # common names map to built-ins; sum/avg accumulate in DOUBLE
-        # (the arraySum caveat).  Unknown aggregate names pass through.
-        if len(args) != 2:
-            return None
-        agg = resolve(args[0])
-        if agg is None:
-            return None
-        arr = args[1]
-        forms = {
-            "max": f"array_max({arr})",
-            "min": f"array_min({arr})",
-            "sum": f"aggregate({arr}, CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)",
-            "avg": (
-                f"(aggregate({arr}, CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)"
-                f" / nullif(size({arr}), 0))"
-            ),
-            "count": f"size({arr})",
-            "uniqexact": f"size(array_distinct({arr}))",
-        }
-        return forms.get(agg.lower())
+    def sqlre(p: str) -> str:
+        return lits.new(p.replace("\\", dbl))
 
-    def extract_make(args):
-        # CH extract(haystack, pattern): first capture group when the
-        # pattern has one, else the whole match.  The 1-arg SQL-standard
-        # form extract(YEAR FROM ts) has one comma-free argument and
-        # passes through untouched.
-        if len(args) != 2:
-            return None
-        patt = resolve(args[1])
-        if patt is None:
-            return None
-        has_group = bool(re.search(r"(?<!\\)\((?!\?)", patt))
-        return f"regexp_extract({args[0]}, {args[1]}, {1 if has_group else 0})"
+    p1 = sqlre(f"(?<=[?&]){esc}=[^&#]*&")
+    p2 = sqlre(f"&{esc}=[^&#]*")
+    p3 = sqlre(f"(?<=\\?){esc}=[^&#]*")
+    return (
+        f"regexp_replace(regexp_replace(regexp_replace({args[0]}, "
+        f"{p1}, ''), {p2}, ''), {p3}, '')"
+    )
 
-    date_name_parts = {
-        "year": "CAST(year({t}) AS STRING)",
-        "quarter": "CAST(quarter({t}) AS STRING)",
-        "month": "date_format({t}, 'MMMM')",
-        "week": "CAST(weekofyear({t}) AS STRING)",
-        "dayofyear": "CAST(dayofyear({t}) AS STRING)",
-        "day": "CAST(dayofmonth({t}) AS STRING)",
-        "weekday": "date_format({t}, 'EEEE')",
-        "hour": "CAST(hour({t}) AS STRING)",
-        "minute": "CAST(minute({t}) AS STRING)",
-        "second": "CAST(second({t}) AS STRING)",
-    }
 
-    def date_name_make(args):
-        # dateName('part', ts) → the named/numbered part AS STRING; only
-        # literal parts resolve at translation time
-        if len(args) != 2:
-            return None
-        part = resolve(args[0])
-        if part is None:
-            return None
-        tpl = date_name_parts.get(part.lower())
-        return tpl.format(t=args[1]) if tpl else None
+def _json_keys_and_values_make(args, lits):
+    # JSONExtractKeysAndValues(j, 'T') — top-level (key, value) tuples via
+    # from_json's map reader
+    if len(args) != 2:
+        return None
+    t = lits.resolve(args[1])
+    if t is None:
+        return None
+    spark_t = {
+        "String": "string", "Int8": "bigint", "Int16": "bigint",
+        "Int32": "bigint", "Int64": "bigint", "UInt8": "bigint",
+        "UInt16": "bigint", "UInt32": "bigint", "UInt64": "bigint",
+        "Float32": "double", "Float64": "double", "Bool": "boolean",
+    }.get(t)
+    if spark_t is None:
+        return None
+    schema = lits.new(f"map<string,{spark_t}>")
+    return (
+        f"transform(map_entries(from_json({args[0]}, {schema})), "
+        f"__e -> named_struct('col1', __e.key, 'col2', __e.value))"
+    )
 
-    def acc_cast_make(try_form: bool):
-        def make(args):
-            # accurateCast(x, 'Type') / accurateCastOrNull — the CH type
-            # string maps through the schema mapper; CH raises on
-            # overflow where Spark's ANSI CAST also raises (OrNull →
-            # try_cast → NULL, matching exactly)
-            if len(args) != 2:
-                return None
-            tname = resolve(args[1])
-            if tname is None:
-                return None
-            from clickhouse_flatfile_tool_spark.schema import (
-                clickhouse_to_spark,
+
+def _format_row_make(newline: bool):
+    # formatRow('JSONEachRow'|'TSV', x, y, ...) — the two wire formats
+    # this engine itself speaks (sources/files.py); CSV's quoting rules
+    # are format-settings-dependent in CH and stay out of scope.  Column
+    # naming: bare identifiers keep their name, computed expressions get
+    # expr_N (CH names them by expression text — engine-specific
+    # rendering, the typeof stance).
+    def make(args, lits):
+        if len(args) < 2:
+            return None
+        fmt = lits.resolve(args[0])
+        if fmt is None:
+            return None
+        cols = [a.strip() for a in args[1:]]
+        if fmt == "JSONEachRow":
+            pairs = ", ".join(
+                f"{lits.new(c if re.fullmatch('[A-Za-z_][A-Za-z0-9_]*', c) else f'expr_{i + 1}')}, {c}"
+                for i, c in enumerate(cols)
             )
+            # ignoreNullFields=false: CH's JSONEachRow renders {"x":null};
+            # Spark's to_json drops null fields by default
+            body = (
+                f"to_json(named_struct({pairs}), "
+                f"map('ignoreNullFields', 'false'))"
+            )
+        elif fmt in ("TSV", "TabSeparated"):
+            vals = ", ".join(f"CAST({c} AS STRING)" for c in cols)
+            body = (
+                f"array_join(array({vals}), {lits.new(chr(9))}, "
+                f"{lits.new(chr(92) * 2 + 'N')})"
+            )
+        else:
+            return None
+        if newline:
+            return f"concat({body}, {lits.new(chr(10))})"
+        return body
 
-            dt, _ = clickhouse_to_spark(tname)
-            fn = "try_cast" if try_form else "CAST"
-            return f"{fn}({args[0]} AS {dt.simpleString()})"
-        return make
+    return make
 
-    def dict_get_make(args):
-        # dictGet('dict', 'attr', key) → a correlated scalar subquery on
-        # the registered dictionary table; Catalyst decorrelates it into
-        # a (broadcastable) left outer join — the executor-local hash
-        # probe CH's dictionary layout gives.  Missing keys yield NULL
-        # (CH's dictGetOrNull; plain dictGet THROWS there — a per-row
-        # throw isn't reproducible distributed, documented divergence;
-        # use dictGetOrDefault for CH-portable behavior).  Single-
-        # attribute form only (tuple attrs pass through); unknown
-        # dictionaries pass through and error by name.
-        if len(args) != 3:
-            return None
-        dname, attr = resolve(args[0]), resolve(args[1])
-        if dname is None or attr is None:
-            return None
-        reg = _DICTIONARIES.get(dname.lower())
-        if reg is None or not re.fullmatch(r"\w+", attr):
-            return None
-        table, key_col = reg
-        # the dictionary side is a derived table that RENAMES its columns
-        # to reserved names: with the raw table, a probe column sharing
-        # the key column's name (the canonical CH pattern — dictGet with
-        # PRIMARY KEY user_id probed by fact.user_id) is captured by the
-        # inner scope, turning the predicate into a tautology (r5 ADVICE,
-        # verified: dictHas returned true for absent keys; dictGet hit
-        # SCALAR_SUBQUERY_TOO_MANY_ROWS)
-        return (
-            f"(SELECT __dv FROM (SELECT `{key_col}` AS __dk, "
-            f"`{attr}` AS __dv FROM {table}) WHERE __dk = ({args[2]}))"
+
+def _ip_in_range_make(args, lits):
+    # isIPAddressInRange(addr, 'cidr') — the CIDR is a literal (CH's own
+    # call shape), so the masked network/prefix are computed at
+    # translation time with the stdlib ipaddress module; the address side
+    # stays a pure column expression (v4: octet-fold prefix compare; v6:
+    # hex-prefix compare via _ipv6_hex_sql)
+    if len(args) != 2:
+        return None
+    cidr = lits.resolve(args[1])
+    if cidr is None or "/" not in cidr:
+        return None
+    import ipaddress
+
+    try:
+        net = ipaddress.ip_network(cidr, strict=False)
+    except ValueError:
+        return None
+    addr, plen = args[0], net.prefixlen
+    if net.version == 4:
+        base = int(net.network_address) >> (32 - plen) if plen else 0
+        fold = (
+            f"aggregate(split({addr}, '\\\\.'), CAST(0 AS BIGINT), "
+            f"(__a, __o) -> __a * 256 + CAST(__o AS BIGINT))"
         )
-
-    def dict_get_default_make(args):
-        if len(args) != 4:
-            return None
-        inner = dict_get_make(args[:3])
-        return None if inner is None else f"coalesce({inner}, {args[3]})"
-
-    def dict_has_make(args):
-        if len(args) != 2:
-            return None
-        dname = resolve(args[0])
-        if dname is None:
-            return None
-        reg = _DICTIONARIES.get(dname.lower())
-        if reg is None:
-            return None
-        table, key_col = reg
-        # derived-table rename for the same scope-capture reason as
-        # dict_get_make above
-        return (
-            f"((SELECT count(1) FROM (SELECT `{key_col}` AS __dk "
-            f"FROM {table}) WHERE __dk = ({args[1]})) > 0)"
+        return f"(shiftrightunsigned({fold}, {32 - plen}) = {base})"
+    hexfull = "%032x" % int(net.network_address)
+    fulln, rem = plen // 4, plen % 4
+    hexpr = _ipv6_hex_sql(addr)
+    conds = []
+    if fulln:
+        conds.append(
+            f"substring({hexpr}, 1, {fulln}) = '{hexfull[:fulln]}'"
         )
-
-    def join_get_make(args):
-        # joinGet('join_table', 'attr', key) — the Join-engine probe
-        # (r6): same derived-table scalar-subquery shape as dictGet,
-        # against the Join-engine registry (CREATE TABLE … ENGINE =
-        # Join(ANY, LEFT, k) routes here via api.query).  Missing keys
-        # yield NULL (CH joinGetOrNull; plain joinGet ships the type
-        # default — NULL is the house encoding, the dictGet note).
-        if len(args) != 3:
-            return None
-        tname, attr = resolve(args[0]), resolve(args[1])
-        if tname is None or attr is None:
-            return None
-        reg = _JOIN_TABLES.get(tname.lower())
-        if reg is None or not re.fullmatch(r"\w+", attr):
-            return None
-        table, key_col = reg
-        return (
-            f"(SELECT __jv FROM (SELECT `{key_col}` AS __jk, "
-            f"`{attr}` AS __jv FROM {table}) WHERE __jk = ({args[2]}))"
+    if rem:
+        mask = 15 - ((1 << (4 - rem)) - 1)
+        want = int(hexfull[fulln], 16) & mask
+        conds.append(
+            f"(CAST(conv(substring({hexpr}, {fulln + 1}, 1), 16, 10) "
+            f"AS INT) & {mask}) = {want}"
         )
+    if not conds:
+        conds = ["({a}) = ({a})".format(a=addr)]
+    return "(" + " AND ".join(conds) + ")"
 
-    chunk = _rewrite_call(chunk, "joinGetOrNull", join_get_make)
-    chunk = _rewrite_call(chunk, "joinGet", join_get_make)
-    chunk = _rewrite_call(chunk, "dictGetOrDefault", dict_get_default_make)
-    chunk = _rewrite_call(chunk, "dictGetOrNull", dict_get_make)
-    chunk = _rewrite_call(chunk, "dictGet", dict_get_make)
 
-    # batch 22: typed dictGet variants — the dictGet probe with the
-    # name's declared result type pinned by CAST (CH coerces the stored
-    # attribute to the named type; same NULL-on-missing-key stance)
-    def dict_get_typed_make(cast_to):
-        def make(args):
-            inner = dict_get_make(args)
-            return None if inner is None else f"CAST({inner} AS {cast_to})"
+_SEQ_NEXT_NODE_MODES = {
+    ("forward", "head"),
+    ("backward", "tail"),
+    ("forward", "first_match"),
+    ("backward", "last_match"),
+}
 
-        return make
 
-    for _nm, _ct in (
-        ("dictGetString", "STRING"),
-        ("dictGetInt64", "BIGINT"),
-        ("dictGetUInt64", "DECIMAL(20,0)"),
-        ("dictGetFloat64", "DOUBLE"),
-        ("dictGetDate", "DATE"),
-        ("dictGetDateTime", "TIMESTAMP"),
-    ):
-        chunk = _rewrite_call(chunk, _nm, dict_get_typed_make(_ct))
-    chunk = _rewrite_call(chunk, "dictHas", dict_has_make)
-    chunk = _rewrite_call(chunk, "accurateCastOrNull", acc_cast_make(True))
-    chunk = _rewrite_call(chunk, "accurateCast", acc_cast_make(False))
-    chunk = _rewrite_call(chunk, "dateName", date_name_make)
-    chunk = _rewrite_call(chunk, "formatDateTime", fmt_make)
-    chunk = _rewrite_call(chunk, "parseDateTimeOrNull", parse_dt_make(True))
-    chunk = _rewrite_call(chunk, "parseDateTime", parse_dt_make(False))
-    chunk = _rewrite_call(chunk, "age", age_make)
-    chunk = _rewrite_call(chunk, "extractGroups", extract_groups_make)
+@_curried
+def _sequence_next_node_make(params, arg, lits):
+    """ClickHouse ``sequenceNextNode(direction, base)(ts, value,
+    base_cond, cond1, …, condK)`` — the value of the event FOLLOWING a
+    matched chain of CONSECUTIVE events, NULL when the chain doesn't
+    match (CH's next-action journey aggregate).
 
-    # batch 22: all-match group extraction.  Vertical (the default CH
-    # name extractAllGroups is its alias) = match-major array<array>:
-    # one inner array of N groups per match.  Horizontal = group-major:
-    # N inner arrays, each all matches' values for one group.  Literal
-    # patterns only (group count resolved at translation time, the
-    # extractGroups stance); haystack referenced once per shape below.
-    def extract_all_groups_make(horizontal):
-        def make(args):
-            if len(args) != 2:
-                return None
-            patt = resolve(args[1])
-            if patt is None:
-                return None
-            n = _count_capture_groups(patt)
-            if n == 0:
-                return None
-            if horizontal:
-                per_group = ", ".join(
-                    f"transform(regexp_extract_all({args[0]}, {args[1]}, 0), "
-                    f"__m -> regexp_extract(__m, {args[1]}, {i}))"
-                    for i in range(1, n + 1)
-                )
-                return f"array({per_group})"
-            gets = ", ".join(
-                f"regexp_extract(__m, {args[1]}, {i})"
-                for i in range(1, n + 1)
+    Supported direction/base combos (the four meaningful pairings CH
+    documents): ``('forward', 'head')`` — chain anchored at the earliest
+    event; ``('backward', 'tail')`` — anchored at the latest, walking
+    earlier; ``('forward', 'first_match')`` / ``('backward',
+    'last_match')`` — anchored at the first/last event satisfying
+    base_cond AND cond1.  Anything else passes through untranslated.
+
+    Shape: one ``collect_list`` per key sorted by time (reversed for
+    backward), then pure index probes — ``try_element_at`` everywhere, so
+    short groups yield NULL instead of erroring under ANSI.  The match
+    anchor for first/last_match binds once via the single-element
+    ``transform`` let-form."""
+    if arg is None:
+        return None
+    head = _split_top_comma(params)
+    args = _split_top_comma(arg)
+    direction = lits.resolve(head[0]) if len(head) == 2 else None
+    base = lits.resolve(head[1]) if len(head) == 2 else None
+    if (direction, base) not in _SEQ_NEXT_NODE_MODES or len(args) < 4:
+        return None  # unsupported: pass through
+    ts, val, base_cond, conds = args[0], args[1], args[2], args[3:]
+    k = len(conds)
+    fields = ", ".join(
+        f"CAST({c}) AS BOOLEAN) AS s{j + 1}".replace("CAST(", "CAST((", 1)
+        for j, c in enumerate(conds)
+    )
+    evs = (
+        f"array_sort(collect_list(struct({ts} AS t, {val} AS v, "
+        f"CAST(({base_cond}) AS BOOLEAN) AS b, {fields})))"
+    )
+    if direction == "backward":
+        evs = f"reverse({evs})"
+    if base in ("head", "tail"):
+        chain = " AND ".join(
+            f"try_element_at(__e, {j + 1}).s{j + 1}" for j in range(k)
+        )
+        body = (
+            f"CASE WHEN try_element_at(__e, 1).b AND {chain} "
+            f"THEN try_element_at(__e, {k + 1}).v END"
+        )
+    else:
+        anchor = (
+            "coalesce(array_min(filter("
+            "sequence(1, greatest(size(__e), 1)), __i -> "
+            "coalesce(try_element_at(__e, __i).b "
+            "AND try_element_at(__e, __i).s1, false))), -1)"
+        )
+        rest = " AND ".join(
+            f"try_element_at(__e, __ix + {j - 1}).s{j}"
+            for j in range(2, k + 1)
+        ) or "true"
+        body = (
+            f"element_at(transform(array({anchor}), __ix -> "
+            f"CASE WHEN __ix > 0 AND {rest} "
+            f"THEN try_element_at(__e, __ix + {k}).v END), 1)"
+        )
+    return f"element_at(transform(array({evs}), __e -> {body}), 1)"
+
+
+def _sequence_match_make(is_count: bool):
+    """ClickHouse ``sequenceMatch('(?1).*(?2)')(ts, c1, c2)`` /
+    ``sequenceCount(...)`` → a codegen ``aggregate`` fold over the key's
+    time-sorted events (the same machinery as ``events.window_funnel``,
+    which is the timed variant):
+
+    * sequenceMatch: state machine 0→1→…→K advancing one step per event
+      that satisfies the next condition; result ``state = K`` —
+      subsequence existence, greedy earliest-advance (optimal when there
+      is no deadline).
+    * sequenceCount: same machine plus a counter; completing step K
+      increments and resets — ClickHouse's non-overlapping left-to-right
+      count.
+
+    Scope (documented): patterns of the form ``(?a).*(?b)...`` — step
+    conditions separated by ``.*`` (match-anything), the overwhelmingly
+    common shape.  Adjacency patterns (``(?1)(?2)``), time constraints
+    (``(?t<=3600)``) and other regex atoms pass through untranslated
+    (windowFunnel covers the timed case).  One collect_list per key —
+    state O(events per key), like every per-key sequence op."""
+
+    @_curried
+    def make(params, arg, lits):
+        if arg is None:
+            return None
+        pat_lit = lits.resolve(params)
+        args = _split_top_comma(arg)
+        steps = (
+            [int(s) for s in re.findall(r"\(\?(\d+)\)", pat_lit)]
+            if pat_lit is not None
+            and re.fullmatch(r"\(\?\d+\)(?:\.\*\(\?\d+\))*", pat_lit)
+            else None
+        )
+        if not steps or len(args) < 2 or max(steps) > len(args) - 1:
+            return None  # unsupported: pass through
+        ts, conds = args[0], args[1:]
+        k = len(steps)
+        fields = ", ".join(
+            f"CAST({conds[idx - 1]} AS BOOLEAN) AS s{j + 1}"
+            for j, idx in enumerate(steps)
+        )
+        evs = f"array_sort(collect_list(struct({ts} AS t, {fields})))"
+        if not is_count:
+            branches = " ".join(
+                f"WHEN s = {j} AND e.s{j + 1} THEN {j + 1}"
+                for j in range(k)
             )
             return (
-                f"transform(regexp_extract_all({args[0]}, {args[1]}, 0), "
-                f"__m -> array({gets}))"
+                f"(aggregate({evs}, 0, (s, e) -> "
+                f"CASE {branches} ELSE s END) = {k})"
             )
-
-        return make
-
-    chunk = _rewrite_call(
-        chunk, "extractAllGroupsHorizontal", extract_all_groups_make(True)
-    )
-    chunk = _rewrite_call(
-        chunk, "extractAllGroupsVertical", extract_all_groups_make(False)
-    )
-    chunk = _rewrite_call(
-        chunk, "extractAllGroups", extract_all_groups_make(False)
-    )
-    chunk = _rewrite_call(chunk, "dateDiff", diff_make)
-    chunk = _rewrite_call(chunk, "date_diff", diff_make)
-    chunk = _rewrite_call(chunk, "timestampDiff", diff_make)
-    chunk = _rewrite_call(chunk, "timestamp_diff", diff_make)
-    chunk = _rewrite_call(chunk, "tupleElement", tuple_elem_make)
-
-    def array_reduce_in_ranges_make(args):
-        # arrayReduceInRanges('agg', ranges, arr) — one reduce per
-        # (start, length) tuple (1-based; negative starts count from the
-        # end, as Spark slice); reuses the arrayReduce name->fold table
-        if len(args) != 3:
-            return None
-        sliced = (
-            f"slice({args[2]}, CAST(__r.col1 AS INT), CAST(__r.col2 AS INT))"
+        done = (
+            f"WHEN a.st = {k - 1} AND e.s{k} "
+            f"THEN named_struct('st', 0, 'c', a.c + 1)"
         )
-        inner = array_reduce_make([args[0], sliced])
-        if inner is None:
-            return None
-        return f"transform({args[1]}, __r -> {inner})"
-
-    chunk = _rewrite_call(
-        chunk, "arrayReduceInRanges", array_reduce_in_ranges_make
-    )
-    chunk = _rewrite_call(chunk, "arrayReduce", array_reduce_make)
-
-    def cut_url_parameter_make(args):
-        # cutURLParameter(url, 'name') — strips name=value and one
-        # adjoining separator; a lone '?p=v' leaves the '?' (CH renders
-        # 'http://x/?' for the last parameter cut)
-        if len(args) != 2:
-            return None
-        name = resolve(args[1])
-        if name is None:
-            return None
-        esc = re.escape(name)
-        # Spark string literals process backslash escapes — double every
-        # regex backslash at the SQL-source level
-        dbl = "\\\\"
-
-        def sqlre(p: str) -> str:
-            return new_lit(p.replace("\\", dbl))
-
-        p1 = sqlre(f"(?<=[?&]){esc}=[^&#]*&")
-        p2 = sqlre(f"&{esc}=[^&#]*")
-        p3 = sqlre(f"(?<=\\?){esc}=[^&#]*")
+        advance = " ".join(
+            f"WHEN a.st = {j} AND e.s{j + 1} "
+            f"THEN named_struct('st', {j + 1}, 'c', a.c)"
+            for j in range(k - 1)
+        )
         return (
-            f"regexp_replace(regexp_replace(regexp_replace({args[0]}, "
-            f"{p1}, ''), {p2}, ''), {p3}, '')"
+            f"aggregate({evs}, named_struct('st', 0, 'c', 0), "
+            f"(a, e) -> CASE {done} {advance} ELSE a END, "
+            f"a -> a.c)"
         )
 
-    chunk = _rewrite_call(chunk, "cutURLParameter", cut_url_parameter_make)
+    return make
 
-    def json_kv_make(args):
-        # JSONExtractKeysAndValues(j, 'T') — top-level (key, value)
-        # tuples via from_json's map reader
-        if len(args) != 2:
-            return None
-        t = resolve(args[1])
-        if t is None:
-            return None
-        spark_t = {
-            "String": "string", "Int8": "bigint", "Int16": "bigint",
-            "Int32": "bigint", "Int64": "bigint", "UInt8": "bigint",
-            "UInt16": "bigint", "UInt32": "bigint", "UInt64": "bigint",
-            "Float32": "double", "Float64": "double", "Bool": "boolean",
-        }.get(t)
-        if spark_t is None:
-            return None
-        schema = new_lit(f"map<string,{spark_t}>")
-        return (
-            f"transform(map_entries(from_json({args[0]}, {schema})), "
-            f"__e -> named_struct('col1', __e.key, 'col2', __e.value))"
+
+# Rewrites that must read/transform a string-literal argument (masked as
+# \x00i\x00 at this stage): each make takes the call's arguments plus the
+# statement's _Literals, which resolves a mask and may add a NEW literal
+# for the replacement.
+_LITERAL_CALLS = _table([
+    ("joinGetOrNull", _join_get_make),
+    ("joinGet", _join_get_make),
+    ("dictGetOrDefault", _dict_get_or_default_make),
+    ("dictGetOrNull", _dict_get_make),
+    ("dictGet", _dict_get_make),
+    ("dictGetString", _dict_get_typed_make("STRING")),
+    ("dictGetInt64", _dict_get_typed_make("BIGINT")),
+    ("dictGetUInt64", _dict_get_typed_make("DECIMAL(20,0)")),
+    ("dictGetFloat64", _dict_get_typed_make("DOUBLE")),
+    ("dictGetDate", _dict_get_typed_make("DATE")),
+    ("dictGetDateTime", _dict_get_typed_make("TIMESTAMP")),
+    ("dictHas", _dict_has_make),
+    ("accurateCastOrNull", _accurate_cast_make(True)),
+    ("accurateCast", _accurate_cast_make(False)),
+    ("dateName", _date_name_make),
+    ("formatDateTime", _format_date_time_make),
+    ("parseDateTimeOrNull", _parse_date_time_make(True)),
+    ("parseDateTime", _parse_date_time_make(False)),
+    ("age", _age_make),
+    ("extractGroups", _extract_groups_make),
+    ("extractAllGroupsHorizontal", _extract_all_groups_make(True)),
+    ("extractAllGroupsVertical", _extract_all_groups_make(False)),
+    ("extractAllGroups", _extract_all_groups_make(False)),
+    ("dateDiff", _date_diff_make),
+    ("date_diff", _date_diff_make),
+    ("timestampDiff", _date_diff_make),
+    ("timestamp_diff", _date_diff_make),
+    ("tupleElement", _tuple_element_make),
+    ("arrayReduceInRanges", _array_reduce_in_ranges_make),
+    ("arrayReduce", _array_reduce_make),
+    ("cutURLParameter", _cut_url_parameter_make),
+    ("JSONExtractKeysAndValues", _json_keys_and_values_make),
+    ("formatRowNoNewline", _format_row_make(False)),
+    ("formatRow", _format_row_make(True)),
+    ("isIPAddressInRange", _ip_in_range_make),
+    ("extract", _extract_make),
+    ("sequenceNextNode", _sequence_next_node_make),
+    ("sequenceMatch", _sequence_match_make(False)),
+    ("sequenceCount", _sequence_match_make(True)),
+])
+
+
+def _rewrite_literal_aware(chunk: str, literals: list[str]) -> str:
+    """Run :data:`_LITERAL_CALLS` over ``chunk``, handing each make the
+    statement's ``literals`` (appended to in place for new literals)."""
+    lits = _Literals(literals)
+    for name, make, form in _LITERAL_CALLS:
+        chunk = _rewrite_call(
+            chunk, name, functools.partial(make, lits=lits), form
         )
-
-    chunk = _rewrite_call(chunk, "JSONExtractKeysAndValues", json_kv_make)
-
-    def format_row_make(newline: bool):
-        # formatRow('JSONEachRow'|'TSV', x, y, ...) — the two wire
-        # formats this engine itself speaks (sources/files.py); CSV's
-        # quoting rules are format-settings-dependent in CH and stay out
-        # of scope.  Column naming: bare identifiers keep their name,
-        # computed expressions get expr_N (CH names them by expression
-        # text — engine-specific rendering, the typeof stance).
-        def make(args):
-            if len(args) < 2:
-                return None
-            fmt = resolve(args[0])
-            if fmt is None:
-                return None
-            cols = [a.strip() for a in args[1:]]
-            if fmt == "JSONEachRow":
-                pairs = ", ".join(
-                    f"{new_lit(c if re.fullmatch('[A-Za-z_][A-Za-z0-9_]*', c) else f'expr_{i + 1}')}, {c}"
-                    for i, c in enumerate(cols)
-                )
-                # ignoreNullFields=false: CH's JSONEachRow renders
-                # {"x":null}; Spark's to_json drops null fields by default
-                body = (
-                    f"to_json(named_struct({pairs}), "
-                    f"map('ignoreNullFields', 'false'))"
-                )
-            elif fmt in ("TSV", "TabSeparated"):
-                vals = ", ".join(f"CAST({c} AS STRING)" for c in cols)
-                body = (
-                    f"array_join(array({vals}), {new_lit(chr(9))}, "
-                    f"{new_lit(chr(92) * 2 + 'N')})"
-                )
-            else:
-                return None
-            if newline:
-                return f"concat({body}, {new_lit(chr(10))})"
-            return body
-
-        return make
-
-    chunk = _rewrite_call(chunk, "formatRowNoNewline", format_row_make(False))
-    chunk = _rewrite_call(chunk, "formatRow", format_row_make(True))
-
-    def ip_in_range_make(args):
-        # isIPAddressInRange(addr, 'cidr') — the CIDR is a literal (CH's
-        # own call shape), so the masked network/prefix are computed at
-        # translation time with the stdlib ipaddress module; the address
-        # side stays a pure column expression (v4: octet-fold prefix
-        # compare; v6: hex-prefix compare via _ipv6_hex_sql)
-        if len(args) != 2:
-            return None
-        cidr = resolve(args[1])
-        if cidr is None or "/" not in cidr:
-            return None
-        import ipaddress
-
-        try:
-            net = ipaddress.ip_network(cidr, strict=False)
-        except ValueError:
-            return None
-        addr, plen = args[0], net.prefixlen
-        if net.version == 4:
-            base = int(net.network_address) >> (32 - plen) if plen else 0
-            fold = (
-                f"aggregate(split({addr}, '\\\\.'), CAST(0 AS BIGINT), "
-                f"(__a, __o) -> __a * 256 + CAST(__o AS BIGINT))"
-            )
-            return f"(shiftrightunsigned({fold}, {32 - plen}) = {base})"
-        hexfull = "%032x" % int(net.network_address)
-        fulln, rem = plen // 4, plen % 4
-        hexpr = _ipv6_hex_sql(addr)
-        conds = []
-        if fulln:
-            conds.append(
-                f"substring({hexpr}, 1, {fulln}) = '{hexfull[:fulln]}'"
-            )
-        if rem:
-            mask = 15 - ((1 << (4 - rem)) - 1)
-            want = int(hexfull[fulln], 16) & mask
-            conds.append(
-                f"(CAST(conv(substring({hexpr}, {fulln + 1}, 1), 16, 10) "
-                f"AS INT) & {mask}) = {want}"
-            )
-        if not conds:
-            conds = ["({a}) = ({a})".format(a=addr)]
-        return "(" + " AND ".join(conds) + ")"
-
-    chunk = _rewrite_call(chunk, "isIPAddressInRange", ip_in_range_make)
-    chunk = _rewrite_call(chunk, "extract", extract_make)
-    chunk = _rewrite_sequence_next_node(chunk, resolve)
-    chunk = _rewrite_sequence_funcs(chunk, resolve)
     return chunk
-
-
-_SEQ_PATTERN = re.compile(r"\(\?(\d+)\)(?:\.\*\(\?(\d+)\))*")
 
 
 def _rewrite_any_join(chunk: str, spark) -> str:
@@ -1703,468 +1772,266 @@ def _rewrite_scalar_with(chunk: str) -> str:
     return m.group(1) + body
 
 
-def _rewrite_sequence_next_node(chunk: str, resolve) -> str:
-    """ClickHouse ``sequenceNextNode(direction, base)(ts, value,
-    base_cond, cond1, …, condK)`` — the value of the event FOLLOWING a
-    matched chain of CONSECUTIVE events, NULL when the chain doesn't
-    match (CH's next-action journey aggregate).
+def _int_div_make(args):
+    """``intDiv(a, b)`` → floor division on longs.  ClickHouse intDiv rounds
+    toward -inf; Spark's ``DIV`` truncates toward zero, so a sign/remainder
+    correction subtracts 1 when the signs differ and the division is inexact.
+    Stays in 64-bit integer arithmetic end-to-end — ``FLOOR((a)/(b))`` over
+    double division diverges from true integer division once the operands
+    pass 2^53.  Operands are cast to BIGINT first (matching ClickHouse,
+    which defines intDiv on integers).  The template references each
+    argument 3× (DIV, remainder test, sign test), so a non-deterministic
+    argument (``rand()``) would be evaluated per reference; ClickHouse SQL
+    users don't write that, and a subquery can't be spliced textually."""
+    if len(args) != 2:
+        return None
+    a = f"CAST({args[0]} AS BIGINT)"
+    b = f"CAST({args[1]} AS BIGINT)"
+    return (
+        f"(({a} DIV {b}) + (CASE WHEN ({a} % {b}) != 0 "
+        f"AND (({a} < 0) != ({b} < 0)) THEN -1 ELSE 0 END))"
+    )
 
-    Supported direction/base combos (the four meaningful pairings CH
-    documents): ``('forward', 'head')`` — chain anchored at the earliest
-    event; ``('backward', 'tail')`` — anchored at the latest, walking
-    earlier; ``('forward', 'first_match')`` / ``('backward',
-    'last_match')`` — anchored at the first/last event satisfying
-    base_cond AND cond1.  Anything else passes through untranslated.
 
-    Shape: one ``collect_list`` per key sorted by time (reversed for
-    backward), then pure index probes — ``try_element_at`` everywhere, so
-    short groups yield NULL instead of erroring under ANSI.  The match
-    anchor for first/last_match binds once via the single-element
-    ``transform`` let-form."""
-    pat = re.compile(r"\bsequenceNextNode\(")
-    m = pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        direction = resolve(head[0]) if len(head) == 2 else None
-        base = resolve(head[1]) if len(head) == 2 else None
-        supported = {
-            ("forward", "head"),
-            ("backward", "tail"),
-            ("forward", "first_match"),
-            ("backward", "last_match"),
-        }
-        if (direction, base) not in supported or len(args) < 4:
-            m = pat.search(chunk, x_end)  # unsupported: pass through
-            continue
-        ts, val, base_cond, conds = args[0], args[1], args[2], args[3:]
-        k = len(conds)
-        fields = ", ".join(
-            f"CAST({c}) AS BOOLEAN) AS s{j + 1}".replace("CAST(", "CAST((", 1)
-            for j, c in enumerate(conds)
+def _multi_if_make(args):
+    """``multiIf(c1, v1, c2, v2, …, else)`` → a CASE WHEN chain (odd arity:
+    condition/value pairs plus the final else)."""
+    if len(args) >= 3 and len(args) % 2 == 1:
+        whens = " ".join(
+            f"WHEN {args[i]} THEN {args[i + 1]}"
+            for i in range(0, len(args) - 1, 2)
         )
-        evs = (
-            f"array_sort(collect_list(struct({ts} AS t, {val} AS v, "
-            f"CAST(({base_cond}) AS BOOLEAN) AS b, {fields})))"
-        )
-        if direction == "backward":
-            evs = f"reverse({evs})"
-        if base in ("head", "tail"):
-            chain = " AND ".join(
-                f"try_element_at(__e, {j + 1}).s{j + 1}" for j in range(k)
-            )
-            body = (
-                f"CASE WHEN try_element_at(__e, 1).b AND {chain} "
-                f"THEN try_element_at(__e, {k + 1}).v END"
-            )
-        else:
-            anchor = (
-                "coalesce(array_min(filter("
-                "sequence(1, greatest(size(__e), 1)), __i -> "
-                "coalesce(try_element_at(__e, __i).b "
-                "AND try_element_at(__e, __i).s1, false))), -1)"
-            )
-            rest = " AND ".join(
-                f"try_element_at(__e, __ix + {j - 1}).s{j}"
-                for j in range(2, k + 1)
-            ) or "true"
-            body = (
-                f"element_at(transform(array({anchor}), __ix -> "
-                f"CASE WHEN __ix > 0 AND {rest} "
-                f"THEN try_element_at(__e, __ix + {k}).v END), 1)"
-            )
-        repl = f"element_at(transform(array({evs}), __e -> {body}), 1)"
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = pat.search(chunk, m.start() + len(repl))
-    return chunk
+        return f"(CASE {whens} ELSE {args[-1]} END)"
+    return None
 
 
-def _rewrite_sequence_funcs(chunk: str, resolve) -> str:
-    """ClickHouse ``sequenceMatch('(?1).*(?2)')(ts, c1, c2)`` /
-    ``sequenceCount(...)`` → a codegen ``aggregate`` fold over the key's
-    time-sorted events (the same machinery as ``events.window_funnel``,
-    which is the timed variant):
-
-    * sequenceMatch: state machine 0→1→…→K advancing one step per event
-      that satisfies the next condition; result ``state = K`` —
-      subsequence existence, greedy earliest-advance (optimal when there
-      is no deadline).
-    * sequenceCount: same machine plus a counter; completing step K
-      increments and resets — ClickHouse's non-overlapping left-to-right
-      count.
-
-    Scope (documented): patterns of the form ``(?a).*(?b)...`` — step
-    conditions separated by ``.*`` (match-anything), the overwhelmingly
-    common shape.  Adjacency patterns (``(?1)(?2)``), time constraints
-    (``(?t<=3600)``) and other regex atoms pass through untranslated
-    (windowFunnel covers the timed case).  One collect_list per key —
-    state O(events per key), like every per-key sequence op."""
-    for name, is_count in (("sequenceMatch", False), ("sequenceCount", True)):
-        pat = re.compile(r"\b" + name + r"\(")
-        m = pat.search(chunk)
-        while m:
-            p_end = _match_paren(chunk, m.end() - 1)
-            if p_end >= len(chunk) or chunk[p_end] != "(":
-                m = pat.search(chunk, p_end)
-                continue
-            x_end = _match_paren(chunk, p_end)
-            pat_lit = resolve(chunk[m.end() : p_end - 1])
-            args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-            steps = (
-                [int(s) for s in re.findall(r"\(\?(\d+)\)", pat_lit)]
-                if pat_lit is not None
-                and re.fullmatch(r"\(\?\d+\)(?:\.\*\(\?\d+\))*", pat_lit)
-                else None
-            )
-            if not steps or len(args) < 2 or max(steps) > len(args) - 1:
-                m = pat.search(chunk, x_end)  # unsupported: pass through
-                continue
-            ts, conds = args[0], args[1:]
-            k = len(steps)
-            fields = ", ".join(
-                f"CAST({conds[idx - 1]} AS BOOLEAN) AS s{j + 1}"
-                for j, idx in enumerate(steps)
-            )
-            evs = (
-                f"array_sort(collect_list(struct({ts} AS t, {fields})))"
-            )
-            if not is_count:
-                branches = " ".join(
-                    f"WHEN s = {j} AND e.s{j + 1} THEN {j + 1}"
-                    for j in range(k)
-                )
-                repl = (
-                    f"(aggregate({evs}, 0, (s, e) -> "
-                    f"CASE {branches} ELSE s END) = {k})"
-                )
-            else:
-                done = (
-                    f"WHEN a.st = {k - 1} AND e.s{k} "
-                    f"THEN named_struct('st', 0, 'c', a.c + 1)"
-                )
-                advance = " ".join(
-                    f"WHEN a.st = {j} AND e.s{j + 1} "
-                    f"THEN named_struct('st', {j + 1}, 'c', a.c)"
-                    for j in range(k - 1)
-                )
-                repl = (
-                    f"aggregate({evs}, named_struct('st', 0, 'c', 0), "
-                    f"(a, e) -> CASE {done} {advance} ELSE a END, "
-                    f"a -> a.c)"
-                )
-            chunk = chunk[: m.start()] + repl + chunk[x_end:]
-            m = pat.search(chunk, m.start() + len(repl))
-    return chunk
+def _array_string_concat_make(args):
+    """``arrayStringConcat(arr[, sep])`` → ``array_join(arr, sep)`` (Spark
+    requires the separator; ClickHouse defaults to '')."""
+    if len(args) == 1:
+        return f"array_join({args[0]}, '')"
+    if len(args) == 2:
+        return f"array_join({args[0]}, {args[1]})"
+    return None
 
 
-def _rewrite_numbers(chunk: str) -> str:
-    """``numbers(N)`` / ``numbers(offset, N)`` (ClickHouse's integer table
-    function, column ``number``) → a ``range()`` subquery exposing the same
-    column name."""
+def _lambda_first_make(spark_name: str, zips: bool = False):
+    """ClickHouse higher-order array functions put the LAMBDA FIRST
+    (arrayMap(x -> e, arr)); Spark puts the array first (transform(arr,
+    x -> e)).  Same lambda syntax (`->`) on both sides, so only the
+    argument order moves.  Two-array arrayMap (ClickHouse zips the arrays)
+    maps to Spark's zip_with."""
 
     def make(args):
-        if len(args) == 1:
-            return f"(SELECT id AS number FROM range({args[0]}))"
-        if len(args) == 2:
-            return (
-                f"(SELECT id AS number FROM range({args[0]}, "
-                f"({args[0]}) + ({args[1]})))"
-            )
+        if len(args) >= 2 and "->" in args[0]:
+            if len(args) == 2:
+                return f"{spark_name}({args[1]}, {args[0]})"
+            if len(args) == 3 and zips:
+                return f"zip_with({args[1]}, {args[2]}, {args[0]})"
+        return None  # lambda-less or >2 arrays: leave for Spark to name
+
+    return make
+
+
+# accessor family: CH returns the element TYPE's default (0 / '') when
+# nothing matches — untypeable in a string rewrite, so these yield NULL
+# instead (try_element_at), the one documented divergence;
+# arrayFirstIndex/arrayCount keep CH's exact 0-based-none semantics
+def _array_first_last_make(idx: int):
+    def make(args):
+        if len(args) == 2 and "->" in args[0]:
+            return f"try_element_at(filter({args[1]}, {args[0]}), {idx})"
         return None
 
-    return _rewrite_call(chunk, "numbers", make)
+    return make
 
 
-def _rewrite_extract_url_parameter(chunk: str) -> str:
-    """``extractURLParameter(url, name)`` → ``parse_url(url, 'QUERY',
-    name)`` — the key argument moves from second position to third, after
-    the part selector (arity 2 only; anything else passes through)."""
-
-    def make(args):
-        if len(args) != 2:
-            return None
-        return f"try_parse_url({args[0]}, 'QUERY', {args[1]})"
-
-    return _rewrite_call(chunk, "extractURLParameter", make)
+def _array_count_make(args):
+    if len(args) == 2 and "->" in args[0]:
+        return f"size(filter({args[1]}, {args[0]}))"
+    if len(args) == 1 and "->" not in args[0]:
+        return f"size(filter({args[0]}, __x -> __x != 0))"
+    return None
 
 
-def _rewrite_lambda_array_fns(chunk: str) -> str:
-    for ch_name, spark_name in _LAMBDA_FNS.items():
-        def make(args, spark_name=spark_name, ch_name=ch_name):
-            if len(args) >= 2 and "->" in args[0]:
-                if len(args) == 2:
-                    return f"{spark_name}({args[1]}, {args[0]})"
-                if len(args) == 3 and ch_name == "arrayMap":
-                    return f"zip_with({args[1]}, {args[2]}, {args[0]})"
-            return None  # lambda-less or >2 arrays: leave for Spark to name
-
-        chunk = _rewrite_call(chunk, ch_name, make)
-
-    # accessor family: CH returns the element TYPE's default (0 / '') when
-    # nothing matches — untypeable in a string rewrite, so these yield
-    # NULL instead (try_element_at), the one documented divergence;
-    # arrayFirstIndex/arrayCount keep CH's exact 0-based-none semantics
-    def first_last(idx):
-        def make(args):
-            if len(args) == 2 and "->" in args[0]:
-                return f"try_element_at(filter({args[1]}, {args[0]}), {idx})"
-            return None
-
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayFirstIndex", lambda a: (
-        f"array_position(transform({a[1]}, {a[0]}), true)"
-        if len(a) == 2 and "->" in a[0] else None))
-    chunk = _rewrite_call(chunk, "arrayFirst", first_last(1))
-    chunk = _rewrite_call(chunk, "arrayLast", first_last(-1))
-    chunk = _rewrite_call(chunk, "arrayCount", lambda a: (
-        f"size(filter({a[1]}, {a[0]}))"
-        if len(a) == 2 and "->" in a[0]
-        else f"size(filter({a[0]}, __x -> __x != 0))"
-        if len(a) == 1 and "->" not in a[0]
-        else None))
-    return chunk
+# Curried (parametric) aggregates ``name(params)(args)``.  ClickHouse
+# ``quantile`` is approximate (reservoir) — ``percentile`` is the semantic
+# analog; exactness only improves the answer.  The sketch variants
+# (TDigest/BFloat16/Timing/Deterministic) map to Spark's own sketch
+# aggregate ``approx_percentile`` — approximate on both sides, so values
+# differ per engine (the exact names are the oracle path).
 
 
-def _rewrite_curried_quantiles(chunk: str) -> str:
-    """``quantile[Exact](p)(x)`` → ``percentile(x, p)``;
-    ``quantiles(p1,p2,...)(x)`` → ``percentile(x, array(p1,p2,...))``.
-    ClickHouse ``quantile`` is approximate (reservoir) — ``percentile`` is
-    the semantic analog; exactness only improves the answer.  The sketch
-    variants (TDigest/BFloat16/Timing/Deterministic) map to Spark's own
-    sketch aggregate ``approx_percentile`` — approximate on both sides, so
-    values differ per engine (the exact names are the oracle path)."""
+def _quantile_gk_make(single: bool):
     # quantileGK/quantilesGK(accuracy, level…)(expr): Spark's
     # approx_percentile IS the Greenwald-Khanna sketch, so the mapping is
     # 1:1 including the accuracy knob (values still engine-specific — GK
-    # summaries depend on merge order); groupConcat(sep)(expr) → listagg
-    gk = re.compile(
-        r"\b(quantilesGK|quantileGK|groupConcat|groupArraySorted"
-        r"|topKWeighted|topK|meanZTest"
-        r"|quantilesExactLow|quantilesExactHigh"
-        r"|quantileExactLow|quantileExactHigh)\("
+    # summaries depend on merge order)
+    @_curried
+    def make(params, arg):
+        head = _split_top_comma(params)
+        if arg is None or len(head) < 2:
+            return None
+        levels = (
+            head[1]
+            if single and len(head) == 2
+            else "array(" + ", ".join(head[1:]) + ")"
+        )
+        return f"approx_percentile({arg}, {levels}, {head[0]})"
+
+    return make
+
+
+@_curried
+def _group_concat_make(params, arg):
+    # groupConcat(sep)(expr) → listagg(expr, sep); the plain (uncurried)
+    # groupConcat(x) and any other shape rename to listagg
+    head = _split_top_comma(params)
+    if arg is None:
+        return f"listagg({params})"
+    if len(head) == 1:
+        return f"listagg({arg}, {head[0]})"
+    return f"listagg({params})({arg})"
+
+
+@_curried
+def _group_array_sorted_make(params, arg):
+    # smallest-N values, sorted (CH 23.x aggregate) — exact here
+    head = _split_top_comma(params)
+    if arg is None or len(head) != 1:
+        return None
+    return f"slice(array_sort(collect_list({arg})), 1, {head[0]})"
+
+
+@_curried
+def _top_k_weighted_make(params, arg):
+    # topKWeighted(N)(x, w): most-frequent-N by SUM OF WEIGHTS.  Same
+    # exact-with-pinned-tie-order stance as topK below (weight desc, value
+    # asc), same O(d·n)-per-group caveat — weights accumulate in DOUBLE.
+    head = _split_top_comma(params)
+    inner = _split_top_comma(arg) if arg is not None else []
+    if len(head) != 1 or len(inner) != 2:
+        return None
+    x, w = inner
+    pairs = (
+        f"collect_list(named_struct('e', {x}, "
+        f"'w', CAST({w} AS DOUBLE)))"
     )
-    m = gk.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = gk.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        arg = chunk[p_end + 1 : x_end - 1]
-        if m.group(1) == "groupConcat":
-            repl = f"listagg({arg}, {head[0]})" if len(head) == 1 else None
-        elif m.group(1) in (
-            "quantileExactLow", "quantileExactHigh",
-            "quantilesExactLow", "quantilesExactHigh",
-        ):
-            # nearest-rank exact quantiles: sorted[⌊p·(n−1)⌋ + 1] (Low)
-            # or ⌈…⌉ (High), 1-based — the lower/upper median convention.
-            # Collected-group exactness, the topK stance.  The plural
-            # forms return one value per requested level, in order.
-            plural = m.group(1).startswith("quantiles")
-            if (plural or len(head) == 1) and len(
-                _split_top_comma(arg)
-            ) == 1:
-                rnd = "floor" if m.group(1).endswith("Low") else "ceil"
-                pick = (
-                    f"element_at(__l, CAST({rnd}(__p * (size(__l) - 1)) "
-                    f"AS INT) + 1)"
-                )
-                if plural:
-                    levels = ", ".join(
-                        f"CAST({h} AS DOUBLE)" for h in head
-                    )
-                    body = (
-                        f"transform(array({levels}), __p -> {pick})"
-                    )
-                else:
-                    body = pick.replace("__p", f"(CAST({head[0]} AS DOUBLE))")
-                repl = (
-                    f"element_at(transform(array(array_sort("
-                    f"collect_list({arg}))), __l -> {body}), 1)"
-                )
-            else:
-                repl = None
-        elif m.group(1) == "meanZTest":
-            # meanZTest(pop_var_x, pop_var_y, conf)(data, index): two-
-            # sample z with KNOWN population variances; index 0/1 splits
-            # the rows into the two samples (the CH two-sample-test
-            # calling convention).  The z statistic only — CH's tuple
-            # also carries p-value + CI, which need the normal
-            # CDF/quantile (engine-specific numerics); the confidence
-            # level is therefore accepted and unused.  The data/index
-            # expressions are each spliced twice (column-backed caveat).
-            inner = _split_top_comma(arg)
-            if len(head) == 3 and len(inner) == 2:
-                x, idx = inner
-                va, vb = head[0], head[1]
-                sx = f"CASE WHEN ({idx}) = 0 THEN ({x}) END"
-                sy = f"CASE WHEN ({idx}) = 1 THEN ({x}) END"
-                repl = (
-                    f"((avg({sx}) - avg({sy})) / "
-                    f"sqrt(({va}) / count({sx}) + ({vb}) / count({sy})))"
-                )
-            else:
-                repl = None
-        elif m.group(1) == "topKWeighted":
-            # topKWeighted(N)(x, w): most-frequent-N by SUM OF WEIGHTS.
-            # Same exact-with-pinned-tie-order stance as topK below
-            # (weight desc, value asc), same O(d·n)-per-group caveat —
-            # weights accumulate in DOUBLE.
-            inner = _split_top_comma(arg)
-            if len(head) == 1 and len(inner) == 2:
-                x, w = inner
-                pairs = (
-                    f"collect_list(named_struct('e', {x}, "
-                    f"'w', CAST({w} AS DOUBLE)))"
-                )
-                repl = (
-                    f"slice(transform(array_sort(transform("
-                    f"array_distinct(collect_list({x})), "
-                    f"__v -> struct(-aggregate(filter({pairs}, "
-                    f"__p -> __p.e = __v), CAST(0 AS DOUBLE), "
-                    f"(__a, __p) -> __a + __p.w) AS __negw, "
-                    f"__v AS __v))), "
-                    f"__s -> __s.__v), 1, {head[0]})"
-                )
-            else:
-                repl = None
-        elif m.group(1) == "topK":
-            # most-frequent-N values.  CH's SpaceSaving sketch is O(n)
-            # approximate with engine-specific tie order; this form is
-            # EXACT with a pinned order (count desc, value asc) but
-            # counts each distinct value by scanning the collected group
-            # — O(d·n) per group, so for heavy-hitter mining at corpus
-            # scale use relational.misra_gries_topk (the documented
-            # scale path).  Single-argument form only.
-            if len(head) == 1 and len(_split_top_comma(arg)) == 1:
-                repl = (
-                    f"slice(transform(array_sort(transform("
-                    f"array_distinct(collect_list({arg})), "
-                    f"__v -> struct(-size(filter(collect_list({arg}), "
-                    f"__e -> __e = __v)) AS __negc, __v AS __v))), "
-                    f"__s -> __s.__v), 1, {head[0]})"
-                )
-            else:
-                repl = None
-        elif m.group(1) == "groupArraySorted":
-            # smallest-N values, sorted (CH 23.x aggregate) — exact here
-            repl = (
-                f"slice(array_sort(collect_list({arg})), 1, {head[0]})"
-                if len(head) == 1
-                else None
-            )
-        elif len(head) >= 2:
-            acc = head[0]
-            levels = (
-                head[1]
-                if m.group(1) == "quantileGK" and len(head) == 2
-                else "array(" + ", ".join(head[1:]) + ")"
-            )
-            repl = f"approx_percentile({arg}, {levels}, {acc})"
+    return (
+        f"slice(transform(array_sort(transform("
+        f"array_distinct(collect_list({x})), "
+        f"__v -> struct(-aggregate(filter({pairs}, "
+        f"__p -> __p.e = __v), CAST(0 AS DOUBLE), "
+        f"(__a, __p) -> __a + __p.w) AS __negw, "
+        f"__v AS __v))), "
+        f"__s -> __s.__v), 1, {head[0]})"
+    )
+
+
+@_curried
+def _top_k_make(params, arg):
+    # most-frequent-N values.  CH's SpaceSaving sketch is O(n) approximate
+    # with engine-specific tie order; this form is EXACT with a pinned
+    # order (count desc, value asc) but counts each distinct value by
+    # scanning the collected group — O(d·n) per group, so for
+    # heavy-hitter mining at corpus scale use relational.misra_gries_topk
+    # (the documented scale path).  Single-argument form only.
+    head = _split_top_comma(params)
+    if arg is None or len(head) != 1 or len(_split_top_comma(arg)) != 1:
+        return None
+    return (
+        f"slice(transform(array_sort(transform("
+        f"array_distinct(collect_list({arg})), "
+        f"__v -> struct(-size(filter(collect_list({arg}), "
+        f"__e -> __e = __v)) AS __negc, __v AS __v))), "
+        f"__s -> __s.__v), 1, {head[0]})"
+    )
+
+
+@_curried
+def _mean_z_test_make(params, arg):
+    # meanZTest(pop_var_x, pop_var_y, conf)(data, index): two-sample z with
+    # KNOWN population variances; index 0/1 splits the rows into the two
+    # samples (the CH two-sample-test calling convention).  The z
+    # statistic only — CH's tuple also carries p-value + CI, which need
+    # the normal CDF/quantile (engine-specific numerics); the confidence
+    # level is therefore accepted and unused.  The data/index expressions
+    # are each spliced twice (column-backed caveat).
+    head = _split_top_comma(params)
+    inner = _split_top_comma(arg) if arg is not None else []
+    if len(head) != 3 or len(inner) != 2:
+        return None
+    x, idx = inner
+    va, vb = head[0], head[1]
+    sx = f"CASE WHEN ({idx}) = 0 THEN ({x}) END"
+    sy = f"CASE WHEN ({idx}) = 1 THEN ({x}) END"
+    return (
+        f"((avg({sx}) - avg({sy})) / "
+        f"sqrt(({va}) / count({sx}) + ({vb}) / count({sy})))"
+    )
+
+
+def _quantile_nearest_rank_make(plural: bool, rnd: str):
+    # nearest-rank exact quantiles: sorted[⌊p·(n−1)⌋ + 1] (Low) or ⌈…⌉
+    # (High), 1-based — the lower/upper median convention.
+    # Collected-group exactness, the topK stance.  The plural forms return
+    # one value per requested level, in order.
+    @_curried
+    def make(params, arg):
+        head = _split_top_comma(params)
+        if arg is None or not (plural or len(head) == 1):
+            return None
+        if len(_split_top_comma(arg)) != 1:
+            return None
+        pick = (
+            f"element_at(__l, CAST({rnd}(__p * (size(__l) - 1)) "
+            f"AS INT) + 1)"
+        )
+        if plural:
+            levels = ", ".join(f"CAST({h} AS DOUBLE)" for h in head)
+            body = f"transform(array({levels}), __p -> {pick})"
         else:
-            repl = None
-        if repl is None:
-            m = gk.search(chunk, x_end)
-            continue
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = gk.search(chunk, m.start() + len(repl))
-    # plain groupConcat(x) (uncurried) → listagg(x)
-    chunk = re.sub(r"\bgroupConcat\(", "listagg(", chunk)
-    for name, as_array, fn in (
-        # histogram(N)(x): CH's adaptive-bin histogram -> Spark's
-        # histogram_numeric centroids — both adaptive sketches, so bin
-        # boundaries/values are engine-specific (the uniq stance); use
-        # relational.equi-height/fixed-bucket operators for oracle parity
-        ("histogram", False, "histogram_numeric"),
-        ("quantilesTDigest", True, "approx_percentile"),
-        ("quantileTDigest", False, "approx_percentile"),
-        ("quantilesTiming", True, "approx_percentile"),
-        ("quantileTiming", False, "approx_percentile"),
-        ("quantileBFloat16", False, "approx_percentile"),
-        ("quantileDeterministic", False, "approx_percentile"),
-        # weighted exact: (x, w) inner args — Spark percentile's 3rd
-        # argument is the integral frequency, exactly CH's weight
-        ("quantilesExactWeighted", True, "percentile#w"),
-        ("quantileExactWeighted", False, "percentile#w"),
-        # batch 23: the other weighted-quantile kinds share the exact
-        # weighted lane — Interpolated is exactly percentile-with-
-        # frequency; Timing/TDigest are sketches on CH (the uniq stance:
-        # exactness only improves the answer)
-        ("quantilesInterpolatedWeighted", True, "percentile#w"),
-        ("quantileInterpolatedWeighted", False, "percentile#w"),
-        ("quantilesTimingWeighted", True, "percentile#w"),
-        ("quantileTimingWeighted", False, "percentile#w"),
-        ("quantilesTDigestWeighted", True, "percentile#w"),
-        ("quantileTDigestWeighted", False, "percentile#w"),
-        ("quantilesExact", True, "percentile"),
-        ("quantileExact", False, "percentile"),
-        ("quantiles", True, "percentile"),
-        ("quantile", False, "percentile"),
-    ):
-        pat = re.compile(r"\b" + name + r"\(")
-        m = pat.search(chunk)
-        while m:
-            p_end = _match_paren(chunk, m.end() - 1)
-            if p_end >= len(chunk) or chunk[p_end] != "(":
-                m = pat.search(chunk, p_end)  # not curried: leave untouched
-                continue
-            x_end = _match_paren(chunk, p_end)
-            probs = chunk[m.end() : p_end - 1]
-            arg = chunk[p_end + 1 : x_end - 1]
-            probs_sql = f"array({probs})" if as_array else probs
-            if fn.endswith("#w"):
-                inner = _split_top_comma(arg)
-                if len(inner) != 2:
-                    m = pat.search(chunk, x_end)  # wrong arity: pass through
-                    continue
-                repl = f"{fn[:-2]}({inner[0]}, {probs_sql}, {inner[1]})"
-            else:
-                repl = f"{fn}({arg}, {probs_sql})"
-            chunk = chunk[: m.start()] + repl + chunk[x_end:]
-            m = pat.search(chunk, m.start() + len(repl))
-    return chunk
+            body = pick.replace("__p", f"(CAST({head[0]} AS DOUBLE))")
+        return (
+            f"element_at(transform(array(array_sort("
+            f"collect_list({arg}))), __l -> {body}), 1)"
+        )
+
+    return make
 
 
-def _rewrite_curried_uniq_up_to(chunk: str) -> str:
+def _quantile_make(fn: str, plural: bool = False, weighted: bool = False):
+    # quantile[s]<Kind>(p…)(x) → fn(x, p) / fn(x, array(p…)); the weighted
+    # kinds take (x, w) inner args — Spark percentile's 3rd argument is the
+    # integral frequency, exactly CH's weight
+    @_curried
+    def make(probs, arg):
+        if arg is None:
+            return None  # not curried: leave untouched
+        probs_sql = f"array({probs})" if plural else probs
+        if not weighted:
+            return f"{fn}({arg}, {probs_sql})"
+        inner = _split_top_comma(arg)
+        if len(inner) != 2:
+            return None  # wrong arity: pass through
+        return f"{fn}({inner[0]}, {probs_sql}, {inner[1]})"
+
+    return make
+
+
+@_curried
+def _uniq_up_to_make(cap, arg):
     """``uniqUpTo(N)(x)`` → ``least(count(DISTINCT x), (N) + 1)`` —
     ClickHouse counts exactly up to N and returns N+1 for anything beyond,
     so BOTH ``>= N`` and the idiomatic strict ``> N`` ("more than N
     distinct?") predicates keep their truth value under translation."""
-    pat = re.compile(r"\buniqUpTo\(")
-    m = pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        cap = chunk[m.end() : p_end - 1]
-        arg = chunk[p_end + 1 : x_end - 1]
-        repl = f"least(count(DISTINCT {arg}), ({cap}) + 1)"
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = pat.search(chunk, m.start() + len(repl))
-    return chunk
+    if arg is None:
+        return None
+    return f"least(count(DISTINCT {arg}), ({cap}) + 1)"
 
 
-# a '[' after one of these keywords (or after an operator/comma/open
-# paren) opens an ARRAY LITERAL; after an identifier/')'/']' it is
-# element access (arr[1] — both engines use the same indexing syntax)
-_ARRAY_LIT_KEYWORDS = {
-    "SELECT", "WHEN", "THEN", "ELSE", "IN", "AS", "ON", "AND", "OR", "NOT",
-    "BY", "WHERE", "HAVING", "RETURN", "UNION", "ALL", "DISTINCT", "BETWEEN",
-    "LIKE", "IS", "CASE", "END", "FROM", "LIMIT", "OFFSET", "INTERVAL",
-}
-
-
-def _rewrite_window_funnel(chunk: str) -> str:
+@_curried
+def _window_funnel_make(params, arg):
     """``windowFunnel(W)(ts, c1, …, ck)`` → one codegen ``aggregate`` fold
     over the key's time-sorted events, O(E·k) per key (reference parity:
     the App.jsx query surface passes raw CH SQL through server.js:231;
@@ -2182,50 +2049,165 @@ def _rewrite_window_funnel(chunk: str) -> str:
     chain's first event).  Strict modes and non-literal windows pass
     through untranslated (the DataFrame operator covers them).
     """
-    pat = re.compile(r"\bwindowFunnel\(")
-    m = pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = pat.search(chunk, p_end)  # not curried: leave untouched
-            continue
-        x_end = _match_paren(chunk, p_end)
-        w_args = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if (
-            len(w_args) != 1
-            or not re.fullmatch(r"\d+", w_args[0].strip())
-            or len(args) < 2
-        ):
-            m = pat.search(chunk, x_end)  # modes / dynamic window
-            continue
-        w_us = int(w_args[0].strip()) * 1_000_000
-        ts, conds = args[0], args[1:]
-        k = len(conds)
-        fields = ", ".join(
-            f"CAST({c} AS BOOLEAN) AS s{j + 1}" for j, c in enumerate(conds)
+    if arg is None:
+        return None
+    w_args = _split_top_comma(params)
+    args = _split_top_comma(arg)
+    if (
+        len(w_args) != 1
+        or not re.fullmatch(r"\d+", w_args[0].strip())
+        or len(args) < 2
+    ):
+        return None  # modes / dynamic window
+    w_us = int(w_args[0].strip()) * 1_000_000
+    ts, conds = args[0], args[1:]
+    k = len(conds)
+    fields = ", ".join(
+        f"CAST({c} AS BOOLEAN) AS s{j + 1}" for j, c in enumerate(conds)
+    )
+    evs = (
+        f"array_sort(collect_list(struct("
+        f"unix_micros(CAST({ts} AS TIMESTAMP)) AS t, {fields})))"
+    )
+    init = ", ".join(f"'f{j + 1}', -1L" for j in range(k))
+    upd = ["'f1', CASE WHEN e.s1 THEN e.t ELSE a.f1 END"]
+    for j in range(2, k + 1):
+        upd.append(
+            f"'f{j}', CASE WHEN e.s{j} AND a.f{j - 1} >= 0L "
+            f"AND e.t <= a.f{j - 1} + {w_us}L "
+            f"THEN a.f{j - 1} ELSE a.f{j} END"
         )
-        evs = (
-            f"array_sort(collect_list(struct("
-            f"unix_micros(CAST({ts} AS TIMESTAMP)) AS t, {fields})))"
-        )
-        init = ", ".join(f"'f{j + 1}', -1L" for j in range(k))
-        upd = ["'f1', CASE WHEN e.s1 THEN e.t ELSE a.f1 END"]
-        for j in range(2, k + 1):
-            upd.append(
-                f"'f{j}', CASE WHEN e.s{j} AND a.f{j - 1} >= 0L "
-                f"AND e.t <= a.f{j - 1} + {w_us}L "
-                f"THEN a.f{j - 1} ELSE a.f{j} END"
-            )
-        fin = " ".join(f"WHEN a.f{j} >= 0L THEN {j}" for j in range(k, 0, -1))
-        repl = (
-            f"aggregate({evs}, named_struct({init}), "
-            f"(a, e) -> named_struct({', '.join(upd)}), "
-            f"a -> CASE {fin} ELSE 0 END)"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = pat.search(chunk, m.start() + len(repl))
-    return chunk
+    fin = " ".join(f"WHEN a.f{j} >= 0L THEN {j}" for j in range(k, 0, -1))
+    return (
+        f"aggregate({evs}, named_struct({init}), "
+        f"(a, e) -> named_struct({', '.join(upd)}), "
+        f"a -> CASE {fin} ELSE 0 END)"
+    )
+
+
+# Call rewrites that run BEFORE the bracket pass (_rewrite_array_literals):
+# a curried ``f(p)(x)[i]`` must be one call again before ``)[`` reads as
+# element access.
+_EARLY_CALLS = _table([
+    ("intDiv", _int_div_make),
+    # ClickHouse -If combinator → conditional aggregate.  The CASE makes
+    # non-matching rows NULL, which every aggregate here ignores; anyIf
+    # needs an explicit ignore-nulls first_value, uniqIf a DISTINCT over
+    # the CASE (countIf is the count_if rename).
+    # two-argument aggregates: BOTH args null out on a false condition
+    # (max_by/min_by ignore rows whose ordering value is NULL)
+    (
+        "argMaxIf",
+        (3, "max_by(CASE WHEN {2} THEN {0} END, CASE WHEN {2} THEN {1} END)"),
+    ),
+    (
+        "argMinIf",
+        (3, "min_by(CASE WHEN {2} THEN {0} END, CASE WHEN {2} THEN {1} END)"),
+    ),
+    ("sumIf", (2, "sum(CASE WHEN {1} THEN {0} END)")),
+    ("avgIf", (2, "avg(CASE WHEN {1} THEN {0} END)")),
+    ("minIf", (2, "min(CASE WHEN {1} THEN {0} END)")),
+    ("maxIf", (2, "max(CASE WHEN {1} THEN {0} END)")),
+    ("anyIf", (2, "first_value(CASE WHEN {1} THEN {0} END, true)")),
+    ("uniqIf", (2, "count(DISTINCT CASE WHEN {1} THEN {0} END)")),
+    ("uniqExactIf", (2, "count(DISTINCT CASE WHEN {1} THEN {0} END)")),
+    # the CASE nulls out non-matching rows; percentile and collect_list
+    # both ignore NULLs, so the conditional forms compose the same way as
+    # sum/avg
+    ("medianIf", (2, "percentile(CASE WHEN {1} THEN {0} END, 0.5)")),
+    ("medianExactIf", (2, "percentile(CASE WHEN {1} THEN {0} END, 0.5)")),
+    ("groupArrayIf", (2, "collect_list(CASE WHEN {1} THEN {0} END)")),
+    (
+        "groupUniqArrayIf",
+        (2, "array_distinct(collect_list(CASE WHEN {1} THEN {0} END))"),
+    ),
+    ("arrayMap", _lambda_first_make("transform", zips=True)),
+    ("arrayFilter", _lambda_first_make("filter")),
+    ("arrayExists", _lambda_first_make("exists")),
+    ("arrayAll", _lambda_first_make("forall")),
+    (
+        "arrayFirstIndex",
+        lambda a: (
+            f"array_position(transform({a[1]}, {a[0]}), true)"
+            if len(a) == 2 and "->" in a[0]
+            else None
+        ),
+    ),
+    ("arrayFirst", _array_first_last_make(1)),
+    ("arrayLast", _array_first_last_make(-1)),
+    ("arrayCount", _array_count_make),
+    ("multiIf", _multi_if_make),
+    # splitByChar/splitByString(sep, s) → split(s, sep) with the separator
+    # wrapped in \Q…\E so Spark's regex split treats it literally
+    # (ClickHouse splits on the raw string — a '.' or '|' separator must
+    # not become a regex)
+    ("splitByChar", (2, "split({1}, concat('\\\\Q', {0}, '\\\\E'))")),
+    ("splitByString", (2, "split({1}, concat('\\\\Q', {0}, '\\\\E'))")),
+    # splitByRegexp keeps the pattern AS a regex (arg order swaps)
+    ("splitByRegexp", (2, "split({1}, {0})")),
+    # alphaTokens: maximal a-zA-Z runs; splitting leaves '' stubs at the
+    # edges, filtered out to match CH.  \P{Alpha} (ASCII, Java regex)
+    # instead of a [^...] class — generated brackets would be re-parsed
+    # as a CH array literal by a later rewrite stage
+    (
+        "alphaTokens",
+        (1, "filter(split({0}, '\\\\P{{Alpha}}+'), __t -> __t != '')"),
+    ),
+    ("arrayStringConcat", _array_string_concat_make),
+    ("quantilesGK", _quantile_gk_make(single=False)),
+    ("quantileGK", _quantile_gk_make(single=True)),
+    ("groupConcat", _group_concat_make),
+    ("groupArraySorted", _group_array_sorted_make),
+    ("topKWeighted", _top_k_weighted_make),
+    ("topK", _top_k_make),
+    ("meanZTest", _mean_z_test_make),
+    ("quantilesExactLow", _quantile_nearest_rank_make(True, "floor")),
+    ("quantilesExactHigh", _quantile_nearest_rank_make(True, "ceil")),
+    ("quantileExactLow", _quantile_nearest_rank_make(False, "floor")),
+    ("quantileExactHigh", _quantile_nearest_rank_make(False, "ceil")),
+    # histogram(N)(x): CH's adaptive-bin histogram -> Spark's
+    # histogram_numeric centroids — both adaptive sketches, so bin
+    # boundaries/values are engine-specific (the uniq stance); use
+    # relational.equi-height/fixed-bucket operators for oracle parity
+    ("histogram", _quantile_make("histogram_numeric")),
+    ("quantilesTDigest", _quantile_make("approx_percentile", plural=True)),
+    ("quantileTDigest", _quantile_make("approx_percentile")),
+    ("quantilesTiming", _quantile_make("approx_percentile", plural=True)),
+    ("quantileTiming", _quantile_make("approx_percentile")),
+    ("quantileBFloat16", _quantile_make("approx_percentile")),
+    ("quantileDeterministic", _quantile_make("approx_percentile")),
+    ("quantilesExactWeighted", _quantile_make("percentile", True, weighted=True)),
+    ("quantileExactWeighted", _quantile_make("percentile", weighted=True)),
+    # the other weighted-quantile kinds share the exact weighted lane —
+    # Interpolated is exactly percentile-with-frequency; Timing/TDigest
+    # are sketches on CH (the uniq stance: exactness only improves the
+    # answer)
+    (
+        "quantilesInterpolatedWeighted",
+        _quantile_make("percentile", True, weighted=True),
+    ),
+    ("quantileInterpolatedWeighted", _quantile_make("percentile", weighted=True)),
+    ("quantilesTimingWeighted", _quantile_make("percentile", True, weighted=True)),
+    ("quantileTimingWeighted", _quantile_make("percentile", weighted=True)),
+    ("quantilesTDigestWeighted", _quantile_make("percentile", True, weighted=True)),
+    ("quantileTDigestWeighted", _quantile_make("percentile", weighted=True)),
+    ("quantilesExact", _quantile_make("percentile", plural=True)),
+    ("quantileExact", _quantile_make("percentile")),
+    ("quantiles", _quantile_make("percentile", plural=True)),
+    ("quantile", _quantile_make("percentile")),
+    ("uniqUpTo", _uniq_up_to_make),
+    ("windowFunnel", _window_funnel_make),
+])
+
+
+# a '[' after one of these keywords (or after an operator/comma/open
+# paren) opens an ARRAY LITERAL; after an identifier/')'/']' it is
+# element access (arr[1] — both engines use the same indexing syntax)
+_ARRAY_LIT_KEYWORDS = {
+    "SELECT", "WHEN", "THEN", "ELSE", "IN", "AS", "ON", "AND", "OR", "NOT",
+    "BY", "WHERE", "HAVING", "RETURN", "UNION", "ALL", "DISTINCT", "BETWEEN",
+    "LIKE", "IS", "CASE", "END", "FROM", "LIMIT", "OFFSET", "INTERVAL",
+}
 
 
 def _rewrite_array_literals(chunk: str) -> str:
@@ -2326,1428 +2308,6 @@ def _rewrite_array_literals(chunk: str) -> str:
         base = chunk[s : j + 1]
         chunk = chunk[:s] + f"try_element_at({base}, {inner})" + chunk[e:]
         i = s  # rescan: base/inner may hold further brackets
-    return chunk
-
-
-_DATE_ADD_UNITS = {
-    "addSeconds": "SECOND", "addMinutes": "MINUTE", "addHours": "HOUR",
-    "addDays": "DAY", "addWeeks": "WEEK", "addMonths": "MONTH",
-    "addYears": "YEAR",
-    "subtractSeconds": "SECOND", "subtractMinutes": "MINUTE",
-    "subtractHours": "HOUR", "subtractDays": "DAY", "subtractWeeks": "WEEK",
-    "subtractMonths": "MONTH", "subtractYears": "YEAR",
-}
-
-
-def _rewrite_misc_calls(chunk: str) -> str:
-    """Multi-argument rewrites that need their own templates (the
-    single-arg wraps and same-order renames can't express them):
-
-    * ``hasAll(a, b)`` → ``size(array_except(b, a)) = 0``
-    * ``bitAnd/bitOr/bitXor(a, b)`` → the ``&``/``|``/``^`` operators
-    * ``positionCaseInsensitive(h, n)`` → ``instr(lower(h), lower(n))``
-    * ``extractAll(s, re)`` → ``regexp_extract_all(s, re, 0)`` (whole-match
-      group; CH extracts the first capture group when one exists — port
-      group-using patterns by hand)
-    * ``arrayAvg(x)`` → sum-fold / size (DOUBLE; references x twice —
-      fine for column-backed arrays, the caveat the intDiv rewrite
-      documents)
-    * ``addDays(ts, n)`` / ``subtractHours(ts, n)`` / … →
-      ``timestampadd(UNIT, ±n, ts)`` (argument order moves)
-    * ``dateSub(UNIT, n, ts)`` → ``timestampadd(UNIT, -(n), ts)``
-    """
-    # ClickHouse's zero-arg count() — Spark requires count(*)
-    chunk = re.sub(r"\bcount\(\s*\)", "count(*)", chunk, flags=re.IGNORECASE)
-
-    def two(template):
-        def make(args):
-            return template.format(*args) if len(args) == 2 else None
-        return make
-
-    chunk = _rewrite_call(chunk, "hasAll", two("(size(array_except({1}, {0})) = 0)"))
-    chunk = _rewrite_call(chunk, "bitAnd", two("(({0}) & ({1}))"))
-    chunk = _rewrite_call(chunk, "bitOr", two("(({0}) | ({1}))"))
-    chunk = _rewrite_call(chunk, "bitXor", two("(({0}) ^ ({1}))"))
-    chunk = _rewrite_call(
-        chunk, "positionCaseInsensitive", two("instr(lower({0}), lower({1}))")
-    )
-    chunk = _rewrite_call(chunk, "extractAll", two("regexp_extract_all({0}, {1}, 0)"))
-    # multiSearchAny(haystack, [needles]) — any-substring test; the array
-    # side iterates under exists so the haystack is referenced once
-    chunk = _rewrite_call(
-        chunk, "multiSearchAnyCaseInsensitive",
-        two("exists({1}, __n -> contains(lower({0}), lower(__n)))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "multiSearchAny", two("exists({1}, __n -> contains({0}, __n))")
-    )
-    # simpleLinearRegression(x, y) → CH's (k, b) tuple as the positional
-    # struct (col1=slope, col2=intercept) tupleElement/.1 access expects;
-    # Spark's regr_* take the DEPENDENT variable first
-    chunk = _rewrite_call(
-        chunk, "simpleLinearRegression",
-        two("named_struct('col1', regr_slope({1}, {0}), "
-            "'col2', regr_intercept({1}, {0}))"),
-    )
-    # function-form arithmetic (CH exposes the operators as functions too);
-    # divide is always floating-point in CH — Spark's / on integers is
-    # DOUBLE division as well, so the operator maps directly
-    chunk = _rewrite_call(chunk, "plus", two("(({0}) + ({1}))"))
-    chunk = _rewrite_call(chunk, "minus", two("(({0}) - ({1}))"))
-    chunk = _rewrite_call(chunk, "multiply", two("(({0}) * ({1}))"))
-    chunk = _rewrite_call(chunk, "divide", two("(({0}) / ({1}))"))
-
-    def int_div_or_zero_make(args):
-        if len(args) != 2:
-            return None
-        a = f"CAST({args[0]} AS BIGINT)"
-        b = f"CAST({args[1]} AS BIGINT)"
-        return (
-            f"(CASE WHEN {b} = 0 THEN 0L ELSE "
-            f"(({a} DIV {b}) + (CASE WHEN ({a} % {b}) != 0 "
-            f"AND (({a} < 0) != ({b} < 0)) THEN -1 ELSE 0 END)) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "intDivOrZero", int_div_or_zero_make)
-    # finiteness family (CH: NaN is neither finite nor infinite); the
-    # double-reference caveat matches intDiv's documentation
-    chunk = _rewrite_call(
-        chunk, "isFinite",
-        lambda a: f"(NOT isnan({a[0]}) AND abs({a[0]}) != double('Infinity'))"
-        if len(a) == 1 else None,
-    )
-    chunk = _rewrite_call(
-        chunk, "ifNotFinite",
-        lambda a: f"(CASE WHEN isnan({a[0]}) OR abs({a[0]}) = "
-        f"double('Infinity') THEN {a[1]} ELSE {a[0]} END)"
-        if len(a) == 2 else None,
-    )
-
-    def to_decimal_make(precision):
-        def make(args):
-            if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
-                return None
-            return f"CAST({args[0]} AS DECIMAL({precision}, {args[1].strip()}))"
-
-        return make
-
-    # CH toDecimal32/64/128(x, scale): 9/18/38-digit decimals
-    chunk = _rewrite_call(chunk, "toDecimal32", to_decimal_make(9))
-    chunk = _rewrite_call(chunk, "toDecimal64", to_decimal_make(18))
-    chunk = _rewrite_call(chunk, "toDecimal128", to_decimal_make(38))
-    # batch 26: Decimal256 shares the DECIMAL(38) lane — Spark's widest
-    # (the toInt128/256 documented-bound stance)
-    chunk = _rewrite_call(chunk, "toDecimal256", to_decimal_make(38))
-
-    def retention_make(args):
-        # CH retention(c1, …, ck): r[0] = OR-over-rows(c1); r[i] =
-        # OR-over-rows(c(i+1)) AND r[0] (source: AggregateFunctionRetention
-        # finalize).  max(if(...)) is the OR; Spark dedups the repeated
-        # max(c1) aggregate in the physical plan, so the anchor is
-        # computed once.
-        if len(args) < 1:
-            return None
-        anchor = f"max(CASE WHEN {args[0]} THEN 1 ELSE 0 END)"
-        cells = [anchor] + [
-            f"({anchor} * max(CASE WHEN {c} THEN 1 ELSE 0 END))"
-            for c in args[1:]
-        ]
-        return "array(" + ", ".join(cells) + ")"
-
-    chunk = _rewrite_call(chunk, "retention", retention_make)
-
-    def avg_make(args):
-        # nullif(size, 0): empty arrays yield NULL instead of an ANSI
-        # DIVIDE_BY_ZERO (CH returns nan; NULL is the relational encoding,
-        # the arrayAUC convention — r5 fix)
-        if len(args) != 1:
-            return None
-        a = args[0]
-        return (
-            f"(aggregate({a}, CAST(0 AS DOUBLE), (__a, __v) -> __a + __v) "
-            f"/ nullif(size({a}), 0))"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayAvg", avg_make)
-
-    def diff_make(args):
-        # arrayDifference([a1,a2,a3]) = [0, a2-a1, a3-a2]: element-wise
-        # subtract against the right-shifted array (references the
-        # argument 3× — fine for column-backed arrays, the documented
-        # intDiv-style caveat)
-        if len(args) != 1:
-            return None
-        a = args[0]
-        # greatest(size-1, 0): for an empty array slice(a, 1, -1) raises
-        # INVALID_PARAMETER_VALUE.LENGTH in Spark, while ClickHouse's
-        # arrayDifference([]) returns [] — clamping makes the shifted
-        # array [] / [a1] for empty / 1-element inputs, so zip_with
-        # yields [] / [0] exactly like ClickHouse
-        return (
-            f"zip_with({a}, concat(slice({a}, 1, 1), "
-            f"slice({a}, 1, greatest(size({a}) - 1, 0))), (a, b) -> a - b)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayDifference", diff_make)
-
-    def compact_make(args):
-        # arrayCompact: drop CONSECUTIVE duplicates (keep the first of
-        # each run) — filter on (value, index) pairs vs the predecessor
-        if len(args) != 1:
-            return None
-        a = args[0]
-        return (
-            f"transform(filter(transform({a}, (v, i) -> struct(v AS v, i AS i)), "
-            f"s -> s.i = 0 OR NOT s.v <=> element_at({a}, s.i)), s -> s.v)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayCompact", compact_make)
-
-    def cumsum_make(args):
-        # arrayCumSum: one aggregate fold carrying (running sum, out array)
-        # — O(n), no slice-per-element.  DOUBLE accumulation like the
-        # arraySum rewrite (cast back where integer exactness matters).
-        if len(args) != 1:
-            return None
-        a = args[0]
-        return (
-            f"aggregate({a}, "
-            "named_struct('s', CAST(0 AS DOUBLE), 's_arr', CAST(array() AS ARRAY<DOUBLE>)), "
-            "(acc, x) -> named_struct('s', acc.s + x, "
-            "'s_arr', concat(acc.s_arr, array(acc.s + x))), "
-            "acc -> acc.s_arr)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayCumSum", cumsum_make)
-
-    def avg_weighted_make(args):
-        # avgWeighted(x, w) = Σ x·w / Σ w (CH returns NaN on zero weight
-        # sum; Spark returns NULL — the honest SQL analog)
-        if len(args) != 2:
-            return None
-        return f"(sum(({args[0]}) * ({args[1]})) / sum({args[1]}))"
-
-    chunk = _rewrite_call(chunk, "avgWeighted", avg_weighted_make)
-
-    def count_equal_make(args):
-        # countEqual(arr, v): NULL-safe equality so countEqual(a, NULL)
-        # counts NULL elements like ClickHouse
-        if len(args) != 2:
-            return None
-        return f"size(filter({args[0]}, __x -> __x <=> ({args[1]})))"
-
-    chunk = _rewrite_call(chunk, "countEqual", count_equal_make)
-
-    def range_make(args):
-        # range(n) = [0..n-1]; range(s, e) = [s..e-1].  The slice guard
-        # matters: Spark's sequence(0, -1) DESCENDS instead of returning
-        # [] for n = 0.
-        if len(args) == 1:
-            n = args[0]
-            return (
-                f"slice(sequence(0, greatest(({n}) - 1, 0)), "
-                f"1, greatest(({n}), 0))"
-            )
-        if len(args) == 2:
-            s, e = args
-            return (
-                f"slice(sequence(({s}), greatest(({e}) - 1, ({s}))), "
-                f"1, greatest(({e}) - ({s}), 0))"
-            )
-        return None
-
-    chunk = _rewrite_call(chunk, "range", range_make)
-
-    def push_make(front: bool):
-        def make(args):
-            if len(args) != 2:
-                return None
-            a, v = args
-            return (
-                f"concat(array({v}), {a})" if front else f"concat({a}, array({v}))"
-            )
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayPushBack", push_make(False))
-    chunk = _rewrite_call(chunk, "arrayPushFront", push_make(True))
-
-    def pop_make(front: bool):
-        def make(args):
-            if len(args) != 1:
-                return None
-            a = args[0]
-            start = "2" if front else "1"
-            return f"slice({a}, {start}, greatest(size({a}) - 1, 0))"
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayPopBack", pop_make(False))
-    chunk = _rewrite_call(chunk, "arrayPopFront", pop_make(True))
-
-    def fold_make(args):
-        # arrayFold((acc, x) -> ..., arr, init) → aggregate(arr, init,
-        # (acc, x) -> ...): same fold, the lambda moves from first to last
-        if len(args) != 3 or "->" not in args[0]:
-            return None
-        lam, arr, init = args
-        return f"aggregate({arr}, {init}, {lam})"
-
-    chunk = _rewrite_call(chunk, "arrayFold", fold_make)
-
-    def count_substrings_make(args):
-        # countSubstrings(h, n): non-overlapping occurrence count via the
-        # length-delta trick — pure codegen, no regex
-        if len(args) != 2:
-            return None
-        h, n = args
-        return (
-            f"(CASE WHEN length({n}) = 0 THEN 0 ELSE "
-            f"(length({h}) - length(replace({h}, {n}, ''))) DIV length({n}) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "countSubstrings", count_substrings_make)
-
-    def count_matches_make(args):
-        if len(args) != 2:
-            return None
-        return f"size(regexp_extract_all({args[0]}, {args[1]}, 0))"
-
-    chunk = _rewrite_call(chunk, "countMatches", count_matches_make)
-
-    def tsoi_make(args):
-        # toStartOfInterval(ts, INTERVAL n unit) → epoch-aligned bucket
-        # floor — the CH dashboard bucketing idiom.  Fixed-width units
-        # only (second/minute/hour/day are epoch-aligned in CH too);
-        # week/month/quarter/year have calendar origins — toMonday /
-        # toStartOfMonth etc. cover those, so the variable-width forms
-        # pass through untranslated.
-        if len(args) != 2:
-            return None
-        m = re.fullmatch(
-            r"(?is)\s*INTERVAL\s+(\d+)\s+(second|minute|hour|day)s?\s*",
-            args[1],
-        )
-        if not m:
-            return None
-        mult = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
-        secs = int(m.group(1)) * mult[m.group(2).lower()]
-        return (
-            f"timestamp_seconds((unix_timestamp({args[0]}) DIV {secs}) * {secs})"
-        )
-
-    chunk = _rewrite_call(chunk, "toStartOfInterval", tsoi_make)
-
-    def assume_make(args):
-        # assumeNotNull is a type-level assertion in CH; value-wise identity
-        return f"({args[0]})" if len(args) == 1 else None
-
-    chunk = _rewrite_call(chunk, "assumeNotNull", assume_make)
-
-    def transform_value_make(args):
-        # CH transform(x, [from...], [to...], default) — value mapping.
-        # Spark spells the same thing map_from_arrays + element_at (missing
-        # key → NULL → coalesce to the default).  Only the 4-arg form; the
-        # 3-arg form (default = x itself) reuses x.  NOT the array
-        # higher-order transform — that one takes a lambda 2nd argument
-        # and is left to Spark's own transform() by checking for '->'.
-        # Spark's element_at requires probe type = key type — EXACTLY the
-        # constraint ClickHouse places on transform's x vs array_from, so
-        # CH-valid queries analyze and CH-invalid ones fail the same way.
-        if len(args) == 4 and "->" not in args[1]:
-            x, f, t, d = args
-            return (
-                f"coalesce(element_at(map_from_arrays({f}, {t}), {x}), {d})"
-            )
-        if len(args) == 3 and "->" not in args[1]:
-            x, f, t = args
-            return (
-                f"coalesce(element_at(map_from_arrays({f}, {t}), {x}), {x})"
-            )
-        return None
-
-    chunk = _rewrite_call(chunk, "transform", transform_value_make)
-
-    def tuple_make(args):
-        # tuple(a, b) → named_struct('col1', a, 'col2', b): plain struct()
-        # names fields after the argument EXPRESSIONS (a column arg yields
-        # its own name, not colN), which would break tupleElement's
-        # 1-based positional access — forcing col1..colN restores CH's
-        # positional tuple semantics.
-        if not args:
-            return None
-        fields = ", ".join(f"'col{i + 1}', {a}" for i, a in enumerate(args))
-        return f"named_struct({fields})"
-
-    chunk = _rewrite_call(chunk, "tuple", tuple_make)
-
-
-    for name, unit in _DATE_ADD_UNITS.items():
-        sign = "-" if name.startswith("subtract") else ""
-        chunk = _rewrite_call(
-            chunk, name,
-            two(f"timestampadd({unit}, {sign}({{1}}), {{0}})"),
-        )
-
-    def date_sub_make(args):
-        if len(args) != 3:
-            return None
-        return f"timestampadd({args[0]}, -({args[1]}), {args[2]})"
-
-    chunk = _rewrite_call(chunk, "dateSub", date_sub_make)
-
-    def resize_make(args):
-        # arrayResize(a, n[, fill]): pad/truncate to n elements.  Index
-        # probe via try_element_at keeps the element type without naming
-        # it (a string rewrite can't) — the 2-arg form therefore pads
-        # with NULL where CH pads with the type's default value, the same
-        # documented divergence as arrayFirst.  The slice guard handles
-        # n <= 0 (Spark's sequence(1, 0) DESCENDS instead of returning []).
-        if len(args) == 2:
-            a, n = args
-            probe = f"try_element_at({a}, CAST(__i AS INT))"
-        elif len(args) == 3:
-            a, n, fill = args
-            probe = (
-                f"CASE WHEN __i <= size({a}) "
-                f"THEN try_element_at({a}, CAST(__i AS INT)) "
-                f"ELSE {fill} END"
-            )
-        else:
-            return None
-        return (
-            f"transform(slice(sequence(1, greatest(({n}), 1)), "
-            f"1, greatest(({n}), 0)), __i -> {probe})"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayResize", resize_make)
-
-    def rotate_make(left: bool):
-        def make(args):
-            # arrayRotateLeft/Right(a, n): n may exceed size or be
-            # negative — pmod normalizes; the size<2 guard also dodges
-            # pmod-by-zero on empty arrays
-            if len(args) != 2:
-                return None
-            a, n = args
-            k = f"({n})" if left else f"(-({n}))"
-            return (
-                f"(CASE WHEN size({a}) < 2 THEN {a} ELSE "
-                f"concat(slice({a}, CAST(pmod({k}, size({a})) AS INT) + 1, "
-                f"size({a})), "
-                f"slice({a}, 1, CAST(pmod({k}, size({a})) AS INT))) END)"
-            )
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayRotateLeft", rotate_make(True))
-    chunk = _rewrite_call(chunk, "arrayRotateRight", rotate_make(False))
-
-    def product_make(args):
-        # arrayProduct returns Float64 in CH regardless of input type
-        if len(args) != 1:
-            return None
-        return (
-            f"aggregate({args[0]}, CAST(1 AS DOUBLE), (__a, __v) -> __a * __v)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayProduct", product_make)
-
-    def cumsum_nn_make(args):
-        # arrayCumSumNonNegative: running sum clamped at 0 after every
-        # step — same one-pass fold shape as arrayCumSum above
-        if len(args) != 1:
-            return None
-        return (
-            f"aggregate({args[0]}, "
-            "named_struct('s', CAST(0 AS DOUBLE), 's_arr', CAST(array() AS ARRAY<DOUBLE>)), "
-            "(acc, x) -> named_struct('s', greatest(acc.s + x, CAST(0 AS DOUBLE)), "
-            "'s_arr', concat(acc.s_arr, array(greatest(acc.s + x, CAST(0 AS DOUBLE))))), "
-            "acc -> acc.s_arr)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayCumSumNonNegative", cumsum_nn_make)
-
-    def tokens_make(args):
-        # tokens(s): maximal alphanumeric runs.  \P{Alnum} instead of a
-        # [^...] class for the same reason as alphaTokens — generated
-        # brackets would be re-read as a CH array literal downstream
-        if len(args) != 1:
-            return None
-        return (
-            f"filter(split({args[0]}, '\\\\P{{Alnum}}+'), __t -> __t != '')"
-        )
-
-    chunk = _rewrite_call(chunk, "tokens", tokens_make)
-
-    def ngrams_make(args):
-        # ngrams(s, n): all length-n character substrings; the slice
-        # guard yields [] when length(s) < n (sequence(1, 0) descends)
-        if len(args) != 2:
-            return None
-        s, n = args
-        hi = f"greatest(length({s}) - ({n}) + 1, 1)"
-        cnt = f"greatest(length({s}) - ({n}) + 1, 0)"
-        return (
-            f"transform(slice(sequence(1, {hi}), 1, {cnt}), "
-            f"__i -> substr({s}, __i, {n}))"
-        )
-
-    chunk = _rewrite_call(chunk, "ngrams", ngrams_make)
-
-    def month_name_make(args):
-        return f"date_format({args[0]}, 'MMMM')" if len(args) == 1 else None
-
-    chunk = _rewrite_call(chunk, "monthName", month_name_make)
-
-    def readable_size_make(args):
-        # formatReadableSize: binary-prefixed '%.2f <unit>'.  greatest(|x|,
-        # 1) keeps log defined at 0; the unit index is clamped to the table
-        if len(args) != 1:
-            return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        idx = f"least(floor(log(1024, greatest(abs({x}), 1))), 8)"
-        return (
-            f"format_string('%.2f %s', {x} / pow(1024, {idx}), "
-            f"element_at(array('B', 'KiB', 'MiB', 'GiB', 'TiB', 'PiB', "
-            f"'EiB', 'ZiB', 'YiB'), CAST({idx} AS INT) + 1))"
-        )
-
-    chunk = _rewrite_call(chunk, "formatReadableSize", readable_size_make)
-
-    def readable_qty_make(args):
-        # formatReadableQuantity: decimal thousands ('1.23 million');
-        # below 1000 CH prints the bare '%.2f'
-        if len(args) != 1:
-            return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        idx = f"least(floor(log(1000, greatest(abs({x}), 1))), 5)"
-        return (
-            f"format_string('%.2f%s', {x} / pow(1000, {idx}), "
-            f"element_at(array('', ' thousand', ' million', ' billion', "
-            f"' trillion', ' quadrillion'), CAST({idx} AS INT) + 1))"
-        )
-
-    chunk = _rewrite_call(chunk, "formatReadableQuantity", readable_qty_make)
-
-    def bucket_make(secs: int):
-        def make(args):
-            if len(args) != 1:
-                return None
-            return (
-                f"timestamp_seconds((unix_timestamp({args[0]}) "
-                f"DIV {secs}) * {secs})"
-            )
-        return make
-
-    chunk = _rewrite_call(chunk, "toStartOfFiveMinutes", bucket_make(300))
-    chunk = _rewrite_call(chunk, "toStartOfTenMinutes", bucket_make(600))
-    chunk = _rewrite_call(chunk, "toStartOfFifteenMinutes", bucket_make(900))
-    # timeSlot rounds down to the half-hour
-    chunk = _rewrite_call(chunk, "timeSlot", bucket_make(1800))
-
-    def mjd_make(args):
-        # Modified Julian Day epoch is 1858-11-17
-        if len(args) != 1:
-            return None
-        return f"datediff(to_date({args[0]}), DATE '1858-11-17')"
-
-    chunk = _rewrite_call(chunk, "toModifiedJulianDay", mjd_make)
-
-    def from_mjd_make(args):
-        # CH returns the date in text form; DATE prints identically
-        if len(args) != 1:
-            return None
-        return f"date_add(DATE '1858-11-17', CAST(({args[0]}) AS INT))"
-
-    chunk = _rewrite_call(chunk, "fromModifiedJulianDay", from_mjd_make)
-
-    def bit_test_make(args):
-        # bitTest(n, i) → UInt8-style 0/1 (the empty() type convention)
-        if len(args) != 2:
-            return None
-        return (
-            f"CAST(shiftright(CAST(({args[0]}) AS BIGINT), "
-            f"CAST(({args[1]}) AS INT)) & 1 AS INT)"
-        )
-
-    chunk = _rewrite_call(chunk, "bitTest", bit_test_make)
-
-    def bit_test_multi(op: str):
-        def make(args):
-            if len(args) < 2:
-                return None
-            n = args[0]
-            bits = [
-                f"CAST(shiftright(CAST(({n}) AS BIGINT), "
-                f"CAST(({i}) AS INT)) & 1 AS INT)"
-                for i in args[1:]
-            ]
-            return "(" + f" {op} ".join(bits) + ")"
-        return make
-
-    chunk = _rewrite_call(chunk, "bitTestAll", bit_test_multi("&"))
-    chunk = _rewrite_call(chunk, "bitTestAny", bit_test_multi("|"))
-
-    def great_circle_make(args):
-        # greatCircleDistance/geoDistance(lon1, lat1, lon2, lat2) →
-        # haversine on CH's mean-Earth radius (6372797.560856 m).  CH's
-        # own implementation is a piecewise polynomial approximation of
-        # this formula (±0.01% class error), so values agree to ~4
-        # significant digits, not bit-for-bit — use for geo math, not
-        # cross-engine hashing.
-        if len(args) != 4:
-            return None
-        lon1, lat1, lon2, lat2 = (f"CAST(({a}) AS DOUBLE)" for a in args)
-        return (
-            f"(2 * 6372797.560856 * asin(sqrt("
-            f"pow(sin(radians({lat2} - {lat1}) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin(radians({lon2} - {lon1}) / 2), 2))))"
-        )
-
-    chunk = _rewrite_call(chunk, "greatCircleDistance", great_circle_make)
-    chunk = _rewrite_call(chunk, "geoDistance", great_circle_make)
-
-    def great_circle_angle_make(args):
-        # greatCircleAngle: the same haversine central angle, in DEGREES
-        # (no radius factor) — same ~4-significant-digit agreement with
-        # CH's polynomial approximation as greatCircleDistance.
-        if len(args) != 4:
-            return None
-        lon1, lat1, lon2, lat2 = (f"CAST(({a}) AS DOUBLE)" for a in args)
-        return (
-            f"degrees(2 * asin(sqrt("
-            f"pow(sin(radians({lat2} - {lat1}) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin(radians({lon2} - {lon1}) / 2), 2))))"
-        )
-
-    chunk = _rewrite_call(chunk, "greatCircleAngle", great_circle_angle_make)
-
-    def rand_uniform_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        return f"(({a}) + rand() * (({b}) - ({a})))"
-
-    chunk = _rewrite_call(chunk, "randUniform", rand_uniform_make)
-
-    def rand_normal_make(args):
-        if len(args) != 2:
-            return None
-        return f"(({args[0]}) + randn() * ({args[1]}))"
-
-    chunk = _rewrite_call(chunk, "randNormal", rand_normal_make)
-
-    # --- vector math over array columns (the CH embeddings idiom) -------
-    # DOUBLE accumulation; each rewrite references its arguments more than
-    # once — fine for column-backed arrays (the documented intDiv caveat)
-    def dot_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        return (
-            f"aggregate(zip_with({a}, {b}, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), "
-            "CAST(0 AS DOUBLE), (s, v) -> s + v)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayDotProduct", dot_make)
-    chunk = _rewrite_call(chunk, "dotProduct", dot_make)
-
-    def lp_dist(power: str):
-        def make(args):
-            if len(args) != 2:
-                return None
-            a, b = args
-            diff = (
-                f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) - y)"
-            )
-            if power == "1":
-                return (
-                    f"aggregate({diff}, CAST(0 AS DOUBLE), "
-                    "(s, v) -> s + abs(v))"
-                )
-            if power == "inf":
-                return f"array_max(transform({diff}, v -> abs(v)))"
-            sq = (
-                f"aggregate({diff}, CAST(0 AS DOUBLE), "
-                "(s, v) -> s + v * v)"
-            )
-            return f"sqrt({sq})" if power == "2" else sq
-
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayL1Distance", lp_dist("1"))
-    chunk = _rewrite_call(chunk, "L1Distance", lp_dist("1"))
-    chunk = _rewrite_call(chunk, "arrayL2Distance", lp_dist("2"))
-    chunk = _rewrite_call(chunk, "L2Distance", lp_dist("2"))
-    chunk = _rewrite_call(chunk, "arrayL2SquaredDistance", lp_dist("2sq"))
-    chunk = _rewrite_call(chunk, "L2SquaredDistance", lp_dist("2sq"))
-    chunk = _rewrite_call(chunk, "arrayLinfDistance", lp_dist("inf"))
-    chunk = _rewrite_call(chunk, "LinfDistance", lp_dist("inf"))
-
-    def norm_make(power: str):
-        def make(args):
-            if len(args) != 1:
-                return None
-            a = args[0]
-            if power == "1":
-                return (
-                    f"aggregate({a}, CAST(0 AS DOUBLE), "
-                    "(s, x) -> s + abs(CAST(x AS DOUBLE)))"
-                )
-            if power == "inf":
-                return f"CAST(array_max(transform({a}, x -> abs(x))) AS DOUBLE)"
-            return (
-                f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
-                "(s, x) -> s + CAST(x AS DOUBLE) * x))"
-            )
-
-        return make
-
-    chunk = _rewrite_call(chunk, "L1Norm", norm_make("1"))
-    chunk = _rewrite_call(chunk, "L2Norm", norm_make("2"))
-    chunk = _rewrite_call(chunk, "LinfNorm", norm_make("inf"))
-
-    def cosine_make(args):
-        # cosineDistance = 1 - cos similarity; NULL (not NaN) on a zero
-        # vector via nullif — CH returns nan there, the one divergence
-        if len(args) != 2:
-            return None
-        a, b = args
-        dot = dot_make([a, b])
-        na = norm_make("2")([a])
-        nb = norm_make("2")([b])
-        return f"(1 - {dot} / nullif({na} * {nb}, 0))"
-
-    chunk = _rewrite_call(chunk, "cosineDistance", cosine_make)
-
-    def has_token_make(ci: bool):
-        def make(args):
-            # token = maximal alphanumeric run, same boundary rule as
-            # the tokens() rewrite above
-            if len(args) != 2:
-                return None
-            h, t = args
-            if ci:
-                h, t = f"lower({h})", f"lower({t})"
-            return f"array_contains(split({h}, '\\\\P{{Alnum}}+'), {t})"
-        return make
-
-    chunk = _rewrite_call(chunk, "hasTokenCaseInsensitive", has_token_make(True))
-    chunk = _rewrite_call(chunk, "hasToken", has_token_make(False))
-
-    def rev_sort_make(args):
-        # lambda-less form only; comparator forms pass through
-        if len(args) == 1 and "->" not in args[0]:
-            return f"reverse(array_sort({args[0]}))"
-        return None
-
-    chunk = _rewrite_call(chunk, "arrayReverseSort", rev_sort_make)
-
-    def enum_dense_make(args):
-        # dense id by FIRST APPEARANCE — array_distinct preserves first-
-        # occurrence order, so positions in it are exactly CH's dense ids
-        if len(args) != 1:
-            return None
-        a = args[0]
-        return f"transform({a}, __x -> array_position(array_distinct({a}), __x))"
-
-    chunk = _rewrite_call(chunk, "arrayEnumerateDense", enum_dense_make)
-
-    def bitmask_list_make(args):
-        # bitmaskToList: the powers of two summing to n, ascending, as a
-        # comma-separated STRING (CH returns String)
-        if len(args) != 1:
-            return None
-        n = args[0]
-        return (
-            f"array_join(transform(filter(sequence(0, 62), "
-            f"__i -> (shiftright(CAST(({n}) AS BIGINT), CAST(__i AS INT)) & 1) = 1), "
-            f"__i -> CAST(shiftleft(CAST(1 AS BIGINT), CAST(__i AS INT)) "
-            f"AS STRING)), ',')"
-        )
-
-    chunk = _rewrite_call(chunk, "bitmaskToList", bitmask_list_make)
-
-    def int_exp2_make(args):
-        if len(args) != 1:
-            return None
-        return f"shiftleft(CAST(1 AS BIGINT), CAST(({args[0]}) AS INT))"
-
-    chunk = _rewrite_call(chunk, "intExp2", int_exp2_make)
-
-    def int_exp10_make(args):
-        # exact through 10^15; CH goes to 10^18 (documented narrowing)
-        if len(args) != 1:
-            return None
-        return f"CAST(round(pow(10, ({args[0]}))) AS BIGINT)"
-
-    chunk = _rewrite_call(chunk, "intExp10", int_exp10_make)
-
-    def try_b64_make(args):
-        # CH returns '' on invalid input; try_to_binary gives NULL
-        if len(args) != 1:
-            return None
-        return (
-            f"coalesce(CAST(try_to_binary({args[0]}, 'base64') AS STRING), '')"
-        )
-
-    chunk = _rewrite_call(chunk, "tryBase64Decode", try_b64_make)
-
-    def html_make(args):
-        # extractTextFromHTML: script/style/comment removal → tag strip →
-        # common entity decode → whitespace collapse.  RE2-compatible
-        # patterns (no backreferences) so the same chain runs in oracle
-        # engines; CH's C++ parser additionally handles CDATA/malformed
-        # tags — corpus-cleanup parity, not byte parity.
-        if len(args) != 1:
-            return None
-        out = args[0]
-        for pat in (
-            "(?is)<script[^>]*>.*?</script>",
-            "(?is)<style[^>]*>.*?</style>",
-            "(?s)<!--.*?-->",
-            "<[^>]*>",
-        ):
-            out = f"regexp_replace({out}, '{pat}', ' ')"
-        for ent, ch in (
-            ("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
-            ("&quot;", '"'), ("&#39;", "''"), ("&apos;", "''"),
-        ):
-            out = f"replace({out}, '{ent}', '{ch}')"
-        return f"trim(regexp_replace({out}, '\\\\s+', ' '))"
-
-    chunk = _rewrite_call(chunk, "extractTextFromHTML", html_make)
-
-    def sum_count_make(args):
-        # sumCount(x) → (sum, count) positional tuple, tupleElement-ready
-        if len(args) != 1:
-            return None
-        x = args[0]
-        return f"named_struct('col1', sum({x}), 'col2', count({x}))"
-
-    chunk = _rewrite_call(chunk, "sumCount", sum_count_make)
-
-    def bounding_ratio_make(args):
-        # boundingRatio(x, y): slope between the min-x and max-x points
-        if len(args) != 2:
-            return None
-        x, y = args
-        return (
-            f"((max_by({y}, {x}) - min_by({y}, {x})) / "
-            f"nullif(CAST(max({x}) - min({x}) AS DOUBLE), 0))"
-        )
-
-    chunk = _rewrite_call(chunk, "boundingRatio", bounding_ratio_make)
-
-    for name, secs in (
-        ("toRelativeSecondNum", 1),
-        ("toRelativeMinuteNum", 60),
-        ("toRelativeHourNum", 3600),
-        ("toRelativeDayNum", 86400),
-    ):
-        def rel_make(args, _s=secs):
-            if len(args) != 1:
-                return None
-            return f"(unix_timestamp({args[0]}) DIV {_s})"
-
-        chunk = _rewrite_call(chunk, name, rel_make)
-
-    def jaccard_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        return (
-            f"(CAST(size(array_intersect({a}, {b})) AS DOUBLE) / "
-            f"nullif(size(array_union({a}, {b})), 0))"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayJaccardIndex", jaccard_make)
-
-    def rand_sample_make(args):
-        if len(args) != 2:
-            return None
-        a, n = args
-        return f"slice(shuffle({a}), 1, least(({n}), size({a})))"
-
-    chunk = _rewrite_call(chunk, "arrayRandomSample", rand_sample_make)
-
-    def dec_string_make(args):
-        # literal scale only (DECIMAL type params must be literals)
-        if len(args) == 2 and re.fullmatch(r"\s*\d+\s*", args[1]):
-            sc = int(args[1])
-            return f"CAST(CAST(({args[0]}) AS DECIMAL(38, {sc})) AS STRING)"
-        return None
-
-    chunk = _rewrite_call(chunk, "toDecimalString", dec_string_make)
-
-    def byte_hamming_make(args):
-        # per-position char mismatches; zip_with NULL-pads the shorter
-        # side and <=> counts the pad as a difference — CH's length-delta
-        # behavior exactly
-        if len(args) != 2:
-            return None
-        a, b = args
-        return (
-            f"size(filter(zip_with(split({a}, ''), split({b}, ''), "
-            f"(x, y) -> x <=> y), __m -> NOT __m))"
-        )
-
-    chunk = _rewrite_call(chunk, "byteHammingDistance", byte_hamming_make)
-
-    def multi_first_pos_make(args):
-        # multiSearchFirstPosition: leftmost occurrence position over all
-        # needles; 0 when none matches (CH's none-value)
-        if len(args) != 2:
-            return None
-        h, arr = args
-        return (
-            f"coalesce(array_min(filter(transform({arr}, "
-            f"__n -> instr({h}, __n)), __p -> __p > 0)), 0)"
-        )
-
-    chunk = _rewrite_call(chunk, "multiSearchFirstPosition", multi_first_pos_make)
-
-    def position_start_make(args):
-        # 3-arg position(haystack, needle, start) → locate(needle,
-        # haystack, start); the 2-arg form is the instr rename below
-        if len(args) != 3:
-            return None
-        h, n, st = args
-        return f"locate({n}, {h}, {st})"
-
-    chunk = _rewrite_call(chunk, "positionUTF8", position_start_make)
-    chunk = _rewrite_call(chunk, "position", position_start_make)
-
-    def count_substr_ci_make(args):
-        if len(args) != 2:
-            return None
-        h, n = args
-        return (
-            f"(CASE WHEN length({n}) = 0 THEN 0 ELSE "
-            f"(length({h}) - length(replace(lower({h}), lower({n}), ''))) "
-            f"DIV length({n}) END)"
-        )
-
-    chunk = _rewrite_call(
-        chunk, "countSubstringsCaseInsensitive", count_substr_ci_make
-    )
-
-    def replace_one_make(args):
-        # replaceOne: first occurrence only (Spark's replace family is
-        # all-occurrences) — splice via instr; no-match leaves h intact
-        if len(args) != 3:
-            return None
-        h, n, r = args
-        pos = f"instr({h}, {n})"
-        return (
-            f"(CASE WHEN {pos} = 0 THEN {h} ELSE "
-            f"concat(substr({h}, 1, {pos} - 1), {r}, "
-            f"substr({h}, {pos} + length({n}))) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "replaceOne", replace_one_make)
-
-    def split_ws_make(args):
-        if len(args) != 1:
-            return None
-        return (
-            f"filter(split({args[0]}, '\\\\s+'), __t -> __t != '')"
-        )
-
-    chunk = _rewrite_call(chunk, "splitByWhitespace", split_ws_make)
-
-    def split_non_alpha_make(args):
-        # splitByNonAlpha: separators are whitespace + punctuation, i.e.
-        # maximal alphanumeric runs — the tokens() boundary rule
-        if len(args) != 1:
-            return None
-        return (
-            f"filter(split({args[0]}, '\\\\P{{Alnum}}+'), __t -> __t != '')"
-        )
-
-    chunk = _rewrite_call(chunk, "splitByNonAlpha", split_non_alpha_make)
-
-    def to_time_make(args):
-        # toTime: keep the time of day, move the date to 1970-01-02
-        # (ClickHouse's documented anchor date)
-        if len(args) != 1:
-            return None
-        return (
-            f"timestamp_seconds(86400 + pmod(unix_timestamp({args[0]}), 86400))"
-        )
-
-    chunk = _rewrite_call(chunk, "toTime", to_time_make)
-
-    def dt64_make(args):
-        # toDateTime64(s, scale): Spark timestamps are fixed us precision
-        # — the scale argument is storage metadata, value-irrelevant here
-        if len(args) in (1, 2):
-            return f"to_timestamp({args[0]})"
-        return None
-
-    chunk = _rewrite_call(chunk, "toDateTime64", dt64_make)
-    chunk = _rewrite_call(
-        chunk, "now64", lambda a: "current_timestamp()" if len(a) <= 1 else None
-    )
-
-    for unit, pos in (
-        ("Year", 0), ("Month", 1), ("Week", 2), ("Day", 3),
-        ("Hour", 4), ("Minute", 5), ("Second", 6),
-    ):
-        def iv_make(args, _p=pos):
-            if len(args) != 1:
-                return None
-            parts = ["0"] * 7
-            parts[_p] = f"({args[0]})"
-            return f"make_interval({', '.join(parts)})"
-
-        chunk = _rewrite_call(chunk, f"toInterval{unit}", iv_make)
-
-    def array_const_make(args):
-        if len(args) != 2:
-            return None
-        return f"array_repeat({args[1]}, CAST(({args[0]}) AS INT))"
-
-    chunk = _rewrite_call(chunk, "arrayWithConstant", array_const_make)
-
-    def identity_make(args):
-        return f"({args[0]})" if len(args) == 1 else None
-
-    chunk = _rewrite_call(chunk, "identity", identity_make)
-    chunk = _rewrite_call(chunk, "materialize", identity_make)
-    # ignore() always returns 0 whatever its arguments
-    chunk = _rewrite_call(chunk, "ignore", lambda a: "0")
-
-    def yyyymmddhhmmss_make(args):
-        if len(args) != 1:
-            return None
-        return (
-            f"CAST(date_format({args[0]}, 'yyyyMMddHHmmss') AS BIGINT)"
-        )
-
-    chunk = _rewrite_call(chunk, "toYYYYMMDDhhmmss", yyyymmddhhmmss_make)
-
-    def joda_from_unix_make(args):
-        # Joda patterns are Spark's own datetime patterns
-        if len(args) != 2:
-            return None
-        return f"from_unixtime({args[0]}, {args[1]})"
-
-    chunk = _rewrite_call(
-        chunk, "fromUnixTimestampInJodaSyntax", joda_from_unix_make
-    )
-    chunk = _rewrite_call(
-        chunk, "formatDateTimeInJodaSyntax",
-        lambda a: f"date_format({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-
-    def zero_or_null_make(args):
-        # UInt8-style 0/1 (the empty()/bitTest type convention)
-        if len(args) != 1:
-            return None
-        x = args[0]
-        return f"CAST(({x}) IS NULL OR ({x}) = 0 AS INT)"
-
-    chunk = _rewrite_call(chunk, "isZeroOrNull", zero_or_null_make)
-
-    def mod_or_zero_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        return f"(CASE WHEN ({b}) = 0 THEN 0 ELSE ({a}) % ({b}) END)"
-
-    chunk = _rewrite_call(chunk, "moduloOrZero", mod_or_zero_make)
-
-    def rotate_left_make(args):
-        # 64-bit rotate via shiftleft | unsigned shiftright
-        if len(args) != 2:
-            return None
-        x, n = args
-        return (
-            f"(shiftleft(CAST(({x}) AS BIGINT), CAST(({n}) AS INT)) | "
-            f"shiftrightunsigned(CAST(({x}) AS BIGINT), "
-            f"64 - CAST(({n}) AS INT)))"
-        )
-
-    chunk = _rewrite_call(chunk, "bitRotateLeft", rotate_left_make)
-
-    # map-lambda family: CH puts the lambda FIRST, Spark's map functions
-    # take it last
-    def map_filter_make(args):
-        if len(args) == 2 and "->" in args[0]:
-            return f"map_filter({args[1]}, {args[0]})"
-        return None
-
-    chunk = _rewrite_call(chunk, "mapFilter", map_filter_make)
-
-    def map_exists_make(args):
-        if len(args) == 2 and "->" in args[0]:
-            return f"(cardinality(map_filter({args[1]}, {args[0]})) > 0)"
-        return None
-
-    chunk = _rewrite_call(chunk, "mapExists", map_exists_make)
-
-    def map_all_make(args):
-        if len(args) == 2 and "->" in args[0]:
-            m = args[1]
-            return (
-                f"(cardinality(map_filter({m}, {args[0]})) = cardinality({m}))"
-            )
-        return None
-
-    chunk = _rewrite_call(chunk, "mapAll", map_all_make)
-
-    # -Array aggregate combinator: aggregate over all elements of the
-    # array arguments across the group — the element fold runs per row
-    # (DOUBLE accumulation, the arraySum stance), the group aggregate on
-    # top of it
-    _sum_fold = "aggregate({a}, CAST(0 AS DOUBLE), (s, v) -> s + v)"
-
-    def arr_comb(tpl):
-        def make(args):
-            if len(args) != 1:
-                return None
-            return tpl.format(a=args[0])
-        return make
-
-    chunk = _rewrite_call(chunk, "sumArray", arr_comb(f"sum({_sum_fold})"))
-    chunk = _rewrite_call(chunk, "minArray", arr_comb("min(array_min({a}))"))
-    chunk = _rewrite_call(chunk, "maxArray", arr_comb("max(array_max({a}))"))
-    chunk = _rewrite_call(
-        chunk, "avgArray",
-        arr_comb(f"(sum({_sum_fold}) / nullif(sum(size({{a}})), 0))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "countArray", arr_comb("sum(size({a}))")
-    )
-
-    # -Distinct combinator
-    def distinct_comb(agg):
-        def make(args):
-            if len(args) != 1:
-                return None
-            return f"{agg}(DISTINCT {args[0]})"
-        return make
-
-    chunk = _rewrite_call(chunk, "sumDistinct", distinct_comb("sum"))
-    chunk = _rewrite_call(chunk, "avgDistinct", distinct_comb("avg"))
-    chunk = _rewrite_call(chunk, "countDistinct", distinct_comb("count"))
-    return chunk
-
-
-def _rewrite_json_extract(chunk: str) -> str:
-    """ClickHouse ``JSONExtract*(json, 'key')`` / ``visitParam*`` →
-    ``get_json_object(json, '$.key')`` with the result cast per the name's
-    declared type.  Key arguments are literal masks at this stage
-    (\\x00N\\x00), so the '$.' prefix is applied via concat at SQL level —
-    get_json_object accepts any string expression as the path."""
-    casts = {
-        "JSONExtractString": None,
-        "JSONExtractInt": "BIGINT",
-        # batch 22: the UInt names share the BIGINT lane (CH clamps
-        # negatives to 0 there; house stance keeps the parsed value —
-        # fixture JSON carries non-negative values)
-        "JSONExtractUInt": "BIGINT",
-        "JSONExtractFloat": "DOUBLE",
-        "JSONExtractBool": "BOOLEAN",
-        "JSONExtractRaw": None,
-        "visitParamExtractString": None,
-        "visitParamExtractInt": "BIGINT",
-        "visitParamExtractUInt": "BIGINT",
-        "visitParamExtractFloat": "DOUBLE",
-        "visitParamExtractBool": "BOOLEAN",
-        # simpleJSONExtract* is the current ClickHouse name for visitParam*
-        "simpleJSONExtractString": None,
-        "simpleJSONExtractInt": "BIGINT",
-        "simpleJSONExtractUInt": "BIGINT",
-        "simpleJSONExtractFloat": "DOUBLE",
-        "simpleJSONExtractBool": "BOOLEAN",
-        "simpleJSONExtractRaw": None,
-    }
-
-    def make_for(cast_to):
-        def make(args):
-            if len(args) != 2:
-                return None
-            inner = f"get_json_object({args[0]}, concat('$.', {args[1]}))"
-            if cast_to:
-                return f"CAST({inner} AS {cast_to})"
-            return inner
-
-        return make
-
-    for name, cast_to in casts.items():
-        chunk = _rewrite_call(chunk, name, make_for(cast_to))
-    # JSONHas(json, 'key') → path lookup IS NOT NULL
-    chunk = _rewrite_call(
-        chunk,
-        "JSONHas",
-        lambda args: (
-            f"(get_json_object({args[0]}, concat('$.', {args[1]})) IS NOT NULL)"
-            if len(args) == 2
-            else None
-        ),
-    )
-    return chunk
-
-
-def _rewrite_ipv4(chunk: str) -> str:
-    """``IPv4NumToString(n)`` → dotted quad via octet math;
-    ``IPv4StringToNum(s)`` → big-endian octet fold.  Both stay in integer
-    built-ins (no UDF) and agree with ClickHouse for the full u32 range."""
-
-    def num_to_str(args):
-        if len(args) != 1:
-            return None
-        a = f"CAST({args[0]} AS BIGINT)"
-        return (
-            f"concat(CAST(({a} DIV 16777216) % 256 AS STRING), '.', "
-            f"CAST(({a} DIV 65536) % 256 AS STRING), '.', "
-            f"CAST(({a} DIV 256) % 256 AS STRING), '.', "
-            f"CAST({a} % 256 AS STRING))"
-        )
-
-    def str_to_num(args):
-        if len(args) != 1:
-            return None
-        s = args[0]
-        return (
-            f"(CAST(split({s}, '\\\\.')[0] AS BIGINT) * 16777216 + "
-            f"CAST(split({s}, '\\\\.')[1] AS BIGINT) * 65536 + "
-            f"CAST(split({s}, '\\\\.')[2] AS BIGINT) * 256 + "
-            f"CAST(split({s}, '\\\\.')[3] AS BIGINT))"
-        )
-
-    def cidr_to_range(args):
-        # IPv4CIDRToRange(ip, prefix) → CH's (lo, hi) tuple as the
-        # positional struct; emits IPv4NumToString(...) text that the
-        # rewrites below then translate (CH IPv4 values render dotted)
-        if len(args) != 2:
-            return None
-        ip = f"CAST({args[0]} AS BIGINT)"
-        span = f"shiftleft(CAST(1 AS BIGINT), 32 - ({args[1]}))"
-        lo = f"(({ip} DIV {span}) * {span})"
-        return (
-            f"named_struct('col1', IPv4NumToString({lo}), "
-            f"'col2', IPv4NumToString({lo} + {span} - 1))"
-        )
-
-    chunk = _rewrite_call(chunk, "IPv4CIDRToRange", cidr_to_range)
-    chunk = _rewrite_call(chunk, "IPv4NumToString", num_to_str)
-    chunk = _rewrite_call(chunk, "IPv4StringToNum", str_to_num)
-    # validity predicates — pure regexp, no UDF.  isIPv4String rejects
-    # leading zeros (matching CH's strict parser); isIPv6String covers
-    # full and ::-compressed hex forms (not IPv4-mapped ones — CH accepts
-    # those too; port by hand if needed)
-    _OCTET = "(25[0-5]|2[0-4]\\\\d|1\\\\d\\\\d|[1-9]?\\\\d)"
-    chunk = _rewrite_call(
-        chunk, "isIPv4String",
-        lambda a: f"(({a[0]}) RLIKE '^({_OCTET}\\\\.){{3}}{_OCTET}$')"
-        if len(a) == 1 else None,
-    )
-    _H = "[0-9A-Fa-f]{1,4}"
-    _IP6 = (
-        f"^(({_H}:){{7}}{_H}|({_H}:){{1,7}}:|({_H}:){{1,6}}:{_H}"
-        f"|({_H}:){{1,5}}(:{_H}){{1,2}}|({_H}:){{1,4}}(:{_H}){{1,3}}"
-        f"|({_H}:){{1,3}}(:{_H}){{1,4}}|({_H}:){{1,2}}(:{_H}){{1,5}}"
-        f"|{_H}:(:{_H}){{1,6}}|:((:{_H}){{1,7}}|:))$"
-    )
-    chunk = _rewrite_call(
-        chunk, "isIPv6String",
-        lambda a: f"(({a[0]}) RLIKE '{_IP6}')" if len(a) == 1 else None,
-    )
-    return chunk
-
-
-def _rewrite_moving_and_maps(chunk: str) -> str:
-    """Batch 14 — map arithmetic, moving/delta aggregates, rounding
-    helpers, and AUC:
-
-    * ``mapAdd/mapSubtract(m1, m2)`` → ``map_zip_with`` with coalesced
-      cell math (key union, missing = 0 — CH Map-form semantics)
-    * ``mapPopulateSeries(m)`` → dense integer key range via ``sequence``
-    * ``groupArrayMovingSum(x)`` → ``arrayCumSum(collect_list(x))`` (CH's
-      default window = total row count ⇒ prefix sums); ``…MovingAvg``
-      divides by that window size.  Encounter-order caveat as groupArray.
-    * ``deltaSum(x)`` → positive consecutive differences summed (DOUBLE)
-    * ``bitHammingDistance(a, b)`` → ``bit_count(a ^ b)``
-    * ``intExp2/intExp10`` → integer powers (intExp10 exact to 1e15)
-    * ``roundToExp2 / roundDown / roundAge / roundDuration`` → CH's
-      bucket-floor family (fixed ladders from FunctionRoundAge/Duration)
-    * ``replaceOne(h, n, r)`` → first-occurrence splice via ``instr``
-    * ``arrayAUC(scores, labels)`` → rank-sum AUC (Mann-Whitney); exact
-      when scores are distinct (CH tie-averages via its ROC trapezoid)
-
-    Emitted ``arrayCumSum``/``arrayDifference`` text relies on this pass
-    running BEFORE ``_rewrite_misc_calls`` / ``_rewrite_literal_aware``.
-    Multi-reference templates carry the intDiv caveat (column-backed
-    arguments only)."""
-
-    def two(template):
-        def make(args):
-            return template.format(*args) if len(args) == 2 else None
-        return make
-
-    def one(template):
-        def make(args):
-            return template.format(args[0]) if len(args) == 1 else None
-        return make
-
-    chunk = _rewrite_call(
-        chunk, "mapAdd",
-        two("map_zip_with({0}, {1}, (__k, __a, __b) -> "
-            "coalesce(__a, 0) + coalesce(__b, 0))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "mapSubtract",
-        two("map_zip_with({0}, {1}, (__k, __a, __b) -> "
-            "coalesce(__a, 0) - coalesce(__b, 0))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "mapPopulateSeries",
-        one("map_from_arrays("
-            "sequence(array_min(map_keys({0})), array_max(map_keys({0}))), "
-            "transform(sequence(array_min(map_keys({0})), "
-            "array_max(map_keys({0}))), "
-            "__k -> coalesce(element_at({0}, __k), 0)))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "groupArrayMovingSum", one("arrayCumSum(collect_list({0}))")
-    )
-    chunk = _rewrite_call(
-        chunk, "groupArrayMovingAvg",
-        # nullif guard: collect_list skips NULLs, so an all-NULL group
-        # yields an empty list — size 0 would ANSI-divide-by-zero (r5)
-        one("transform(arrayCumSum(collect_list({0})), "
-            "__s -> __s / CAST(nullif(size(collect_list({0})), 0) "
-            "AS DOUBLE))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "deltaSum",
-        one("aggregate(filter(arrayDifference(collect_list({0})), "
-            "__v -> __v > 0), CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)"),
-    )
-    chunk = _rewrite_call(
-        chunk, "bitHammingDistance", two("bit_count(({0}) ^ ({1}))")
-    )
-    chunk = _rewrite_call(
-        chunk, "intExp2", one("shiftleft(CAST(1 AS BIGINT), {0})")
-    )
-    chunk = _rewrite_call(
-        chunk, "intExp10", one("CAST(round(power(10, {0})) AS BIGINT)")
-    )
-    # exact integer bit math (highest set bit via bin() length), not
-    # power(2, floor(log2(x))) — log2 of exact powers of two can land an
-    # ULP low and floor() then drops a whole bucket
-    chunk = _rewrite_call(
-        chunk, "roundToExp2",
-        one("(CASE WHEN ({0}) < 1 THEN 0 ELSE shiftleft(CAST(1 AS BIGINT), "
-            "length(bin(CAST(floor({0}) AS BIGINT))) - 1) END)"),
-    )
-    chunk = _rewrite_call(
-        chunk, "roundDown",
-        two("coalesce(array_max(filter({1}, __e -> __e <= ({0}))), "
-            "element_at({1}, 1))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "roundAge",
-        one("(CASE WHEN ({0}) < 1 THEN 0 WHEN ({0}) <= 17 THEN 17 "
-            "WHEN ({0}) <= 24 THEN 18 WHEN ({0}) <= 34 THEN 25 "
-            "WHEN ({0}) <= 44 THEN 35 WHEN ({0}) <= 54 THEN 45 "
-            "ELSE 55 END)"),
-    )
-    chunk = _rewrite_call(
-        chunk, "roundDuration",
-        one("(CASE WHEN ({0}) < 1 THEN 0 ELSE array_max(filter("
-            "array(1, 10, 30, 60, 120, 180, 240, 300, 600, 1200, 1800, "
-            "3600, 7200, 18000, 36000), __e -> __e <= ({0}))) END)"),
-    )
-
-    def replace_one_make(args):
-        if len(args) != 3:
-            return None
-        h, n, r = args
-        at = f"instr({h}, {n})"
-        return (
-            f"(CASE WHEN {at} > 0 THEN concat(substr({h}, 1, {at} - 1), "
-            f"{r}, substr({h}, {at} + length({n}))) ELSE {h} END)"
-        )
-
-    chunk = _rewrite_call(chunk, "replaceOne", replace_one_make)
-
-    def auc_make(args):
-        # rank-sum AUC with AVERAGE ranks for tied scores (the
-        # Mann-Whitney identity; average ranks ≡ CH's ROC trapezoid on
-        # ties — the previous sorted-position form over-/under-counted
-        # tied scores and divided by zero on single-class input under
-        # ANSI mode, r5 fix): rank(i) = #[s < s_i] + (#[s = s_i] + 1)/2,
-        # O(len²) per ROW like CH's own per-array evaluation; degenerate
-        # single-class inputs yield NULL (CH nan).
-        if len(args) != 2:
-            return None
-        s, l = args
-        rank_i = (
-            f"size(filter({s}, __v -> __v < element_at({s}, __i))) "
-            f"+ (size(filter({s}, __v -> __v = element_at({s}, __i))) + 1) "
-            f"/ 2.0D"
-        )
-        sum_ranks = (
-            f"aggregate(sequence(1, size({s})), 0.0D, "
-            f"(__ac, __i) -> __ac + IF(element_at({l}, __i) > 0, "
-            f"{rank_i}, 0.0D))"
-        )
-        p = f"CAST(size(filter({l}, __x -> __x > 0)) AS DOUBLE)"
-        return (
-            f"(({sum_ranks} - {p} * ({p} + 1) / 2) "
-            f"/ nullif({p} * (size({s}) - {p}), 0))"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayAUC", auc_make)
-    chunk = _rewrite_call(chunk, "arrayROCAUC", auc_make)
-
-    # batch 15 stragglers --------------------------------------------------
-    def regexp_extract_make(args):
-        # regexpExtract(h, p[, idx]) — 3-arg maps straight to Spark's
-        # regexp_extract; 2-arg defers to the extract() rewrite downstream
-        # (first capture group if present, else whole match)
-        if len(args) == 3:
-            return f"regexp_extract({args[0]}, {args[1]}, {args[2]})"
-        if len(args) == 2:
-            return f"extract({args[0]}, {args[1]})"
-        return None
-
-    chunk = _rewrite_call(chunk, "regexpExtract", regexp_extract_make)
-    # occurrence rank of each element among its predecessors (CH funnel
-    # helper).  O(n²) per row by construction; column-backed args only
-    # (the intDiv multi-reference caveat — the lambda captures the array)
-    chunk = _rewrite_call(
-        chunk, "arrayEnumerateUniq",
-        one("transform({0}, (__v, __i) -> size(filter(slice({0}, 1, __i + 1), "
-            "__e -> __e = __v)))"),
-    )
-    # arrayElement → try_element_at (both 1-based, both support negative
-    # from-the-end indexes); CH yields the TYPE DEFAULT (0/'') for
-    # out-of-range or zero indexes where ANSI element_at THROWS —
-    # try_element_at + nullif(idx, 0) yields NULL instead, the relational
-    # encoding of CH's default (the dictGet/arrayAvg convention; plain
-    # element_at errored under spark.sql.ansi — r5 fix).
-    # DOCUMENTED DIVERGENCE (r5 ADVICE): arrayElement also accepts MAPS,
-    # and on a map that legitimately stores key 0 the nullif masks that
-    # lookup → NULL where CH returns the stored value.  The type isn't
-    # statically known here, and index 0 on ARRAYS (the dominant case)
-    # must stay NULL; maps keyed by 0 use the m[0] subscript form, whose
-    # rewrite deliberately has no nullif.
-    chunk = _rewrite_call(
-        chunk, "arrayElement",
-        two("try_element_at({0}, nullif({1}, 0))"),
-    )
-    chunk = _rewrite_call(
-        chunk, "bitmaskToArray",
-        one("filter(transform(sequence(0, 62), __i -> "
-            "shiftleft(CAST(1 AS BIGINT), __i)), "
-            "__b -> (CAST({0} AS BIGINT) & __b) != 0)"),
-    )
     return chunk
 
 
@@ -4583,6 +3143,8 @@ def _wrap_empty_sites(chunk: str, flags: list[bool]) -> str:
     (string/binary) and ``size`` (array/map), so the per-site flag lets
     analysis feedback pick the right one."""
     idx = 0
+    # its own scan, not a table row: each site takes the next per-site
+    # flag in textual order, which the innermost-first engine can't give
     m = _EMPTY_SITE_PAT.search(chunk)
     while m:
         j = _match_paren(chunk, m.end() - 1)
@@ -4627,22 +3189,9 @@ def _spark_type_sql(ch_type: str) -> str | None:
 
 
 def _rewrite_cast_types(chunk: str) -> str:
-    """ClickHouse type names inside explicit casts → Spark types:
-    ``CAST(x AS Float64)`` and the postfix form ``x::Float64`` (both are
-    legal CH; only whitelisted CH spellings rewrite, so Spark-native
-    types and aliases pass through)."""
-
-    def cast_make(args):
-        if len(args) != 1:
-            return None
-        m = re.match(r"(?is)^(.*\S)\s+AS\s+([A-Za-z][\w(),\s]*?)\s*$", args[0])
-        if not m:
-            return None
-        spark_t = _spark_type_sql(m.group(2))
-        return f"CAST({m.group(1)} AS {spark_t})" if spark_t else None
-
-    for spelled in ("CAST", "cast", "Cast"):
-        chunk = _rewrite_call(chunk, spelled, cast_make)
+    """The postfix cast ``x::Float64`` → ``x::DOUBLE`` (only whitelisted
+    ClickHouse spellings rewrite, so Spark-native types and aliases pass
+    through); the ``CAST(x AS Float64)`` form is a ``_CALLS`` row."""
 
     def colon_sub(m: re.Match) -> str:
         spark_t = _spark_type_sql(m.group(1))
@@ -4693,569 +3242,6 @@ def _ngram_set(x: str) -> str:
         f"WHEN length({x}) >= 1 THEN array({x}) "
         f"ELSE slice(array({x}), 1, 0) END)"
     )
-
-
-def _rewrite_batch18_calls(chunk: str) -> str:
-    """Round-5 function batch.
-
-    * ``toWeek(d[, mode])`` — CH mode 0 (default): Sunday-start weeks
-      numbered 0-53, week 1 = the first week containing a Sunday; days
-      before the year's first Sunday are week 0.  Derived arithmetically:
-      ``floor((dayofyear − 1 − daysBeforeFirstSunday) / 7) + 1`` where
-      daysBeforeFirstSunday = (8 − dayofweek(Jan 1)) mod 7.  Mode 3 =
-      ISO → ``weekofyear``.  Other modes pass through (error by name).
-    * ``ngramDistance(a, b)`` / ``ngramSearch(h, n)`` — DISTINCT-set
-      4-gram variants (documented divergence: CH counts multisets):
-      distance = 1 − 2|A∩B|/(|A|+|B|), search = |N∩H|/|N| (1 = found).
-      Strings of 1-3 chars gram as themselves; both-empty → identical.
-    * ``JSONLength(j)`` — array length or object key count (CH returns
-      the container's length; path-arg forms pass through).
-    """
-
-    def week_expr(d: str) -> str:
-        return (
-            f"CAST(floor((dayofyear({d}) - 1 - pmod(8 - "
-            f"dayofweek(trunc({d}, 'year')), 7)) / 7.0) + 1 AS INT)"
-        )
-
-    def to_week_make(args):
-        if len(args) == 1:
-            return week_expr(args[0])
-        if len(args) == 2:
-            mode = args[1].strip()
-            if mode == "0":
-                return week_expr(args[0])
-            if mode == "3":
-                return f"weekofyear({args[0]})"
-        return None
-
-    chunk = _rewrite_call(chunk, "toWeek", to_week_make)
-
-    def to_yearweek_make(args):
-        # toYearWeek mode 0 (MySQL YEARWEEK): year*100 + week, where a
-        # week-0 date belongs to the PREVIOUS year's numbering — its week
-        # = Sunday-start week count from the previous year's first Sunday
-        # (verified: 2016-01-01 → 201552, 2017-01-01 → 201701).  Mode 3 =
-        # ISO → yearofweek*100 + weekofyear.
-        if len(args) not in (1, 2):
-            return None
-        d = args[0]
-        if len(args) == 2 and args[1].strip() == "3":
-            return (
-                f"(extract(YEAROFWEEK FROM {d}) * 100 + weekofyear({d}))"
-            )
-        if len(args) == 2 and args[1].strip() != "0":
-            return None
-        pj = f"make_date(year({d}) - 1, 1, 1)"
-        prev_first_sun = f"date_add({pj}, pmod(8 - dayofweek({pj}), 7))"
-        prev_week = (
-            f"CAST(floor(datediff({d}, {prev_first_sun}) / 7.0) + 1 AS INT)"
-        )
-        return (
-            f"(CASE WHEN {week_expr(d)} > 0 "
-            f"THEN year({d}) * 100 + {week_expr(d)} "
-            f"ELSE (year({d}) - 1) * 100 + {prev_week} END)"
-        )
-
-    chunk = _rewrite_call(chunk, "toYearWeek", to_yearweek_make)
-
-    def ngram_distance_make(args):
-        if len(args) != 2:
-            return None
-        a, b = _ngram_set(args[0]), _ngram_set(args[1])
-        return (
-            f"(CASE WHEN size({a}) + size({b}) = 0 THEN 0.0D ELSE "
-            f"1.0D - 2.0D * size(array_intersect({a}, {b})) "
-            f"/ (size({a}) + size({b})) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "ngramDistance", ngram_distance_make)
-
-    def ngram_search_make(args):
-        if len(args) != 2:
-            return None
-        h, n = _ngram_set(args[0]), _ngram_set(args[1])
-        return (
-            f"(CASE WHEN size({n}) = 0 THEN 1.0D ELSE "
-            f"CAST(size(array_intersect({n}, {h})) AS DOUBLE) "
-            f"/ size({n}) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "ngramSearch", ngram_search_make)
-
-    def json_length_make(args):
-        if len(args) != 1:
-            return None
-        j = args[0]
-        return (
-            f"coalesce(json_array_length({j}), "
-            f"size(json_object_keys({j})))"
-        )
-
-    chunk = _rewrite_call(chunk, "JSONLength", json_length_make)
-    return chunk
-
-
-def _rewrite_batch19_calls(chunk: str) -> str:
-    """Round-6 function batch (systematic doc sweep, VERDICT r5 #6).
-
-    * ``toRelativeMonthNum(t)`` → ``year·12 + month`` (CH's month serial).
-    * ``arrayShiftLeft/Right(arr, n[, default])`` — elements shift by n,
-      vacated slots take ``default`` (CH fills the TYPE default; the NULL
-      encoding is the house convention, see arrayElement).  Index
-      arithmetic guards against element_at's negative-index-from-end
-      semantics.
-    * ``simpleJSONHas(j, 'k')`` — top-level key membership via
-      ``json_object_keys`` (exact: present-with-null keys count, as CH).
-    * ``skewSamp/kurtSamp`` — sample central moments over the sample
-      variance: m₃/varSamp^1.5 and m₄/varSamp² (ClickHouse's published
-      formulas), derived from Spark's population forms by the
-      (varPop/varSamp)^k correction.
-    * ``replaceRegexpOne(h, p, r)`` — first-match-only regex replace via
-      regexp_extract(group 0) + instr splice.  Replacement backrefs
-      (\\1/$1) are NOT supported (pass through by erroring at runtime is
-      avoided — the raw replacement is spliced literally); patterns with
-      lookarounds may splice at an earlier literal occurrence of the
-      matched text (documented).  Column-backed h only (multi-reference).
-    * ``timeSlots(start, duration[, size])`` — array of period starts
-      covering [start, start+duration], default size 1800 s (CH's).
-    * ``throwIf(cond[, msg])`` → ``assert_true`` (0 when the condition
-      is false, error when true — Spark's error carries the message).
-    """
-
-    def rel_month_make(args):
-        if len(args) != 1:
-            return None
-        t = args[0]
-        return f"(year({t}) * 12 + month({t}))"
-
-    chunk = _rewrite_call(chunk, "toRelativeMonthNum", rel_month_make)
-
-    def shift_make(left: bool):
-        def make(args):
-            if len(args) not in (2, 3):
-                return None
-            arr, n = args[0], args[1]
-            dflt = args[2] if len(args) == 3 else None
-            sign = "+" if left else "-"
-            idx = f"__i + 1 {sign} ({n})"
-            base = (
-                f"if(({idx}) < 1, NULL, try_element_at({arr}, {idx}))"
-            )
-            if dflt is not None:
-                base = (
-                    f"if(({idx}) < 1 OR ({idx}) > size({arr}), {dflt}, "
-                    f"try_element_at({arr}, {idx}))"
-                )
-            return f"transform({arr}, (__x, __i) -> {base})"
-
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayShiftLeft", shift_make(True))
-    chunk = _rewrite_call(chunk, "arrayShiftRight", shift_make(False))
-
-    def sjson_has_make(args):
-        if len(args) != 2:
-            return None
-        return (
-            f"coalesce(array_contains(json_object_keys({args[0]}), "
-            f"{args[1]}), false)"
-        )
-
-    chunk = _rewrite_call(chunk, "simpleJSONHas", sjson_has_make)
-    # batch 22: visitParam* is the legacy ClickHouse name for simpleJSON*
-    chunk = _rewrite_call(chunk, "visitParamHas", sjson_has_make)
-
-    def skew_samp_make(args):
-        if len(args) != 1:
-            return None
-        x = args[0]
-        return (
-            f"(skewness({x}) * pow(var_pop({x}) / "
-            f"nullif(var_samp({x}), 0.0D), 1.5D))"
-        )
-
-    chunk = _rewrite_call(chunk, "skewSamp", skew_samp_make)
-
-    def kurt_samp_make(args):
-        if len(args) != 1:
-            return None
-        x = args[0]
-        return (
-            f"((kurtosis({x}) + 3.0D) * pow(var_pop({x}) / "
-            f"nullif(var_samp({x}), 0.0D), 2.0D))"
-        )
-
-    chunk = _rewrite_call(chunk, "kurtSamp", kurt_samp_make)
-
-    def replace_rx_one_make(args):
-        if len(args) != 3:
-            return None
-        h, p, r = args
-        m = f"regexp_extract({h}, {p}, 0)"
-        pos = f"instr({h}, {m})"
-        return (
-            f"(CASE WHEN NOT regexp_like({h}, {p}) OR length({m}) = 0 "
-            f"THEN {h} ELSE concat(left({h}, {pos} - 1), {r}, "
-            f"substr({h}, {pos} + length({m}))) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "replaceRegexpOne", replace_rx_one_make)
-
-    def time_slots_make(args):
-        if len(args) not in (2, 3):
-            return None
-        start, dur = args[0], args[1]
-        size = args[2] if len(args) == 3 else "1800"
-        return (
-            f"transform(sequence("
-            f"(unix_timestamp({start}) DIV ({size})) * ({size}), "
-            f"((unix_timestamp({start}) + ({dur})) DIV ({size})) * ({size}), "
-            f"({size})), __s -> to_timestamp(__s))"
-        )
-
-    chunk = _rewrite_call(chunk, "timeSlots", time_slots_make)
-
-    def throw_if_make(args):
-        if len(args) == 1:
-            return f"(CASE WHEN assert_true(NOT ({args[0]})) IS NULL THEN 0 END)"
-        if len(args) == 2:
-            return (
-                f"(CASE WHEN assert_true(NOT ({args[0]}), {args[1]}) "
-                f"IS NULL THEN 0 END)"
-            )
-        return None
-
-    chunk = _rewrite_call(chunk, "throwIf", throw_if_make)
-    return chunk
-
-
-def _rewrite_batch20_aggs(chunk: str) -> str:
-    """Round-6 batch 20, aggregate folds — the windowFunnel machinery
-    (collect → array_sort → codegen ``aggregate`` fold, one collect_list
-    per group, all JVM-side) applied to ClickHouse's interval/time-series
-    aggregates:
-
-    * ``exponentialMovingAverage(hl)(v, t)`` — half-life-weighted mean of
-      an irregular time series (CH's published model): walking the
-      t-sorted values, both numerator and denominator decay by
-      ``2^(-Δt/hl)`` between samples; result ``Σ2^(-(tn-ti)/hl)·vi /
-      Σ2^(-(tn-ti)/hl)``.  ``t`` is any numeric (CH passes unix seconds).
-    * ``intervalLengthSum(s, e)`` — total length of the UNION of the
-      group's [s, e] segments (overlaps counted once): sweep over
-      (s, e)-sorted intervals carrying the covered frontier.  Returns
-      DOUBLE (CH returns the argument type).
-    * ``maxIntersections(s, e)`` — maximum number of simultaneously
-      overlapping intervals: ±1 sweep over sorted endpoint events; ends
-      sort before starts at the same point (struct sort on (t, d) with
-      d = −1 for ends), so touching intervals [a,b],[b,c] do NOT count
-      as intersecting — CH counts half-open occupancy the same way.
-    * ``deltaSumTimestamp(v, t)`` — sum of POSITIVE deltas of consecutive
-      t-ordered values (CH's counter-reset-tolerant rate primitive; the
-      unordered ``deltaSum`` keeps its separate rewrite).
-
-    All four are exact single-pass folds; the per-group state is O(1) and
-    the collected array is the group's own rows — the same scale contract
-    as windowFunnel/sequenceMatch (bounded by per-key event volume)."""
-    # exponentialMovingAverage is CURRIED: name(hl)(value, time)
-    pat = re.compile(r"\bexponentialMovingAverage\(")
-    m = pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        hl_args = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(hl_args) != 1 or len(args) != 2:
-            m = pat.search(chunk, x_end)
-            continue
-        hl, v, t = hl_args[0], args[0], args[1]
-        # reserved __ac/__ev lambda params: the user hl expression is
-        # spliced INSIDE the fold lambda, so bare a/e would capture a
-        # column of that name (the same class 0d999ff fixed elsewhere)
-        decay = (
-            f"CASE WHEN __ac.tp IS NULL THEN 1.0D "
-            f"ELSE pow(0.5D, (__ev.t - __ac.tp) / CAST({hl} AS DOUBLE)) END"
-        )
-        repl = (
-            f"aggregate(array_sort(collect_list(struct("
-            f"CAST({t} AS DOUBLE) AS t, CAST({v} AS DOUBLE) AS v))), "
-            f"named_struct('n', 0.0D, 'd', 0.0D, 'tp', CAST(NULL AS DOUBLE)), "
-            f"(__ac, __ev) -> named_struct("
-            f"'n', __ac.n * {decay} + __ev.v, "
-            f"'d', __ac.d * {decay} + 1.0D, "
-            f"'tp', __ev.t), "
-            f"__ac -> CASE WHEN __ac.d = 0.0D THEN NULL "
-            f"ELSE __ac.n / __ac.d END)"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = pat.search(chunk, m.start() + len(repl))
-
-    def ils_make(args):
-        if len(args) != 2:
-            return None
-        s, e = args
-        return (
-            f"aggregate(array_sort(collect_list(struct("
-            f"CAST({s} AS DOUBLE) AS s, CAST({e} AS DOUBLE) AS e))), "
-            f"named_struct('tot', 0.0D, 'fr', CAST(NULL AS DOUBLE)), "
-            f"(a, iv) -> named_struct("
-            f"'tot', a.tot + greatest(0.0D, iv.e - greatest(iv.s, "
-            f"coalesce(a.fr, iv.s))), "
-            f"'fr', greatest(coalesce(a.fr, iv.e), iv.e)), "
-            f"a -> a.tot)"
-        )
-
-    chunk = _rewrite_call(chunk, "intervalLengthSum", ils_make)
-
-    def mi_make(args):
-        if len(args) != 2:
-            return None
-        s, e = args
-        return (
-            f"aggregate(array_sort(flatten(transform(collect_list(struct("
-            f"CAST({s} AS DOUBLE) AS s, CAST({e} AS DOUBLE) AS e)), "
-            f"__iv -> array(struct(__iv.s AS t, 1 AS d), "
-            f"struct(__iv.e AS t, -1 AS d))))), "
-            f"named_struct('c', 0, 'b', 0), "
-            f"(a, ev) -> named_struct('c', a.c + ev.d, "
-            f"'b', greatest(a.b, a.c + ev.d)), "
-            f"a -> a.b)"
-        )
-
-    def mi_pos_make(args):
-        # batch 23: maxIntersectionsPosition — the sweep position (the
-        # start-event t) where the maximum occupancy is FIRST reached:
-        # same ±1 endpoint sweep, with an argmax slot updated only on a
-        # strict new best (later ties keep the first position, CH's
-        # leftmost answer)
-        if len(args) != 2:
-            return None
-        s, e = args
-        return (
-            f"aggregate(array_sort(flatten(transform(collect_list(struct("
-            f"CAST({s} AS DOUBLE) AS s, CAST({e} AS DOUBLE) AS e)), "
-            f"__iv -> array(struct(__iv.s AS t, 1 AS d), "
-            f"struct(__iv.e AS t, -1 AS d))))), "
-            f"named_struct('c', 0, 'b', 0, 'bp', CAST(NULL AS DOUBLE)), "
-            f"(a, ev) -> named_struct('c', a.c + ev.d, "
-            f"'b', greatest(a.b, a.c + ev.d), "
-            f"'bp', CASE WHEN a.c + ev.d > a.b THEN ev.t ELSE a.bp END), "
-            f"a -> a.bp)"
-        )
-
-    chunk = _rewrite_call(
-        chunk, "maxIntersectionsPosition", mi_pos_make
-    )
-    chunk = _rewrite_call(chunk, "maxIntersections", mi_make)
-
-    def dst_make(args):
-        if len(args) != 2:
-            return None
-        v, t = args
-        return (
-            f"aggregate(array_sort(collect_list(struct("
-            f"CAST({t} AS DOUBLE) AS t, CAST({v} AS DOUBLE) AS v))), "
-            f"named_struct('tot', 0.0D, 'pv', CAST(NULL AS DOUBLE)), "
-            f"(a, e) -> named_struct("
-            f"'tot', a.tot + CASE WHEN a.pv IS NOT NULL AND e.v > a.pv "
-            f"THEN e.v - a.pv ELSE 0.0D END, "
-            f"'pv', e.v), "
-            f"a -> a.tot)"
-        )
-
-    chunk = _rewrite_call(chunk, "deltaSumTimestamp", dst_make)
-    return chunk
-
-
-def _rewrite_batch20_calls(chunk: str) -> str:
-    """Round-6 batch 20, scalar surface (doc-sweep continuation):
-
-    * ``mapApply((k, v) -> (ke, ve), m)`` — entrywise map transform via
-      ``map_from_entries(transform(map_entries(m), …))``; the CH lambda's
-      tuple result becomes a struct, parameter names substituted on word
-      boundaries.  Lambdas not of the 2-param → 2-tuple shape pass
-      through.
-    * ``isValidJSON(j)`` → ``try_parse_json(j) IS NOT NULL`` (VARIANT
-      parse — full JSON validation, not a prefix probe).
-    * ``JSONType(j)`` (no-path form) — 'Object'/'Array'/'String'/'Bool'/
-      'Null'/'Int64'/'Double' by inspecting the trimmed document head
-      after validation (CH returns the same tags; numeric split Int64 vs
-      Double by the presence of ./e/E).  Path forms pass through.
-    * ``addQuarters/subtractQuarters(d, n)`` → ``add_months(d, ±3n)``.
-    * ``YYYYMMDDToDate(n)`` / ``YYYYMMDDhhmmssToDateTime(n)`` — numeric
-      serial date forms via try_to_date/try_to_timestamp (NULL on
-      invalid serials; CH returns epoch defaults — NULL is the house
-      encoding, see arrayElement).
-    * ``toTimezone(ts, tz)`` → ``convert_timezone(current_timezone(),
-      tz, ts)`` — CH changes display metadata only; Spark timestamps have
-      no per-value zone, so the rewrite materializes the wall-clock shift
-      (the observable toString behavior).
-    * ``timezoneOf(ts)`` → session timezone (CH: the column's zone
-      attribute; Spark has exactly one, the session's).
-    * ``nowInBlock()`` → ``current_timestamp()`` (per-block freshness is
-      meaningless under whole-stage codegen).
-    * ``caseWithExpression(x, a, ra, b, rb, …[, dflt])`` → ``CASE x WHEN
-      a THEN ra … ELSE dflt END`` (the function form of operator CASE).
-    * ``dateTime64ToSnowflake`` — same epoch shift as the existing
-      dateTimeToSnowflake wrap.
-    """
-
-    def map_apply_make(args):
-        if len(args) != 2:
-            return None
-        lam, m = args
-        lm = re.match(
-            r"^\s*\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*\)\s*->\s*\((.*)\)\s*$",
-            lam,
-            re.DOTALL,
-        )
-        if not lm:
-            return None
-        kname, vname, body = lm.groups()
-        # shadowing guard: the param substitution below is textual, so a
-        # nested lambda inside the body DECLARING the same name would be
-        # captured (the fuzz-caught arrayProduct `v` case — generated
-        # lambdas now use __-reserved params, but user-written nested
-        # lambdas can still collide).  Pass through on collision rather
-        # than corrupt silently.
-        nested = set()
-        for pm in re.finditer(r"\(([\w\s,]+)\)\s*->|\b(\w+)\s*->", body):
-            grp = pm.group(1) or pm.group(2)
-            nested |= {p.strip() for p in grp.split(",")}
-        if nested & {kname, vname}:
-            return None
-        parts = _split_top_comma(body)
-        if len(parts) != 2:
-            return None
-        ke, ve = parts
-        for src, dst in ((kname, "__me.key"), (vname, "__me.value")):
-            ke = re.sub(rf"\b{src}\b", dst, ke)
-            ve = re.sub(rf"\b{src}\b", dst, ve)
-        return (
-            f"map_from_entries(transform(map_entries({m}), "
-            f"__me -> struct({ke} AS key, {ve} AS value)))"
-        )
-
-    chunk = _rewrite_call(chunk, "mapApply", map_apply_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "isValidJSON",
-        lambda args: (
-            f"(try_parse_json({args[0]}) IS NOT NULL)"
-            if len(args) == 1
-            else None
-        ),
-    )
-
-    def json_type_make(args):
-        if len(args) != 1:
-            return None
-        j = args[0]
-        head = f"left(ltrim({j}), 1)"
-        # head sentinels via chr(): a bare '[' / '{' literal spliced into
-        # the chunk breaks the bracket-depth tracking of every LATER
-        # rewrite that arg-splits an expression containing this one
-        # (found by the execution fuzz: arrayShiftLeft(JSONType(...)))
-        return (
-            f"(CASE WHEN try_parse_json({j}) IS NULL THEN NULL "
-            f"WHEN {head} = chr(123) THEN 'Object' "
-            f"WHEN {head} = chr(91) THEN 'Array' "
-            f"WHEN {head} = chr(34) THEN 'String' "
-            f"WHEN ltrim(rtrim({j})) IN ('true', 'false') THEN 'Bool' "
-            f"WHEN ltrim(rtrim({j})) = 'null' THEN 'Null' "
-            f"WHEN ltrim(rtrim({j})) RLIKE '[.eE]' THEN 'Double' "
-            f"ELSE 'Int64' END)"
-        )
-
-    chunk = _rewrite_call(chunk, "JSONType", json_type_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "addQuarters",
-        lambda args: (
-            f"add_months({args[0]}, 3 * ({args[1]}))"
-            if len(args) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "subtractQuarters",
-        lambda args: (
-            f"add_months({args[0]}, -3 * ({args[1]}))"
-            if len(args) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "YYYYMMDDToDate",
-        lambda args: (
-            f"try_to_date(CAST(CAST({args[0]} AS BIGINT) AS STRING), "
-            f"'yyyyMMdd')"
-            if len(args) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "YYYYMMDDhhmmssToDateTime",
-        lambda args: (
-            f"try_to_timestamp(CAST(CAST({args[0]} AS BIGINT) AS STRING), "
-            f"'yyyyMMddHHmmss')"
-            if len(args) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "toTimezone",
-        lambda args: (
-            f"convert_timezone(current_timezone(), {args[1]}, {args[0]})"
-            if len(args) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "timezoneOf",
-        lambda args: "current_timezone()" if len(args) == 1 else None,
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "nowInBlock",
-        lambda args: "current_timestamp()" if len(args) in (0, 1) else None,
-    )
-
-    def case_with_expr_make(args):
-        if len(args) < 3:
-            return None
-        x, rest = args[0], args[1:]
-        pairs, dflt = (
-            (rest, "NULL") if len(rest) % 2 == 0 else (rest[:-1], rest[-1])
-        )
-        whens = " ".join(
-            f"WHEN {pairs[i]} THEN {pairs[i + 1]}"
-            for i in range(0, len(pairs), 2)
-        )
-        return f"(CASE {x} {whens} ELSE {dflt} END)"
-
-    chunk = _rewrite_call(chunk, "caseWithExpression", case_with_expr_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "dateTime64ToSnowflake",
-        lambda args: (
-            f"shiftleft(unix_millis({args[0]}) - 1288834974657, 22)"
-            if len(args) == 1
-            else None
-        ),
-    )
-    return chunk
 
 
 def _ipv6_hex_sql(s: str) -> str:
@@ -5343,124 +3329,6 @@ def _ipv6_text_sql(b: str) -> str:
     )
 
 
-def _rewrite_batch27_calls(chunk: str) -> str:
-    """Round-7 batch 27 — the IPv4/IPv6 completeness tail
-    (DIALECT_COVERAGE.md's weakest family, 36% before this batch).
-
-    Representation: IPv6 values are 16-byte BINARY (CH's
-    FixedString(16)); IPv4 values are the existing BIGINT lane.
-
-    * ``IPv6StringToNum`` / ``toIPv6`` — full text parse (``::``
-      compression, dotted-IPv4 tails, mixed case) via
-      :func:`_ipv6_hex_sql`; best-effort on malformed input (CH
-      throws).
-    * ``IPv6NumToString`` — RFC 5952 canonical printer (first-longest
-      zero-run compression, ``::ffff:`` dotted rendering) via
-      :func:`_ipv6_text_sql`.
-    * ``cutIPv6(b, c6, c4)`` — zeroes the trailing c6 (or, for
-      IPv4-mapped values, c4) bytes and prints the result.
-    * ``IPv6CIDRToRange(b, p)`` — (lo, hi) tuple via nibble-wise prefix
-      masking.
-    * ``IPv4StringToNumOrNull`` — strict dotted-quad gate, else NULL;
-      ``toIPv4`` — alias of IPv4StringToNum; ``IPv4ToIPv6`` — the
-      ``::ffff:`` mapped 16-byte form.
-
-    ``isIPAddressInRange`` lives in the literal-aware pass (its CIDR
-    argument is a string literal at this stage)."""
-    _OCT = "(25[0-5]|2[0-4]\\\\d|1\\\\d\\\\d|[1-9]?\\\\d)"
-
-    chunk = _rewrite_call(
-        chunk,
-        "IPv4StringToNumOrNull",
-        lambda a: (
-            f"IF(({a[0]}) RLIKE '^({_OCT}\\\\.){{3}}{_OCT}$', "
-            f"IPv4StringToNum({a[0]}), CAST(NULL AS BIGINT))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "toIPv4",
-        lambda a: f"IPv4StringToNum({a[0]})" if len(a) == 1 else None,
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "IPv4ToIPv6",
-        lambda a: (
-            f"unhex(concat('00000000000000000000ffff', "
-            f"lpad(lower(hex(CAST(({a[0]}) AS BIGINT))), 8, '0')))"
-            if len(a) == 1
-            else None
-        ),
-    )
-
-    def v6_parse_make(args):
-        if len(args) != 1:
-            return None
-        return f"unhex({_ipv6_hex_sql(args[0])})"
-
-    chunk = _rewrite_call(chunk, "IPv6StringToNum", v6_parse_make)
-    chunk = _rewrite_call(chunk, "toIPv6", v6_parse_make)
-
-    def cut_v6_make(args):
-        # cutIPv6 zeroes trailing bytes and RENDERS text (CH returns
-        # String here) — emits IPv6NumToString for the rewrite below
-        if len(args) != 3:
-            return None
-        b, c6, c4 = args
-        cut = (
-            f"IF(substring(lower(hex({b})), 1, 24) = "
-            f"'00000000000000000000ffff', CAST(({c4}) AS INT), "
-            f"CAST(({c6}) AS INT))"
-        )
-        return (
-            f"IPv6NumToString(unhex(concat("
-            f"substring(lower(hex({b})), 1, 32 - {cut} * 2), "
-            f"repeat('0', {cut} * 2))))"
-        )
-
-    chunk = _rewrite_call(chunk, "cutIPv6", cut_v6_make)
-
-    def v6_cidr_make(args):
-        if len(args) != 2:
-            return None
-        b, p = args
-        pl = f"CAST(({p}) AS INT)"
-
-        def nib(hi: bool) -> str:
-            full, mask_op = ("'f'", "|") if hi else ("'0'", "&")
-            part = f"(shiftleft(1, __i * 4 - {pl}) - 1)"
-            mask = part if hi else f"(15 - {part})"
-            return (
-                f"IF(__i * 4 <= {pl}, substring(__h6, __i, 1), "
-                f"IF((__i - 1) * 4 >= {pl}, {full}, "
-                f"substring('0123456789abcdef', (CAST(conv("
-                f"substring(__h6, __i, 1), 16, 10) AS INT) {mask_op} {mask})"
-                f" + 1, 1)))"
-            )
-
-        def lane(hi: bool) -> str:
-            return (
-                f"unhex(array_join(transform(sequence(1, 32), "
-                f"__i -> {nib(hi)}), ''))"
-            )
-
-        return (
-            f"element_at(transform(array(lower(hex({b}))), __h6 -> "
-            f"named_struct('col1', {lane(False)}, 'col2', {lane(True)})), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "IPv6CIDRToRange", v6_cidr_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "IPv6NumToString",
-        lambda a: _ipv6_text_sql(a[0]) if len(a) == 1 else None,
-    )
-    return chunk
-
-
 # Lanczos approximation (g=7, 9 coefficients — the public Numerical
 # Recipes / Wikipedia constants) for lgamma/tgamma.  Valid for z >= 0.5
 # (~1e-13 relative); the reflection formula for smaller/negative z is out
@@ -5540,858 +3408,1036 @@ def _py_geohash(lon: float, lat: float, precision: int) -> str:
     return "".join(out)
 
 
-def _rewrite_batch26_calls(chunk: str) -> str:
-    """Round-7 batch 26 — coverage tail past batch 25 (the
-    DIALECT_COVERAGE.md uncovered list, highest-leverage first):
+# ----------------------------------------------------------------------
+# The _CALLS makes: rewrites that need code.  The table after them holds
+# every row, templates included, in pipeline order.
 
-    * ``erf``/``erfc`` — Abramowitz & Stegun 7.1.26 closed form;
-      ``lgamma``/``tgamma`` — Lanczos g=7 (z >= 0.5 scope; tgamma via
-      exp(lgamma), positive arguments).
-    * ``emptyArrayToSingle`` — NUMERIC scope (the type default of a
-      string/date element is not expressible without a type argument:
-      coalesce(DATE, 0) has no common type and fails analysis, so
-      date/string arrays error loudly rather than silently diverge;
-      CH returns ['1970-01-01'] / [''] there).
-    * ``hasSubsequence`` — in-order character scan as a single
-      ``aggregate`` fold over the haystack characters.
-    * ``unbin`` — whole-byte scope ('01000001' -> 'A'); ``bitSlice`` —
-      positive offset/length scope, zero-padded to the byte boundary
-      (composes the bin/unbin machinery).
-    * ``mortonEncode(x, y)`` / ``mortonDecode(2, code)`` — 2-D bit
-      interleave over 32 bit positions (UInt32 lanes; 3-D+ passes
-      through).  y's bit 31 lands on BIGINT's sign bit, so codes with
-      y >= 2^31 read negative — the UInt64-as-signed-BIGINT lane every
-      64-bit digest in this engine uses (xxhash64 stance); decode
-      round-trips exactly either way.
-    * ``reinterpretAsUInt64/Int64`` (first 8 bytes, little-endian,
-      single-byte-codepoint scope) and ``reinterpretAsString``
-      (positive values, trailing zero bytes trimmed — CH's contract).
-    * ``pointInEllipses(x, y, x0, y0, a0, b0, ...)`` — OR-chain of the
-      ellipse inequality over the variadic (center, axes) quadruples.
-    * ``tupleToNameValuePairs`` — string-valued pairs via a JSON
-      round-trip (CH keeps the homogeneous value type; documented).
-    * ``untuple(t)`` — struct star-expansion for named operands.
-    * ``geohashesInBox`` — constant-folded at translation time (all five
-      arguments are literal in CH's call shape): the covering grid is
-      enumerated in Python with the same closed form as geohashEncode
-      and emitted as a sorted array literal; grids over 1024 cells pass
-      through (CH itself throws past a size cap).
-    * ``base58Encode``/``base58Decode`` — Bitcoin-alphabet radix
-      conversion as NESTED aggregate folds (outer over input bytes/
-      chars, inner multiply-add with carry over the growing digit
-      array; O(n^2), fine for the short keys base58 carries); decode
-      returns BINARY (the IPv6 FixedString lane) and NULLs on invalid
-      alphabet chars where CH throws.  NOTE the neighboring ``bin()``
-      pass-through keeps SPARK semantics (number -> unpadded binary
-      digits); CH's byte-padded, type-width-aware bin would need the
-      argument's type at translation time — compose hex()/unbin() for
-      byte-exact bit strings instead.
-    * ``randomString``/``randomPrintableASCII`` (printable-ASCII scope,
-      literal length <= 64, unrolled independent rand() draws),
-      ``randBinomial`` (literal trial count <= 256, unrolled Bernoulli
-      sum), ``randPoisson`` (literal lambda, inverse-CDF on a single
-      uniform via a threshold-array fold), ``randConstant`` — one draw
-      per CALL SITE, constant across rows (keyed on current_timestamp,
-      which Spark fixes at query start).
-    """
-    chunk = _rewrite_call(
-        chunk, "erf", lambda a: _erf_sql(a[0]) if len(a) == 1 else None
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "erfc",
-        lambda a: f"(1.0D - {_erf_sql(a[0])})" if len(a) == 1 else None,
-    )
-    chunk = _rewrite_call(
-        chunk, "lgamma", lambda a: _lgamma_sql(a[0]) if len(a) == 1 else None
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "tgamma",
-        lambda a: f"exp({_lgamma_sql(a[0])})" if len(a) == 1 else None,
-    )
 
-    chunk = _rewrite_call(
-        chunk,
-        "emptyArrayToSingle",
-        lambda a: (
-            f"IF(size({a[0]}) = 0, "
-            f"array(coalesce(try_element_at({a[0]}, 1), 0)), {a[0]})"
-            if len(a) == 1
-            else None
-        ),
-    )
-
-    def has_subseq_make(args):
+def _json_extract_make(cast_to):
+    def make(args):
         if len(args) != 2:
             return None
-        h, n = args
-        return (
-            f"(aggregate(split({h}, ''), 0, (__ac, __c) -> "
-            f"IF(__ac < length({n}) AND __c = substring({n}, __ac + 1, 1), "
-            f"__ac + 1, __ac)) = length({n}))"
-        )
+        inner = f"get_json_object({args[0]}, concat('$.', {args[1]}))"
+        if cast_to:
+            return f"CAST({inner} AS {cast_to})"
+        return inner
 
-    chunk = _rewrite_call(chunk, "hasSubsequence", has_subseq_make)
-    chunk = _rewrite_call(chunk, "hasSubsequenceUTF8", has_subseq_make)
+    return make
 
-    def unbin_sql(bits: str) -> str:
-        return (
-            f"CASE WHEN length({bits}) >= 8 THEN "
-            f"array_join(transform(sequence(1, "
-            f"CAST(length({bits}) / 8 AS INT)), __i -> "
-            f"char(CAST(conv(substring({bits}, (__i - 1) * 8 + 1, 8), "
-            f"2, 10) AS BIGINT))), '') ELSE '' END"
-        )
 
-    chunk = _rewrite_call(
-        chunk, "unbin", lambda a: unbin_sql(a[0]) if len(a) == 1 else None
+def _cast_make(args):
+    if len(args) != 1:
+        return None
+    m = re.match(r"(?is)^(.*\S)\s+AS\s+([A-Za-z][\w(),\s]*?)\s*$", args[0])
+    if not m:
+        return None
+    spark_t = _spark_type_sql(m.group(2))
+    return f"CAST({m.group(1)} AS {spark_t})" if spark_t else None
+
+
+def _replace_one_make(args):
+    # replaceOne: first occurrence only (Spark's replace family is
+    # all-occurrences) — splice via instr; no-match leaves h intact
+    if len(args) != 3:
+        return None
+    h, n, r = args
+    at = f"instr({h}, {n})"
+    return (
+        f"(CASE WHEN {at} > 0 THEN concat(substr({h}, 1, {at} - 1), "
+        f"{r}, substr({h}, {at} + length({n}))) ELSE {h} END)"
     )
 
-    def bit_slice_make(args):
-        if len(args) != 3:
+
+def _auc_make(args):
+    # rank-sum AUC with AVERAGE ranks for tied scores (the
+    # Mann-Whitney identity; average ranks ≡ CH's ROC trapezoid on
+    # ties — the previous sorted-position form over-/under-counted
+    # tied scores and divided by zero on single-class input under
+    # ANSI mode): rank(i) = #[s < s_i] + (#[s = s_i] + 1)/2,
+    # O(len²) per ROW like CH's own per-array evaluation; degenerate
+    # single-class inputs yield NULL (CH nan).
+    if len(args) != 2:
+        return None
+    s, l = args
+    rank_i = (
+        f"size(filter({s}, __v -> __v < element_at({s}, __i))) "
+        f"+ (size(filter({s}, __v -> __v = element_at({s}, __i))) + 1) "
+        f"/ 2.0D"
+    )
+    sum_ranks = (
+        f"aggregate(sequence(1, size({s})), 0.0D, "
+        f"(__ac, __i) -> __ac + IF(element_at({l}, __i) > 0, "
+        f"{rank_i}, 0.0D))"
+    )
+    p = f"CAST(size(filter({l}, __x -> __x > 0)) AS DOUBLE)"
+    return (
+        f"(({sum_ranks} - {p} * ({p} + 1) / 2) "
+        f"/ nullif({p} * (size({s}) - {p}), 0))"
+    )
+
+
+def _regexp_extract_make(args):
+    # regexpExtract(h, p[, idx]) — 3-arg maps straight to Spark's
+    # regexp_extract; 2-arg defers to the extract() rewrite downstream
+    # (first capture group if present, else whole match)
+    if len(args) == 3:
+        return f"regexp_extract({args[0]}, {args[1]}, {args[2]})"
+    if len(args) == 2:
+        return f"extract({args[0]}, {args[1]})"
+    return None
+
+
+def _int_div_or_zero_make(args):
+    if len(args) != 2:
+        return None
+    a = f"CAST({args[0]} AS BIGINT)"
+    b = f"CAST({args[1]} AS BIGINT)"
+    return (
+        f"(CASE WHEN {b} = 0 THEN 0L ELSE "
+        f"(({a} DIV {b}) + (CASE WHEN ({a} % {b}) != 0 "
+        f"AND (({a} < 0) != ({b} < 0)) THEN -1 ELSE 0 END)) END)"
+    )
+
+
+def _to_decimal_make(precision):
+    def make(args):
+        if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
             return None
-        s, off, ln = args
-        # bits from the UTF-8 BYTES via hex(CAST AS BINARY) — one 4-bit
-        # group per hex nibble, byte-accurate for non-ASCII input (an
-        # ascii()/bin() form would read CODEPOINTS and lpad-truncate
-        # multi-byte ones)
-        hx = f"lower(hex(CAST({s} AS BINARY)))"
-        allbits = (
-            f"array_join(transform(sequence(1, greatest(length({hx}), 1)), "
-            f"__i -> lpad(conv(substring({hx}, __i, 1), 16, 2), 4, '0')), "
-            f"'')"
-        )
-        sliced = (
-            f"substring({allbits}, CAST(({off}) AS INT), "
-            f"CAST(({ln}) AS INT))"
-        )
-        padded = (
-            f"rpad({sliced}, CAST(ceil(length({sliced}) / 8.0) * 8 AS INT), "
-            f"'0')"
-        )
-        return unbin_sql(padded)
+        return f"CAST({args[0]} AS DECIMAL({precision}, {args[1].strip()}))"
 
-    chunk = _rewrite_call(chunk, "bitSlice", bit_slice_make)
+    return make
 
-    def morton_encode_make(args):
+
+def _retention_make(args):
+    # CH retention(c1, …, ck): r[0] = OR-over-rows(c1); r[i] =
+    # OR-over-rows(c(i+1)) AND r[0] (source: AggregateFunctionRetention
+    # finalize).  max(if(...)) is the OR; Spark dedups the repeated
+    # max(c1) aggregate in the physical plan, so the anchor is
+    # computed once.
+    if len(args) < 1:
+        return None
+    anchor = f"max(CASE WHEN {args[0]} THEN 1 ELSE 0 END)"
+    cells = [anchor] + [
+        f"({anchor} * max(CASE WHEN {c} THEN 1 ELSE 0 END))"
+        for c in args[1:]
+    ]
+    return "array(" + ", ".join(cells) + ")"
+
+
+def _range_make(args):
+    # range(n) = [0..n-1]; range(s, e) = [s..e-1].  The slice guard
+    # matters: Spark's sequence(0, -1) DESCENDS instead of returning
+    # [] for n = 0.
+    if len(args) == 1:
+        n = args[0]
+        return (
+            f"slice(sequence(0, greatest(({n}) - 1, 0)), "
+            f"1, greatest(({n}), 0))"
+        )
+    if len(args) == 2:
+        s, e = args
+        return (
+            f"slice(sequence(({s}), greatest(({e}) - 1, ({s}))), "
+            f"1, greatest(({e}) - ({s}), 0))"
+        )
+    return None
+
+
+def _fold_make(args):
+    # arrayFold((acc, x) -> ..., arr, init) → aggregate(arr, init,
+    # (acc, x) -> ...): same fold, the lambda moves from first to last
+    if len(args) != 3 or "->" not in args[0]:
+        return None
+    lam, arr, init = args
+    return f"aggregate({arr}, {init}, {lam})"
+
+
+def _tsoi_make(args):
+    # toStartOfInterval(ts, INTERVAL n unit) → epoch-aligned bucket
+    # floor — the CH dashboard bucketing idiom.  Fixed-width units
+    # only (second/minute/hour/day are epoch-aligned in CH too);
+    # week/month/quarter/year have calendar origins — toMonday /
+    # toStartOfMonth etc. cover those, so the variable-width forms
+    # pass through untranslated.
+    if len(args) != 2:
+        return None
+    m = re.fullmatch(
+        r"(?is)\s*INTERVAL\s+(\d+)\s+(second|minute|hour|day)s?\s*",
+        args[1],
+    )
+    if not m:
+        return None
+    mult = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+    secs = int(m.group(1)) * mult[m.group(2).lower()]
+    return (
+        f"timestamp_seconds((unix_timestamp({args[0]}) DIV {secs}) * {secs})"
+    )
+
+
+def _transform_value_make(args):
+    # CH transform(x, [from...], [to...], default) — value mapping.
+    # Spark spells the same thing map_from_arrays + element_at (missing
+    # key → NULL → coalesce to the default).  Only the 4-arg form; the
+    # 3-arg form (default = x itself) reuses x.  NOT the array
+    # higher-order transform — that one takes a lambda 2nd argument
+    # and is left to Spark's own transform() by checking for '->'.
+    # Spark's element_at requires probe type = key type — EXACTLY the
+    # constraint ClickHouse places on transform's x vs array_from, so
+    # CH-valid queries analyze and CH-invalid ones fail the same way.
+    if len(args) == 4 and "->" not in args[1]:
+        x, f, t, d = args
+        return (
+            f"coalesce(element_at(map_from_arrays({f}, {t}), {x}), {d})"
+        )
+    if len(args) == 3 and "->" not in args[1]:
+        x, f, t = args
+        return (
+            f"coalesce(element_at(map_from_arrays({f}, {t}), {x}), {x})"
+        )
+    return None
+
+
+def _tuple_make(args):
+    # tuple(a, b) → named_struct('col1', a, 'col2', b): plain struct()
+    # names fields after the argument EXPRESSIONS (a column arg yields
+    # its own name, not colN), which would break tupleElement's
+    # 1-based positional access — forcing col1..colN restores CH's
+    # positional tuple semantics.
+    if not args:
+        return None
+    fields = ", ".join(f"'col{i + 1}', {a}" for i, a in enumerate(args))
+    return f"named_struct({fields})"
+
+
+def _resize_make(args):
+    # arrayResize(a, n[, fill]): pad/truncate to n elements.  Index
+    # probe via try_element_at keeps the element type without naming
+    # it (a string rewrite can't) — the 2-arg form therefore pads
+    # with NULL where CH pads with the type's default value, the same
+    # documented divergence as arrayFirst.  The slice guard handles
+    # n <= 0 (Spark's sequence(1, 0) DESCENDS instead of returning []).
+    if len(args) == 2:
+        a, n = args
+        probe = f"try_element_at({a}, CAST(__i AS INT))"
+    elif len(args) == 3:
+        a, n, fill = args
+        probe = (
+            f"CASE WHEN __i <= size({a}) "
+            f"THEN try_element_at({a}, CAST(__i AS INT)) "
+            f"ELSE {fill} END"
+        )
+    else:
+        return None
+    return (
+        f"transform(slice(sequence(1, greatest(({n}), 1)), "
+        f"1, greatest(({n}), 0)), __i -> {probe})"
+    )
+
+
+def _rotate_make(left: bool):
+    def make(args):
+        # arrayRotateLeft/Right(a, n): n may exceed size or be
+        # negative — pmod normalizes; the size<2 guard also dodges
+        # pmod-by-zero on empty arrays
         if len(args) != 2:
             return None
-        x = f"CAST(({args[0]}) AS BIGINT)"
-        y = f"CAST(({args[1]}) AS BIGINT)"
+        a, n = args
+        k = f"({n})" if left else f"(-({n}))"
         return (
-            f"aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__ac, __i) -> "
-            f"__ac | shiftleft(shiftrightunsigned({x}, __i) & 1, 2 * __i) "
-            f"| shiftleft(shiftrightunsigned({y}, __i) & 1, 2 * __i + 1))"
+            f"(CASE WHEN size({a}) < 2 THEN {a} ELSE "
+            f"concat(slice({a}, CAST(pmod({k}, size({a})) AS INT) + 1, "
+            f"size({a})), "
+            f"slice({a}, 1, CAST(pmod({k}, size({a})) AS INT))) END)"
         )
+    return make
 
-    chunk = _rewrite_call(chunk, "mortonEncode", morton_encode_make)
 
-    def morton_decode_make(args):
-        if len(args) != 2 or args[0].strip() != "2":
-            return None
-        c = f"CAST(({args[1]}) AS BIGINT)"
-        lane = (
-            "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__ac, __i) -> "
-            "__ac | shiftleft(shiftrightunsigned({c}, 2 * __i + {o}) & 1, "
-            "__i))"
-        )
-        return (
-            f"named_struct('col1', {lane.format(c=c, o=0)}, "
-            f"'col2', {lane.format(c=c, o=1)})"
-        )
-
-    chunk = _rewrite_call(chunk, "mortonDecode", morton_decode_make)
-
-    def reinterp_int_make(args):
-        if len(args) != 1:
-            return None
-        # let-bind the argument ONCE (the base58 note): it is spliced at
-        # two sites below, and textual splicing multiplies under nesting
-        # — reinterpretAsUInt64∘reinterpretAsString self-composed 3 deep
-        # hit 587 KB of SQL and the analyzer's max-iterations cap before
-        # this (caught by the r8 deep-fuzz)
-        s = "__ri8s"
-        body = (
-            f"aggregate(sequence(1, greatest(least(length({s}), 8), 1)), "
-            f"CAST(0 AS BIGINT), (__ac, __i) -> __ac | "
-            f"shiftleft(CAST(ascii(substring({s}, __i, 1)) AS BIGINT) & 255, "
-            f"(__i - 1) * 8))"
-        )
-        return (
-            f"element_at(transform(array({args[0]}), __ri8s -> {body}), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "reinterpretAsUInt64", reinterp_int_make)
-    chunk = _rewrite_call(chunk, "reinterpretAsInt64", reinterp_int_make)
-
-    def reinterp_str_make(args):
-        if len(args) != 1:
-            return None
-        # let-bound: v is spliced at TEN sites (7 threshold comparisons +
-        # the guard + the byte extraction) — the reinterp_int_make note
-        v = "__ri8v"
-        # highest nonzero byte via EXACT integer thresholds (a log2-on-
-        # DOUBLE form miscounts when the double rounding crosses a
-        # 2^(8k) boundary, emitting a spurious trailing NUL)
-        hi = "CASE " + " ".join(
-            f"WHEN {v} < {1 << (8 * (b + 1))} THEN {b}"
-            for b in range(7)
-        ) + " ELSE 7 END"
-        body = (
-            f"CASE WHEN {v} <= 0 THEN '' ELSE "
-            f"array_join(transform(sequence(0, {hi}), __i -> "
-            f"char(shiftrightunsigned({v}, __i * 8) & 255)), '') END"
-        )
-        return (
-            f"element_at(transform(array(CAST(({args[0]}) AS BIGINT)), "
-            f"__ri8v -> {body}), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "reinterpretAsString", reinterp_str_make)
-
-    def point_in_ellipses_make(args):
-        if len(args) < 6 or (len(args) - 2) % 4 != 0:
-            return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        y = f"CAST(({args[1]}) AS DOUBLE)"
-        terms = []
-        for k in range(2, len(args), 4):
-            x0, y0, a0, b0 = (f"CAST(({a}) AS DOUBLE)" for a in args[k:k + 4])
-            terms.append(
-                f"(({x} - {x0}) * ({x} - {x0}) / ({a0} * {a0}) + "
-                f"({y} - {y0}) * ({y} - {y0}) / ({b0} * {b0}) <= 1.0D)"
-            )
-        return "(" + " OR ".join(terms) + ")"
-
-    chunk = _rewrite_call(chunk, "pointInEllipses", point_in_ellipses_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "tupleToNameValuePairs",
-        lambda a: (
-            f"transform(map_entries(from_json(to_json({a[0]}), "
-            f"'map<string,string>')), __e -> "
-            f"named_struct('col1', __e.key, 'col2', __e.value))"
-            if len(a) == 1
-            else None
-        ),
+def _ngrams_make(args):
+    # ngrams(s, n): all length-n character substrings; the slice
+    # guard yields [] when length(s) < n (sequence(1, 0) descends)
+    if len(args) != 2:
+        return None
+    s, n = args
+    hi = f"greatest(length({s}) - ({n}) + 1, 1)"
+    cnt = f"greatest(length({s}) - ({n}) + 1, 0)"
+    return (
+        f"transform(slice(sequence(1, {hi}), 1, {cnt}), "
+        f"__i -> substr({s}, __i, {n}))"
     )
 
-    chunk = _rewrite_call(
-        chunk,
-        "untuple",
-        lambda a: (
-            f"{a[0].strip()}.*"
-            if len(a) == 1
-            and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_.]*", a[0].strip())
-            else None
-        ),
+
+def _readable_size_make(args):
+    # formatReadableSize: binary-prefixed '%.2f <unit>'.  greatest(|x|,
+    # 1) keeps log defined at 0; the unit index is clamped to the table
+    if len(args) != 1:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    idx = f"least(floor(log(1024, greatest(abs({x}), 1))), 8)"
+    return (
+        f"format_string('%.2f %s', {x} / pow(1024, {idx}), "
+        f"element_at(array('B', 'KiB', 'MiB', 'GiB', 'TiB', 'PiB', "
+        f"'EiB', 'ZiB', 'YiB'), CAST({idx} AS INT) + 1))"
     )
 
-    def geohashes_in_box_make(args):
-        if len(args) != 5:
-            return None
-        try:
-            lon1, lat1, lon2, lat2 = (float(a.strip()) for a in args[:4])
-            p = int(args[4].strip())
-        except ValueError:
-            return None
-        if not 1 <= p <= 12 or lon2 < lon1 or lat2 < lat1:
-            return None
-        nbits = 5 * p
-        nlon, nlat = (nbits + 1) // 2, nbits // 2
-        slon, slat = 360.0 / (1 << nlon), 180.0 / (1 << nlat)
-        i0, i1 = int((lon1 + 180.0) / slon), int((lon2 + 180.0) / slon)
-        j0, j1 = int((lat1 + 90.0) / slat), int((lat2 + 90.0) / slat)
-        i1, j1 = min(i1, (1 << nlon) - 1), min(j1, (1 << nlat) - 1)
-        if (i1 - i0 + 1) * (j1 - j0 + 1) > 1024:
-            return None
-        cells = sorted(
-            {
-                _py_geohash(
-                    -180.0 + (i + 0.5) * slon, -90.0 + (j + 0.5) * slat, p
-                )
-                for i in range(i0, i1 + 1)
-                for j in range(j0, j1 + 1)
-            }
-        )
-        return "array(" + ", ".join(f"'{c}'" for c in cells) + ")"
 
-    chunk = _rewrite_call(chunk, "geohashesInBox", geohashes_in_box_make)
+def _readable_qty_make(args):
+    # formatReadableQuantity: decimal thousands ('1.23 million');
+    # below 1000 CH prints the bare '%.2f'
+    if len(args) != 1:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    idx = f"least(floor(log(1000, greatest(abs({x}), 1))), 5)"
+    return (
+        f"format_string('%.2f%s', {x} / pow(1000, {idx}), "
+        f"element_at(array('', ' thousand', ' million', ' billion', "
+        f"' trillion', ' quadrillion'), CAST({idx} AS INT) + 1))"
+    )
 
-    def random_ascii_make(args):
-        if len(args) != 1:
-            return None
-        try:
-            n = int(args[0].strip())
-        except ValueError:
-            return None
-        if not 1 <= n <= 64:
-            return None
-        draws = ", ".join(
-            "char(32 + CAST(floor(rand() * 95) AS INT))" for _ in range(n)
-        )
-        return f"concat({draws})"
 
-    chunk = _rewrite_call(chunk, "randomPrintableASCII", random_ascii_make)
-    chunk = _rewrite_call(chunk, "randomString", random_ascii_make)
+def _bit_test_multi(op: str):
+    def make(args):
+        if len(args) < 2:
+            return None
+        n = args[0]
+        bits = [
+            f"CAST(shiftright(CAST(({n}) AS BIGINT), "
+            f"CAST(({i}) AS INT)) & 1 AS INT)"
+            for i in args[1:]
+        ]
+        return "(" + f" {op} ".join(bits) + ")"
+    return make
 
-    def rand_binomial_make(args):
+
+def _great_circle_make(args):
+    # greatCircleDistance/geoDistance(lon1, lat1, lon2, lat2) →
+    # haversine on CH's mean-Earth radius (6372797.560856 m).  CH's
+    # own implementation is a piecewise polynomial approximation of
+    # this formula (±0.01% class error), so values agree to ~4
+    # significant digits, not bit-for-bit — use for geo math, not
+    # cross-engine hashing.
+    if len(args) != 4:
+        return None
+    lon1, lat1, lon2, lat2 = (f"CAST(({a}) AS DOUBLE)" for a in args)
+    return (
+        f"(2 * 6372797.560856 * asin(sqrt("
+        f"pow(sin(radians({lat2} - {lat1}) / 2), 2) + "
+        f"cos(radians({lat1})) * cos(radians({lat2})) * "
+        f"pow(sin(radians({lon2} - {lon1}) / 2), 2))))"
+    )
+
+
+def _great_circle_angle_make(args):
+    # greatCircleAngle: the same haversine central angle, in DEGREES
+    # (no radius factor) — same ~4-significant-digit agreement with
+    # CH's polynomial approximation as greatCircleDistance.
+    if len(args) != 4:
+        return None
+    lon1, lat1, lon2, lat2 = (f"CAST(({a}) AS DOUBLE)" for a in args)
+    return (
+        f"degrees(2 * asin(sqrt("
+        f"pow(sin(radians({lat2} - {lat1}) / 2), 2) + "
+        f"cos(radians({lat1})) * cos(radians({lat2})) * "
+        f"pow(sin(radians({lon2} - {lon1}) / 2), 2))))"
+    )
+
+
+# --- vector math over array columns (the CH embeddings idiom) -------
+# DOUBLE accumulation; each rewrite references its arguments more than
+# once — fine for column-backed arrays (the documented intDiv caveat)
+def _dot_make(args):
+    if len(args) != 2:
+        return None
+    a, b = args
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * y), "
+        "CAST(0 AS DOUBLE), (s, v) -> s + v)"
+    )
+
+
+def _lp_dist(power: str):
+    def make(args):
         if len(args) != 2:
             return None
-        try:
-            t = int(args[0].strip())
-        except ValueError:
-            return None
-        if not 1 <= t <= 256:
-            return None
-        p = f"CAST(({args[1]}) AS DOUBLE)"
-        return (
-            "(" + " + ".join(f"IF(rand() < {p}, 1, 0)" for _ in range(t)) + ")"
+        a, b = args
+        diff = (
+            f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) - y)"
         )
-
-    chunk = _rewrite_call(chunk, "randBinomial", rand_binomial_make)
-
-    def rand_poisson_make(args):
-        if len(args) != 1:
-            return None
-        try:
-            lam = float(args[0].strip())
-        except ValueError:
-            return None
-        # lam <= 700: exp(-lam) underflows to 0.0 past ~745, which would
-        # flatten every CDF threshold to 0 and return a deterministic
-        # constant; larger lambdas pass through (error by name)
-        if not 0 < lam <= 700:
-            return None
-        import math as _m
-
-        # inverse-CDF thresholds: k = #{j : CDF(j) < u} for one uniform u
-        ts, cdf, pk = [], 0.0, _m.exp(-lam)
-        k = 0
-        while cdf < 1.0 - 1e-12 and k < lam + 12 * _m.sqrt(lam) + 30:
-            cdf += pk
-            ts.append(repr(min(cdf, 1.0)))
-            pk *= lam / (k + 1)
-            k += 1
-        arr = ", ".join(f"{t}D" for t in ts)
-        return (
-            f"aggregate(array({arr}), named_struct('u', rand(), 'k', 0), "
-            f"(__s, __t) -> named_struct('u', __s.u, "
-            f"'k', __s.k + IF(__t < __s.u, 1, 0)), __s -> __s.k)"
-        )
-
-    chunk = _rewrite_call(chunk, "randPoisson", rand_poisson_make)
-
-    # randConstant: one random constant per CALL SITE (distinct sites get
-    # distinct values, all rows share one) — keyed on current_timestamp,
-    # which Spark evaluates once per query
-    site = [0]
-
-    def rand_const_make(args):
-        # randConstant() or randConstant(expr) — the argument only pins
-        # the constant's type in CH and is accepted-and-ignored here
-        if len(args) > 1:
-            return None
-        site[0] += 1
-        return (
-            f"pmod(xxhash64(CAST(current_timestamp() AS STRING), "
-            f"{site[0]}), 4294967296)"
-        )
-
-    chunk = _rewrite_call(chunk, "randConstant", rand_const_make)
-
-    # sleep/sleepEachRow return 0 in CH; the delay side effect is
-    # deliberately not performed (a per-row sleep is a scale hazard, not
-    # a semantic — same stance as the dropped offset-paged ingest)
-    def sleep_make(args):
-        if len(args) != 1:
-            return None
-        return f"CAST(({args[0]}) * 0 AS INT)"
-
-    chunk = _rewrite_call(chunk, "sleepEachRow", sleep_make)
-    chunk = _rewrite_call(chunk, "sleep", sleep_make)
-
-    # base58Encode/Decode — Bitcoin-alphabet radix conversion as NESTED
-    # aggregate folds (outer over input units, inner over the growing
-    # digit array doing multiply-add with carry propagation): O(n^2) in
-    # the input length, fine for the short keys/hashes base58 carries.
-    # Decode returns BINARY (CH String holds raw bytes; BINARY is this
-    # engine's faithful lane for that, the IPv6 FixedString stance).
-    b58 = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
-
-    # aggregate() demands the merge lambda's type equal the zero's
-    # INCLUDING nullability — IF(true, ..., NULL) makes the zero arrays
-    # nullable so they unify with the (nullable) concat results
-    nullable_ints = "IF(true, CAST(array() AS ARRAY<INT>), NULL)"
-
-    def base58_encode_make(args):
-        if len(args) != 1:
-            return None
-        # let-bind the hex form ONCE (single-element transform closure):
-        # the argument may itself be a large expression, and it is
-        # referenced from ~6 sites below — textual splicing at each site
-        # blows the expression tree up multiplicatively when calls nest
-        # (base58Decode(base58Encode(x)) went 1.8s -> 17.9s before this)
-        hx = "__b58h"
-        byte = (
-            f"CAST(conv(substring({hx}, __bi * 2 - 1, 2), 16, 10) AS INT)"
-        )
-        inner = (
-            f"aggregate(__st, "
-            f"named_struct('nd', {nullable_ints}, 'c', {byte}), "
-            f"(__s2, __d) -> named_struct("
-            f"'nd', concat(__s2.nd, array((__d * 256 + __s2.c) % 58)), "
-            f"'c', CAST((__d * 256 + __s2.c) DIV 58 AS INT)))"
-        )
-        # after multiply-add the residual carry is < 256 -> at most two
-        # more base-58 digits
-        step = (
-            f"element_at(transform(array({inner}), __s3 -> "
-            f"concat(__s3.nd, "
-            f"CASE WHEN __s3.c >= 58 "
-            f"THEN array(__s3.c % 58, CAST(__s3.c DIV 58 AS INT)) "
-            f"WHEN __s3.c > 0 THEN array(__s3.c) "
-            f"ELSE CAST(array() AS ARRAY<INT>) END)), 1)"
-        )
-        fold = (
-            f"aggregate(sequence(1, greatest(length({hx}) DIV 2, 1)), "
-            f"{nullable_ints}, "
-            f"(__st, __bi) -> {step}, "
-            f"__st -> array_join(transform(reverse(__st), "
-            f"__d58 -> substring('{b58}', __d58 + 1, 1)), ''))"
-        )
-        # leading 0x00 bytes render as leading '1's (the Bitcoin rule);
-        # the fold above drops them (value arithmetic), so re-prepend
-        zeros = (
-            f"CAST((length({hx}) - length(regexp_replace({hx}, '^(00)+', "
-            f"''))) DIV 2 AS INT)"
-        )
-        body = (
-            f"CASE WHEN length({hx}) = 0 THEN '' ELSE "
-            f"concat(repeat('1', {zeros}), "
-            f"CASE WHEN regexp_replace({hx}, '^(00)+', '') = '' THEN '' "
-            f"ELSE {fold} END) END"
-        )
-        return (
-            f"element_at(transform(array(lower(hex(CAST(({args[0]}) "
-            f"AS BINARY)))), __b58h -> {body}), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "base58Encode", base58_encode_make)
-
-    def base58_decode_make(args):
-        if len(args) != 1:
-            return None
-        s = "__b58s"  # let-bound once below (the encode-side note)
-        digit = (
-            f"CAST(instr('{b58}', substring({s}, __ci, 1)) - 1 AS INT)"
-        )
-        inner = (
-            f"aggregate(__st, "
-            f"named_struct('nb', {nullable_ints}, 'c', {digit}), "
-            f"(__s2, __b) -> named_struct("
-            f"'nb', concat(__s2.nb, array((__b * 58 + __s2.c) % 256)), "
-            f"'c', CAST((__b * 58 + __s2.c) DIV 256 AS INT)))"
-        )
-        step = (
-            f"element_at(transform(array({inner}), __s3 -> "
-            f"concat(__s3.nb, "
-            f"CASE WHEN __s3.c > 0 THEN array(__s3.c) "
-            f"ELSE CAST(array() AS ARRAY<INT>) END)), 1)"
-        )
-        hexout = (
-            f"aggregate(sequence(1, greatest(length({s}), 1)), "
-            f"{nullable_ints}, "
-            f"(__st, __ci) -> {step}, "
-            f"__st -> array_join(transform(reverse(__st), "
-            f"__b2 -> lpad(lower(hex(__b2)), 2, '0')), ''))"
-        )
-        ones = (
-            f"(length({s}) - length(regexp_replace({s}, '^1+', '')))"
-        )
-        # invalid alphabet chars -> NULL (CH throws; NULL is this
-        # engine's OrNull-style analog, matching try_-family behavior)
-        body = (
-            f"CASE WHEN {s} rlike '^[1-9A-HJ-NP-Za-km-z]*$' THEN "
-            f"unhex(concat(repeat('00', {ones}), "
-            f"CASE WHEN regexp_replace({s}, '^1+', '') = '' THEN '' "
-            f"ELSE {hexout} END)) END"
-        )
-        return (
-            f"element_at(transform(array({args[0]}), __b58s -> {body}), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "base58Decode", base58_decode_make)
-
-    # 128-bit digest tail — engine-specific values (the sipHash64 stance),
-    # rendered as the 32-hex-char string CH users feed to hex() anyway
-    chunk = _rewrite_call(
-        chunk,
-        "sipHash128",
-        lambda a: (
-            f"md5(CAST(concat({', '.join(a)}) AS BINARY))"
-            if len(a) >= 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "murmurHash3_128",
-        lambda a: (
-            f"substring(sha2(CAST(concat({', '.join(a)}) AS BINARY), 256), "
-            f"1, 32)"
-            if len(a) >= 1
-            else None
-        ),
-    )
-    return chunk
-
-
-def _rewrite_batch25_calls(chunk: str) -> str:
-    """Round-7 batch 25 — the last easy coverage tail:
-
-    * function-call forms of the comparison operators (``equals(a,b)``
-      …) → the operators themselves;
-    * ``bitRotateRight`` (mirror of the existing left rotate),
-      ``byteSwap`` (64-bit byte reversal via an 8-byte fold — CH swaps
-      at the integer's own width; the 64-bit form is the documented
-      scope);
-    * ``timezoneOffset(t)`` — session zone's UTC offset at t (DST-aware
-      via to_utc_timestamp; 0 under this engine's fixed-UTC session);
-    * ``toRelativeWeekNum`` — Monday-aligned weeks since the epoch week
-      (CH's own docs define the anchor only as "a certain fixed point
-      in the past" — the VALUE is engine-specific, differences are
-      portable; the uniq stance);
-    * ``multiplyDecimal/divideDecimal(a, b[, scale])`` — DECIMAL(38, s)
-      arithmetic (literal scale, default 10; CH allows 76 digits —
-      Spark's 38 is the documented bound);
-    * ``toInt128/256, toUInt128/256`` → DECIMAL(38,0) (same bound);
-    * ``formatReadableDecimalSize`` — the 1000-based sibling of the
-      existing binary formatReadableSize;
-    * ``hasTokenOrNull`` — hasToken, NULL when the needle is not a
-      valid token; ``visibleWidth`` → string length;
-      ``toColumnTypeName`` → ``typeof`` (engine-specific type names).
-    """
-    for nm, op in (
-        ("notEquals", "!="), ("equals", "="),
-        ("lessOrEquals", "<="), ("greaterOrEquals", ">="),
-        ("less", "<"), ("greater", ">"),
-    ):
-        def cmp_make(args, _op=op):
-            if len(args) != 2:
-                return None
-            return f"(({args[0]}) {_op} ({args[1]}))"
-
-        chunk = _rewrite_call(chunk, nm, cmp_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "bitRotateRight",
-        lambda a: (
-            f"(shiftrightunsigned(CAST(({a[0]}) AS BIGINT), "
-            f"CAST(({a[1]}) AS INT)) | shiftleft(CAST(({a[0]}) AS BIGINT), "
-            f"64 - CAST(({a[1]}) AS INT)))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "byteSwap",
-        lambda a: (
-            f"aggregate(sequence(0, 7), CAST(0 AS BIGINT), "
-            f"(__ac, __i) -> __ac | shiftleft("
-            f"shiftrightunsigned(CAST(({a[0]}) AS BIGINT), __i * 8) "
-            f"& CAST(255 AS BIGINT), (7 - __i) * 8))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "timezoneOffset",
-        lambda a: (
-            f"(unix_timestamp({a[0]}) - unix_timestamp("
-            f"to_utc_timestamp({a[0]}, current_timezone())))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "toRelativeWeekNum",
-        lambda a: (
-            f"CAST(floor(datediff({a[0]}, DATE'1969-12-29') / 7) AS INT)"
-            if len(a) == 1
-            else None
-        ),
-    )
-
-    def dec_arith_make(op):
-        def make(args):
-            if len(args) == 2:
-                s = "10"
-            elif len(args) == 3 and re.fullmatch(r"\d+", args[2].strip()):
-                s = args[2].strip()
-            else:
-                return None
+        if power == "1":
             return (
-                f"CAST(CAST({args[0]} AS DECIMAL(38, 10)) {op} "
-                f"CAST({args[1]} AS DECIMAL(38, 10)) AS DECIMAL(38, {s}))"
+                f"aggregate({diff}, CAST(0 AS DOUBLE), "
+                "(s, v) -> s + abs(v))"
             )
+        if power == "inf":
+            return f"array_max(transform({diff}, v -> abs(v)))"
+        sq = (
+            f"aggregate({diff}, CAST(0 AS DOUBLE), "
+            "(s, v) -> s + v * v)"
+        )
+        return f"sqrt({sq})" if power == "2" else sq
 
-        return make
+    return make
 
-    chunk = _rewrite_call(chunk, "multiplyDecimal", dec_arith_make("*"))
-    chunk = _rewrite_call(chunk, "divideDecimal", dec_arith_make("/"))
 
-    def readable_dec_make(args):
+def _norm_make(power: str):
+    def make(args):
         if len(args) != 1:
             return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        idx = f"least(floor(log(1000, greatest(abs({x}), 1))), 8)"
+        a = args[0]
+        if power == "1":
+            return (
+                f"aggregate({a}, CAST(0 AS DOUBLE), "
+                "(s, x) -> s + abs(CAST(x AS DOUBLE)))"
+            )
+        if power == "inf":
+            return f"CAST(array_max(transform({a}, x -> abs(x))) AS DOUBLE)"
         return (
-            f"format_string('%.2f %s', {x} / pow(1000, {idx}), "
-            f"element_at(array('B', 'KB', 'MB', 'GB', 'TB', 'PB', "
-            f"'EB', 'ZB', 'YB'), CAST({idx} AS INT) + 1))"
+            f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
+            "(s, x) -> s + CAST(x AS DOUBLE) * x))"
         )
 
-    chunk = _rewrite_call(
-        chunk, "formatReadableDecimalSize", readable_dec_make
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "hasTokenOrNull",
-        lambda a: (
-            f"(CASE WHEN {a[1]} rlike '^[\\\\p{{Alnum}}]+$' THEN "
-            f"array_contains(split({a[0]}, '\\\\P{{Alnum}}+'), {a[1]}) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "visibleWidth",
-        lambda a: (
-            f"length(CAST({a[0]} AS STRING))" if len(a) == 1 else None
-        ),
-    )
-    return chunk
+    return make
 
 
-def _rewrite_batch24_calls(chunk: str) -> str:
-    """Round-7 batch 24 — the -State/-Merge/-ForEach/-OrDefault/
-    -Resample combinator families plus the aggregate-argument tail:
+def _cosine_make(args):
+    # cosineDistance = 1 - cos similarity; NULL (not NaN) on a zero
+    # vector via nullif — CH returns nan there, the one divergence
+    if len(args) != 2:
+        return None
+    a, b = args
+    dot = _dot_make([a, b])
+    na = _norm_make("2")([a])
+    nb = _norm_make("2")([b])
+    return f"(1 - {dot} / nullif({na} * {nb}, 0))"
 
-    * ``-State``/``-Merge``: ClickHouse's State is an opaque
-      ``AggregateFunction`` binary; the faithful Spark representation
-      is the state's VALUE — algebraic aggregates are their own state
-      (sumState ≡ sum, merging count states sums them), avgState is
-      the (sum, count) struct, quantileState is the collected value
-      list (exact superset of CH's reservoir — exactness only
-      improves).  Reading CH's binary state columns stays out of
-      scope (cross-system wire format); uniqState/uniqMerge keep
-      their real sketch mapping (Spark HLL, in _WRAPS).
-    * ``-ForEach``: element-wise aggregation across array rows —
-      zero-padded zip folds over the collected arrays (per-group
-      O(n·d), the sumMap/topK collected-group stance).
-    * ``-OrDefault``: CH returns the type default (0) on an empty
-      aggregation state → ``coalesce(agg, 0)``.
-    * ``-Resample(start, end, step)(x, key)``: literal bounds only —
-      the bucket count is resolved at translation time and emitted as
-      an explicit ``array(agg(CASE bucket_i)…)`` (scale-safe, no
-      collection); bucket count capped at 64, beyond passes through.
-    * ``sumArgMin/sumArgMax(x, arg)``: single collected fold carrying
-      (best arg, running sum), restarting the sum on a new best.
-    * ``groupArrayInsertAt(def, size)(x, pos)``: scatter into a
-      fixed-size slot array via an index-aware transform fold.
-    * ``arrayLastIndex(λ, arr)``: last matching 1-based position, 0
-      when none (mirror of arrayFirstIndex via reverse).
-    """
-    for nm, agg in (
-        ("sumArgMin", "min"), ("sumArgMax", "max"),
+
+def _rev_sort_make(args):
+    # lambda-less form only; comparator forms pass through
+    if len(args) == 1 and "->" not in args[0]:
+        return f"reverse(array_sort({args[0]}))"
+    return None
+
+
+def _html_make(args):
+    # extractTextFromHTML: script/style/comment removal → tag strip →
+    # common entity decode → whitespace collapse.  RE2-compatible
+    # patterns (no backreferences) so the same chain runs in oracle
+    # engines; CH's C++ parser additionally handles CDATA/malformed
+    # tags — corpus-cleanup parity, not byte parity.
+    if len(args) != 1:
+        return None
+    out = args[0]
+    for pat in (
+        "(?is)<script[^>]*>.*?</script>",
+        "(?is)<style[^>]*>.*?</style>",
+        "(?s)<!--.*?-->",
+        "<[^>]*>",
     ):
-        def arg_make(args, _max=(agg == "max")):
-            if len(args) != 2:
-                return None
-            x, a = args
-            better = ">" if _max else "<"
-            return (
-                f"aggregate(collect_list(struct(CAST({x} AS DOUBLE) AS v, "
-                f"CAST({a} AS DOUBLE) AS a)), "
-                f"named_struct('m', CAST(NULL AS DOUBLE), 's', 0.0D), "
-                f"(__ac, __q) -> CASE "
-                f"WHEN __ac.m IS NULL OR __q.a {better} __ac.m "
-                f"THEN named_struct('m', __q.a, 's', __q.v) "
-                f"WHEN __q.a = __ac.m "
-                f"THEN named_struct('m', __ac.m, 's', __ac.s + __q.v) "
-                f"ELSE __ac END, "
-                f"__ac -> __ac.s)"
+        out = f"regexp_replace({out}, '{pat}', ' ')"
+    for ent, ch in (
+        ("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
+        ("&quot;", '"'), ("&#39;", "''"), ("&apos;", "''"),
+    ):
+        out = f"replace({out}, '{ent}', '{ch}')"
+    return f"trim(regexp_replace({out}, '\\\\s+', ' '))"
+
+
+def _dec_string_make(args):
+    # literal scale only (DECIMAL type params must be literals)
+    if len(args) == 2 and re.fullmatch(r"\s*\d+\s*", args[1]):
+        sc = int(args[1])
+        return f"CAST(CAST(({args[0]}) AS DECIMAL(38, {sc})) AS STRING)"
+    return None
+
+
+@_raw
+def _position_make(text):
+    # 3-arg position(haystack, needle, start) → locate(needle, haystack,
+    # start); every other arity renames to instr, which takes (haystack,
+    # needle), 1-based, like CH (Spark strings are UTF-8 native, so
+    # positionUTF8 is the same operation)
+    args = _split_top_comma(text)
+    if len(args) == 3:
+        h, n, st = args
+        return f"locate({n}, {h}, {st})"
+    return f"instr({text})"
+
+
+def _dt64_make(args):
+    # toDateTime64(s, scale): Spark timestamps are fixed us precision
+    # — the scale argument is storage metadata, value-irrelevant here
+    if len(args) in (1, 2):
+        return f"to_timestamp({args[0]})"
+    return None
+
+
+# map-lambda family: CH puts the lambda FIRST, Spark's map functions
+# take it last
+def _map_filter_make(args):
+    if len(args) == 2 and "->" in args[0]:
+        return f"map_filter({args[1]}, {args[0]})"
+    return None
+
+
+def _map_exists_make(args):
+    if len(args) == 2 and "->" in args[0]:
+        return f"(cardinality(map_filter({args[1]}, {args[0]})) > 0)"
+    return None
+
+
+def _map_all_make(args):
+    if len(args) == 2 and "->" in args[0]:
+        m = args[1]
+        return (
+            f"(cardinality(map_filter({m}, {args[0]})) = cardinality({m}))"
+        )
+    return None
+
+
+# one dotted-quad octet, no leading zeros (CH's strict IPv4 parser)
+_OCTET = "(25[0-5]|2[0-4]\\\\d|1\\\\d\\\\d|[1-9]?\\\\d)"
+
+
+def _v6_parse_make(args):
+    if len(args) != 1:
+        return None
+    return f"unhex({_ipv6_hex_sql(args[0])})"
+
+
+def _cut_v6_make(args):
+    # cutIPv6 zeroes trailing bytes and RENDERS text (CH returns
+    # String here) — emits IPv6NumToString for the rewrite below
+    if len(args) != 3:
+        return None
+    b, c6, c4 = args
+    cut = (
+        f"IF(substring(lower(hex({b})), 1, 24) = "
+        f"'00000000000000000000ffff', CAST(({c4}) AS INT), "
+        f"CAST(({c6}) AS INT))"
+    )
+    return (
+        f"IPv6NumToString(unhex(concat("
+        f"substring(lower(hex({b})), 1, 32 - {cut} * 2), "
+        f"repeat('0', {cut} * 2))))"
+    )
+
+
+def _v6_cidr_make(args):
+    if len(args) != 2:
+        return None
+    b, p = args
+    pl = f"CAST(({p}) AS INT)"
+
+    def nib(hi: bool) -> str:
+        full, mask_op = ("'f'", "|") if hi else ("'0'", "&")
+        part = f"(shiftleft(1, __i * 4 - {pl}) - 1)"
+        mask = part if hi else f"(15 - {part})"
+        return (
+            f"IF(__i * 4 <= {pl}, substring(__h6, __i, 1), "
+            f"IF((__i - 1) * 4 >= {pl}, {full}, "
+            f"substring('0123456789abcdef', (CAST(conv("
+            f"substring(__h6, __i, 1), 16, 10) AS INT) {mask_op} {mask})"
+            f" + 1, 1)))"
+        )
+
+    def lane(hi: bool) -> str:
+        return (
+            f"unhex(array_join(transform(sequence(1, 32), "
+            f"__i -> {nib(hi)}), ''))"
+        )
+
+    return (
+        f"element_at(transform(array(lower(hex({b}))), __h6 -> "
+        f"named_struct('col1', {lane(False)}, 'col2', {lane(True)})), 1)"
+    )
+
+
+def _unbin_sql(bits: str) -> str:
+    return (
+        f"CASE WHEN length({bits}) >= 8 THEN "
+        f"array_join(transform(sequence(1, "
+        f"CAST(length({bits}) / 8 AS INT)), __i -> "
+        f"char(CAST(conv(substring({bits}, (__i - 1) * 8 + 1, 8), "
+        f"2, 10) AS BIGINT))), '') ELSE '' END"
+    )
+
+
+def _bit_slice_make(args):
+    if len(args) != 3:
+        return None
+    s, off, ln = args
+    # bits from the UTF-8 BYTES via hex(CAST AS BINARY) — one 4-bit
+    # group per hex nibble, byte-accurate for non-ASCII input (an
+    # ascii()/bin() form would read CODEPOINTS and lpad-truncate
+    # multi-byte ones)
+    hx = f"lower(hex(CAST({s} AS BINARY)))"
+    allbits = (
+        f"array_join(transform(sequence(1, greatest(length({hx}), 1)), "
+        f"__i -> lpad(conv(substring({hx}, __i, 1), 16, 2), 4, '0')), "
+        f"'')"
+    )
+    sliced = (
+        f"substring({allbits}, CAST(({off}) AS INT), "
+        f"CAST(({ln}) AS INT))"
+    )
+    padded = (
+        f"rpad({sliced}, CAST(ceil(length({sliced}) / 8.0) * 8 AS INT), "
+        f"'0')"
+    )
+    return _unbin_sql(padded)
+
+
+def _morton_encode_make(args):
+    if len(args) != 2:
+        return None
+    x = f"CAST(({args[0]}) AS BIGINT)"
+    y = f"CAST(({args[1]}) AS BIGINT)"
+    return (
+        f"aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__ac, __i) -> "
+        f"__ac | shiftleft(shiftrightunsigned({x}, __i) & 1, 2 * __i) "
+        f"| shiftleft(shiftrightunsigned({y}, __i) & 1, 2 * __i + 1))"
+    )
+
+
+def _morton_decode_make(args):
+    if len(args) != 2 or args[0].strip() != "2":
+        return None
+    c = f"CAST(({args[1]}) AS BIGINT)"
+    lane = (
+        "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__ac, __i) -> "
+        "__ac | shiftleft(shiftrightunsigned({c}, 2 * __i + {o}) & 1, "
+        "__i))"
+    )
+    return (
+        f"named_struct('col1', {lane.format(c=c, o=0)}, "
+        f"'col2', {lane.format(c=c, o=1)})"
+    )
+
+
+def _reinterp_int_make(args):
+    if len(args) != 1:
+        return None
+    # let-bind the argument ONCE (the base58 note): it is spliced at
+    # two sites below, and textual splicing multiplies under nesting
+    # — reinterpretAsUInt64∘reinterpretAsString self-composed 3 deep
+    # hit 587 KB of SQL and the analyzer's max-iterations cap before
+    # this (caught by the deep composition fuzz)
+    s = "__ri8s"
+    body = (
+        f"aggregate(sequence(1, greatest(least(length({s}), 8), 1)), "
+        f"CAST(0 AS BIGINT), (__ac, __i) -> __ac | "
+        f"shiftleft(CAST(ascii(substring({s}, __i, 1)) AS BIGINT) & 255, "
+        f"(__i - 1) * 8))"
+    )
+    return (
+        f"element_at(transform(array({args[0]}), __ri8s -> {body}), 1)"
+    )
+
+
+def _reinterp_str_make(args):
+    if len(args) != 1:
+        return None
+    # let-bound: v is spliced at TEN sites (7 threshold comparisons +
+    # the guard + the byte extraction) — the _reinterp_int_make note
+    v = "__ri8v"
+    # highest nonzero byte via EXACT integer thresholds (a log2-on-
+    # DOUBLE form miscounts when the double rounding crosses a
+    # 2^(8k) boundary, emitting a spurious trailing NUL)
+    hi = "CASE " + " ".join(
+        f"WHEN {v} < {1 << (8 * (b + 1))} THEN {b}"
+        for b in range(7)
+    ) + " ELSE 7 END"
+    body = (
+        f"CASE WHEN {v} <= 0 THEN '' ELSE "
+        f"array_join(transform(sequence(0, {hi}), __i -> "
+        f"char(shiftrightunsigned({v}, __i * 8) & 255)), '') END"
+    )
+    return (
+        f"element_at(transform(array(CAST(({args[0]}) AS BIGINT)), "
+        f"__ri8v -> {body}), 1)"
+    )
+
+
+def _point_in_ellipses_make(args):
+    if len(args) < 6 or (len(args) - 2) % 4 != 0:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    y = f"CAST(({args[1]}) AS DOUBLE)"
+    terms = []
+    for k in range(2, len(args), 4):
+        x0, y0, a0, b0 = (f"CAST(({a}) AS DOUBLE)" for a in args[k:k + 4])
+        terms.append(
+            f"(({x} - {x0}) * ({x} - {x0}) / ({a0} * {a0}) + "
+            f"({y} - {y0}) * ({y} - {y0}) / ({b0} * {b0}) <= 1.0D)"
+        )
+    return "(" + " OR ".join(terms) + ")"
+
+
+def _geohashes_in_box_make(args):
+    if len(args) != 5:
+        return None
+    try:
+        lon1, lat1, lon2, lat2 = (float(a.strip()) for a in args[:4])
+        p = int(args[4].strip())
+    except ValueError:
+        return None
+    if not 1 <= p <= 12 or lon2 < lon1 or lat2 < lat1:
+        return None
+    nbits = 5 * p
+    nlon, nlat = (nbits + 1) // 2, nbits // 2
+    slon, slat = 360.0 / (1 << nlon), 180.0 / (1 << nlat)
+    i0, i1 = int((lon1 + 180.0) / slon), int((lon2 + 180.0) / slon)
+    j0, j1 = int((lat1 + 90.0) / slat), int((lat2 + 90.0) / slat)
+    i1, j1 = min(i1, (1 << nlon) - 1), min(j1, (1 << nlat) - 1)
+    if (i1 - i0 + 1) * (j1 - j0 + 1) > 1024:
+        return None
+    cells = sorted(
+        {
+            _py_geohash(
+                -180.0 + (i + 0.5) * slon, -90.0 + (j + 0.5) * slat, p
             )
+            for i in range(i0, i1 + 1)
+            for j in range(j0, j1 + 1)
+        }
+    )
+    return "array(" + ", ".join(f"'{c}'" for c in cells) + ")"
 
-        chunk = _rewrite_call(chunk, nm, arg_make)
 
-    # -ForEach: padded element-wise folds over collected arrays
-    def foreach_make(op):
-        def make(args):
-            if len(args) != 1:
-                return None
-            v = args[0]
-            pad_a = "concat(__ac, array_repeat(__init, greatest(size(__x) - size(__ac), 0)))"
-            pad_x = "concat(__x, array_repeat(__init, greatest(size(__ac) - size(__x), 0)))"
-            if op == "sum":
-                init, comb = "0.0D", "__p + __q"
-            elif op == "min":
-                init, comb = (
-                    "double('Infinity')", "least(__p, __q)"
-                )
-            elif op == "max":
-                init, comb = (
-                    "double('-Infinity')", "greatest(__p, __q)"
-                )
-            else:  # avg: fold (sum, count) pairs, divide at finish
-                pairs = (
-                    f"aggregate(collect_list(transform({v}, "
-                    f"__e -> CAST(__e AS DOUBLE))), "
-                    f"CAST(array() AS ARRAY<STRUCT<s: DOUBLE, c: BIGINT>>), "
-                    f"(__ac, __x) -> zip_with("
-                    f"concat(__ac, array_repeat(named_struct('s', 0.0D, "
-                    f"'c', CAST(0 AS BIGINT)), "
-                    f"greatest(size(__x) - size(__ac), 0))), "
-                    f"concat(transform(__x, __e -> named_struct('s', __e, "
-                    f"'c', CAST(1 AS BIGINT))), "
-                    f"array_repeat(named_struct('s', 0.0D, "
-                    f"'c', CAST(0 AS BIGINT)), "
-                    f"greatest(size(__ac) - size(__x), 0))), "
-                    f"(__p, __q) -> named_struct('s', __p.s + __q.s, "
-                    f"'c', __p.c + __q.c)), "
-                    f"__ac -> transform(__ac, __e -> __e.s / __e.c))"
-                )
-                return pairs
-            body = (
+def _random_ascii_make(args):
+    if len(args) != 1:
+        return None
+    try:
+        n = int(args[0].strip())
+    except ValueError:
+        return None
+    if not 1 <= n <= 64:
+        return None
+    draws = ", ".join(
+        "char(32 + CAST(floor(rand() * 95) AS INT))" for _ in range(n)
+    )
+    return f"concat({draws})"
+
+
+def _rand_binomial_make(args):
+    if len(args) != 2:
+        return None
+    try:
+        t = int(args[0].strip())
+    except ValueError:
+        return None
+    if not 1 <= t <= 256:
+        return None
+    p = f"CAST(({args[1]}) AS DOUBLE)"
+    return (
+        "(" + " + ".join(f"IF(rand() < {p}, 1, 0)" for _ in range(t)) + ")"
+    )
+
+
+def _rand_poisson_make(args):
+    if len(args) != 1:
+        return None
+    try:
+        lam = float(args[0].strip())
+    except ValueError:
+        return None
+    # lam <= 700: exp(-lam) underflows to 0.0 past ~745, which would
+    # flatten every CDF threshold to 0 and return a deterministic
+    # constant; larger lambdas pass through (error by name)
+    if not 0 < lam <= 700:
+        return None
+    # inverse-CDF thresholds: k = #{j : CDF(j) < u} for one uniform u
+    ts, cdf, pk = [], 0.0, math.exp(-lam)
+    k = 0
+    while cdf < 1.0 - 1e-12 and k < lam + 12 * math.sqrt(lam) + 30:
+        cdf += pk
+        ts.append(repr(min(cdf, 1.0)))
+        pk *= lam / (k + 1)
+        k += 1
+    arr = ", ".join(f"{t}D" for t in ts)
+    return (
+        f"aggregate(array({arr}), named_struct('u', rand(), 'k', 0), "
+        f"(__s, __t) -> named_struct('u', __s.u, "
+        f"'k', __s.k + IF(__t < __s.u, 1, 0)), __s -> __s.k)"
+    )
+
+
+# randConstant: one random constant per CALL SITE (distinct sites get
+# distinct values, all rows share one) — keyed on current_timestamp,
+# which Spark evaluates once per query.  _translate_once resets the site
+# counter, so the numbering (and the translation) depends on the
+# statement alone.
+_RAND_CONSTANT_SITE = [0]
+
+
+def _rand_const_make(args):
+    # randConstant() or randConstant(expr) — the argument only pins
+    # the constant's type in CH and is accepted-and-ignored here
+    if len(args) > 1:
+        return None
+    _RAND_CONSTANT_SITE[0] += 1
+    return (
+        f"pmod(xxhash64(CAST(current_timestamp() AS STRING), "
+        f"{_RAND_CONSTANT_SITE[0]}), 4294967296)"
+    )
+
+
+# base58Encode/Decode — Bitcoin-alphabet radix conversion as NESTED
+# aggregate folds (outer over input units, inner over the growing
+# digit array doing multiply-add with carry propagation): O(n^2) in
+# the input length, fine for the short keys/hashes base58 carries.
+# Decode returns BINARY (CH String holds raw bytes; BINARY is this
+# engine's faithful lane for that, the IPv6 FixedString stance).
+_B58 = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
+
+# aggregate() demands the merge lambda's type equal the zero's
+# INCLUDING nullability — IF(true, ..., NULL) makes the zero arrays
+# nullable so they unify with the (nullable) concat results
+_NULLABLE_INTS = "IF(true, CAST(array() AS ARRAY<INT>), NULL)"
+
+
+def _base58_encode_make(args):
+    if len(args) != 1:
+        return None
+    # let-bind the hex form ONCE (single-element transform closure):
+    # the argument may itself be a large expression, and it is
+    # referenced from ~6 sites below — textual splicing at each site
+    # blows the expression tree up multiplicatively when calls nest
+    # (base58Decode(base58Encode(x)) went 1.8s -> 17.9s before this)
+    hx = "__b58h"
+    byte = (
+        f"CAST(conv(substring({hx}, __bi * 2 - 1, 2), 16, 10) AS INT)"
+    )
+    inner = (
+        f"aggregate(__st, "
+        f"named_struct('nd', {_NULLABLE_INTS}, 'c', {byte}), "
+        f"(__s2, __d) -> named_struct("
+        f"'nd', concat(__s2.nd, array((__d * 256 + __s2.c) % 58)), "
+        f"'c', CAST((__d * 256 + __s2.c) DIV 58 AS INT)))"
+    )
+    # after multiply-add the residual carry is < 256 -> at most two
+    # more base-58 digits
+    step = (
+        f"element_at(transform(array({inner}), __s3 -> "
+        f"concat(__s3.nd, "
+        f"CASE WHEN __s3.c >= 58 "
+        f"THEN array(__s3.c % 58, CAST(__s3.c DIV 58 AS INT)) "
+        f"WHEN __s3.c > 0 THEN array(__s3.c) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END)), 1)"
+    )
+    fold = (
+        f"aggregate(sequence(1, greatest(length({hx}) DIV 2, 1)), "
+        f"{_NULLABLE_INTS}, "
+        f"(__st, __bi) -> {step}, "
+        f"__st -> array_join(transform(reverse(__st), "
+        f"__d58 -> substring('{_B58}', __d58 + 1, 1)), ''))"
+    )
+    # leading 0x00 bytes render as leading '1's (the Bitcoin rule);
+    # the fold above drops them (value arithmetic), so re-prepend
+    zeros = (
+        f"CAST((length({hx}) - length(regexp_replace({hx}, '^(00)+', "
+        f"''))) DIV 2 AS INT)"
+    )
+    body = (
+        f"CASE WHEN length({hx}) = 0 THEN '' ELSE "
+        f"concat(repeat('1', {zeros}), "
+        f"CASE WHEN regexp_replace({hx}, '^(00)+', '') = '' THEN '' "
+        f"ELSE {fold} END) END"
+    )
+    return (
+        f"element_at(transform(array(lower(hex(CAST(({args[0]}) "
+        f"AS BINARY)))), __b58h -> {body}), 1)"
+    )
+
+
+def _base58_decode_make(args):
+    if len(args) != 1:
+        return None
+    s = "__b58s"  # let-bound once below (the encode-side note)
+    digit = (
+        f"CAST(instr('{_B58}', substring({s}, __ci, 1)) - 1 AS INT)"
+    )
+    inner = (
+        f"aggregate(__st, "
+        f"named_struct('nb', {_NULLABLE_INTS}, 'c', {digit}), "
+        f"(__s2, __b) -> named_struct("
+        f"'nb', concat(__s2.nb, array((__b * 58 + __s2.c) % 256)), "
+        f"'c', CAST((__b * 58 + __s2.c) DIV 256 AS INT)))"
+    )
+    step = (
+        f"element_at(transform(array({inner}), __s3 -> "
+        f"concat(__s3.nb, "
+        f"CASE WHEN __s3.c > 0 THEN array(__s3.c) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END)), 1)"
+    )
+    hexout = (
+        f"aggregate(sequence(1, greatest(length({s}), 1)), "
+        f"{_NULLABLE_INTS}, "
+        f"(__st, __ci) -> {step}, "
+        f"__st -> array_join(transform(reverse(__st), "
+        f"__b2 -> lpad(lower(hex(__b2)), 2, '0')), ''))"
+    )
+    ones = (
+        f"(length({s}) - length(regexp_replace({s}, '^1+', '')))"
+    )
+    # invalid alphabet chars -> NULL (CH throws; NULL is this
+    # engine's OrNull-style analog, matching try_-family behavior)
+    body = (
+        f"CASE WHEN {s} rlike '^[1-9A-HJ-NP-Za-km-z]*$' THEN "
+        f"unhex(concat(repeat('00', {ones}), "
+        f"CASE WHEN regexp_replace({s}, '^1+', '') = '' THEN '' "
+        f"ELSE {hexout} END)) END"
+    )
+    return (
+        f"element_at(transform(array({args[0]}), __b58s -> {body}), 1)"
+    )
+
+
+def _dec_arith_make(op):
+    def make(args):
+        if len(args) == 2:
+            s = "10"
+        elif len(args) == 3 and re.fullmatch(r"\d+", args[2].strip()):
+            s = args[2].strip()
+        else:
+            return None
+        return (
+            f"CAST(CAST({args[0]} AS DECIMAL(38, 10)) {op} "
+            f"CAST({args[1]} AS DECIMAL(38, 10)) AS DECIMAL(38, {s}))"
+        )
+
+    return make
+
+
+def _readable_dec_make(args):
+    if len(args) != 1:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    idx = f"least(floor(log(1000, greatest(abs({x}), 1))), 8)"
+    return (
+        f"format_string('%.2f %s', {x} / pow(1000, {idx}), "
+        f"element_at(array('B', 'KB', 'MB', 'GB', 'TB', 'PB', "
+        f"'EB', 'ZB', 'YB'), CAST({idx} AS INT) + 1))"
+    )
+
+
+def _sum_arg_make(better: str):
+    def make(args):
+        if len(args) != 2:
+            return None
+        x, a = args
+        return (
+            f"aggregate(collect_list(struct(CAST({x} AS DOUBLE) AS v, "
+            f"CAST({a} AS DOUBLE) AS a)), "
+            f"named_struct('m', CAST(NULL AS DOUBLE), 's', 0.0D), "
+            f"(__ac, __q) -> CASE "
+            f"WHEN __ac.m IS NULL OR __q.a {better} __ac.m "
+            f"THEN named_struct('m', __q.a, 's', __q.v) "
+            f"WHEN __q.a = __ac.m "
+            f"THEN named_struct('m', __ac.m, 's', __ac.s + __q.v) "
+            f"ELSE __ac END, "
+            f"__ac -> __ac.s)"
+        )
+
+    return make
+
+
+# -ForEach: padded element-wise folds over collected arrays
+def _foreach_make(op):
+    def make(args):
+        if len(args) != 1:
+            return None
+        v = args[0]
+        pad_a = "concat(__ac, array_repeat(__init, greatest(size(__x) - size(__ac), 0)))"
+        pad_x = "concat(__x, array_repeat(__init, greatest(size(__ac) - size(__x), 0)))"
+        if op == "sum":
+            init, comb = "0.0D", "__p + __q"
+        elif op == "min":
+            init, comb = (
+                "double('Infinity')", "least(__p, __q)"
+            )
+        elif op == "max":
+            init, comb = (
+                "double('-Infinity')", "greatest(__p, __q)"
+            )
+        else:  # avg: fold (sum, count) pairs, divide at finish
+            pairs = (
                 f"aggregate(collect_list(transform({v}, "
                 f"__e -> CAST(__e AS DOUBLE))), "
-                f"CAST(array() AS ARRAY<DOUBLE>), "
-                f"(__ac, __x) -> zip_with({pad_a}, {pad_x}, "
-                f"(__p, __q) -> {comb}))"
+                f"CAST(array() AS ARRAY<STRUCT<s: DOUBLE, c: BIGINT>>), "
+                f"(__ac, __x) -> zip_with("
+                f"concat(__ac, array_repeat(named_struct('s', 0.0D, "
+                f"'c', CAST(0 AS BIGINT)), "
+                f"greatest(size(__x) - size(__ac), 0))), "
+                f"concat(transform(__x, __e -> named_struct('s', __e, "
+                f"'c', CAST(1 AS BIGINT))), "
+                f"array_repeat(named_struct('s', 0.0D, "
+                f"'c', CAST(0 AS BIGINT)), "
+                f"greatest(size(__ac) - size(__x), 0))), "
+                f"(__p, __q) -> named_struct('s', __p.s + __q.s, "
+                f"'c', __p.c + __q.c)), "
+                f"__ac -> transform(__ac, __e -> __e.s / __e.c))"
             )
-            return body.replace("__init", init)
-
-        return make
-
-    chunk = _rewrite_call(chunk, "sumForEach", foreach_make("sum"))
-    chunk = _rewrite_call(chunk, "minForEach", foreach_make("min"))
-    chunk = _rewrite_call(chunk, "maxForEach", foreach_make("max"))
-    chunk = _rewrite_call(chunk, "avgForEach", foreach_make("avg"))
-
-    for nm, agg in (
-        ("sumOrDefault", "sum"), ("avgOrDefault", "avg"),
-        ("minOrDefault", "min"), ("maxOrDefault", "max"),
-    ):
-        def od_make(args, _agg=agg):
-            if len(args) != 1:
-                return None
-            return f"coalesce({_agg}({args[0]}), 0)"
-
-        chunk = _rewrite_call(chunk, nm, od_make)
-
-    # avgState/avgMerge + quantileState (plain calls)
-    chunk = _rewrite_call(
-        chunk,
-        "avgState",
-        lambda a: (
-            f"named_struct('sum', sum(CAST({a[0]} AS DOUBLE)), "
-            f"'cnt', count({a[0]}))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "avgMerge",
-        lambda a: (
-            f"(sum(({a[0]}).sum) / sum(({a[0]}).cnt))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "quantileState",
-        lambda a: (
-            f"collect_list(CAST({a[0]} AS DOUBLE))" if len(a) == 1 else None
-        ),
-    )
-
-    # curried: quantileMerge(p)(state) — interpolated quantile over the
-    # flattened merged value lists (percentile's interpolation rule)
-    qm_pat = re.compile(r"\bquantileMerge\(")
-    m = qm_pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = qm_pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(head) != 1 or len(args) != 1:
-            m = qm_pat.search(chunk, x_end)
-            continue
-        p, s = head[0], args[0]
-        pick = (
-            f"element_at(__l, CAST(floor((({p})) * (size(__l) - 1)) AS INT) "
-            f"+ 1) * (1.0D - ((({p})) * (size(__l) - 1) "
-            f"- floor((({p})) * (size(__l) - 1)))) "
-            f"+ element_at(__l, least(CAST(floor((({p})) * (size(__l) - 1)) "
-            f"AS INT) + 2, size(__l))) * ((({p})) * (size(__l) - 1) "
-            f"- floor((({p})) * (size(__l) - 1)))"
+            return pairs
+        body = (
+            f"aggregate(collect_list(transform({v}, "
+            f"__e -> CAST(__e AS DOUBLE))), "
+            f"CAST(array() AS ARRAY<DOUBLE>), "
+            f"(__ac, __x) -> zip_with({pad_a}, {pad_x}, "
+            f"(__p, __q) -> {comb}))"
         )
-        # IF guard: an all-empty merged state (every per-group value
-        # NULL) has size(__l) = 0, where the pick's element_at index
-        # would be 0 — INVALID_INDEX_OF_ZERO at runtime.  NULL instead
-        # (the groupArrayInsertAt a20117a hazard class).
-        repl = (
-            f"element_at(transform(array(array_sort(flatten("
-            f"collect_list({s})))), __l -> IF(size(__l) = 0, "
-            f"CAST(NULL AS DOUBLE), {pick})), 1)"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = qm_pat.search(chunk, m.start() + len(repl))
+        return body.replace("__init", init)
 
-    # curried: <agg>Resample(start, end, step)(x, key) — literal bounds,
-    # explicit per-bucket CASE aggregates (scale-safe, no collection)
-    rs_pat = re.compile(r"\b(sum|count|avg|min|max)Resample\(")
-    m = rs_pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = rs_pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
+    return make
+
+
+@_curried
+def _quantile_merge_make(params, arg):
+    # quantileMerge(p)(state) — interpolated quantile over the flattened
+    # merged value lists (percentile's interpolation rule)
+    head = _split_top_comma(params)
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(head) != 1 or len(args) != 1:
+        return None
+    p, s = head[0], args[0]
+    pick = (
+        f"element_at(__l, CAST(floor((({p})) * (size(__l) - 1)) AS INT) "
+        f"+ 1) * (1.0D - ((({p})) * (size(__l) - 1) "
+        f"- floor((({p})) * (size(__l) - 1)))) "
+        f"+ element_at(__l, least(CAST(floor((({p})) * (size(__l) - 1)) "
+        f"AS INT) + 2, size(__l))) * ((({p})) * (size(__l) - 1) "
+        f"- floor((({p})) * (size(__l) - 1)))"
+    )
+    # IF guard: an all-empty merged state (every per-group value NULL)
+    # has size(__l) = 0, where the pick's element_at index would be 0 —
+    # INVALID_INDEX_OF_ZERO at runtime.  NULL instead (the
+    # groupArrayInsertAt hazard class).
+    return (
+        f"element_at(transform(array(array_sort(flatten("
+        f"collect_list({s})))), __l -> IF(size(__l) = 0, "
+        f"CAST(NULL AS DOUBLE), {pick})), 1)"
+    )
+
+
+def _resample_make(agg: str):
+    # <agg>Resample(start, end, step)(x, key) — literal bounds, explicit
+    # per-bucket CASE aggregates (scale-safe, no collection)
+    @_curried
+    def make(params, arg):
+        head = _split_top_comma(params)
+        args = _split_top_comma(arg) if arg is not None else []
         num = r"-?\d+(\.\d+)?"
         if (
             len(head) != 3
             or len(args) != 2
             or not all(re.fullmatch(num, h.strip()) for h in head)
         ):
-            m = rs_pat.search(chunk, x_end)
-            continue
+            return None
         start, end, step = (float(h) for h in head)
-        agg = m.group(1)
         if step <= 0 or end <= start:
-            m = rs_pat.search(chunk, x_end)
-            continue
-        import math as _math
-
-        nb = int(_math.ceil((end - start) / step))
+            return None
+        nb = int(math.ceil((end - start) / step))
         if nb > 64:
-            m = rs_pat.search(chunk, x_end)
-            continue
+            return None
         x, key = args
         cells = []
         for b in range(nb):
@@ -6402,229 +4448,1787 @@ def _rewrite_batch24_calls(chunk: str) -> str:
                 cells.append(f"count(CASE WHEN {cond} THEN 1 END)")
             else:
                 cells.append(f"{agg}(CASE WHEN {cond} THEN ({x}) END)")
-        repl = f"array({', '.join(cells)})"
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = rs_pat.search(chunk, m.start() + len(repl))
+        return f"array({', '.join(cells)})"
 
-    # curried: groupArrayInsertAt(def, size)(x, pos) — fixed-size slot
-    # scatter via index-aware transform fold (duplicate positions keep
-    # an arbitrary writer, CH's own contract)
-    gia_pat = re.compile(r"\bgroupArrayInsertAt\(")
-    m = gia_pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = gia_pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(head) != 2 or len(args) != 2:
-            m = gia_pat.search(chunk, x_end)
-            continue
-        dflt, size = head
-        x, pos = args
-        # per-slot lookup over the collected pairs, not an aggregate()
-        # fold: aggregate demands the merge lambda's return type match
-        # the init EXACTLY (a -1.0 default types as DECIMAL and clashes
-        # with DOUBLE values); coalesce coerces default/value freely
-        # try_element_at: an empty slot's filtered list has 0 elements —
-        # strict element_at RAISES there instead of falling through to
-        # the default (fuzz-caught, hazard-values harness)
-        repl = (
-            f"element_at(transform(array(collect_list(struct("
-            f"CAST({pos} AS INT) AS p, ({x}) AS v))), "
-            f"__ps -> transform(sequence(0, CAST({size} AS INT) - 1), "
-            f"__i -> coalesce(try_element_at(transform(filter(__ps, "
-            f"__q -> __q.p = __i), __q -> __q.v), 1), {dflt}))), 1)"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = gia_pat.search(chunk, m.start() + len(repl))
-
-    chunk = _rewrite_call(chunk, "arrayLastIndex", lambda a: (
-        f"(CASE WHEN array_position(reverse(transform({a[1]}, {a[0]})), "
-        f"true) = 0 THEN CAST(0 AS BIGINT) ELSE size({a[1]}) + 1 "
-        f"- array_position(reverse(transform({a[1]}, {a[0]})), true) END)"
-        if len(a) == 2 and "->" in a[0]
-        else None
-    ))
-    return chunk
+    return make
 
 
-def _rewrite_batch23_calls(chunk: str) -> str:
-    """Round-7 batch 23 (second coverage-closure pass):
+@_curried
+def _group_array_insert_at_make(params, arg):
+    # groupArrayInsertAt(def, size)(x, pos) — fixed-size slot scatter via
+    # index-aware transform fold (duplicate positions keep an arbitrary
+    # writer, CH's own contract)
+    head = _split_top_comma(params)
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(head) != 2 or len(args) != 2:
+        return None
+    dflt, size = head
+    x, pos = args
+    # per-slot lookup over the collected pairs, not an aggregate() fold:
+    # aggregate demands the merge lambda's return type match the init
+    # EXACTLY (a -1.0 default types as DECIMAL and clashes with DOUBLE
+    # values); coalesce coerces default/value freely.  try_element_at:
+    # an empty slot's filtered list has 0 elements — strict element_at
+    # RAISES there instead of falling through to the default
+    # (fuzz-caught, hazard-values harness)
+    return (
+        f"element_at(transform(array(collect_list(struct("
+        f"CAST({pos} AS INT) AS p, ({x}) AS v))), "
+        f"__ps -> transform(sequence(0, CAST({size} AS INT) - 1), "
+        f"__i -> coalesce(try_element_at(transform(filter(__ps, "
+        f"__q -> __q.p = __i), __q -> __q.v), 1), {dflt}))), 1)"
+    )
 
-    * ``studentTTest(x, idx)`` / ``welchTTest(x, idx)`` — two-sample t
-      statistics from pure sum aggregates (pooled / Welch variance),
-      the meanZTest convention: the statistic only (CH's tuple carries
-      a p-value needing the t CDF — engine-specific numerics), index
-      0/1 splits samples, scale-safe (no collection).  The rank-based
-      tests (mannWhitneyUTest/kolmogorovSmirnovTest/rankCorr) and the
-      categorical family (cramersV/theilsU/contingency/ANOVA) are
-      engine OPERATORS (relational.py, driver-proven) — a faithful SQL
-      aggregate form needs global ranks/cells no single aggregate
-      expression can compute scale-safely; DIALECT_COVERAGE.md reports
-      them as operator-only.
-    * ``nonNegativeDerivative(m, t) OVER …`` — per-second positive rate
-      via lag over the SAME window (both forms: ``OVER (…)`` and a
-      named window); NULL on the partition's first row (CH), clamped
-      at 0 otherwise.  2-arg form only (the INTERVAL scale factor
-      passes through).
-    * ``mapUpdate(m1, m2)`` — m2 wins on key collisions (entry filter +
-      concat; Spark's map_concat raises on duplicates by default).
-    * ``isNotDistinctFrom`` → ``<=>``; ``multiSearchAllPositions`` /
-      ``multiSearchFirstPosition`` → instr transforms (1-based, 0 =
-      absent, CH's encoding).
-    * ``LpNorm(v, p)`` / ``normalizeL1/L2(v)`` — higher-order folds
-      (the vector arg is referenced twice in normalize*, column-backed
-      caveat).
-    * ``JSONExtractKeysAndValuesRaw(j)`` — (key, raw value) struct
-      array over ``json_object_keys``.
-    * ``toUUIDOrNull`` — format-validated pass/NULL.
-    * ``cutQueryStringAndFragment`` / ``extractURLParameters`` /
-      ``extractURLParameterNames`` — URL-family tails over
-      try_parse_url/regexp.
-    * ``rand32/rand64/randBernoulli/randExponential/randLogNormal`` —
-      engine-random (values never comparable; pytest range checks);
-      randLogNormal uses one Box-Muller draw.
-    * ``groupArraySample(n[, seed])(x)`` — slice of shuffled
-      collect_list (random sample; the uniq stance — the seed is
-      accepted and unused, Spark's shuffle takes none).
-    """
-    for nm, pooled in (("studentTTest", True), ("welchTTest", False)):
-        def ttest_make(args, _pooled=pooled):
-            if len(args) != 2:
-                return None
-            x, idx = args
-            sx = f"CASE WHEN ({idx}) = 0 THEN CAST({x} AS DOUBLE) END"
-            sy = f"CASE WHEN ({idx}) = 1 THEN CAST({x} AS DOUBLE) END"
-            if _pooled:
-                sp2 = (
-                    f"(((count({sx}) - 1) * var_samp({sx}) + "
-                    f"(count({sy}) - 1) * var_samp({sy})) / "
-                    f"(count({sx}) + count({sy}) - 2))"
-                )
-                denom = (
-                    f"sqrt({sp2} * (1.0D / count({sx}) + 1.0D / count({sy})))"
-                )
-            else:
-                denom = (
-                    f"sqrt(var_samp({sx}) / count({sx}) + "
-                    f"var_samp({sy}) / count({sy}))"
-                )
-            return f"((avg({sx}) - avg({sy})) / {denom})"
 
-        chunk = _rewrite_call(chunk, nm, ttest_make)
-
-    # nonNegativeDerivative(m, t) OVER (…) / OVER w — needs the window
-    # text duplicated onto each lag, so it has its own scanner
-    nnd_pat = re.compile(r"\bnonNegativeDerivative\(")
-    m = nnd_pat.search(chunk)
-    while m:
-        a_end = _match_paren(chunk, m.end() - 1)
-        args = _split_top_comma(chunk[m.end() : a_end - 1])
-        tail = chunk[a_end:]
-        ov_m = re.match(r"\s*OVER\s*(\(|\w+)", tail, re.IGNORECASE)
-        if len(args) != 2 or not ov_m:
-            m = nnd_pat.search(chunk, a_end)
-            continue
-        if ov_m.group(1) == "(":
-            ov_end = _match_paren(tail, ov_m.end() - 1)
-            over = tail[: ov_end]
+def _t_test_make(pooled: bool):
+    def make(args):
+        if len(args) != 2:
+            return None
+        x, idx = args
+        sx = f"CASE WHEN ({idx}) = 0 THEN CAST({x} AS DOUBLE) END"
+        sy = f"CASE WHEN ({idx}) = 1 THEN CAST({x} AS DOUBLE) END"
+        if pooled:
+            sp2 = (
+                f"(((count({sx}) - 1) * var_samp({sx}) + "
+                f"(count({sy}) - 1) * var_samp({sy})) / "
+                f"(count({sx}) + count({sy}) - 2))"
+            )
+            denom = (
+                f"sqrt({sp2} * (1.0D / count({sx}) + 1.0D / count({sy})))"
+            )
         else:
-            ov_end = ov_m.end()
-            over = tail[:ov_end]
-        mm, tt = args
-        mv = f"CAST({mm} AS DOUBLE)"
-        tv = f"CAST(unix_timestamp({tt}) AS DOUBLE)"
-        prev_m = f"lag({mv}){over}"
-        prev_t = f"lag({tv}){over}"
-        repl = (
-            f"(CASE WHEN {prev_m} IS NULL THEN CAST(NULL AS DOUBLE) "
-            f"ELSE greatest(0.0D, ({mv} - {prev_m}) / "
-            f"nullif({tv} - {prev_t}, 0.0D)) END)"
+            denom = (
+                f"sqrt(var_samp({sx}) / count({sx}) + "
+                f"var_samp({sy}) / count({sy}))"
+            )
+        return f"((avg({sx}) - avg({sy})) / {denom})"
+
+    return make
+
+
+@_over
+def _non_negative_derivative_make(args, over):
+    # nonNegativeDerivative(m, t) OVER (…) / OVER w — the window text is
+    # duplicated onto each lag
+    if len(args) != 2:
+        return None
+    mm, tt = args
+    mv = f"CAST({mm} AS DOUBLE)"
+    tv = f"CAST(unix_timestamp({tt}) AS DOUBLE)"
+    prev_m = f"lag({mv}){over}"
+    prev_t = f"lag({tv}){over}"
+    return (
+        f"(CASE WHEN {prev_m} IS NULL THEN CAST(NULL AS DOUBLE) "
+        f"ELSE greatest(0.0D, ({mv} - {prev_m}) / "
+        f"nullif({tv} - {prev_t}, 0.0D)) END)"
+    )
+
+
+def _normalize_make(acc: str, l2: bool):
+    def make(args):
+        if len(args) != 1:
+            return None
+        v = args[0]
+        total = f"aggregate({v}, 0.0D, (__a, __y) -> {acc})"
+        if l2:
+            total = f"sqrt({total})"
+        return f"transform({v}, __x -> CAST(__x AS DOUBLE) / {total})"
+
+    return make
+
+
+_UUID_RE = (
+    "^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
+    "-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
+)
+
+
+@_curried
+def _group_array_sample_make(params, arg):
+    # groupArraySample(n[, seed])(x)
+    head = _split_top_comma(params)
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(head) not in (1, 2) or len(args) != 1:
+        return None
+    return (
+        f"slice(shuffle(collect_list({args[0]})), 1, "
+        f"CAST({head[0]} AS INT))"
+    )
+
+
+@_curried
+def _group_array_last_make(params, arg):
+    # groupArrayLast(n)(x)
+    head = _split_top_comma(params)
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(head) != 1 or len(args) != 1:
+        return None
+    n, x = head[0], args[0]
+    return (
+        f"element_at(transform(array(collect_list({x})), "
+        f"__l -> slice(__l, greatest(size(__l) + 1 - ({n}), 1), "
+        f"CAST({n} AS INT))), 1)"
+    )
+
+
+def _json_arr_raw_make(args):
+    if len(args) == 1:
+        j = args[0]
+    elif len(args) == 2:
+        j = f"get_json_object({args[0]}, concat('$.', {args[1]}))"
+    else:
+        return None
+    return (
+        f"(CASE WHEN json_array_length({j}) > 0 THEN "
+        f"transform(sequence(0, json_array_length({j}) - 1), "
+        f"__i -> get_json_object({j}, "
+        f"concat('$[', CAST(__i AS STRING), ']'))) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END)"
+    )
+
+
+def _matrix_make(agg):
+    def make(args):
+        if not args or any(not a.strip() for a in args):
+            return None
+        rows = ", ".join(
+            "array("
+            + ", ".join(f"{agg}({xi}, {xj})" for xj in args)
+            + ")"
+            for xi in args
         )
-        chunk = chunk[: m.start()] + repl + chunk[a_end + ov_end:]
-        m = nnd_pat.search(chunk, m.start() + len(repl))
+        return f"array({rows})"
 
-    chunk = _rewrite_call(
-        chunk,
-        "mapUpdate",
-        lambda a: (
-            f"map_from_entries(concat(filter(map_entries({a[0]}), "
-            f"__e -> NOT map_contains_key({a[1]}, __e.key)), "
-            f"map_entries({a[1]})))"
-            if len(a) == 2
+    return make
+
+
+def _decimal_scale_make(precision, try_only):
+    def make(args):
+        if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
+            return None
+        t = f"try_cast({args[0]} AS DECIMAL({precision}, {args[1].strip()}))"
+        if try_only:
+            return t
+        return (
+            f"coalesce({t}, CAST(0 AS "
+            f"DECIMAL({precision}, {args[1].strip()})))"
+        )
+
+    return make
+
+
+def _map_sort_make(desc):
+    def make(args):
+        if len(args) != 1:
+            return None
+        order = (
+            "(__a, __b) -> CASE WHEN __a.key < __b.key THEN 1 "
+            "WHEN __a.key > __b.key THEN -1 ELSE 0 END"
+            if desc
             else None
-        ),
+        )
+        inner = f"map_entries({args[0]})"
+        sorted_ = (
+            f"array_sort({inner}, {order})" if order else f"array_sort({inner})"
+        )
+        return f"map_from_entries({sorted_})"
+
+    return make
+
+
+def _quantile_if_make(plural: bool):
+    # quantileIf(p)(x, cond) / quantilesIf(...)(x, cond)
+    @_curried
+    def make(params, arg):
+        ps = _split_top_comma(params)
+        args = _split_top_comma(arg) if arg is not None else []
+        if len(args) != 2 or (not plural and len(ps) != 1):
+            return None
+        x, cond = args
+        tgt = f"array({', '.join(ps)})" if plural else ps[0]
+        return f"percentile(CASE WHEN {cond} THEN {x} END, {tgt})"
+
+    return make
+
+
+def _bar_make(args):
+    if len(args) != 4:
+        return None
+    x, lo, hi, w = args
+    frac = (
+        f"(CAST({x} AS DOUBLE) - ({lo})) / "
+        f"nullif(CAST({hi} AS DOUBLE) - ({lo}), 0.0D)"
     )
-    chunk = _rewrite_call(
-        chunk,
-        "isNotDistinctFrom",
-        lambda a: f"(({a[0]}) <=> ({a[1]}))" if len(a) == 2 else None,
+    n = f"least(greatest(CAST(round({frac} * ({w})) AS INT), 0), CAST({w} AS INT))"
+    return f"repeat('█', coalesce({n}, 0))"
+
+
+def _parse_td_make(args):
+    if len(args) != 1:
+        return None
+    s = args[0]
+    pat = r"'([0-9]+(?:\\.[0-9]+)?)\\s*([a-zA-Z]+)'"
+    # numeric and unit capture groups extracted separately (Spark's
+    # regexp_extract_all takes ONE group index), zipped and folded
+    nums = f"regexp_extract_all({s}, {pat}, 1)"
+    units = f"regexp_extract_all({s}, {pat}, 2)"
+    mult = (
+        "CASE WHEN u RLIKE '(?i)^(w|week)' THEN 604800.0D "
+        "WHEN u RLIKE '(?i)^(d|day)' THEN 86400.0D "
+        "WHEN u RLIKE '(?i)^(h|hour|hr)' THEN 3600.0D "
+        "WHEN u RLIKE '(?i)^(ms|milli)' THEN 0.001D "
+        "WHEN u RLIKE '(?i)^(m|min)' THEN 60.0D "
+        "WHEN u RLIKE '(?i)^(s|sec)' THEN 1.0D "
+        "ELSE 0.0D END"
     )
-    chunk = _rewrite_call(
-        chunk,
-        "multiSearchAllPositions",
-        lambda a: (
-            f"transform({a[1]}, __n -> CAST(instr({a[0]}, __n) AS BIGINT))"
-            if len(a) == 2
-            else None
-        ),
+    return (
+        f"aggregate(zip_with({nums}, {units}, "
+        f"(n, u) -> CAST(n AS DOUBLE) * ({mult})), "
+        f"0.0D, (__acc, __v) -> __acc + coalesce(__v, 0.0D))"
     )
-    chunk = _rewrite_call(
-        chunk,
+
+
+def _fmt_td_make(args):
+    if len(args) != 1:
+        return None
+    # let-bind the argument ONCE (the reinterpretAsUInt64 pattern):
+    # the template references it ~20x across the four units, which
+    # multiplied to 134 KB of SQL under 3-deep self-nesting — found
+    # by the self-composition fuzz, the only multiplicative
+    # splicer left among all 238 call rewrites
+    v = "CAST(__ftd AS BIGINT)"
+    units = [
+        (f"CAST({v} / 86400 AS BIGINT)", "day"),
+        (f"CAST(({v} % 86400) / 3600 AS BIGINT)", "hour"),
+        (f"CAST(({v} % 3600) / 60 AS BIGINT)", "minute"),
+        (f"({v} % 60)", "second"),
+    ]
+    parts = ", ".join(
+        f"IF({n} > 0, concat({n}, ' {u}', IF({n} = 1, '', 's')), NULL)"
+        for n, u in units
+    )
+    body = (
+        f"coalesce(nullif(concat_ws(', ', {parts}), ''), '0 seconds')"
+    )
+    return (
+        f"element_at(transform(array({args[0]}), __ftd -> {body}), 1)"
+    )
+
+
+@_curried
+def _exponential_moving_average_make(params, arg):
+    # exponentialMovingAverage(hl)(value, time)
+    hl_args = _split_top_comma(params)
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(hl_args) != 1 or len(args) != 2:
+        return None
+    hl, v, t = hl_args[0], args[0], args[1]
+    # reserved __ac/__ev lambda params: the user hl expression is spliced
+    # INSIDE the fold lambda, so bare a/e would capture a column of that
+    # name (the same capture class as the other folds' __ params)
+    decay = (
+        f"CASE WHEN __ac.tp IS NULL THEN 1.0D "
+        f"ELSE pow(0.5D, (__ev.t - __ac.tp) / CAST({hl} AS DOUBLE)) END"
+    )
+    return (
+        f"aggregate(array_sort(collect_list(struct("
+        f"CAST({t} AS DOUBLE) AS t, CAST({v} AS DOUBLE) AS v))), "
+        f"named_struct('n', 0.0D, 'd', 0.0D, 'tp', CAST(NULL AS DOUBLE)), "
+        f"(__ac, __ev) -> named_struct("
+        f"'n', __ac.n * {decay} + __ev.v, "
+        f"'d', __ac.d * {decay} + 1.0D, "
+        f"'tp', __ev.t), "
+        f"__ac -> CASE WHEN __ac.d = 0.0D THEN NULL "
+        f"ELSE __ac.n / __ac.d END)"
+    )
+
+
+def _map_apply_make(args):
+    if len(args) != 2:
+        return None
+    lam, m = args
+    lm = re.match(
+        r"^\s*\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*\)\s*->\s*\((.*)\)\s*$",
+        lam,
+        re.DOTALL,
+    )
+    if not lm:
+        return None
+    kname, vname, body = lm.groups()
+    # shadowing guard: the param substitution below is textual, so a
+    # nested lambda inside the body DECLARING the same name would be
+    # captured (the fuzz-caught arrayProduct `v` case — generated
+    # lambdas now use __-reserved params, but user-written nested
+    # lambdas can still collide).  Pass through on collision rather
+    # than corrupt silently.
+    nested = set()
+    for pm in re.finditer(r"\(([\w\s,]+)\)\s*->|\b(\w+)\s*->", body):
+        grp = pm.group(1) or pm.group(2)
+        nested |= {p.strip() for p in grp.split(",")}
+    if nested & {kname, vname}:
+        return None
+    parts = _split_top_comma(body)
+    if len(parts) != 2:
+        return None
+    ke, ve = parts
+    for src, dst in ((kname, "__me.key"), (vname, "__me.value")):
+        ke = re.sub(rf"\b{src}\b", dst, ke)
+        ve = re.sub(rf"\b{src}\b", dst, ve)
+    return (
+        f"map_from_entries(transform(map_entries({m}), "
+        f"__me -> struct({ke} AS key, {ve} AS value)))"
+    )
+
+
+def _json_type_make(args):
+    if len(args) != 1:
+        return None
+    j = args[0]
+    head = f"left(ltrim({j}), 1)"
+    # head sentinels via chr(): a bare '[' / '{' literal spliced into
+    # the chunk breaks the bracket-depth tracking of every LATER
+    # rewrite that arg-splits an expression containing this one
+    # (found by the execution fuzz: arrayShiftLeft(JSONType(...)))
+    return (
+        f"(CASE WHEN try_parse_json({j}) IS NULL THEN NULL "
+        f"WHEN {head} = chr(123) THEN 'Object' "
+        f"WHEN {head} = chr(91) THEN 'Array' "
+        f"WHEN {head} = chr(34) THEN 'String' "
+        f"WHEN ltrim(rtrim({j})) IN ('true', 'false') THEN 'Bool' "
+        f"WHEN ltrim(rtrim({j})) = 'null' THEN 'Null' "
+        f"WHEN ltrim(rtrim({j})) RLIKE '[.eE]' THEN 'Double' "
+        f"ELSE 'Int64' END)"
+    )
+
+
+def _case_with_expr_make(args):
+    if len(args) < 3:
+        return None
+    x, rest = args[0], args[1:]
+    pairs, dflt = (
+        (rest, "NULL") if len(rest) % 2 == 0 else (rest[:-1], rest[-1])
+    )
+    whens = " ".join(
+        f"WHEN {pairs[i]} THEN {pairs[i + 1]}"
+        for i in range(0, len(pairs), 2)
+    )
+    return f"(CASE {x} {whens} ELSE {dflt} END)"
+
+
+def _shift_make(left: bool):
+    def make(args):
+        if len(args) not in (2, 3):
+            return None
+        arr, n = args[0], args[1]
+        dflt = args[2] if len(args) == 3 else None
+        sign = "+" if left else "-"
+        idx = f"__i + 1 {sign} ({n})"
+        base = (
+            f"if(({idx}) < 1, NULL, try_element_at({arr}, {idx}))"
+        )
+        if dflt is not None:
+            base = (
+                f"if(({idx}) < 1 OR ({idx}) > size({arr}), {dflt}, "
+                f"try_element_at({arr}, {idx}))"
+            )
+        return f"transform({arr}, (__x, __i) -> {base})"
+
+    return make
+
+
+def _replace_rx_one_make(args):
+    if len(args) != 3:
+        return None
+    h, p, r = args
+    m = f"regexp_extract({h}, {p}, 0)"
+    pos = f"instr({h}, {m})"
+    return (
+        f"(CASE WHEN NOT regexp_like({h}, {p}) OR length({m}) = 0 "
+        f"THEN {h} ELSE concat(left({h}, {pos} - 1), {r}, "
+        f"substr({h}, {pos} + length({m}))) END)"
+    )
+
+
+def _time_slots_make(args):
+    if len(args) not in (2, 3):
+        return None
+    start, dur = args[0], args[1]
+    size = args[2] if len(args) == 3 else "1800"
+    return (
+        f"transform(sequence("
+        f"(unix_timestamp({start}) DIV ({size})) * ({size}), "
+        f"((unix_timestamp({start}) + ({dur})) DIV ({size})) * ({size}), "
+        f"({size})), __s -> to_timestamp(__s))"
+    )
+
+
+def _throw_if_make(args):
+    if len(args) == 1:
+        return f"(CASE WHEN assert_true(NOT ({args[0]})) IS NULL THEN 0 END)"
+    if len(args) == 2:
+        return (
+            f"(CASE WHEN assert_true(NOT ({args[0]}), {args[1]}) "
+            f"IS NULL THEN 0 END)"
+        )
+    return None
+
+
+def _week_expr(d: str) -> str:
+    return (
+        f"CAST(floor((dayofyear({d}) - 1 - pmod(8 - "
+        f"dayofweek(trunc({d}, 'year')), 7)) / 7.0) + 1 AS INT)"
+    )
+
+
+def _to_week_make(args):
+    if len(args) == 1:
+        return _week_expr(args[0])
+    if len(args) == 2:
+        mode = args[1].strip()
+        if mode == "0":
+            return _week_expr(args[0])
+        if mode == "3":
+            return f"weekofyear({args[0]})"
+    return None
+
+
+def _to_yearweek_make(args):
+    # toYearWeek mode 0 (MySQL YEARWEEK): year*100 + week, where a
+    # week-0 date belongs to the PREVIOUS year's numbering — its week
+    # = Sunday-start week count from the previous year's first Sunday
+    # (verified: 2016-01-01 → 201552, 2017-01-01 → 201701).  Mode 3 =
+    # ISO → yearofweek*100 + weekofyear.
+    if len(args) not in (1, 2):
+        return None
+    d = args[0]
+    if len(args) == 2 and args[1].strip() == "3":
+        return (
+            f"(extract(YEAROFWEEK FROM {d}) * 100 + weekofyear({d}))"
+        )
+    if len(args) == 2 and args[1].strip() != "0":
+        return None
+    pj = f"make_date(year({d}) - 1, 1, 1)"
+    prev_first_sun = f"date_add({pj}, pmod(8 - dayofweek({pj}), 7))"
+    prev_week = (
+        f"CAST(floor(datediff({d}, {prev_first_sun}) / 7.0) + 1 AS INT)"
+    )
+    return (
+        f"(CASE WHEN {_week_expr(d)} > 0 "
+        f"THEN year({d}) * 100 + {_week_expr(d)} "
+        f"ELSE (year({d}) - 1) * 100 + {prev_week} END)"
+    )
+
+
+def _ngram_distance_make(args):
+    if len(args) != 2:
+        return None
+    a, b = _ngram_set(args[0]), _ngram_set(args[1])
+    return (
+        f"(CASE WHEN size({a}) + size({b}) = 0 THEN 0.0D ELSE "
+        f"1.0D - 2.0D * size(array_intersect({a}, {b})) "
+        f"/ (size({a}) + size({b})) END)"
+    )
+
+
+def _ngram_search_make(args):
+    if len(args) != 2:
+        return None
+    h, n = _ngram_set(args[0]), _ngram_set(args[1])
+    return (
+        f"(CASE WHEN size({n}) = 0 THEN 1.0D ELSE "
+        f"CAST(size(array_intersect({n}, {h})) AS DOUBLE) "
+        f"/ size({n}) END)"
+    )
+
+
+def _string_jaccard_make(args):
+    if len(args) != 2:
+        return None
+    a, b = args
+    u = f"array_union(split({a}, ''), split({b}, ''))"
+    i = f"array_intersect(split({a}, ''), split({b}, ''))"
+    return (
+        f"(CASE WHEN size({u}) = 0 THEN CAST(1 AS DOUBLE) "
+        f"ELSE CAST(size({i}) AS DOUBLE) / size({u}) END)"
+    )
+
+
+def _fill_make(reverse):
+    def make(args):
+        if len(args) != 2 or "->" not in args[0]:
+            return None
+        f, a = args
+        if reverse:
+            # no later match -> the LAST element's original value
+            # propagates left (a[n] is never replaced)
+            idx = (
+                "coalesce(array_min(filter(sequence(__i, size(__s.a)), "
+                "__j -> element_at(__s.m, __j))), size(__s.a))"
+            )
+        else:
+            # no earlier match -> the FIRST element's original value
+            # propagates right (a[1] is never replaced)
+            idx = (
+                "coalesce(array_max(filter(sequence(1, __i), "
+                "__j -> element_at(__s.m, __j))), 1)"
+            )
+        return (
+            f"(CASE WHEN size({a}) = 0 THEN {a} ELSE "
+            f"element_at(transform(array(named_struct("
+            f"'a', {a}, 'm', transform({a}, {f}))), __s -> "
+            f"transform(sequence(1, size(__s.a)), __i -> "
+            f"element_at(__s.a, {idx}))), 1) END)"
+        )
+
+    return make
+
+
+def _split_make(reverse):
+    def make(args):
+        if len(args) != 2 or "->" not in args[0]:
+            return None
+        f, a = args
+        if reverse:
+            # cut AFTER matches: group starts at 1 and right after
+            # every index whose predicate held
+            bnd = (
+                "filter(sequence(1, size(__s.a)), __i -> __i = 1 "
+                "OR element_at(__s.m, __i - 1))"
+            )
+        else:
+            # cut BEFORE matches (the first element always starts
+            # a group)
+            bnd = (
+                "filter(sequence(1, size(__s.a)), __i -> __i = 1 "
+                "OR element_at(__s.m, __i))"
+            )
+        return (
+            f"(CASE WHEN size({a}) = 0 THEN slice(array({a}), 1, 0) "
+            f"ELSE element_at(transform(array(named_struct("
+            f"'a', {a}, 'm', transform({a}, {f}))), __s -> "
+            f"element_at(transform(array({bnd}), __b -> "
+            f"transform(sequence(1, size(__b)), __i -> "
+            f"slice(__s.a, element_at(__b, __i), "
+            f"coalesce(try_element_at(__b, __i + 1), size(__s.a) + 1) "
+            f"- element_at(__b, __i)))), 1)), 1) END)"
+        )
+
+    return make
+
+
+def _url_hierarchy_make(path_only):
+    def make(args):
+        if len(args) != 1:
+            return None
+        (u,) = args
+        prefix = (
+            "''" if path_only
+            else f"regexp_extract({u}, '^([a-z]+://[^/?#]*)', 1)"
+        )
+        body = (
+            f"element_at(transform(array(named_struct("
+            f"'p', {prefix}, "
+            f"'r', regexp_replace({u}, '^[a-z]+://[^/?#]*', ''))), "
+            f"__s -> CASE WHEN __s.r = '' THEN array(__s.p) ELSE "
+            f"element_at(transform(array(filter("
+            f"split(__s.r, '(?<=[/?])'), __p -> __p != '')), __t -> "
+            f"transform(sequence(1, size(__t)), __i -> "
+            f"concat(__s.p, array_join(slice(__t, 1, __i), '')))), 1) "
+            f"END), 1)"
+        )
+        if path_only:
+            # CH URLPathHierarchy omits the bare '/' root entry
+            return f"filter({body}, __u -> __u != '/')"
+        return body
+
+    return make
+
+
+def _point_in_polygon_make(args):
+    # pointInPolygon((px, py), [(x1, y1), …]) — even-odd ray casting,
+    # UNROLLED per edge (the polygon is a LITERAL vertex list in CH
+    # queries; a polygon column passes through untranslated).  Each
+    # edge term: the edge straddles py vertically AND the rightward
+    # ray from (px, py) crosses it — try_divide keeps horizontal
+    # edges NULL-safe under ANSI (false AND NULL = false).  Boundary
+    # points follow the strict >/< convention.  px/py are spliced
+    # per edge (column-backed caveat).  Returns UInt8-style 0/1.
+    if len(args) != 2:
+        return None
+    pt = args[0].strip()
+    poly = args[1].strip()
+    if not (pt.startswith("(") and pt.endswith(")")):
+        return None
+    if not (poly.startswith("array(") and poly.endswith(")")):
+        return None
+    pxy = _split_top_comma(pt[1:-1])
+    verts = []
+    for v in _split_top_comma(poly[len("array(") : -1]):
+        v = v.strip()
+        if not (v.startswith("(") and v.endswith(")")):
+            return None
+        xy = _split_top_comma(v[1:-1])
+        if len(xy) != 2:
+            return None
+        verts.append((xy[0], xy[1]))
+    if len(pxy) != 2 or len(verts) < 3:
+        return None
+    px, py = pxy
+    terms = []
+    for i, (xi, yi) in enumerate(verts):
+        xj, yj = verts[(i + 1) % len(verts)]
+        cross = (
+            f"((CAST(({yi}) AS DOUBLE) > ({py})) != "
+            f"(CAST(({yj}) AS DOUBLE) > ({py}))) AND "
+            f"(({px}) < try_divide((CAST(({xj}) AS DOUBLE) - ({xi})) "
+            f"* (({py}) - ({yi})), (CAST(({yj}) AS DOUBLE) - ({yi}))) "
+            f"+ ({xi}))"
+        )
+        terms.append(f"CAST(coalesce({cross}, false) AS INT)")
+    return f"(({' + '.join(terms)}) % 2)"
+
+
+def _geohash_encode_make(args):
+    # geohashEncode(lon, lat[, precision]) — textbook interval-halving
+    # geohash, computed CLOSED-FORM: the lon/lat bit streams are the
+    # binary expansions of floor((coord+offset)/range · 2^nbits), and
+    # each base32 character extracts its 5 interleaved bits with
+    # shifts (lon stream first).  The bit streams bind once via the
+    # single-element transform; precision must be an integer literal
+    # (CH's own call shape; default 12 → 30+30 bits, well under 2^53
+    # double precision).  Coordinates clamp to the valid range.
+    if len(args) == 2:
+        p = 12
+    elif len(args) == 3:
+        try:
+            p = int(args[2].strip())
+        except ValueError:
+            return None
+        if not 1 <= p <= 12:
+            return None
+    else:
+        return None
+    # CAST to DOUBLE: Spark parses 166.25 as a DECIMAL literal, and
+    # decimal division rounds at a fixed scale — floor() then lands
+    # in the wrong cell for coordinates near a bit boundary
+    lon = f"CAST(({args[0]}) AS DOUBLE)"
+    lat = f"CAST(({args[1]}) AS DOUBLE)"
+    n = 5 * p
+    nlon, nlat = (n + 1) // 2, n // 2
+    chars = []
+    for c in range(p):
+        terms = []
+        for j in range(5):
+            i = 5 * c + j
+            if i % 2 == 0:
+                bit = f"(shiftright(__g.lo, {nlon - 1 - i // 2}) & 1)"
+            else:
+                bit = (
+                    f"(shiftright(__g.la, {nlat - 1 - (i - 1) // 2})"
+                    f" & 1)"
+                )
+            terms.append(f"{bit} * {1 << (4 - j)}")
+        chars.append(
+            f"substr('{_GEO_ALPHA32}', "
+            f"CAST({' + '.join(terms)} AS INT) + 1, 1)"
+        )
+    return (
+        f"element_at(transform(array(named_struct("
+        f"'lo', least(greatest(CAST(floor((({lon}) + 180.0) / 360.0 "
+        f"* {1 << nlon}) AS BIGINT), 0), {(1 << nlon) - 1}), "
+        f"'la', least(greatest(CAST(floor((({lat}) + 90.0) / 180.0 "
+        f"* {1 << nlat}) AS BIGINT), 0), {(1 << nlat) - 1}))), "
+        f"__g -> concat({', '.join(chars)})), 1)"
+    )
+
+
+def _geohash_decode_make(args):
+    # geohashDecode(s) → tuple (longitude, latitude) of the CELL
+    # CENTER — one aggregate fold over the characters rebuilding the
+    # two bit streams (state: lon bits, lat bits, stream parity; each
+    # 5-bit group splits 3/2 or 2/3 by the parity it starts on).
+    # Positional tuple fields col1/col2, like the tuple() rewrite.
+    if len(args) != 1:
+        return None
+    (s,) = args
+    v = f"(instr('{_GEO_ALPHA32}', __c) - 1)"
+    b = lambda k: f"(shiftright({v}, {k}) & 1)"  # noqa: E731
+    even = (
+        f"named_struct('lo', __s.lo * 8 + {b(4)} * 4 + {b(2)} * 2 "
+        f"+ {b(0)}, 'la', __s.la * 4 + {b(3)} * 2 + {b(1)}, 'p', 1)"
+    )
+    odd = (
+        f"named_struct('lo', __s.lo * 4 + {b(3)} * 2 + {b(1)}, "
+        f"'la', __s.la * 8 + {b(4)} * 4 + {b(2)} * 2 + {b(0)}, 'p', 0)"
+    )
+    fold = (
+        f"aggregate(split({s}, ''), named_struct("
+        f"'lo', CAST(0 AS BIGINT), 'la', CAST(0 AS BIGINT), 'p', 0), "
+        f"(__s, __c) -> CASE WHEN __s.p = 0 THEN {even} "
+        f"ELSE {odd} END)"
+    )
+    nlon = f"CAST((5 * length({s}) + 1) DIV 2 AS INT)"
+    nlat = f"CAST((5 * length({s})) DIV 2 AS INT)"
+    return (
+        f"element_at(transform(array({fold}), __f -> named_struct("
+        f"'col1', -180.0 + 360.0 * (CAST(__f.lo AS DOUBLE) + 0.5) "
+        f"/ power(2, {nlon}), "
+        f"'col2', -90.0 + 180.0 * (CAST(__f.la AS DOUBLE) + 0.5) "
+        f"/ power(2, {nlat}))), 1)"
+    )
+
+
+def _map_agg_make(combine, init):
+    # sumMap/minMap/maxMap(k, v) over per-row parallel ARRAYS (the
+    # SummingMergeTree/AggregatingMergeTree metric-map idiom): a
+    # tuple of (key-sorted distinct keys, per-key combined values).
+    # The flattened pair list binds once, the sorted key list binds
+    # once more (nested single-element transforms); the per-key
+    # combine is O(d·n) per group — the same exact-with-caveat
+    # stance as topK; relational.map_aggregate is the scale path.
+    # Values accumulate in DOUBLE (the arraySum stance).
+    def make(args):
+        if len(args) != 2:
+            return None
+        k, v = args
+        pairs = (
+            f"flatten(collect_list(zip_with({k}, {v}, "
+            f"(__k, __v) -> struct(__k AS k, "
+            f"CAST(__v AS DOUBLE) AS v))))"
+        )
+        per_key = (
+            f"aggregate(filter(__p, __q -> __q.k = __k), "
+            f"CAST({init} AS DOUBLE), (__a, __q) -> {combine})"
+        )
+        return (
+            f"element_at(transform(array({pairs}), __p -> "
+            f"element_at(transform(array(array_sort(array_distinct("
+            f"transform(__p, __e -> __e.k)))), __ks -> named_struct("
+            f"'col1', __ks, "
+            f"'col2', transform(__ks, __k -> {per_key}))), 1)), 1)"
+        )
+
+    return make
+
+
+@_curried
+def _sum_map_filtered_make(keys, arg):
+    # sumMapFiltered([keys])(k, v) — keep only pairs whose key is in the
+    # literal list, then delegate to the sumMap row that follows
+    args = _split_top_comma(arg) if arg is not None else []
+    if len(args) != 2:
+        return None
+    k, v = args
+    zipped = (
+        f"filter(zip_with({k}, {v}, (__fk, __fv) -> "
+        f"struct(__fk AS k, __fv AS v)), "
+        f"__fp -> array_contains({keys}, __fp.k))"
+    )
+    return (
+        f"sumMap(transform({zipped}, __fp -> __fp.k), "
+        f"transform({zipped}, __fp -> __fp.v))"
+    )
+
+
+def _entropy_make(args):
+    # entropy(x): Shannon entropy (log2) of the group's value
+    # distribution — exact over the collected group, O(d·n) like
+    # topK; relational.value_entropy is the shuffle-based scale path.
+    if len(args) != 1:
+        return None
+    (x,) = args
+    cnt = "size(filter(__l, __e -> __e <=> __v))"
+    return (
+        f"element_at(transform(array(collect_list({x})), __l -> "
+        f"aggregate(array_distinct(__l), CAST(0 AS DOUBLE), "
+        f"(__a, __v) -> __a - (CAST({cnt} AS DOUBLE) / size(__l)) "
+        f"* log2(CAST({cnt} AS DOUBLE) / size(__l)))), 1)"
+    )
+
+
+def _gcd_lcm_make(is_lcm):
+    # Euclid as a bounded aggregate fold — 96 iterations covers the
+    # worst case for 64-bit inputs (consecutive Fibonacci numbers
+    # need ~90 steps); converged state is a fixpoint, so extra
+    # iterations are no-ops.  gcd(0, 0) = 0, like CH.  Both args
+    # spliced twice (column-backed caveat); lcm divides BEFORE
+    # multiplying to keep intermediate products in range.
+    def make(args):
+        if len(args) != 2:
+            return None
+        a, b = args
+        g = (
+            f"(aggregate(sequence(1, 96), named_struct("
+            f"'a', CAST(abs({a}) AS BIGINT), "
+            f"'b', CAST(abs({b}) AS BIGINT)), "
+            f"(__s, __i) -> IF(__s.b = 0, __s, named_struct("
+            f"'a', __s.b, 'b', __s.a % __s.b)))).a"
+        )
+        if not is_lcm:
+            return g
+        return (
+            f"(CASE WHEN ({a}) = 0 OR ({b}) = 0 THEN CAST(0 AS BIGINT) "
+            f"ELSE (CAST(abs({a}) AS BIGINT) DIV {g}) "
+            f"* CAST(abs({b}) AS BIGINT) END)"
+        )
+
+    return make
+
+
+def _qsf_make(args):
+    # queryStringAndFragment(url): 'query#fragment' — empty string
+    # when neither part exists (CH's convention)
+    if len(args) != 1:
+        return None
+    (u,) = args
+    q = f"try_parse_url({u}, 'QUERY')"
+    r = f"try_parse_url({u}, 'REF')"
+    return (
+        f"concat(coalesce({q}, ''), CASE WHEN {r} IS NOT NULL "
+        f"THEN concat('#', {r}) ELSE '' END)"
+    )
+
+
+def _num_to_str(args):
+    if len(args) != 1:
+        return None
+    a = f"CAST({args[0]} AS BIGINT)"
+    return (
+        f"concat(CAST(({a} DIV 16777216) % 256 AS STRING), '.', "
+        f"CAST(({a} DIV 65536) % 256 AS STRING), '.', "
+        f"CAST(({a} DIV 256) % 256 AS STRING), '.', "
+        f"CAST({a} % 256 AS STRING))"
+    )
+
+
+def _cidr_to_range(args):
+    # IPv4CIDRToRange(ip, prefix) → CH's (lo, hi) tuple as the
+    # positional struct; emits IPv4NumToString(...) text that the
+    # rewrites below then translate (CH IPv4 values render dotted)
+    if len(args) != 2:
+        return None
+    ip = f"CAST({args[0]} AS BIGINT)"
+    span = f"shiftleft(CAST(1 AS BIGINT), 32 - ({args[1]}))"
+    lo = f"(({ip} DIV {span}) * {span})"
+    return (
+        f"named_struct('col1', IPv4NumToString({lo}), "
+        f"'col2', IPv4NumToString({lo} + {span} - 1))"
+    )
+
+
+# validity predicates — pure regexp, no UDF.  isIPv4String rejects
+# leading zeros (matching CH's strict parser); isIPv6String covers
+# full and ::-compressed hex forms (not IPv4-mapped ones — CH accepts
+# those too; port by hand if needed)
+
+_H = "[0-9A-Fa-f]{1,4}"
+
+_IP6 = (
+    f"^(({_H}:){{7}}{_H}|({_H}:){{1,7}}:|({_H}:){{1,6}}:{_H}"
+    f"|({_H}:){{1,5}}(:{_H}){{1,2}}|({_H}:){{1,4}}(:{_H}){{1,3}}"
+    f"|({_H}:){{1,3}}(:{_H}){{1,4}}|({_H}:){{1,2}}(:{_H}){{1,5}}"
+    f"|{_H}:(:{_H}){{1,6}}|:((:{_H}){{1,7}}|:))$"
+)
+
+
+def _numbers_make(args):
+    if len(args) == 1:
+        return f"(SELECT id AS number FROM range({args[0]}))"
+    if len(args) == 2:
+        return (
+            f"(SELECT id AS number FROM range({args[0]}, "
+            f"({args[0]}) + ({args[1]})))"
+        )
+    return None
+
+
+_CALLS = _table([
+    # ------------------------------------------------------------------
+    # ClickHouse ``JSONExtract*(json, 'key')`` / ``visitParam*`` →
+    # ``get_json_object(json, '$.key')`` with the result cast per the name's
+    # declared type.  Key arguments are literal masks at this stage
+    # (\x00N\x00), so the '$.' prefix is applied via concat at SQL level —
+    # get_json_object accepts any string expression as the path.
+    ("JSONExtractString", _json_extract_make(None)),
+    ("JSONExtractInt", _json_extract_make("BIGINT")),
+    # the UInt names share the BIGINT lane (CH clamps negatives to 0 there;
+    # house stance keeps the parsed value — fixture JSON carries
+    # non-negative values)
+    ("JSONExtractUInt", _json_extract_make("BIGINT")),
+    ("JSONExtractFloat", _json_extract_make("DOUBLE")),
+    ("JSONExtractBool", _json_extract_make("BOOLEAN")),
+    ("JSONExtractRaw", _json_extract_make(None)),
+    ("visitParamExtractString", _json_extract_make(None)),
+    ("visitParamExtractInt", _json_extract_make("BIGINT")),
+    ("visitParamExtractUInt", _json_extract_make("BIGINT")),
+    ("visitParamExtractFloat", _json_extract_make("DOUBLE")),
+    ("visitParamExtractBool", _json_extract_make("BOOLEAN")),
+    # simpleJSONExtract* is the current ClickHouse name for visitParam*
+    ("simpleJSONExtractString", _json_extract_make(None)),
+    ("simpleJSONExtractInt", _json_extract_make("BIGINT")),
+    ("simpleJSONExtractUInt", _json_extract_make("BIGINT")),
+    ("simpleJSONExtractFloat", _json_extract_make("DOUBLE")),
+    ("simpleJSONExtractBool", _json_extract_make("BOOLEAN")),
+    ("simpleJSONExtractRaw", _json_extract_make(None)),
+    # JSONHas(json, 'key') → path lookup IS NOT NULL
+    ("JSONHas", (2, "(get_json_object({0}, concat('$.', {1})) IS NOT NULL)")),
+    # ------------------------------------------------------------------
+    # ClickHouse type names inside explicit casts → Spark types:
+    # ``CAST(x AS Float64)`` (the postfix ``x::Float64`` form is
+    # _rewrite_cast_types; only whitelisted CH spellings rewrite, so
+    # Spark-native types and aliases pass through).
+    ("CAST", _cast_make),
+    ("cast", _cast_make),
+    ("Cast", _cast_make),
+    # ------------------------------------------------------------------
+    # Map arithmetic, moving/delta aggregates, rounding helpers, and AUC:
+    #
+    # * ``mapAdd/mapSubtract(m1, m2)`` → ``map_zip_with`` with coalesced
+    #   cell math (key union, missing = 0 — CH Map-form semantics)
+    # * ``mapPopulateSeries(m)`` → dense integer key range via ``sequence``
+    # * ``groupArrayMovingSum(x)`` → ``arrayCumSum(collect_list(x))`` (CH's
+    #   default window = total row count ⇒ prefix sums); ``…MovingAvg``
+    #   divides by that window size.  Encounter-order caveat as groupArray.
+    # * ``deltaSum(x)`` → positive consecutive differences summed (DOUBLE)
+    # * ``bitHammingDistance(a, b)`` → ``bit_count(a ^ b)``
+    # * ``intExp2/intExp10`` → integer powers (intExp10 exact to 1e15)
+    # * ``roundToExp2 / roundDown / roundAge / roundDuration`` → CH's
+    #   bucket-floor family (fixed ladders from FunctionRoundAge/Duration)
+    # * ``replaceOne(h, n, r)`` → first-occurrence splice via ``instr``
+    # * ``arrayAUC(scores, labels)`` → rank-sum AUC (Mann-Whitney); exact
+    #   when scores are distinct (CH tie-averages via its ROC trapezoid)
+    #
+    # The ``arrayCumSum``/``arrayDifference`` text these rows emit is
+    # rewritten by the rows of those names further down.  Multi-reference
+    # templates carry the intDiv caveat (column-backed arguments only).
+    (
+        "mapAdd",
+        (2, "map_zip_with({0}, {1}, (__k, __a, __b) -> coalesce(__a, "
+            "0) + coalesce(__b, 0))"),
+    ),
+    (
+        "mapSubtract",
+        (2, "map_zip_with({0}, {1}, (__k, __a, __b) -> coalesce(__a, "
+            "0) - coalesce(__b, 0))"),
+    ),
+    (
+        "mapPopulateSeries",
+        (1, "map_from_arrays(sequence(array_min(map_keys({0})), "
+            "array_max(map_keys({0}))), "
+            "transform(sequence(array_min(map_keys({0})), "
+            "array_max(map_keys({0}))), __k -> coalesce(element_at({0}, "
+            "__k), 0)))"),
+    ),
+    ("groupArrayMovingSum", (1, "arrayCumSum(collect_list({0}))")),
+    # nullif guard: collect_list skips NULLs, so an all-NULL group
+    # yields an empty list — size 0 would ANSI-divide-by-zero
+    (
+        "groupArrayMovingAvg",
+        (1, "transform(arrayCumSum(collect_list({0})), "
+            "__s -> __s / CAST(nullif(size(collect_list({0})), "
+            "0) AS DOUBLE))"),
+    ),
+    (
+        "deltaSum",
+        (1, "aggregate(filter(arrayDifference(collect_list({0})), "
+            "__v -> __v > 0), CAST(0 AS DOUBLE), (__a, __v) -> __a + __v)"),
+    ),
+    ("bitHammingDistance", (2, "bit_count(({0}) ^ ({1}))")),
+    ("intExp2", (1, "shiftleft(CAST(1 AS BIGINT), {0})")),
+    # exact through 10^15; CH goes to 10^18 (documented narrowing)
+    ("intExp10", (1, "CAST(round(power(10, {0})) AS BIGINT)")),
+    # exact integer bit math (highest set bit via bin() length), not
+    # power(2, floor(log2(x))) — log2 of exact powers of two can land an
+    # ULP low and floor() then drops a whole bucket
+    (
+        "roundToExp2",
+        (1, "(CASE WHEN ({0}) < 1 THEN 0 ELSE shiftleft(CAST(1 AS BIGINT), "
+            "length(bin(CAST(floor({0}) AS BIGINT))) - 1) END)"),
+    ),
+    (
+        "roundDown",
+        (2, "coalesce(array_max(filter({1}, __e -> __e <= ({0}))), "
+            "element_at({1}, 1))"),
+    ),
+    (
+        "roundAge",
+        (1, "(CASE WHEN ({0}) < 1 THEN 0 WHEN ({0}) <= 17 THEN 17 WHEN "
+            "({0}) <= 24 THEN 18 WHEN ({0}) <= 34 THEN 25 WHEN ({0}) <= 44 "
+            "THEN 35 WHEN ({0}) <= 54 THEN 45 ELSE 55 END)"),
+    ),
+    (
+        "roundDuration",
+        (1, "(CASE WHEN ({0}) < 1 THEN 0 ELSE array_max(filter(array(1, "
+            "10, 30, 60, 120, 180, 240, 300, 600, 1200, 1800, 3600, 7200, "
+            "18000, 36000), __e -> __e <= ({0}))) END)"),
+    ),
+    ("replaceOne", _replace_one_make),
+    ("arrayAUC", _auc_make),
+    ("arrayROCAUC", _auc_make),
+    ("regexpExtract", _regexp_extract_make),
+    # occurrence rank of each element among its predecessors (CH funnel
+    # helper).  O(n²) per row by construction; column-backed args only
+    # (the intDiv multi-reference caveat — the lambda captures the array)
+    (
+        "arrayEnumerateUniq",
+        (1, "transform({0}, (__v, __i) -> size(filter(slice({0}, 1, "
+            "__i + 1), __e -> __e = __v)))"),
+    ),
+    # arrayElement → try_element_at (both 1-based, both support negative
+    # from-the-end indexes); CH yields the TYPE DEFAULT (0/'') for
+    # out-of-range or zero indexes where ANSI element_at THROWS —
+    # try_element_at + nullif(idx, 0) yields NULL instead, the relational
+    # encoding of CH's default (the dictGet/arrayAvg convention; plain
+    # element_at errored under spark.sql.ansi).
+    # DOCUMENTED DIVERGENCE: arrayElement also accepts MAPS,
+    # and on a map that legitimately stores key 0 the nullif masks that
+    # lookup → NULL where CH returns the stored value.  The type isn't
+    # statically known here, and index 0 on ARRAYS (the dominant case)
+    # must stay NULL; maps keyed by 0 use the m[0] subscript form, whose
+    # rewrite deliberately has no nullif.
+    ("arrayElement", (2, "try_element_at({0}, nullif({1}, 0))")),
+    (
+        "bitmaskToArray",
+        (1, "filter(transform(sequence(0, 62), "
+            "__i -> shiftleft(CAST(1 AS BIGINT), __i)), "
+            "__b -> (CAST({0} AS BIGINT) & __b) != 0)"),
+    ),
+    # ------------------------------------------------------------------
+    # Multi-argument rewrites (the single-arg wraps and same-order renames
+    # can't express them):
+    #
+    # * ``hasAll(a, b)`` → ``size(array_except(b, a)) = 0``
+    # * ``bitAnd/bitOr/bitXor(a, b)`` → the ``&``/``|``/``^`` operators
+    # * ``positionCaseInsensitive(h, n)`` → ``instr(lower(h), lower(n))``
+    # * ``extractAll(s, re)`` → ``regexp_extract_all(s, re, 0)`` (whole-match
+    #   group; CH extracts the first capture group when one exists — port
+    #   group-using patterns by hand)
+    # * ``arrayAvg(x)`` → sum-fold / size (DOUBLE; references x twice —
+    #   fine for column-backed arrays, the caveat the intDiv rewrite
+    #   documents)
+    # * ``addDays(ts, n)`` / ``subtractHours(ts, n)`` / … →
+    #   ``timestampadd(UNIT, ±n, ts)`` (argument order moves)
+    # * ``dateSub(UNIT, n, ts)`` → ``timestampadd(UNIT, -(n), ts)``
+    ("hasAll", (2, "(size(array_except({1}, {0})) = 0)")),
+    ("bitAnd", (2, "(({0}) & ({1}))")),
+    ("bitOr", (2, "(({0}) | ({1}))")),
+    ("bitXor", (2, "(({0}) ^ ({1}))")),
+    ("positionCaseInsensitive", (2, "instr(lower({0}), lower({1}))")),
+    ("extractAll", (2, "regexp_extract_all({0}, {1}, 0)")),
+    # multiSearchAny(haystack, [needles]) — any-substring test; the array
+    # side iterates under exists so the haystack is referenced once
+    (
+        "multiSearchAnyCaseInsensitive",
+        (2, "exists({1}, __n -> contains(lower({0}), lower(__n)))"),
+    ),
+    ("multiSearchAny", (2, "exists({1}, __n -> contains({0}, __n))")),
+    # simpleLinearRegression(x, y) → CH's (k, b) tuple as the positional
+    # struct (col1=slope, col2=intercept) tupleElement/.1 access expects;
+    # Spark's regr_* take the DEPENDENT variable first
+    (
+        "simpleLinearRegression",
+        (2, "named_struct('col1', regr_slope({1}, {0}), 'col2', "
+            "regr_intercept({1}, {0}))"),
+    ),
+    # function-form arithmetic (CH exposes the operators as functions too);
+    # divide is always floating-point in CH — Spark's / on integers is
+    # DOUBLE division as well, so the operator maps directly
+    ("plus", (2, "(({0}) + ({1}))")),
+    ("minus", (2, "(({0}) - ({1}))")),
+    ("multiply", (2, "(({0}) * ({1}))")),
+    ("divide", (2, "(({0}) / ({1}))")),
+    ("intDivOrZero", _int_div_or_zero_make),
+    # finiteness family (CH: NaN is neither finite nor infinite); the
+    # double-reference caveat matches intDiv's documentation
+    ("isFinite", (1, "(NOT isnan({0}) AND abs({0}) != double('Infinity'))")),
+    (
+        "ifNotFinite",
+        (2, "(CASE WHEN isnan({0}) OR abs({0}) = double('Infinity') THEN "
+            "{1} ELSE {0} END)"),
+    ),
+    # CH toDecimal32/64/128(x, scale): 9/18/38-digit decimals
+    ("toDecimal32", _to_decimal_make(9)),
+    ("toDecimal64", _to_decimal_make(18)),
+    ("toDecimal128", _to_decimal_make(38)),
+    # Decimal256 shares the DECIMAL(38) lane — Spark's widest
+    # (the toInt128/256 documented-bound stance)
+    ("toDecimal256", _to_decimal_make(38)),
+    ("retention", _retention_make),
+    # nullif(size, 0): empty arrays yield NULL instead of an ANSI
+    # DIVIDE_BY_ZERO (CH returns nan; NULL is the relational encoding,
+    # the arrayAUC convention)
+    (
+        "arrayAvg",
+        (1, "(aggregate({0}, CAST(0 AS DOUBLE), (__a, "
+            "__v) -> __a + __v) / nullif(size({0}), 0))"),
+    ),
+    # arrayDifference([a1,a2,a3]) = [0, a2-a1, a3-a2]: element-wise
+    # subtract against the right-shifted array (references the
+    # argument 3× — fine for column-backed arrays, the documented
+    # intDiv-style caveat)
+    # greatest(size-1, 0): for an empty array slice(a, 1, -1) raises
+    # INVALID_PARAMETER_VALUE.LENGTH in Spark, while ClickHouse's
+    # arrayDifference([]) returns [] — clamping makes the shifted
+    # array [] / [a1] for empty / 1-element inputs, so zip_with
+    # yields [] / [0] exactly like ClickHouse
+    (
+        "arrayDifference",
+        (1, "zip_with({0}, concat(slice({0}, 1, 1), slice({0}, 1, "
+            "greatest(size({0}) - 1, 0))), (a, b) -> a - b)"),
+    ),
+    # arrayCompact: drop CONSECUTIVE duplicates (keep the first of
+    # each run) — filter on (value, index) pairs vs the predecessor
+    (
+        "arrayCompact",
+        (1, "transform(filter(transform({0}, (v, i) -> struct(v AS v, "
+            "i AS i)), s -> s.i = 0 OR NOT s.v <=> element_at({0}, s.i)), "
+            "s -> s.v)"),
+    ),
+    # arrayCumSum: one aggregate fold carrying (running sum, out array)
+    # — O(n), no slice-per-element.  DOUBLE accumulation like the
+    # arraySum rewrite (cast back where integer exactness matters).
+    (
+        "arrayCumSum",
+        (1, "aggregate({0}, named_struct('s', CAST(0 AS DOUBLE), 's_arr', "
+            "CAST(array() AS ARRAY<DOUBLE>)), (acc, "
+            "x) -> named_struct('s', acc.s + x, 's_arr', concat(acc.s_arr, "
+            "array(acc.s + x))), acc -> acc.s_arr)"),
+    ),
+    # avgWeighted(x, w) = Σ x·w / Σ w (CH returns NaN on zero weight
+    # sum; Spark returns NULL — the honest SQL analog)
+    ("avgWeighted", (2, "(sum(({0}) * ({1})) / sum({1}))")),
+    # countEqual(arr, v): NULL-safe equality so countEqual(a, NULL)
+    # counts NULL elements like ClickHouse
+    ("countEqual", (2, "size(filter({0}, __x -> __x <=> ({1})))")),
+    ("range", _range_make),
+    ("arrayPushBack", (2, "concat({0}, array({1}))")),
+    ("arrayPushFront", (2, "concat(array({1}), {0})")),
+    ("arrayPopBack", (1, "slice({0}, 1, greatest(size({0}) - 1, 0))")),
+    ("arrayPopFront", (1, "slice({0}, 2, greatest(size({0}) - 1, 0))")),
+    ("arrayFold", _fold_make),
+    # countSubstrings(h, n): non-overlapping occurrence count via the
+    # length-delta trick — pure codegen, no regex
+    (
+        "countSubstrings",
+        (2, "(CASE WHEN length({1}) = 0 THEN 0 ELSE (length({0}) - "
+            "length(replace({0}, {1}, ''))) DIV length({1}) END)"),
+    ),
+    ("countMatches", (2, "size(regexp_extract_all({0}, {1}, 0))")),
+    ("toStartOfInterval", _tsoi_make),
+    # assumeNotNull is a type-level assertion in CH; value-wise identity
+    ("assumeNotNull", (1, "({0})")),
+    ("transform", _transform_value_make),
+    ("tuple", _tuple_make),
+    # addDays(ts, n) / subtractHours(ts, n) / … → timestampadd(UNIT, ±n, ts)
+    # (argument order moves)
+    ("addSeconds", (2, "timestampadd(SECOND, ({1}), {0})")),
+    ("addMinutes", (2, "timestampadd(MINUTE, ({1}), {0})")),
+    ("addHours", (2, "timestampadd(HOUR, ({1}), {0})")),
+    ("addDays", (2, "timestampadd(DAY, ({1}), {0})")),
+    ("addWeeks", (2, "timestampadd(WEEK, ({1}), {0})")),
+    ("addMonths", (2, "timestampadd(MONTH, ({1}), {0})")),
+    ("addYears", (2, "timestampadd(YEAR, ({1}), {0})")),
+    ("subtractSeconds", (2, "timestampadd(SECOND, -({1}), {0})")),
+    ("subtractMinutes", (2, "timestampadd(MINUTE, -({1}), {0})")),
+    ("subtractHours", (2, "timestampadd(HOUR, -({1}), {0})")),
+    ("subtractDays", (2, "timestampadd(DAY, -({1}), {0})")),
+    ("subtractWeeks", (2, "timestampadd(WEEK, -({1}), {0})")),
+    ("subtractMonths", (2, "timestampadd(MONTH, -({1}), {0})")),
+    ("subtractYears", (2, "timestampadd(YEAR, -({1}), {0})")),
+    ("dateSub", (3, "timestampadd({0}, -({1}), {2})")),
+    ("arrayResize", _resize_make),
+    ("arrayRotateLeft", _rotate_make(True)),
+    ("arrayRotateRight", _rotate_make(False)),
+    # arrayProduct returns Float64 in CH regardless of input type
+    (
+        "arrayProduct",
+        (1, "aggregate({0}, CAST(1 AS DOUBLE), (__a, __v) -> __a * __v)"),
+    ),
+    # arrayCumSumNonNegative: running sum clamped at 0 after every
+    # step — same one-pass fold shape as arrayCumSum above
+    (
+        "arrayCumSumNonNegative",
+        (1, "aggregate({0}, named_struct('s', CAST(0 AS DOUBLE), 's_arr', "
+            "CAST(array() AS ARRAY<DOUBLE>)), (acc, "
+            "x) -> named_struct('s', greatest(acc.s + x, "
+            "CAST(0 AS DOUBLE)), 's_arr', concat(acc.s_arr, "
+            "array(greatest(acc.s + x, CAST(0 AS DOUBLE))))), "
+            "acc -> acc.s_arr)"),
+    ),
+    # tokens(s): maximal alphanumeric runs.  \P{Alnum} instead of a
+    # [^...] class for the same reason as alphaTokens — generated
+    # brackets would be re-read as a CH array literal downstream
+    ("tokens", (1, "filter(split({0}, '\\\\P{{Alnum}}+'), __t -> __t != '')")),
+    ("ngrams", _ngrams_make),
+    ("monthName", (1, "date_format({0}, 'MMMM')")),
+    ("formatReadableSize", _readable_size_make),
+    ("formatReadableQuantity", _readable_qty_make),
+    (
+        "toStartOfFiveMinutes",
+        (1, "timestamp_seconds((unix_timestamp({0}) DIV 300) * 300)"),
+    ),
+    (
+        "toStartOfTenMinutes",
+        (1, "timestamp_seconds((unix_timestamp({0}) DIV 600) * 600)"),
+    ),
+    (
+        "toStartOfFifteenMinutes",
+        (1, "timestamp_seconds((unix_timestamp({0}) DIV 900) * 900)"),
+    ),
+    # timeSlot rounds down to the half-hour
+    (
+        "timeSlot",
+        (1, "timestamp_seconds((unix_timestamp({0}) DIV 1800) * 1800)"),
+    ),
+    # Modified Julian Day epoch is 1858-11-17
+    ("toModifiedJulianDay", (1, "datediff(to_date({0}), DATE '1858-11-17')")),
+    # CH returns the date in text form; DATE prints identically
+    (
+        "fromModifiedJulianDay",
+        (1, "date_add(DATE '1858-11-17', CAST(({0}) AS INT))"),
+    ),
+    # bitTest(n, i) → UInt8-style 0/1 (the empty() type convention)
+    (
+        "bitTest",
+        (2, "CAST(shiftright(CAST(({0}) AS BIGINT), "
+            "CAST(({1}) AS INT)) & 1 AS INT)"),
+    ),
+    ("bitTestAll", _bit_test_multi("&")),
+    ("bitTestAny", _bit_test_multi("|")),
+    ("greatCircleDistance", _great_circle_make),
+    ("geoDistance", _great_circle_make),
+    ("greatCircleAngle", _great_circle_angle_make),
+    ("randUniform", (2, "(({0}) + rand() * (({1}) - ({0})))")),
+    ("randNormal", (2, "(({0}) + randn() * ({1}))")),
+    ("arrayDotProduct", _dot_make),
+    ("dotProduct", _dot_make),
+    ("arrayL1Distance", _lp_dist("1")),
+    ("L1Distance", _lp_dist("1")),
+    ("arrayL2Distance", _lp_dist("2")),
+    ("L2Distance", _lp_dist("2")),
+    ("arrayL2SquaredDistance", _lp_dist("2sq")),
+    ("L2SquaredDistance", _lp_dist("2sq")),
+    ("arrayLinfDistance", _lp_dist("inf")),
+    ("LinfDistance", _lp_dist("inf")),
+    ("L1Norm", _norm_make("1")),
+    ("L2Norm", _norm_make("2")),
+    ("LinfNorm", _norm_make("inf")),
+    ("cosineDistance", _cosine_make),
+    # token = maximal alphanumeric run, same boundary rule as the tokens()
+    # row above
+    (
+        "hasTokenCaseInsensitive",
+        (2, "array_contains(split(lower({0}), '\\\\P{{Alnum}}+'), "
+            "lower({1}))"),
+    ),
+    ("hasToken", (2, "array_contains(split({0}, '\\\\P{{Alnum}}+'), {1})")),
+    ("arrayReverseSort", _rev_sort_make),
+    # dense id by FIRST APPEARANCE — array_distinct preserves first-
+    # occurrence order, so positions in it are exactly CH's dense ids
+    (
+        "arrayEnumerateDense",
+        (1, "transform({0}, __x -> array_position(array_distinct({0}), "
+            "__x))"),
+    ),
+    # bitmaskToList: the powers of two summing to n, ascending, as a
+    # comma-separated STRING (CH returns String)
+    (
+        "bitmaskToList",
+        (1, "array_join(transform(filter(sequence(0, 62), "
+            "__i -> (shiftright(CAST(({0}) AS BIGINT), "
+            "CAST(__i AS INT)) & 1) = 1), __i -> CAST(shiftleft(CAST(1 AS "
+            "BIGINT), CAST(__i AS INT)) AS STRING)), ',')"),
+    ),
+    # CH returns '' on invalid input; try_to_binary gives NULL
+    (
+        "tryBase64Decode",
+        (1, "coalesce(CAST(try_to_binary({0}, 'base64') AS STRING), '')"),
+    ),
+    ("extractTextFromHTML", _html_make),
+    # sumCount(x) → (sum, count) positional tuple, tupleElement-ready
+    ("sumCount", (1, "named_struct('col1', sum({0}), 'col2', count({0}))")),
+    # boundingRatio(x, y): slope between the min-x and max-x points
+    (
+        "boundingRatio",
+        (2, "((max_by({1}, {0}) - min_by({1}, "
+            "{0})) / nullif(CAST(max({0}) - min({0}) AS DOUBLE), 0))"),
+    ),
+    ("toRelativeSecondNum", (1, "(unix_timestamp({0}) DIV 1)")),
+    ("toRelativeMinuteNum", (1, "(unix_timestamp({0}) DIV 60)")),
+    ("toRelativeHourNum", (1, "(unix_timestamp({0}) DIV 3600)")),
+    ("toRelativeDayNum", (1, "(unix_timestamp({0}) DIV 86400)")),
+    (
+        "arrayJaccardIndex",
+        (2, "(CAST(size(array_intersect({0}, {1})) AS DOUBLE) / "
+            "nullif(size(array_union({0}, {1})), 0))"),
+    ),
+    (
+        "arrayRandomSample",
+        (2, "slice(shuffle({0}), 1, least(({1}), size({0})))"),
+    ),
+    ("toDecimalString", _dec_string_make),
+    # per-position char mismatches; zip_with NULL-pads the shorter
+    # side and <=> counts the pad as a difference — CH's length-delta
+    # behavior exactly
+    (
+        "byteHammingDistance",
+        (2, "size(filter(zip_with(split({0}, ''), split({1}, ''), (x, "
+            "y) -> x <=> y), __m -> NOT __m))"),
+    ),
+    # multiSearchFirstPosition: leftmost occurrence position over all
+    # needles; 0 when none matches (CH's none-value)
+    (
         "multiSearchFirstPosition",
+        (2, "coalesce(array_min(filter(transform({1}, __n -> instr({0}, "
+            "__n)), __p -> __p > 0)), 0)"),
+    ),
+    ("positionUTF8", _position_make),
+    ("position", _position_make),
+    (
+        "countSubstringsCaseInsensitive",
+        (2, "(CASE WHEN length({1}) = 0 THEN 0 ELSE (length({0}) - "
+            "length(replace(lower({0}), lower({1}), "
+            "''))) DIV length({1}) END)"),
+    ),
+    (
+        "splitByWhitespace",
+        (1, "filter(split({0}, '\\\\s+'), __t -> __t != '')"),
+    ),
+    # splitByNonAlpha: separators are whitespace + punctuation, i.e.
+    # maximal alphanumeric runs — the tokens() boundary rule
+    (
+        "splitByNonAlpha",
+        (1, "filter(split({0}, '\\\\P{{Alnum}}+'), __t -> __t != '')"),
+    ),
+    # toTime: keep the time of day, move the date to 1970-01-02
+    # (ClickHouse's documented anchor date)
+    (
+        "toTime",
+        (1, "timestamp_seconds(86400 + pmod(unix_timestamp({0}), 86400))"),
+    ),
+    ("toDateTime64", _dt64_make),
+    ("now64", lambda a: "current_timestamp()" if len(a) <= 1 else None),
+    ("toIntervalYear", (1, "make_interval(({0}), 0, 0, 0, 0, 0, 0)")),
+    ("toIntervalMonth", (1, "make_interval(0, ({0}), 0, 0, 0, 0, 0)")),
+    ("toIntervalWeek", (1, "make_interval(0, 0, ({0}), 0, 0, 0, 0)")),
+    ("toIntervalDay", (1, "make_interval(0, 0, 0, ({0}), 0, 0, 0)")),
+    ("toIntervalHour", (1, "make_interval(0, 0, 0, 0, ({0}), 0, 0)")),
+    ("toIntervalMinute", (1, "make_interval(0, 0, 0, 0, 0, ({0}), 0)")),
+    ("toIntervalSecond", (1, "make_interval(0, 0, 0, 0, 0, 0, ({0}))")),
+    ("arrayWithConstant", (2, "array_repeat({1}, CAST(({0}) AS INT))")),
+    ("identity", (1, "({0})")),
+    ("materialize", (1, "({0})")),
+    # ignore() always returns 0 whatever its arguments
+    ("ignore", lambda a: "0"),
+    (
+        "toYYYYMMDDhhmmss",
+        (1, "CAST(date_format({0}, 'yyyyMMddHHmmss') AS BIGINT)"),
+    ),
+    # Joda patterns are Spark's own datetime patterns
+    ("fromUnixTimestampInJodaSyntax", (2, "from_unixtime({0}, {1})")),
+    ("formatDateTimeInJodaSyntax", (2, "date_format({0}, {1})")),
+    # UInt8-style 0/1 (the empty()/bitTest type convention)
+    ("isZeroOrNull", (1, "CAST(({0}) IS NULL OR ({0}) = 0 AS INT)")),
+    (
+        "moduloOrZero",
+        (2, "(CASE WHEN ({1}) = 0 THEN 0 ELSE ({0}) % ({1}) END)"),
+    ),
+    # 64-bit rotate via shiftleft | unsigned shiftright
+    (
+        "bitRotateLeft",
+        (2, "(shiftleft(CAST(({0}) AS BIGINT), "
+            "CAST(({1}) AS INT)) | shiftrightunsigned(CAST(({0}) AS "
+            "BIGINT), 64 - CAST(({1}) AS INT)))"),
+    ),
+    ("mapFilter", _map_filter_make),
+    ("mapExists", _map_exists_make),
+    ("mapAll", _map_all_make),
+    # -Array aggregate combinator: aggregate over all elements of the array
+    # arguments across the group — the element fold runs per row (DOUBLE
+    # accumulation, the arraySum stance), the group aggregate on top of it
+    (
+        "sumArray",
+        (1, "sum(aggregate({0}, CAST(0 AS DOUBLE), (s, v) -> s + v))"),
+    ),
+    ("minArray", (1, "min(array_min({0}))")),
+    ("maxArray", (1, "max(array_max({0}))")),
+    (
+        "avgArray",
+        (1, "(sum(aggregate({0}, CAST(0 AS DOUBLE), (s, v) -> s + v)) "
+            "/ nullif(sum(size({0})), 0))"),
+    ),
+    ("countArray", (1, "sum(size({0}))")),
+    # -Distinct combinator
+    ("sumDistinct", (1, "sum(DISTINCT {0})")),
+    ("avgDistinct", (1, "avg(DISTINCT {0})")),
+    ("countDistinct", (1, "count(DISTINCT {0})")),
+    # ------------------------------------------------------------------
+    # IPv4/IPv6 family.
+    #
+    # Representation: IPv6 values are 16-byte BINARY (CH's
+    # FixedString(16)); IPv4 values are the existing BIGINT lane.
+    #
+    # * ``IPv6StringToNum`` / ``toIPv6`` — full text parse (``::``
+    #   compression, dotted-IPv4 tails, mixed case) via
+    #   :func:`_ipv6_hex_sql`; best-effort on malformed input (CH
+    #   throws).
+    # * ``IPv6NumToString`` — RFC 5952 canonical printer (first-longest
+    #   zero-run compression, ``::ffff:`` dotted rendering) via
+    #   :func:`_ipv6_text_sql`.
+    # * ``cutIPv6(b, c6, c4)`` — zeroes the trailing c6 (or, for
+    #   IPv4-mapped values, c4) bytes and prints the result.
+    # * ``IPv6CIDRToRange(b, p)`` — (lo, hi) tuple via nibble-wise prefix
+    #   masking.
+    # * ``IPv4StringToNumOrNull`` — strict dotted-quad gate, else NULL;
+    #   ``toIPv4`` — alias of IPv4StringToNum; ``IPv4ToIPv6`` — the
+    #   ``::ffff:`` mapped 16-byte form.
+    #
+    # ``isIPAddressInRange`` is a _LITERAL_CALLS row (its CIDR argument is
+    # a string literal at this stage).
+    (
+        "IPv4StringToNumOrNull",
         lambda a: (
-            f"coalesce(array_min(filter(transform({a[1]}, "
-            f"__n -> CAST(instr({a[0]}, __n) AS BIGINT)), __p -> __p > 0)), "
-            f"CAST(0 AS BIGINT))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "LpNorm",
-        lambda a: (
-            f"pow(aggregate({a[0]}, 0.0D, (__a, __x) -> "
-            f"__a + pow(abs(CAST(__x AS DOUBLE)), {a[1]})), 1.0D / ({a[1]}))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    for nm, acc in (
-        ("normalizeL1", "__a + abs(CAST(__y AS DOUBLE))"),
-        ("normalizeL2", "__a + CAST(__y AS DOUBLE) * CAST(__y AS DOUBLE)"),
-    ):
-        def norm_make(args, _acc=acc, _l2=(nm == "normalizeL2")):
-            if len(args) != 1:
-                return None
-            v = args[0]
-            total = f"aggregate({v}, 0.0D, (__a, __y) -> {_acc})"
-            if _l2:
-                total = f"sqrt({total})"
-            return f"transform({v}, __x -> CAST(__x AS DOUBLE) / {total})"
-
-        chunk = _rewrite_call(chunk, nm, norm_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "JSONExtractKeysAndValuesRaw",
-        lambda a: (
-            f"transform(json_object_keys({a[0]}), __k -> "
-            f"struct(__k AS col1, get_json_object({a[0]}, "
-            f"concat('$.', __k)) AS col2))"
+            f"IF(({a[0]}) RLIKE '^({_OCTET}\\\\.){{3}}{_OCTET}$', "
+            f"IPv4StringToNum({a[0]}), CAST(NULL AS BIGINT))"
             if len(a) == 1
             else None
         ),
-    )
-    _UUID_RE = (
-        "^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
-        "-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
-    )
-    chunk = _rewrite_call(
-        chunk,
+    ),
+    ("toIPv4", (1, "IPv4StringToNum({0})")),
+    (
+        "IPv4ToIPv6",
+        (1, "unhex(concat('00000000000000000000ffff', "
+            "lpad(lower(hex(CAST(({0}) AS BIGINT))), 8, '0')))"),
+    ),
+    ("IPv6StringToNum", _v6_parse_make),
+    ("toIPv6", _v6_parse_make),
+    ("cutIPv6", _cut_v6_make),
+    ("IPv6CIDRToRange", _v6_cidr_make),
+    (
+        "IPv6NumToString",
+        lambda a: _ipv6_text_sql(a[0]) if len(a) == 1 else None,
+    ),
+    # ------------------------------------------------------------------
+    # Math, bit, geo, random and encoding functions:
+    #
+    # * ``erf``/``erfc`` — Abramowitz & Stegun 7.1.26 closed form;
+    #   ``lgamma``/``tgamma`` — Lanczos g=7 (z >= 0.5 scope; tgamma via
+    #   exp(lgamma), positive arguments).
+    # * ``emptyArrayToSingle`` — NUMERIC scope (the type default of a
+    #   string/date element is not expressible without a type argument:
+    #   coalesce(DATE, 0) has no common type and fails analysis, so
+    #   date/string arrays error loudly rather than silently diverge;
+    #   CH returns ['1970-01-01'] / [''] there).
+    # * ``hasSubsequence`` — in-order character scan as a single
+    #   ``aggregate`` fold over the haystack characters.
+    # * ``unbin`` — whole-byte scope ('01000001' -> 'A'); ``bitSlice`` —
+    #   positive offset/length scope, zero-padded to the byte boundary
+    #   (composes the bin/unbin machinery).
+    # * ``mortonEncode(x, y)`` / ``mortonDecode(2, code)`` — 2-D bit
+    #   interleave over 32 bit positions (UInt32 lanes; 3-D+ passes
+    #   through).  y's bit 31 lands on BIGINT's sign bit, so codes with
+    #   y >= 2^31 read negative — the UInt64-as-signed-BIGINT lane every
+    #   64-bit digest in this engine uses (xxhash64 stance); decode
+    #   round-trips exactly either way.
+    # * ``reinterpretAsUInt64/Int64`` (first 8 bytes, little-endian,
+    #   single-byte-codepoint scope) and ``reinterpretAsString``
+    #   (positive values, trailing zero bytes trimmed — CH's contract).
+    # * ``pointInEllipses(x, y, x0, y0, a0, b0, ...)`` — OR-chain of the
+    #   ellipse inequality over the variadic (center, axes) quadruples.
+    # * ``tupleToNameValuePairs`` — string-valued pairs via a JSON
+    #   round-trip (CH keeps the homogeneous value type; documented).
+    # * ``untuple(t)`` — struct star-expansion for named operands.
+    # * ``geohashesInBox`` — constant-folded at translation time (all five
+    #   arguments are literal in CH's call shape): the covering grid is
+    #   enumerated in Python with the same closed form as geohashEncode
+    #   and emitted as a sorted array literal; grids over 1024 cells pass
+    #   through (CH itself throws past a size cap).
+    # * ``base58Encode``/``base58Decode`` — Bitcoin-alphabet radix
+    #   conversion as NESTED aggregate folds (outer over input bytes/
+    #   chars, inner multiply-add with carry over the growing digit
+    #   array; O(n^2), fine for the short keys base58 carries); decode
+    #   returns BINARY (the IPv6 FixedString lane) and NULLs on invalid
+    #   alphabet chars where CH throws.  NOTE the neighboring ``bin()``
+    #   pass-through keeps SPARK semantics (number -> unpadded binary
+    #   digits); CH's byte-padded, type-width-aware bin would need the
+    #   argument's type at translation time — compose hex()/unbin() for
+    #   byte-exact bit strings instead.
+    # * ``randomString``/``randomPrintableASCII`` (printable-ASCII scope,
+    #   literal length <= 64, unrolled independent rand() draws),
+    #   ``randBinomial`` (literal trial count <= 256, unrolled Bernoulli
+    #   sum), ``randPoisson`` (literal lambda, inverse-CDF on a single
+    #   uniform via a threshold-array fold), ``randConstant`` — one draw
+    #   per CALL SITE, constant across rows (keyed on current_timestamp,
+    #   which Spark fixes at query start).
+    ("erf", lambda a: _erf_sql(a[0]) if len(a) == 1 else None),
+    ("erfc", lambda a: f"(1.0D - {_erf_sql(a[0])})" if len(a) == 1 else None),
+    ("lgamma", lambda a: _lgamma_sql(a[0]) if len(a) == 1 else None),
+    ("tgamma", lambda a: f"exp({_lgamma_sql(a[0])})" if len(a) == 1 else None),
+    (
+        "emptyArrayToSingle",
+        (1, "IF(size({0}) = 0, array(coalesce(try_element_at({0}, 1), 0)), "
+            "{0})"),
+    ),
+    (
+        "hasSubsequence",
+        (2, "(aggregate(split({0}, ''), 0, (__ac, __c) -> IF(__ac < "
+            "length({1}) AND __c = substring({1}, __ac + 1, 1), __ac + 1, "
+            "__ac)) = length({1}))"),
+    ),
+    (
+        "hasSubsequenceUTF8",
+        (2, "(aggregate(split({0}, ''), 0, (__ac, __c) -> IF(__ac < "
+            "length({1}) AND __c = substring({1}, __ac + 1, 1), __ac + 1, "
+            "__ac)) = length({1}))"),
+    ),
+    ("unbin", lambda a: _unbin_sql(a[0]) if len(a) == 1 else None),
+    ("bitSlice", _bit_slice_make),
+    ("mortonEncode", _morton_encode_make),
+    ("mortonDecode", _morton_decode_make),
+    ("reinterpretAsUInt64", _reinterp_int_make),
+    ("reinterpretAsInt64", _reinterp_int_make),
+    ("reinterpretAsString", _reinterp_str_make),
+    ("pointInEllipses", _point_in_ellipses_make),
+    (
+        "tupleToNameValuePairs",
+        (1, "transform(map_entries(from_json(to_json({0}), "
+            "'map<string,string>')), __e -> named_struct('col1', __e.key, "
+            "'col2', __e.value))"),
+    ),
+    (
+        "untuple",
+        lambda a: (
+            f"{a[0].strip()}.*"
+            if len(a) == 1
+            and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_.]*", a[0].strip())
+            else None
+        ),
+    ),
+    ("geohashesInBox", _geohashes_in_box_make),
+    ("randomPrintableASCII", _random_ascii_make),
+    ("randomString", _random_ascii_make),
+    ("randBinomial", _rand_binomial_make),
+    ("randPoisson", _rand_poisson_make),
+    ("randConstant", _rand_const_make),
+    # sleep/sleepEachRow return 0 in CH; the delay side effect is
+    # deliberately not performed (a per-row sleep is a scale hazard, not a
+    # semantic — same stance as the dropped offset-paged ingest)
+    ("sleepEachRow", (1, "CAST(({0}) * 0 AS INT)")),
+    ("sleep", (1, "CAST(({0}) * 0 AS INT)")),
+    ("base58Encode", _base58_encode_make),
+    ("base58Decode", _base58_decode_make),
+    # 128-bit digest tail — engine-specific values (the sipHash64 stance),
+    # rendered as the 32-hex-char string CH users feed to hex() anyway
+    (
+        "sipHash128",
+        lambda a: (
+            f"md5(CAST(concat({', '.join(a)}) AS BINARY))"
+            if len(a) >= 1
+            else None
+        ),
+    ),
+    (
+        "murmurHash3_128",
+        lambda a: (
+            f"substring(sha2(CAST(concat({', '.join(a)}) AS BINARY), 256), "
+            f"1, 32)"
+            if len(a) >= 1
+            else None
+        ),
+    ),
+    # ------------------------------------------------------------------
+    # Comparison functions, decimal arithmetic and more:
+    #
+    # * function-call forms of the comparison operators (``equals(a,b)``
+    #   …) → the operators themselves;
+    # * ``bitRotateRight`` (mirror of the existing left rotate),
+    #   ``byteSwap`` (64-bit byte reversal via an 8-byte fold — CH swaps
+    #   at the integer's own width; the 64-bit form is the documented
+    #   scope);
+    # * ``timezoneOffset(t)`` — session zone's UTC offset at t (DST-aware
+    #   via to_utc_timestamp; 0 under this engine's fixed-UTC session);
+    # * ``toRelativeWeekNum`` — Monday-aligned weeks since the epoch week
+    #   (CH's own docs define the anchor only as "a certain fixed point
+    #   in the past" — the VALUE is engine-specific, differences are
+    #   portable; the uniq stance);
+    # * ``multiplyDecimal/divideDecimal(a, b[, scale])`` — DECIMAL(38, s)
+    #   arithmetic (literal scale, default 10; CH allows 76 digits —
+    #   Spark's 38 is the documented bound);
+    # * ``toInt128/256, toUInt128/256`` → DECIMAL(38,0) (same bound);
+    # * ``formatReadableDecimalSize`` — the 1000-based sibling of the
+    #   existing binary formatReadableSize;
+    # * ``hasTokenOrNull`` — hasToken, NULL when the needle is not a
+    #   valid token; ``visibleWidth`` → string length;
+    #   ``toColumnTypeName`` → ``typeof`` (engine-specific type names).
+    # function-call forms of the comparison operators
+    ("notEquals", (2, "(({0}) != ({1}))")),
+    ("equals", (2, "(({0}) = ({1}))")),
+    ("lessOrEquals", (2, "(({0}) <= ({1}))")),
+    ("greaterOrEquals", (2, "(({0}) >= ({1}))")),
+    ("less", (2, "(({0}) < ({1}))")),
+    ("greater", (2, "(({0}) > ({1}))")),
+    (
+        "bitRotateRight",
+        (2, "(shiftrightunsigned(CAST(({0}) AS BIGINT), "
+            "CAST(({1}) AS INT)) | shiftleft(CAST(({0}) AS BIGINT), "
+            "64 - CAST(({1}) AS INT)))"),
+    ),
+    (
+        "byteSwap",
+        (1, "aggregate(sequence(0, 7), CAST(0 AS BIGINT), (__ac, "
+            "__i) -> __ac | shiftleft(shiftrightunsigned(CAST(({0}) AS "
+            "BIGINT), __i * 8) & CAST(255 AS BIGINT), (7 - __i) * 8))"),
+    ),
+    (
+        "timezoneOffset",
+        (1, "(unix_timestamp({0}) - unix_timestamp(to_utc_timestamp({0}, "
+            "current_timezone())))"),
+    ),
+    (
+        "toRelativeWeekNum",
+        (1, "CAST(floor(datediff({0}, DATE'1969-12-29') / 7) AS INT)"),
+    ),
+    ("multiplyDecimal", _dec_arith_make("*")),
+    ("divideDecimal", _dec_arith_make("/")),
+    ("formatReadableDecimalSize", _readable_dec_make),
+    (
+        "hasTokenOrNull",
+        (2, "(CASE WHEN {1} rlike '^[\\\\p{{Alnum}}]+$' THEN "
+            "array_contains(split({0}, '\\\\P{{Alnum}}+'), {1}) END)"),
+    ),
+    ("visibleWidth", (1, "length(CAST({0} AS STRING))")),
+    # ------------------------------------------------------------------
+    # The -State/-Merge/-ForEach/-OrDefault/-Resample combinator families
+    # plus the aggregate-argument tail:
+    #
+    # * ``-State``/``-Merge``: ClickHouse's State is an opaque
+    #   ``AggregateFunction`` binary; the faithful Spark representation
+    #   is the state's VALUE — algebraic aggregates are their own state
+    #   (sumState ≡ sum, merging count states sums them), avgState is
+    #   the (sum, count) struct, quantileState is the collected value
+    #   list (exact superset of CH's reservoir — exactness only
+    #   improves).  Reading CH's binary state columns stays out of
+    #   scope (cross-system wire format); uniqState/uniqMerge keep
+    #   their real sketch mapping (Spark HLL, in _WRAPS).
+    # * ``-ForEach``: element-wise aggregation across array rows —
+    #   zero-padded zip folds over the collected arrays (per-group
+    #   O(n·d), the sumMap/topK collected-group stance).
+    # * ``-OrDefault``: CH returns the type default (0) on an empty
+    #   aggregation state → ``coalesce(agg, 0)``.
+    # * ``-Resample(start, end, step)(x, key)``: literal bounds only —
+    #   the bucket count is resolved at translation time and emitted as
+    #   an explicit ``array(agg(CASE bucket_i)…)`` (scale-safe, no
+    #   collection); bucket count capped at 64, beyond passes through.
+    # * ``sumArgMin/sumArgMax(x, arg)``: single collected fold carrying
+    #   (best arg, running sum), restarting the sum on a new best.
+    # * ``groupArrayInsertAt(def, size)(x, pos)``: scatter into a
+    #   fixed-size slot array via an index-aware transform fold.
+    # * ``arrayLastIndex(λ, arr)``: last matching 1-based position, 0
+    #   when none (mirror of arrayFirstIndex via reverse).
+    ("sumArgMin", _sum_arg_make("<")),
+    ("sumArgMax", _sum_arg_make(">")),
+    ("sumForEach", _foreach_make("sum")),
+    ("minForEach", _foreach_make("min")),
+    ("maxForEach", _foreach_make("max")),
+    ("avgForEach", _foreach_make("avg")),
+    ("sumOrDefault", (1, "coalesce(sum({0}), 0)")),
+    ("avgOrDefault", (1, "coalesce(avg({0}), 0)")),
+    ("minOrDefault", (1, "coalesce(min({0}), 0)")),
+    ("maxOrDefault", (1, "coalesce(max({0}), 0)")),
+    # avgState/avgMerge + quantileState (plain calls)
+    (
+        "avgState",
+        (1, "named_struct('sum', sum(CAST({0} AS DOUBLE)), 'cnt', "
+            "count({0}))"),
+    ),
+    ("avgMerge", (1, "(sum(({0}).sum) / sum(({0}).cnt))")),
+    ("quantileState", (1, "collect_list(CAST({0} AS DOUBLE))")),
+    ("quantileMerge", _quantile_merge_make),
+    ("sumResample", _resample_make("sum")),
+    ("countResample", _resample_make("count")),
+    ("avgResample", _resample_make("avg")),
+    ("minResample", _resample_make("min")),
+    ("maxResample", _resample_make("max")),
+    ("groupArrayInsertAt", _group_array_insert_at_make),
+    (
+        "arrayLastIndex",
+        lambda a: (
+            f"(CASE WHEN array_position(reverse(transform({a[1]}, {a[0]})), "
+            f"true) = 0 THEN CAST(0 AS BIGINT) ELSE size({a[1]}) + 1 "
+            f"- array_position(reverse(transform({a[1]}, {a[0]})), true) END)"
+            if len(a) == 2 and "->" in a[0]
+            else None
+        ),
+    ),
+    # ------------------------------------------------------------------
+    # Statistical tests, vector norms, URL and random functions:
+    #
+    # * ``studentTTest(x, idx)`` / ``welchTTest(x, idx)`` — two-sample t
+    #   statistics from pure sum aggregates (pooled / Welch variance),
+    #   the meanZTest convention: the statistic only (CH's tuple carries
+    #   a p-value needing the t CDF — engine-specific numerics), index
+    #   0/1 splits samples, scale-safe (no collection).  The rank-based
+    #   tests (mannWhitneyUTest/kolmogorovSmirnovTest/rankCorr) and the
+    #   categorical family (cramersV/theilsU/contingency/ANOVA) are
+    #   engine OPERATORS (relational.py, driver-proven) — a faithful SQL
+    #   aggregate form needs global ranks/cells no single aggregate
+    #   expression can compute scale-safely; DIALECT_COVERAGE.md reports
+    #   them as operator-only.
+    # * ``nonNegativeDerivative(m, t) OVER …`` — per-second positive rate
+    #   via lag over the SAME window (both forms: ``OVER (…)`` and a
+    #   named window); NULL on the partition's first row (CH), clamped
+    #   at 0 otherwise.  2-arg form only (the INTERVAL scale factor
+    #   passes through).
+    # * ``mapUpdate(m1, m2)`` — m2 wins on key collisions (entry filter +
+    #   concat; Spark's map_concat raises on duplicates by default).
+    # * ``isNotDistinctFrom`` → ``<=>``; ``multiSearchAllPositions`` →
+    #   per-needle instr (1-based, 0 = absent, CH's encoding).
+    # * ``LpNorm(v, p)`` / ``normalizeL1/L2(v)`` — higher-order folds
+    #   (the vector arg is referenced twice in normalize*, column-backed
+    #   caveat).
+    # * ``JSONExtractKeysAndValuesRaw(j)`` — (key, raw value) struct
+    #   array over ``json_object_keys``.
+    # * ``toUUIDOrNull`` — format-validated pass/NULL.
+    # * ``cutQueryStringAndFragment`` / ``extractURLParameters`` /
+    #   ``extractURLParameterNames`` — URL-family tails over
+    #   try_parse_url/regexp.
+    # * ``randBernoulli/randExponential/randLogNormal`` — engine-random
+    #   (values never comparable; pytest range checks); randLogNormal uses
+    #   one Box-Muller draw.  rand32()/rand64() are _ZERO_ARG rows.
+    # * ``groupArraySample(n[, seed])(x)`` — slice of shuffled
+    #   collect_list (random sample; the uniq stance — the seed is
+    #   accepted and unused, Spark's shuffle takes none).
+    ("studentTTest", _t_test_make(pooled=True)),
+    ("welchTTest", _t_test_make(pooled=False)),
+    ("nonNegativeDerivative", _non_negative_derivative_make),
+    (
+        "mapUpdate",
+        (2, "map_from_entries(concat(filter(map_entries({0}), "
+            "__e -> NOT map_contains_key({1}, __e.key)), map_entries({1})))"),
+    ),
+    ("isNotDistinctFrom", (2, "(({0}) <=> ({1}))")),
+    (
+        "multiSearchAllPositions",
+        (2, "transform({1}, __n -> CAST(instr({0}, __n) AS BIGINT))"),
+    ),
+    (
+        "LpNorm",
+        (2, "pow(aggregate({0}, 0.0D, (__a, __x) -> __a + pow(abs(CAST(__x "
+            "AS DOUBLE)), {1})), 1.0D / ({1}))"),
+    ),
+    ("normalizeL1", _normalize_make("__a + abs(CAST(__y AS DOUBLE))", False)),
+    (
+        "normalizeL2",
+        _normalize_make(
+            "__a + CAST(__y AS DOUBLE) * CAST(__y AS DOUBLE)", True
+        ),
+    ),
+    (
+        "JSONExtractKeysAndValuesRaw",
+        (1, "transform(json_object_keys({0}), __k -> struct(__k AS col1, "
+            "get_json_object({0}, concat('$.', __k)) AS col2))"),
+    ),
+    (
         "toUUIDOrNull",
         lambda a: (
             f"(CASE WHEN CAST({a[0]} AS STRING) rlike '{_UUID_RE}' "
@@ -6632,916 +6236,442 @@ def _rewrite_batch23_calls(chunk: str) -> str:
             if len(a) == 1
             else None
         ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "cutQueryStringAndFragment",
-        lambda a: (
-            f"regexp_replace({a[0]}, '[?#].*$', '')" if len(a) == 1 else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+    ),
+    ("cutQueryStringAndFragment", (1, "regexp_replace({0}, '[?#].*$', '')")),
+    (
         "extractURLParameters",
-        lambda a: (
-            f"filter(split(coalesce(try_parse_url({a[0]}, 'QUERY'), ''), "
-            f"'&'), __p -> __p != '')"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (1, "filter(split(coalesce(try_parse_url({0}, 'QUERY'), ''), '&'), "
+            "__p -> __p != '')"),
+    ),
+    (
         "extractURLParameterNames",
-        lambda a: (
-            f"transform(filter(split(coalesce(try_parse_url({a[0]}, "
-            f"'QUERY'), ''), '&'), __p -> __p != ''), "
-            f"__p -> element_at(split(__p, '='), 1))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = re.sub(
-        r"\brand32\(\)", "CAST(floor(rand() * 4294967296) AS BIGINT)", chunk
-    )
-    chunk = re.sub(
-        r"\brand64\(\)",
-        "CAST(floor(rand() * 9223372036854775807) AS BIGINT)",
-        chunk,
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (1, "transform(filter(split(coalesce(try_parse_url({0}, 'QUERY'), "
+            "''), '&'), __p -> __p != ''), __p -> element_at(split(__p, "
+            "'='), 1))"),
+    ),
+    (
         "randBernoulli",
-        lambda a: (
-            f"CAST(CASE WHEN rand() < ({a[0]}) THEN 1 ELSE 0 END AS BIGINT)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "randExponential",
-        lambda a: (
-            f"(-ln(1.0D - rand()) / CAST({a[0]} AS DOUBLE))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (1, "CAST(CASE WHEN rand() < ({0}) THEN 1 ELSE 0 END AS BIGINT)"),
+    ),
+    ("randExponential", (1, "(-ln(1.0D - rand()) / CAST({0} AS DOUBLE))")),
+    (
         "randLogNormal",
-        lambda a: (
-            f"exp(CAST({a[0]} AS DOUBLE) + CAST({a[1]} AS DOUBLE) * "
-            f"sqrt(-2.0D * ln(1.0D - rand())) * cos(2.0D * pi() * rand()))"
-            if len(a) == 2
-            else None
-        ),
-    )
-
-    # curried: groupArraySample(n[, seed])(x)
-    gas_pat = re.compile(r"\bgroupArraySample\(")
-    m = gas_pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = gas_pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(head) not in (1, 2) or len(args) != 1:
-            m = gas_pat.search(chunk, x_end)
-            continue
-        repl = (
-            f"slice(shuffle(collect_list({args[0]})), 1, "
-            f"CAST({head[0]} AS INT))"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = gas_pat.search(chunk, m.start() + len(repl))
-    return chunk
-
-
-def _rewrite_batch22_calls(chunk: str) -> str:
-    """Round-7 batch 22 (coverage-report closure — the top uncovered
-    names from ``scripts/dialect_coverage.py``):
-
-    * ``multiMatchAny(s, [p…])`` → ``exists`` over ``rlike`` (boolean,
-      the ``match`` stance); ``multiMatchAnyIndex`` /
-      ``multiSearchFirstIndex`` → 1-based first-true position, 0 when
-      none (CH's encoding).
-    * ``JSONExtractArrayRaw(j[, key])`` → per-index ``get_json_object``
-      over ``sequence``; raw JSON for object/array elements, unquoted
-      scalars (Spark's get_json_object rendering — the JSONExtractRaw
-      stance; CH keeps string elements quoted).
-    * ``corrMatrix(x1…xn)`` / ``covarSampMatrix`` → the explicit n×n
-      ``array(array(corr(xi,xj)…)…)`` — pairwise built-in aggregates,
-      no custom state.
-    * ``groupArrayLast(n)(x)`` → last-n slice of ``collect_list`` (the
-      groupArray order caveat: Spark collection order is partition-
-      dependent unless the input is single-partition/sorted).
-    * ``xor(a, b)`` → boolean inequality; ``timeDiff(a, b)`` → epoch-
-      second difference b−a; ``appendTrailingCharIfAbsent(s, c)`` →
-      endswith-guarded concat (s referenced twice, column-backed
-      caveat); ``add/subtractMilliseconds(t, n)`` → ``timestampadd``.
-    * ``toDecimal32/64OrNull/OrZero(x, scale)`` → ``try_cast`` to
-      DECIMAL(9|18, scale) (literal scale only).
-    * ``mapSort/mapReverseSort(m)`` → entries → ``array_sort`` →
-      ``map_from_entries`` (1-arg form; the lambda form passes
-      through).
-    """
-    # curried: groupArrayLast(n)(x)
-    pat = re.compile(r"\bgroupArrayLast\(")
-    m = pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        head = _split_top_comma(chunk[m.end() : p_end - 1])
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(head) != 1 or len(args) != 1:
-            m = pat.search(chunk, x_end)
-            continue
-        n, x = head[0], args[0]
-        repl = (
-            f"element_at(transform(array(collect_list({x})), "
-            f"__l -> slice(__l, greatest(size(__l) + 1 - ({n}), 1), "
-            f"CAST({n} AS INT))), 1)"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = pat.search(chunk, m.start() + len(repl))
-
-    chunk = _rewrite_call(
-        chunk,
-        "multiMatchAny",
-        lambda a: (
-            f"exists({a[1]}, __p -> ({a[0]}) rlike __p)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (2, "exp(CAST({0} AS DOUBLE) + CAST({1} AS DOUBLE) * sqrt(-2.0D * "
+            "ln(1.0D - rand())) * cos(2.0D * pi() * rand()))"),
+    ),
+    ("groupArraySample", _group_array_sample_make),
+    # ------------------------------------------------------------------
+    # Multi-pattern search, JSON arrays, matrices and decimal parsing:
+    #
+    # * ``multiMatchAny(s, [p…])`` → ``exists`` over ``rlike`` (boolean,
+    #   the ``match`` stance); ``multiMatchAnyIndex`` /
+    #   ``multiSearchFirstIndex`` → 1-based first-true position, 0 when
+    #   none (CH's encoding).
+    # * ``JSONExtractArrayRaw(j[, key])`` → per-index ``get_json_object``
+    #   over ``sequence``; raw JSON for object/array elements, unquoted
+    #   scalars (Spark's get_json_object rendering — the JSONExtractRaw
+    #   stance; CH keeps string elements quoted).
+    # * ``corrMatrix(x1…xn)`` / ``covarSampMatrix`` → the explicit n×n
+    #   ``array(array(corr(xi,xj)…)…)`` — pairwise built-in aggregates,
+    #   no custom state.
+    # * ``groupArrayLast(n)(x)`` → last-n slice of ``collect_list`` (the
+    #   groupArray order caveat: Spark collection order is partition-
+    #   dependent unless the input is single-partition/sorted).
+    # * ``xor(a, b)`` → boolean inequality; ``timeDiff(a, b)`` → epoch-
+    #   second difference b−a; ``appendTrailingCharIfAbsent(s, c)`` →
+    #   endswith-guarded concat (s referenced twice, column-backed
+    #   caveat); ``add/subtractMilliseconds(t, n)`` → ``timestampadd``.
+    # * ``toDecimal32/64OrNull/OrZero(x, scale)`` → ``try_cast`` to
+    #   DECIMAL(9|18, scale) (literal scale only).
+    # * ``mapSort/mapReverseSort(m)`` → entries → ``array_sort`` →
+    #   ``map_from_entries`` (1-arg form; the lambda form passes
+    #   through).
+    ("groupArrayLast", _group_array_last_make),
+    ("multiMatchAny", (2, "exists({1}, __p -> ({0}) rlike __p)")),
+    (
         "multiMatchAnyIndex",
-        lambda a: (
-            f"coalesce(CAST(array_position(transform({a[1]}, "
-            f"__p -> ({a[0]}) rlike __p), true) AS BIGINT), "
-            f"CAST(0 AS BIGINT))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (2, "coalesce(CAST(array_position(transform({1}, "
+            "__p -> ({0}) rlike __p), true) AS BIGINT), CAST(0 AS BIGINT))"),
+    ),
+    # CH returns the index of the needle whose OCCURRENCE is leftmost
+    # in the haystack (array order only breaks position ties) — not
+    # the first needle in array order that occurs anywhere
+    (
         "multiSearchFirstIndex",
-        # CH returns the index of the needle whose OCCURRENCE is leftmost
-        # in the haystack (array order only breaks position ties) — not
-        # the first needle in array order that occurs anywhere
-        lambda a: (
-            f"element_at(transform(array(transform({a[1]}, "
-            f"__n -> instr({a[0]}, __n))), __ps -> "
-            f"coalesce(CAST(array_position(__ps, "
-            f"array_min(filter(__ps, __q -> __q > 0))) AS BIGINT), "
-            f"CAST(0 AS BIGINT))), 1)"
-            if len(a) == 2
-            else None
-        ),
-    )
-
-    def json_arr_raw_make(args):
-        if len(args) == 1:
-            j = args[0]
-        elif len(args) == 2:
-            j = f"get_json_object({args[0]}, concat('$.', {args[1]}))"
-        else:
-            return None
-        return (
-            f"(CASE WHEN json_array_length({j}) > 0 THEN "
-            f"transform(sequence(0, json_array_length({j}) - 1), "
-            f"__i -> get_json_object({j}, "
-            f"concat('$[', CAST(__i AS STRING), ']'))) "
-            f"ELSE CAST(array() AS ARRAY<STRING>) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "JSONExtractArrayRaw", json_arr_raw_make)
-
-    def matrix_make(agg):
-        def make(args):
-            if not args or any(not a.strip() for a in args):
-                return None
-            rows = ", ".join(
-                "array("
-                + ", ".join(f"{agg}({xi}, {xj})" for xj in args)
-                + ")"
-                for xi in args
-            )
-            return f"array({rows})"
-
-        return make
-
-    chunk = _rewrite_call(chunk, "corrMatrix", matrix_make("corr"))
-    chunk = _rewrite_call(chunk, "covarSampMatrix", matrix_make("covar_samp"))
-
-    chunk = _rewrite_call(
-        chunk,
-        "xor",
-        lambda a: (
-            f"(CAST({a[0]} AS BOOLEAN) != CAST({a[1]} AS BOOLEAN))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "timeDiff",
-        lambda a: (
-            f"(unix_timestamp({a[1]}) - unix_timestamp({a[0]}))"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
+        (2, "element_at(transform(array(transform({1}, __n -> instr({0}, "
+            "__n))), __ps -> coalesce(CAST(array_position(__ps, "
+            "array_min(filter(__ps, __q -> __q > 0))) AS BIGINT), "
+            "CAST(0 AS BIGINT))), 1)"),
+    ),
+    ("JSONExtractArrayRaw", _json_arr_raw_make),
+    ("corrMatrix", _matrix_make("corr")),
+    ("covarSampMatrix", _matrix_make("covar_samp")),
+    ("xor", (2, "(CAST({0} AS BOOLEAN) != CAST({1} AS BOOLEAN))")),
+    ("timeDiff", (2, "(unix_timestamp({1}) - unix_timestamp({0}))")),
+    (
         "appendTrailingCharIfAbsent",
-        lambda a: (
-            f"(CASE WHEN endswith({a[0]}, {a[1]}) THEN {a[0]} "
-            f"ELSE concat({a[0]}, {a[1]}) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "addMilliseconds",
-        lambda a: (
-            f"timestampadd(MILLISECOND, {a[1]}, {a[0]})"
-            if len(a) == 2
-            else None
-        ),
-    )
-    chunk = _rewrite_call(
-        chunk,
-        "subtractMilliseconds",
-        lambda a: (
-            f"timestampadd(MILLISECOND, -({a[1]}), {a[0]})"
-            if len(a) == 2
-            else None
-        ),
-    )
-
-    def decimal_scale_make(precision, try_only):
-        def make(args):
-            if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
-                return None
-            t = f"try_cast({args[0]} AS DECIMAL({precision}, {args[1].strip()}))"
-            if try_only:
-                return t
-            return (
-                f"coalesce({t}, CAST(0 AS "
-                f"DECIMAL({precision}, {args[1].strip()})))"
-            )
-
-        return make
-
-    chunk = _rewrite_call(chunk, "toDecimal32OrNull", decimal_scale_make(9, True))
-    chunk = _rewrite_call(chunk, "toDecimal32OrZero", decimal_scale_make(9, False))
-    chunk = _rewrite_call(chunk, "toDecimal64OrNull", decimal_scale_make(18, True))
-    chunk = _rewrite_call(chunk, "toDecimal64OrZero", decimal_scale_make(18, False))
-
-    def map_sort_make(desc):
-        def make(args):
-            if len(args) != 1:
-                return None
-            order = (
-                "(__a, __b) -> CASE WHEN __a.key < __b.key THEN 1 "
-                "WHEN __a.key > __b.key THEN -1 ELSE 0 END"
-                if desc
-                else None
-            )
-            inner = f"map_entries({args[0]})"
-            sorted_ = (
-                f"array_sort({inner}, {order})" if order else f"array_sort({inner})"
-            )
-            return f"map_from_entries({sorted_})"
-
-        return make
-
-    chunk = _rewrite_call(chunk, "mapSort", map_sort_make(False))
-    chunk = _rewrite_call(chunk, "mapReverseSort", map_sort_make(True))
-    return chunk
-
-
-def _rewrite_batch21_calls(chunk: str) -> str:
-    """Round-6 batch 21 (second doc-sweep pass):
-
-    * ``quantileIf(p)(x, cond)`` / ``quantilesIf(p1, …)(x, cond)`` —
-      curried conditional quantiles: the CASE nulls out non-matching
-      rows, percentile ignores NULLs (the -If combinator convention).
-    * ``bar(x, lo, hi, width)`` — ASCII bar chart: FULL '█' blocks only
-      (CH draws eighth-block partials; the relational ``sparkbar``
-      operator carries the same note), clamped to [0, width]; lo = hi
-      yields an empty bar (NULL-guarded division).
-    * ``space(n)`` → ``repeat(' ', n)``.
-    * ``parseTimeDelta('1 d 2h 3.5m')`` — unit-suffixed duration parse to
-      SECONDS: zip the numeric and unit capture groups, fold with the
-      multiplier ladder (s/m/h/d/w, case-insensitive, 'sec'/'min'/…
-      prefixes accepted); unknown units contribute 0 (CH throws — the
-      NULL/0 house stance), no matches → 0.
-    * ``formatReadableTimeDelta(sec)`` — '2 hours, 8 minutes, 13 seconds'
-      (CH's rendering: zero units skipped, singular at 1, all-zero →
-      '0 seconds').  Days are the largest unit emitted (CH's optional
-      years/months are calendar-approximate; documented scope).
-    """
-    # curried: quantileIf(p)(x, cond) / quantilesIf(...)(x, cond)
-    for nm, plural in (("quantilesIf", True), ("quantileIf", False)):
-        pat = re.compile(r"\b" + nm + r"\(")
-        m = pat.search(chunk)
-        while m:
-            p_end = _match_paren(chunk, m.end() - 1)
-            if p_end >= len(chunk) or chunk[p_end] != "(":
-                m = pat.search(chunk, p_end)
-                continue
-            x_end = _match_paren(chunk, p_end)
-            ps = _split_top_comma(chunk[m.end() : p_end - 1])
-            args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-            if len(args) != 2 or (not plural and len(ps) != 1):
-                m = pat.search(chunk, x_end)
-                continue
-            x, cond = args
-            tgt = f"array({', '.join(ps)})" if plural else ps[0]
-            repl = f"percentile(CASE WHEN {cond} THEN {x} END, {tgt})"
-            chunk = chunk[: m.start()] + repl + chunk[x_end:]
-            m = pat.search(chunk, m.start() + len(repl))
-
-    def bar_make(args):
-        if len(args) != 4:
-            return None
-        x, lo, hi, w = args
-        frac = (
-            f"(CAST({x} AS DOUBLE) - ({lo})) / "
-            f"nullif(CAST({hi} AS DOUBLE) - ({lo}), 0.0D)"
-        )
-        n = f"least(greatest(CAST(round({frac} * ({w})) AS INT), 0), CAST({w} AS INT))"
-        return f"repeat('█', coalesce({n}, 0))"
-
-    chunk = _rewrite_call(chunk, "bar", bar_make)
-
-    chunk = _rewrite_call(
-        chunk,
-        "space",
-        lambda args: f"repeat(' ', {args[0]})" if len(args) == 1 else None,
-    )
-
-    def parse_td_make(args):
-        if len(args) != 1:
-            return None
-        s = args[0]
-        pat = r"'([0-9]+(?:\\.[0-9]+)?)\\s*([a-zA-Z]+)'"
-        # numeric and unit capture groups extracted separately (Spark's
-        # regexp_extract_all takes ONE group index), zipped and folded
-        nums = f"regexp_extract_all({s}, {pat}, 1)"
-        units = f"regexp_extract_all({s}, {pat}, 2)"
-        mult = (
-            "CASE WHEN u RLIKE '(?i)^(w|week)' THEN 604800.0D "
-            "WHEN u RLIKE '(?i)^(d|day)' THEN 86400.0D "
-            "WHEN u RLIKE '(?i)^(h|hour|hr)' THEN 3600.0D "
-            "WHEN u RLIKE '(?i)^(ms|milli)' THEN 0.001D "
-            "WHEN u RLIKE '(?i)^(m|min)' THEN 60.0D "
-            "WHEN u RLIKE '(?i)^(s|sec)' THEN 1.0D "
-            "ELSE 0.0D END"
-        )
-        return (
-            f"aggregate(zip_with({nums}, {units}, "
-            f"(n, u) -> CAST(n AS DOUBLE) * ({mult})), "
-            f"0.0D, (__acc, __v) -> __acc + coalesce(__v, 0.0D))"
-        )
-
-    chunk = _rewrite_call(chunk, "parseTimeDelta", parse_td_make)
-
-    def fmt_td_make(args):
-        if len(args) != 1:
-            return None
-        # let-bind the argument ONCE (the reinterpretAsUInt64 pattern):
-        # the template references it ~20x across the four units, which
-        # multiplied to 134 KB of SQL under 3-deep self-nesting — found
-        # by the r9 self-composition fuzz, the only multiplicative
-        # splicer left among all 238 call rewrites
-        v = "CAST(__ftd AS BIGINT)"
-        units = [
-            (f"CAST({v} / 86400 AS BIGINT)", "day"),
-            (f"CAST(({v} % 86400) / 3600 AS BIGINT)", "hour"),
-            (f"CAST(({v} % 3600) / 60 AS BIGINT)", "minute"),
-            (f"({v} % 60)", "second"),
-        ]
-        parts = ", ".join(
-            f"IF({n} > 0, concat({n}, ' {u}', IF({n} = 1, '', 's')), NULL)"
-            for n, u in units
-        )
-        body = (
-            f"coalesce(nullif(concat_ws(', ', {parts}), ''), '0 seconds')"
-        )
-        return (
-            f"element_at(transform(array({args[0]}), __ftd -> {body}), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "formatReadableTimeDelta", fmt_td_make)
-    return chunk
-
-
-def _rewrite_batch16_calls(chunk: str) -> str:
-    """Dialect batch 16: string/array/URL depth.
-
-    * ``timestampSub(UNIT, n, ts)`` → ``timestampadd(UNIT, -(n), ts)``
-      (same shape as the existing ``dateSub`` rewrite).
-    * ``toFixedString(s, n)`` → ``rpad(s, n, chr(0))`` — CH pads with NUL
-      bytes; divergence: CH *throws* when ``length(s) > n``, rpad truncates.
-    * ``hasSubstr(a, b)`` — contiguous-subsequence test via an ``exists``
-      over every start offset (empty needle → true, as in CH).
-    * ``stringJaccardIndex(a, b)`` — set-of-characters Jaccard.  CH
-      operates on the byte set, identical for ASCII text; both-empty
-      is defined as 1.0 (identical strings).
-    * ``multiSearchAllPositions(h, [n1, …])`` → per-needle ``instr``.
-    * ``arrayFill`` / ``arrayReverseFill`` — fill-forward/backward: element
-      i becomes a[j] for the nearest j ≤ i (≥ i) where the predicate held,
-      original value if none.  The predicate is materialized once as a
-      boolean mask; the index scan is O(n²) per array by construction.
-    * ``arraySplit`` / ``arrayReverseSplit`` — cut before (after) each
-      element where the predicate holds; boundary offsets drive ``slice``.
-      Empty input → ``[]`` (typed via ``slice(array(a), 1, 0)``).
-    * ``URLHierarchy`` / ``URLPathHierarchy`` — progressive prefixes cut
-      after every ``/`` or ``?`` past the host (CH's definition); the
-      path-only variant drops protocol/host and the bare ``/`` root.
-
-    Single-binding ``transform(array(x), v -> …)`` is used as a let-form
-    so each derived value (mask, boundary list) is computed once; the
-    *source* argument is still spliced 2–3× where noted, so the usual
-    column-backed-argument caveat applies (same stance as ``intDiv``)."""
-
-    def two(template):
-        def make(args):
-            return template.format(*args) if len(args) == 2 else None
-
-        return make
-
-    def ts_sub_make(args):
-        if len(args) != 3:
-            return None
-        return f"timestampadd({args[0]}, -({args[1]}), {args[2]})"
-
-    chunk = _rewrite_call(chunk, "timestampSub", ts_sub_make)
-    chunk = _rewrite_call(
-        chunk, "toFixedString", two("rpad({0}, {1}, chr(0))")
-    )
-
-    def has_substr_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        # greatest(…, 1): when the needle is longer than the haystack the
-        # offset count would be ≤ 0, and Spark's sequence(1, 0) DESCENDS
-        # to [1, 0] — offset 0 then crashes slice.  One offset always
-        # exists under the floor; its shorter slice can never equal b.
-        return (
-            f"(CASE WHEN size({b}) = 0 THEN true ELSE "
-            f"exists(sequence(1, greatest(size({a}) - size({b}) + 1, 1)), "
-            f"__i -> slice({a}, __i, size({b})) = {b}) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "hasSubstr", has_substr_make)
-
-    def jaccard_make(args):
-        if len(args) != 2:
-            return None
-        a, b = args
-        u = f"array_union(split({a}, ''), split({b}, ''))"
-        i = f"array_intersect(split({a}, ''), split({b}, ''))"
-        return (
-            f"(CASE WHEN size({u}) = 0 THEN CAST(1 AS DOUBLE) "
-            f"ELSE CAST(size({i}) AS DOUBLE) / size({u}) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "stringJaccardIndex", jaccard_make)
-    chunk = _rewrite_call(
-        chunk, "multiSearchAllPositions",
-        two("transform({1}, __n -> instr({0}, __n))"),
-    )
-
-    def fill_make(reverse):
-        def make(args):
-            if len(args) != 2 or "->" not in args[0]:
-                return None
-            f, a = args
-            if reverse:
-                # no later match -> the LAST element's original value
-                # propagates left (a[n] is never replaced)
-                idx = (
-                    "coalesce(array_min(filter(sequence(__i, size(__s.a)), "
-                    "__j -> element_at(__s.m, __j))), size(__s.a))"
-                )
-            else:
-                # no earlier match -> the FIRST element's original value
-                # propagates right (a[1] is never replaced)
-                idx = (
-                    "coalesce(array_max(filter(sequence(1, __i), "
-                    "__j -> element_at(__s.m, __j))), 1)"
-                )
-            return (
-                f"(CASE WHEN size({a}) = 0 THEN {a} ELSE "
-                f"element_at(transform(array(named_struct("
-                f"'a', {a}, 'm', transform({a}, {f}))), __s -> "
-                f"transform(sequence(1, size(__s.a)), __i -> "
-                f"element_at(__s.a, {idx}))), 1) END)"
-            )
-
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayReverseFill", fill_make(True))
-    chunk = _rewrite_call(chunk, "arrayFill", fill_make(False))
-
-    def split_make(reverse):
-        def make(args):
-            if len(args) != 2 or "->" not in args[0]:
-                return None
-            f, a = args
-            if reverse:
-                # cut AFTER matches: group starts at 1 and right after
-                # every index whose predicate held
-                bnd = (
-                    "filter(sequence(1, size(__s.a)), __i -> __i = 1 "
-                    "OR element_at(__s.m, __i - 1))"
-                )
-            else:
-                # cut BEFORE matches (the first element always starts
-                # a group)
-                bnd = (
-                    "filter(sequence(1, size(__s.a)), __i -> __i = 1 "
-                    "OR element_at(__s.m, __i))"
-                )
-            return (
-                f"(CASE WHEN size({a}) = 0 THEN slice(array({a}), 1, 0) "
-                f"ELSE element_at(transform(array(named_struct("
-                f"'a', {a}, 'm', transform({a}, {f}))), __s -> "
-                f"element_at(transform(array({bnd}), __b -> "
-                f"transform(sequence(1, size(__b)), __i -> "
-                f"slice(__s.a, element_at(__b, __i), "
-                f"coalesce(try_element_at(__b, __i + 1), size(__s.a) + 1) "
-                f"- element_at(__b, __i)))), 1)), 1) END)"
-            )
-
-        return make
-
-    chunk = _rewrite_call(chunk, "arrayReverseSplit", split_make(True))
-    chunk = _rewrite_call(chunk, "arraySplit", split_make(False))
-
-    def url_hierarchy_make(path_only):
-        def make(args):
-            if len(args) != 1:
-                return None
-            (u,) = args
-            prefix = (
-                "''" if path_only
-                else f"regexp_extract({u}, '^([a-z]+://[^/?#]*)', 1)"
-            )
-            body = (
-                f"element_at(transform(array(named_struct("
-                f"'p', {prefix}, "
-                f"'r', regexp_replace({u}, '^[a-z]+://[^/?#]*', ''))), "
-                f"__s -> CASE WHEN __s.r = '' THEN array(__s.p) ELSE "
-                f"element_at(transform(array(filter("
-                f"split(__s.r, '(?<=[/?])'), __p -> __p != '')), __t -> "
-                f"transform(sequence(1, size(__t)), __i -> "
-                f"concat(__s.p, array_join(slice(__t, 1, __i), '')))), 1) "
-                f"END), 1)"
-            )
-            if path_only:
-                # CH URLPathHierarchy omits the bare '/' root entry
-                return f"filter({body}, __u -> __u != '/')"
-            return body
-
-        return make
-
-    chunk = _rewrite_call(chunk, "URLPathHierarchy", url_hierarchy_make(True))
-    chunk = _rewrite_call(chunk, "URLHierarchy", url_hierarchy_make(False))
-
-    def point_in_polygon_make(args):
-        # pointInPolygon((px, py), [(x1, y1), …]) — even-odd ray casting,
-        # UNROLLED per edge (the polygon is a LITERAL vertex list in CH
-        # queries; a polygon column passes through untranslated).  Each
-        # edge term: the edge straddles py vertically AND the rightward
-        # ray from (px, py) crosses it — try_divide keeps horizontal
-        # edges NULL-safe under ANSI (false AND NULL = false).  Boundary
-        # points follow the strict >/< convention.  px/py are spliced
-        # per edge (column-backed caveat).  Returns UInt8-style 0/1.
-        if len(args) != 2:
-            return None
-        pt = args[0].strip()
-        poly = args[1].strip()
-        if not (pt.startswith("(") and pt.endswith(")")):
-            return None
-        if not (poly.startswith("array(") and poly.endswith(")")):
-            return None
-        pxy = _split_top_comma(pt[1:-1])
-        verts = []
-        for v in _split_top_comma(poly[len("array(") : -1]):
-            v = v.strip()
-            if not (v.startswith("(") and v.endswith(")")):
-                return None
-            xy = _split_top_comma(v[1:-1])
-            if len(xy) != 2:
-                return None
-            verts.append((xy[0], xy[1]))
-        if len(pxy) != 2 or len(verts) < 3:
-            return None
-        px, py = pxy
-        terms = []
-        for i, (xi, yi) in enumerate(verts):
-            xj, yj = verts[(i + 1) % len(verts)]
-            cross = (
-                f"((CAST(({yi}) AS DOUBLE) > ({py})) != "
-                f"(CAST(({yj}) AS DOUBLE) > ({py}))) AND "
-                f"(({px}) < try_divide((CAST(({xj}) AS DOUBLE) - ({xi})) "
-                f"* (({py}) - ({yi})), (CAST(({yj}) AS DOUBLE) - ({yi}))) "
-                f"+ ({xi}))"
-            )
-            terms.append(f"CAST(coalesce({cross}, false) AS INT)")
-        return f"(({' + '.join(terms)}) % 2)"
-
-    chunk = _rewrite_call(chunk, "pointInPolygon", point_in_polygon_make)
-
-    _GEO_ALPHA = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-    def geohash_encode_make(args):
-        # geohashEncode(lon, lat[, precision]) — textbook interval-halving
-        # geohash, computed CLOSED-FORM: the lon/lat bit streams are the
-        # binary expansions of floor((coord+offset)/range · 2^nbits), and
-        # each base32 character extracts its 5 interleaved bits with
-        # shifts (lon stream first).  The bit streams bind once via the
-        # single-element transform; precision must be an integer literal
-        # (CH's own call shape; default 12 → 30+30 bits, well under 2^53
-        # double precision).  Coordinates clamp to the valid range.
-        if len(args) == 2:
-            p = 12
-        elif len(args) == 3:
-            try:
-                p = int(args[2].strip())
-            except ValueError:
-                return None
-            if not 1 <= p <= 12:
-                return None
-        else:
-            return None
-        # CAST to DOUBLE: Spark parses 166.25 as a DECIMAL literal, and
-        # decimal division rounds at a fixed scale — floor() then lands
-        # in the wrong cell for coordinates near a bit boundary
-        lon = f"CAST(({args[0]}) AS DOUBLE)"
-        lat = f"CAST(({args[1]}) AS DOUBLE)"
-        n = 5 * p
-        nlon, nlat = (n + 1) // 2, n // 2
-        chars = []
-        for c in range(p):
-            terms = []
-            for j in range(5):
-                i = 5 * c + j
-                if i % 2 == 0:
-                    bit = f"(shiftright(__g.lo, {nlon - 1 - i // 2}) & 1)"
-                else:
-                    bit = (
-                        f"(shiftright(__g.la, {nlat - 1 - (i - 1) // 2})"
-                        f" & 1)"
-                    )
-                terms.append(f"{bit} * {1 << (4 - j)}")
-            chars.append(
-                f"substr('{_GEO_ALPHA}', "
-                f"CAST({' + '.join(terms)} AS INT) + 1, 1)"
-            )
-        return (
-            f"element_at(transform(array(named_struct("
-            f"'lo', least(greatest(CAST(floor((({lon}) + 180.0) / 360.0 "
-            f"* {1 << nlon}) AS BIGINT), 0), {(1 << nlon) - 1}), "
-            f"'la', least(greatest(CAST(floor((({lat}) + 90.0) / 180.0 "
-            f"* {1 << nlat}) AS BIGINT), 0), {(1 << nlat) - 1}))), "
-            f"__g -> concat({', '.join(chars)})), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "geohashEncode", geohash_encode_make)
-
-    def geohash_decode_make(args):
-        # geohashDecode(s) → tuple (longitude, latitude) of the CELL
-        # CENTER — one aggregate fold over the characters rebuilding the
-        # two bit streams (state: lon bits, lat bits, stream parity; each
-        # 5-bit group splits 3/2 or 2/3 by the parity it starts on).
-        # Positional tuple fields col1/col2, like the tuple() rewrite.
-        if len(args) != 1:
-            return None
-        (s,) = args
-        v = f"(instr('{_GEO_ALPHA}', __c) - 1)"
-        b = lambda k: f"(shiftright({v}, {k}) & 1)"  # noqa: E731
-        even = (
-            f"named_struct('lo', __s.lo * 8 + {b(4)} * 4 + {b(2)} * 2 "
-            f"+ {b(0)}, 'la', __s.la * 4 + {b(3)} * 2 + {b(1)}, 'p', 1)"
-        )
-        odd = (
-            f"named_struct('lo', __s.lo * 4 + {b(3)} * 2 + {b(1)}, "
-            f"'la', __s.la * 8 + {b(4)} * 4 + {b(2)} * 2 + {b(0)}, 'p', 0)"
-        )
-        fold = (
-            f"aggregate(split({s}, ''), named_struct("
-            f"'lo', CAST(0 AS BIGINT), 'la', CAST(0 AS BIGINT), 'p', 0), "
-            f"(__s, __c) -> CASE WHEN __s.p = 0 THEN {even} "
-            f"ELSE {odd} END)"
-        )
-        nlon = f"CAST((5 * length({s}) + 1) DIV 2 AS INT)"
-        nlat = f"CAST((5 * length({s})) DIV 2 AS INT)"
-        return (
-            f"element_at(transform(array({fold}), __f -> named_struct("
-            f"'col1', -180.0 + 360.0 * (CAST(__f.lo AS DOUBLE) + 0.5) "
-            f"/ power(2, {nlon}), "
-            f"'col2', -90.0 + 180.0 * (CAST(__f.la AS DOUBLE) + 0.5) "
-            f"/ power(2, {nlat}))), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "geohashDecode", geohash_decode_make)
-
-    def map_agg_make(combine, init):
-        # sumMap/minMap/maxMap(k, v) over per-row parallel ARRAYS (the
-        # SummingMergeTree/AggregatingMergeTree metric-map idiom): a
-        # tuple of (key-sorted distinct keys, per-key combined values).
-        # The flattened pair list binds once, the sorted key list binds
-        # once more (nested single-element transforms); the per-key
-        # combine is O(d·n) per group — the same exact-with-caveat
-        # stance as topK; relational.map_aggregate is the scale path.
-        # Values accumulate in DOUBLE (the arraySum stance).
-        def make(args):
-            if len(args) != 2:
-                return None
-            k, v = args
-            pairs = (
-                f"flatten(collect_list(zip_with({k}, {v}, "
-                f"(__k, __v) -> struct(__k AS k, "
-                f"CAST(__v AS DOUBLE) AS v))))"
-            )
-            per_key = (
-                f"aggregate(filter(__p, __q -> __q.k = __k), "
-                f"CAST({init} AS DOUBLE), (__a, __q) -> {combine})"
-            )
-            return (
-                f"element_at(transform(array({pairs}), __p -> "
-                f"element_at(transform(array(array_sort(array_distinct("
-                f"transform(__p, __e -> __e.k)))), __ks -> named_struct("
-                f"'col1', __ks, "
-                f"'col2', transform(__ks, __k -> {per_key}))), 1)), 1)"
-            )
-
-        return make
-
-    # batch 23: sumMapFiltered([keys])(k, v) — keep only pairs whose key
-    # is in the literal list, then delegate to the sumMap rewrite below
-    # (textual composition: this runs first in the same pass)
-    smf_pat = re.compile(r"\bsumMapFiltered\(")
-    m = smf_pat.search(chunk)
-    while m:
-        p_end = _match_paren(chunk, m.end() - 1)
-        if p_end >= len(chunk) or chunk[p_end] != "(":
-            m = smf_pat.search(chunk, p_end)
-            continue
-        x_end = _match_paren(chunk, p_end)
-        keys = chunk[m.end() : p_end - 1]
-        args = _split_top_comma(chunk[p_end + 1 : x_end - 1])
-        if len(args) != 2:
-            m = smf_pat.search(chunk, x_end)
-            continue
-        k, v = args
-        zipped = (
-            f"filter(zip_with({k}, {v}, (__fk, __fv) -> "
-            f"struct(__fk AS k, __fv AS v)), "
-            f"__fp -> array_contains({keys}, __fp.k))"
-        )
-        repl = (
-            f"sumMap(transform({zipped}, __fp -> __fp.k), "
-            f"transform({zipped}, __fp -> __fp.v))"
-        )
-        chunk = chunk[: m.start()] + repl + chunk[x_end:]
-        m = smf_pat.search(chunk, m.start() + len(repl))
-
-    chunk = _rewrite_call(
-        chunk, "sumMap", map_agg_make("__a + __q.v", "0")
-    )
-    chunk = _rewrite_call(
-        chunk, "minMap",
-        map_agg_make(
+        (2, "(CASE WHEN endswith({0}, {1}) THEN {0} ELSE concat({0}, "
+            "{1}) END)"),
+    ),
+    ("addMilliseconds", (2, "timestampadd(MILLISECOND, {1}, {0})")),
+    ("subtractMilliseconds", (2, "timestampadd(MILLISECOND, -({1}), {0})")),
+    ("toDecimal32OrNull", _decimal_scale_make(9, True)),
+    ("toDecimal32OrZero", _decimal_scale_make(9, False)),
+    ("toDecimal64OrNull", _decimal_scale_make(18, True)),
+    ("toDecimal64OrZero", _decimal_scale_make(18, False)),
+    ("mapSort", _map_sort_make(False)),
+    ("mapReverseSort", _map_sort_make(True)),
+    # ------------------------------------------------------------------
+    # Conditional quantiles, bars and time deltas:
+    #
+    # * ``quantileIf(p)(x, cond)`` / ``quantilesIf(p1, …)(x, cond)`` —
+    #   curried conditional quantiles: the CASE nulls out non-matching
+    #   rows, percentile ignores NULLs (the -If combinator convention).
+    # * ``bar(x, lo, hi, width)`` — ASCII bar chart: FULL '█' blocks only
+    #   (CH draws eighth-block partials; the relational ``sparkbar``
+    #   operator carries the same note), clamped to [0, width]; lo = hi
+    #   yields an empty bar (NULL-guarded division).
+    # * ``space(n)`` → ``repeat(' ', n)``.
+    # * ``parseTimeDelta('1 d 2h 3.5m')`` — unit-suffixed duration parse to
+    #   SECONDS: zip the numeric and unit capture groups, fold with the
+    #   multiplier ladder (s/m/h/d/w, case-insensitive, 'sec'/'min'/…
+    #   prefixes accepted); unknown units contribute 0 (CH throws — the
+    #   NULL/0 house stance), no matches → 0.
+    # * ``formatReadableTimeDelta(sec)`` — '2 hours, 8 minutes, 13 seconds'
+    #   (CH's rendering: zero units skipped, singular at 1, all-zero →
+    #   '0 seconds').  Days are the largest unit emitted (CH's optional
+    #   years/months are calendar-approximate; documented scope).
+    ("quantilesIf", _quantile_if_make(plural=True)),
+    ("quantileIf", _quantile_if_make(plural=False)),
+    ("bar", _bar_make),
+    ("space", (1, "repeat(' ', {0})")),
+    ("parseTimeDelta", _parse_td_make),
+    ("formatReadableTimeDelta", _fmt_td_make),
+    # ------------------------------------------------------------------
+    # Interval/time-series aggregate folds — the windowFunnel machinery
+    # (collect → array_sort → codegen ``aggregate`` fold, one collect_list
+    # per group, all JVM-side) applied to ClickHouse's interval/time-series
+    # aggregates:
+    #
+    # * ``exponentialMovingAverage(hl)(v, t)`` — half-life-weighted mean of
+    #   an irregular time series (CH's published model): walking the
+    #   t-sorted values, both numerator and denominator decay by
+    #   ``2^(-Δt/hl)`` between samples; result ``Σ2^(-(tn-ti)/hl)·vi /
+    #   Σ2^(-(tn-ti)/hl)``.  ``t`` is any numeric (CH passes unix seconds).
+    # * ``intervalLengthSum(s, e)`` — total length of the UNION of the
+    #   group's [s, e] segments (overlaps counted once): sweep over
+    #   (s, e)-sorted intervals carrying the covered frontier.  Returns
+    #   DOUBLE (CH returns the argument type).
+    # * ``maxIntersections(s, e)`` — maximum number of simultaneously
+    #   overlapping intervals: ±1 sweep over sorted endpoint events; ends
+    #   sort before starts at the same point (struct sort on (t, d) with
+    #   d = −1 for ends), so touching intervals [a,b],[b,c] do NOT count
+    #   as intersecting — CH counts half-open occupancy the same way.
+    # * ``deltaSumTimestamp(v, t)`` — sum of POSITIVE deltas of consecutive
+    #   t-ordered values (CH's counter-reset-tolerant rate primitive; the
+    #   unordered ``deltaSum`` keeps its separate rewrite).
+    #
+    # All four are exact single-pass folds; the per-group state is O(1) and
+    # the collected array is the group's own rows — the same scale contract
+    # as windowFunnel/sequenceMatch (bounded by per-key event volume).
+    ("exponentialMovingAverage", _exponential_moving_average_make),
+    (
+        "intervalLengthSum",
+        (2, "aggregate(array_sort(collect_list(struct(CAST({0} AS DOUBLE) "
+            "AS s, CAST({1} AS DOUBLE) AS e))), named_struct('tot', 0.0D, "
+            "'fr', CAST(NULL AS DOUBLE)), (a, iv) -> named_struct('tot', "
+            "a.tot + greatest(0.0D, iv.e - greatest(iv.s, coalesce(a.fr, "
+            "iv.s))), 'fr', greatest(coalesce(a.fr, iv.e), iv.e)), "
+            "a -> a.tot)"),
+    ),
+    # maxIntersectionsPosition — the sweep position (the
+    # start-event t) where the maximum occupancy is FIRST reached:
+    # same ±1 endpoint sweep, with an argmax slot updated only on a
+    # strict new best (later ties keep the first position, CH's
+    # leftmost answer)
+    (
+        "maxIntersectionsPosition",
+        (2, "aggregate(array_sort(flatten(transform(collect_list(struct(CAS"
+            "T({0} AS DOUBLE) AS s, CAST({1} AS DOUBLE) AS e)), "
+            "__iv -> array(struct(__iv.s AS t, 1 AS d), "
+            "struct(__iv.e AS t, -1 AS d))))), named_struct('c', 0, 'b', "
+            "0, 'bp', CAST(NULL AS DOUBLE)), (a, ev) -> named_struct('c', "
+            "a.c + ev.d, 'b', greatest(a.b, a.c + ev.d), 'bp', "
+            "CASE WHEN a.c + ev.d > a.b THEN ev.t ELSE a.bp END), "
+            "a -> a.bp)"),
+    ),
+    (
+        "maxIntersections",
+        (2, "aggregate(array_sort(flatten(transform(collect_list(struct(CAS"
+            "T({0} AS DOUBLE) AS s, CAST({1} AS DOUBLE) AS e)), "
+            "__iv -> array(struct(__iv.s AS t, 1 AS d), "
+            "struct(__iv.e AS t, -1 AS d))))), named_struct('c', 0, 'b', "
+            "0), (a, ev) -> named_struct('c', a.c + ev.d, 'b', "
+            "greatest(a.b, a.c + ev.d)), a -> a.b)"),
+    ),
+    (
+        "deltaSumTimestamp",
+        (2, "aggregate(array_sort(collect_list(struct(CAST({1} AS DOUBLE) "
+            "AS t, CAST({0} AS DOUBLE) AS v))), named_struct('tot', 0.0D, "
+            "'pv', CAST(NULL AS DOUBLE)), (a, e) -> named_struct('tot', "
+            "a.tot + CASE WHEN a.pv IS NOT NULL AND e.v > a.pv THEN e.v - "
+            "a.pv ELSE 0.0D END, 'pv', e.v), a -> a.tot)"),
+    ),
+    # ------------------------------------------------------------------
+    # Map, JSON-type and serial-date scalars:
+    #
+    # * ``mapApply((k, v) -> (ke, ve), m)`` — entrywise map transform via
+    #   ``map_from_entries(transform(map_entries(m), …))``; the CH lambda's
+    #   tuple result becomes a struct, parameter names substituted on word
+    #   boundaries.  Lambdas not of the 2-param → 2-tuple shape pass
+    #   through.
+    # * ``isValidJSON(j)`` → ``try_parse_json(j) IS NOT NULL`` (VARIANT
+    #   parse — full JSON validation, not a prefix probe).
+    # * ``JSONType(j)`` (no-path form) — 'Object'/'Array'/'String'/'Bool'/
+    #   'Null'/'Int64'/'Double' by inspecting the trimmed document head
+    #   after validation (CH returns the same tags; numeric split Int64 vs
+    #   Double by the presence of ./e/E).  Path forms pass through.
+    # * ``addQuarters/subtractQuarters(d, n)`` → ``add_months(d, ±3n)``.
+    # * ``YYYYMMDDToDate(n)`` / ``YYYYMMDDhhmmssToDateTime(n)`` — numeric
+    #   serial date forms via try_to_date/try_to_timestamp (NULL on
+    #   invalid serials; CH returns epoch defaults — NULL is the house
+    #   encoding, see arrayElement).
+    # * ``toTimezone(ts, tz)`` → ``convert_timezone(current_timezone(),
+    #   tz, ts)`` — CH changes display metadata only; Spark timestamps have
+    #   no per-value zone, so the rewrite materializes the wall-clock shift
+    #   (the observable toString behavior).
+    # * ``timezoneOf(ts)`` → session timezone (CH: the column's zone
+    #   attribute; Spark has exactly one, the session's).
+    # * ``nowInBlock()`` → ``current_timestamp()`` (per-block freshness is
+    #   meaningless under whole-stage codegen).
+    # * ``caseWithExpression(x, a, ra, b, rb, …[, dflt])`` → ``CASE x WHEN
+    #   a THEN ra … ELSE dflt END`` (the function form of operator CASE).
+    # * ``dateTime64ToSnowflake`` — same epoch shift as the existing
+    #   dateTimeToSnowflake wrap.
+    ("mapApply", _map_apply_make),
+    ("isValidJSON", (1, "(try_parse_json({0}) IS NOT NULL)")),
+    ("JSONType", _json_type_make),
+    ("addQuarters", (2, "add_months({0}, 3 * ({1}))")),
+    ("subtractQuarters", (2, "add_months({0}, -3 * ({1}))")),
+    (
+        "YYYYMMDDToDate",
+        (1, "try_to_date(CAST(CAST({0} AS BIGINT) AS STRING), 'yyyyMMdd')"),
+    ),
+    (
+        "YYYYMMDDhhmmssToDateTime",
+        (1, "try_to_timestamp(CAST(CAST({0} AS BIGINT) AS STRING), "
+            "'yyyyMMddHHmmss')"),
+    ),
+    ("toTimezone", (2, "convert_timezone(current_timezone(), {1}, {0})")),
+    ("timezoneOf", (1, "current_timezone()")),
+    (
+        "nowInBlock",
+        lambda args: "current_timestamp()" if len(args) in (0, 1) else None,
+    ),
+    ("caseWithExpression", _case_with_expr_make),
+    (
+        "dateTime64ToSnowflake",
+        (1, "shiftleft(unix_millis({0}) - 1288834974657, 22)"),
+    ),
+    # ------------------------------------------------------------------
+    # Relative months, array shifts, sample moments and regex splices:
+    #
+    # * ``toRelativeMonthNum(t)`` → ``year·12 + month`` (CH's month serial).
+    # * ``arrayShiftLeft/Right(arr, n[, default])`` — elements shift by n,
+    #   vacated slots take ``default`` (CH fills the TYPE default; the NULL
+    #   encoding is the house convention, see arrayElement).  Index
+    #   arithmetic guards against element_at's negative-index-from-end
+    #   semantics.
+    # * ``simpleJSONHas(j, 'k')`` — top-level key membership via
+    #   ``json_object_keys`` (exact: present-with-null keys count, as CH).
+    # * ``skewSamp/kurtSamp`` — sample central moments over the sample
+    #   variance: m₃/varSamp^1.5 and m₄/varSamp² (ClickHouse's published
+    #   formulas), derived from Spark's population forms by the
+    #   (varPop/varSamp)^k correction.
+    # * ``replaceRegexpOne(h, p, r)`` — first-match-only regex replace via
+    #   regexp_extract(group 0) + instr splice.  Replacement backrefs
+    #   (\1/$1) are NOT supported (pass through by erroring at runtime is
+    #   avoided — the raw replacement is spliced literally); patterns with
+    #   lookarounds may splice at an earlier literal occurrence of the
+    #   matched text (documented).  Column-backed h only (multi-reference).
+    # * ``timeSlots(start, duration[, size])`` — array of period starts
+    #   covering [start, start+duration], default size 1800 s (CH's).
+    # * ``throwIf(cond[, msg])`` → ``assert_true`` (0 when the condition
+    #   is false, error when true — Spark's error carries the message).
+    ("toRelativeMonthNum", (1, "(year({0}) * 12 + month({0}))")),
+    ("arrayShiftLeft", _shift_make(True)),
+    ("arrayShiftRight", _shift_make(False)),
+    (
+        "simpleJSONHas",
+        (2, "coalesce(array_contains(json_object_keys({0}), {1}), false)"),
+    ),
+    # visitParam* is the legacy ClickHouse name for simpleJSON*
+    (
+        "visitParamHas",
+        (2, "coalesce(array_contains(json_object_keys({0}), {1}), false)"),
+    ),
+    (
+        "skewSamp",
+        (1, "(skewness({0}) * pow(var_pop({0}) / nullif(var_samp({0}), "
+            "0.0D), 1.5D))"),
+    ),
+    (
+        "kurtSamp",
+        (1, "((kurtosis({0}) + 3.0D) * pow(var_pop({0}) / "
+            "nullif(var_samp({0}), 0.0D), 2.0D))"),
+    ),
+    ("replaceRegexpOne", _replace_rx_one_make),
+    ("timeSlots", _time_slots_make),
+    ("throwIf", _throw_if_make),
+    # ------------------------------------------------------------------
+    # Week numbers, n-gram distances and JSON length:
+    #
+    # * ``toWeek(d[, mode])`` — CH mode 0 (default): Sunday-start weeks
+    #   numbered 0-53, week 1 = the first week containing a Sunday; days
+    #   before the year's first Sunday are week 0.  Derived arithmetically:
+    #   ``floor((dayofyear − 1 − daysBeforeFirstSunday) / 7) + 1`` where
+    #   daysBeforeFirstSunday = (8 − dayofweek(Jan 1)) mod 7.  Mode 3 =
+    #   ISO → ``weekofyear``.  Other modes pass through (error by name).
+    # * ``ngramDistance(a, b)`` / ``ngramSearch(h, n)`` — DISTINCT-set
+    #   4-gram variants (documented divergence: CH counts multisets):
+    #   distance = 1 − 2|A∩B|/(|A|+|B|), search = |N∩H|/|N| (1 = found).
+    #   Strings of 1-3 chars gram as themselves; both-empty → identical.
+    # * ``JSONLength(j)`` — array length or object key count (CH returns
+    #   the container's length; path-arg forms pass through).
+    ("toWeek", _to_week_make),
+    ("toYearWeek", _to_yearweek_make),
+    ("ngramDistance", _ngram_distance_make),
+    ("ngramSearch", _ngram_search_make),
+    (
+        "JSONLength",
+        (1, "coalesce(json_array_length({0}), size(json_object_keys({0})))"),
+    ),
+    # ------------------------------------------------------------------
+    # String/array/URL depth:
+    #
+    # * ``timestampSub(UNIT, n, ts)`` → ``timestampadd(UNIT, -(n), ts)``
+    #   (same shape as the existing ``dateSub`` rewrite).
+    # * ``toFixedString(s, n)`` → ``rpad(s, n, chr(0))`` — CH pads with NUL
+    #   bytes; divergence: CH *throws* when ``length(s) > n``, rpad truncates.
+    # * ``hasSubstr(a, b)`` — contiguous-subsequence test via an ``exists``
+    #   over every start offset (empty needle → true, as in CH).
+    # * ``stringJaccardIndex(a, b)`` — set-of-characters Jaccard.  CH
+    #   operates on the byte set, identical for ASCII text; both-empty
+    #   is defined as 1.0 (identical strings).
+    # * ``arrayFill`` / ``arrayReverseFill`` — fill-forward/backward: element
+    #   i becomes a[j] for the nearest j ≤ i (≥ i) where the predicate held,
+    #   original value if none.  The predicate is materialized once as a
+    #   boolean mask; the index scan is O(n²) per array by construction.
+    # * ``arraySplit`` / ``arrayReverseSplit`` — cut before (after) each
+    #   element where the predicate holds; boundary offsets drive ``slice``.
+    #   Empty input → ``[]`` (typed via ``slice(array(a), 1, 0)``).
+    # * ``URLHierarchy`` / ``URLPathHierarchy`` — progressive prefixes cut
+    #   after every ``/`` or ``?`` past the host (CH's definition); the
+    #   path-only variant drops protocol/host and the bare ``/`` root.
+    #
+    # Single-binding ``transform(array(x), v -> …)`` is used as a let-form
+    # so each derived value (mask, boundary list) is computed once; the
+    # *source* argument is still spliced 2–3× where noted, so the usual
+    # column-backed-argument caveat applies (same stance as ``intDiv``).
+    ("timestampSub", (3, "timestampadd({0}, -({1}), {2})")),
+    ("toFixedString", (2, "rpad({0}, {1}, chr(0))")),
+    # greatest(…, 1): when the needle is longer than the haystack the
+    # offset count would be ≤ 0, and Spark's sequence(1, 0) DESCENDS
+    # to [1, 0] — offset 0 then crashes slice.  One offset always
+    # exists under the floor; its shorter slice can never equal b.
+    (
+        "hasSubstr",
+        (2, "(CASE WHEN size({1}) = 0 THEN true ELSE exists(sequence(1, "
+            "greatest(size({0}) - size({1}) + 1, 1)), __i -> slice({0}, "
+            "__i, size({1})) = {1}) END)"),
+    ),
+    ("stringJaccardIndex", _string_jaccard_make),
+    ("arrayReverseFill", _fill_make(True)),
+    ("arrayFill", _fill_make(False)),
+    ("arrayReverseSplit", _split_make(True)),
+    ("arraySplit", _split_make(False)),
+    ("URLPathHierarchy", _url_hierarchy_make(True)),
+    ("URLHierarchy", _url_hierarchy_make(False)),
+    ("pointInPolygon", _point_in_polygon_make),
+    ("geohashEncode", _geohash_encode_make),
+    ("geohashDecode", _geohash_decode_make),
+    ("sumMapFiltered", _sum_map_filtered_make),
+    ("sumMap", _map_agg_make("__a + __q.v", "0")),
+    (
+        "minMap",
+        _map_agg_make(
             "CASE WHEN isnan(__a) OR __q.v < __a THEN __q.v ELSE __a END",
             "double('NaN')",
         ),
-    )
-    chunk = _rewrite_call(
-        chunk, "maxMap",
-        map_agg_make(
+    ),
+    (
+        "maxMap",
+        _map_agg_make(
             "CASE WHEN isnan(__a) OR __q.v > __a THEN __q.v ELSE __a END",
             "double('NaN')",
         ),
-    )
+    ),
+    ("entropy", _entropy_make),
+    ("gcd", _gcd_lcm_make(False)),
+    ("lcm", _gcd_lcm_make(True)),
+    ("queryStringAndFragment", _qsf_make),
+    # arrayShingles(a, n): consecutive length-n windows — [] when the
+    # array is shorter than n (typed via slice(array(a), 1, 0); the
+    # sequence guard avoids Spark's descending sequence(1, 0))
+    (
+        "arrayShingles",
+        (2, "(CASE WHEN size({0}) < ({1}) THEN slice(array({0}), 1, "
+            "0) ELSE transform(sequence(1, size({0}) - ({1}) + 1), "
+            "__i -> slice({0}, __i, {1})) END)"),
+    ),
+    # arrayPartialSort(limit, arr): first `limit` elements sorted,
+    # remainder in UNSPECIFIED order (CH docs) — a full sort is a valid
+    # (and deterministic) refinement
+    (
+        "arrayPartialReverseSort",
+        (2, "array_sort({1}, (__x, __y) -> CASE WHEN __x > __y THEN -1 "
+            "WHEN __x < __y THEN 1 ELSE 0 END)"),
+    ),
+    ("arrayPartialSort", (2, "array_sort({1})")),
+    # ------------------------------------------------------------------
+    # ``IPv4NumToString(n)`` → dotted quad via octet math;
+    # ``IPv4StringToNum(s)`` → big-endian octet fold.  Both stay in integer
+    # built-ins (no UDF) and agree with ClickHouse for the full u32 range.
+    ("IPv4CIDRToRange", _cidr_to_range),
+    ("IPv4NumToString", _num_to_str),
+    (
+        "IPv4StringToNum",
+        (1, "(CAST(split({0}, '\\\\.')[0] AS BIGINT) * 16777216 + "
+            "CAST(split({0}, '\\\\.')[1] AS BIGINT) * 65536 + "
+            "CAST(split({0}, '\\\\.')[2] AS BIGINT) * 256 + "
+            "CAST(split({0}, '\\\\.')[3] AS BIGINT))"),
+    ),
+    (
+        "isIPv4String",
+        lambda a: f"(({a[0]}) RLIKE '^({_OCTET}\\\\.){{3}}{_OCTET}$')"
+        if len(a) == 1 else None,
+    ),
+    (
+        "isIPv6String",
+        lambda a: f"(({a[0]}) RLIKE '{_IP6}')" if len(a) == 1 else None,
+    ),
+    # ------------------------------------------------------------------
+    # ``extractURLParameter(url, name)`` → ``parse_url(url, 'QUERY',
+    # name)`` — the key argument moves from second position to third, after
+    # the part selector (arity 2 only; anything else passes through).
+    # the key argument moves from second position to third, after the part
+    # selector (arity 2 only; anything else passes through)
+    ("extractURLParameter", (2, "try_parse_url({0}, 'QUERY', {1})")),
+    # ------------------------------------------------------------------
+    # ``numbers(N)`` / ``numbers(offset, N)`` (ClickHouse's integer table
+    # function, column ``number``) → a ``range()`` subquery exposing the same
+    # column name.
+    ("numbers", _numbers_make),
+])
 
-    def entropy_make(args):
-        # entropy(x): Shannon entropy (log2) of the group's value
-        # distribution — exact over the collected group, O(d·n) like
-        # topK; relational.value_entropy is the shuffle-based scale path.
-        if len(args) != 1:
-            return None
-        (x,) = args
-        cnt = "size(filter(__l, __e -> __e <=> __v))"
-        return (
-            f"element_at(transform(array(collect_list({x})), __l -> "
-            f"aggregate(array_distinct(__l), CAST(0 AS DOUBLE), "
-            f"(__a, __v) -> __a - (CAST({cnt} AS DOUBLE) / size(__l)) "
-            f"* log2(CAST({cnt} AS DOUBLE) / size(__l)))), 1)"
-        )
-
-    chunk = _rewrite_call(chunk, "entropy", entropy_make)
-
-    def gcd_lcm_make(is_lcm):
-        # Euclid as a bounded aggregate fold — 96 iterations covers the
-        # worst case for 64-bit inputs (consecutive Fibonacci numbers
-        # need ~90 steps); converged state is a fixpoint, so extra
-        # iterations are no-ops.  gcd(0, 0) = 0, like CH.  Both args
-        # spliced twice (column-backed caveat); lcm divides BEFORE
-        # multiplying to keep intermediate products in range.
-        def make(args):
-            if len(args) != 2:
-                return None
-            a, b = args
-            g = (
-                f"(aggregate(sequence(1, 96), named_struct("
-                f"'a', CAST(abs({a}) AS BIGINT), "
-                f"'b', CAST(abs({b}) AS BIGINT)), "
-                f"(__s, __i) -> IF(__s.b = 0, __s, named_struct("
-                f"'a', __s.b, 'b', __s.a % __s.b)))).a"
-            )
-            if not is_lcm:
-                return g
-            return (
-                f"(CASE WHEN ({a}) = 0 OR ({b}) = 0 THEN CAST(0 AS BIGINT) "
-                f"ELSE (CAST(abs({a}) AS BIGINT) DIV {g}) "
-                f"* CAST(abs({b}) AS BIGINT) END)"
-            )
-
-        return make
-
-    chunk = _rewrite_call(chunk, "gcd", gcd_lcm_make(False))
-    chunk = _rewrite_call(chunk, "lcm", gcd_lcm_make(True))
-
-    def qsf_make(args):
-        # queryStringAndFragment(url): 'query#fragment' — empty string
-        # when neither part exists (CH's convention)
-        if len(args) != 1:
-            return None
-        (u,) = args
-        q = f"try_parse_url({u}, 'QUERY')"
-        r = f"try_parse_url({u}, 'REF')"
-        return (
-            f"concat(coalesce({q}, ''), CASE WHEN {r} IS NOT NULL "
-            f"THEN concat('#', {r}) ELSE '' END)"
-        )
-
-    chunk = _rewrite_call(chunk, "queryStringAndFragment", qsf_make)
-
-    def shingles_make(args):
-        # arrayShingles(a, n): consecutive length-n windows — [] when the
-        # array is shorter than n (typed via slice(array(a), 1, 0); the
-        # sequence guard avoids Spark's descending sequence(1, 0))
-        if len(args) != 2:
-            return None
-        a, n = args
-        return (
-            f"(CASE WHEN size({a}) < ({n}) THEN slice(array({a}), 1, 0) "
-            f"ELSE transform(sequence(1, size({a}) - ({n}) + 1), "
-            f"__i -> slice({a}, __i, {n})) END)"
-        )
-
-    chunk = _rewrite_call(chunk, "arrayShingles", shingles_make)
-
-    def partial_sort_make(desc):
-        # arrayPartialSort(limit, arr): first `limit` elements sorted,
-        # remainder in UNSPECIFIED order (CH docs) — a full sort is a
-        # valid (and deterministic) refinement
-        def make(args):
-            if len(args) != 2:
-                return None
-            n, a = args
-            if desc:
-                return (
-                    f"array_sort({a}, (__x, __y) -> CASE WHEN __x > __y "
-                    f"THEN -1 WHEN __x < __y THEN 1 ELSE 0 END)"
-                )
-            return f"array_sort({a})"
-
-        return make
-
-    chunk = _rewrite_call(
-        chunk, "arrayPartialReverseSort", partial_sort_make(True)
-    )
-    chunk = _rewrite_call(chunk, "arrayPartialSort", partial_sort_make(False))
-    return chunk
+# every call table, in pipeline order (the name-uniqueness test and
+# scripts/fuzz_dialect.py read their names from here)
+_CALL_TABLES = (_EARLY_CALLS, _CALLS, _LITERAL_CALLS, _WRAP_CALLS)
 
 
 _MOD_BASE_PAT = re.compile(
@@ -7806,6 +6936,14 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
     rewrites (so a ``'...'`` inside an argument list can't confuse paren or
     comma matching) and restored verbatim at the end.
 
+    Pipeline: zero-arg names, then the clause and join passes, then the
+    call tables in order — ``_EARLY_CALLS``, the bracket-syntax pass,
+    ``_CALLS``, ``_LITERAL_CALLS`` — then the ``empty()`` sites,
+    ``_WRAPS`` and ``_RENAMES``.  Each call row runs through
+    :func:`_rewrite_call`; the row order is load-bearing where one row's
+    output is another row's input (``regexpExtract`` emits ``extract``,
+    ``sumMapFiltered`` emits ``sumMap``).
+
     When ``spark`` is given, ``empty()``/``notEmpty()`` calls are resolved
     schema-aware: the default ``length()`` form is tried first, and if the
     statement fails analysis the translator retries with ``size()`` at
@@ -7835,6 +6973,8 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
 
     for src, dst in _ZERO_ARG:
         chunk = chunk.replace(src, dst)
+    # ClickHouse's zero-arg count() — Spark requires count(*)
+    chunk = _COUNT_STAR_PAT.sub("count(*)", chunk)
     chunk = _rewrite_scalar_with(chunk)
     if where_aliases:
         chunk = _rewrite_where_aliases(chunk)
@@ -7847,44 +6987,19 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
     chunk = _rewrite_paste_join(chunk)
     chunk = _rewrite_asof_join(chunk)
     chunk = _rewrite_any_join(chunk, spark)
-    chunk = _rewrite_int_div(chunk)
-    chunk = _rewrite_if_combinators(chunk)
-    chunk = _rewrite_lambda_array_fns(chunk)
-    chunk = _rewrite_multi_if(chunk)
-    chunk = _rewrite_split_by_char(chunk)
-    chunk = _rewrite_array_string_concat(chunk)
-    chunk = _rewrite_curried_quantiles(chunk)
-    chunk = _rewrite_curried_uniq_up_to(chunk)
-    chunk = _rewrite_window_funnel(chunk)
+    chunk = _apply_calls(chunk, _EARLY_CALLS)
     chunk = _rewrite_array_literals(chunk)
-    chunk = _rewrite_json_extract(chunk)
     chunk = _rewrite_cast_types(chunk)
-    chunk = _rewrite_moving_and_maps(chunk)
-    chunk = _rewrite_misc_calls(chunk)
-    chunk = _rewrite_batch27_calls(chunk)
-    chunk = _rewrite_batch26_calls(chunk)
-    chunk = _rewrite_batch25_calls(chunk)
-    chunk = _rewrite_batch24_calls(chunk)
-    chunk = _rewrite_batch23_calls(chunk)
-    chunk = _rewrite_batch22_calls(chunk)
-    chunk = _rewrite_batch21_calls(chunk)
-    chunk = _rewrite_batch20_aggs(chunk)
-    chunk = _rewrite_batch20_calls(chunk)
-    chunk = _rewrite_batch19_calls(chunk)
-    chunk = _rewrite_batch18_calls(chunk)
-    chunk = _rewrite_batch16_calls(chunk)
-    chunk = _rewrite_ipv4(chunk)
-    chunk = _rewrite_extract_url_parameter(chunk)
-    chunk = _rewrite_numbers(chunk)
+    _RAND_CONSTANT_SITE[0] = 0
+    chunk = _apply_calls(chunk, _CALLS)
     chunk = _rewrite_literal_aware(chunk, literals)
     n_empty = len(_EMPTY_SITE_PAT.findall(chunk))
 
     def finish(flags: list[bool]) -> str:
         c = _wrap_empty_sites(chunk, flags) if n_empty else chunk
-        for name, prefix, suffix in _WRAPS:
-            c = _wrap(c, name, prefix, suffix)
-        for src, dst in _RENAMES:
-            c = re.sub(r"\b" + src + r"\(", dst + "(", c)
+        c = _apply_calls(c, _WRAP_CALLS)
+        for pat, dst in _RENAME_PATS:
+            c = pat.sub(dst, c)
         return re.sub(
             "\x00(\\d+)\x00", lambda m: f"'{literals[int(m.group(1))]}'", c
         )

@@ -9,9 +9,13 @@ precedent applies — IF the staleness is provably cosmetic.  This script
 produces that proof:
 
   mode ``record``: construct every registry entry's DataFrame at the
-  given sf dir with ``translate_clickhouse_sql`` wrapped by a recorder;
-  dump every (entry, input SQL, translated SQL) triple to JSON.  Run it
-  once at HEAD and once in a worktree at the last proven commit.
+  given sf dir with ``translate_clickhouse_sql`` wrapped by a recorder —
+  in ``dialect`` AND in every package module that bound the name at
+  import (``api``, ``operators.mutations``), so API-routed and mutation
+  translations are recorded too; dump every (entry, input SQL,
+  translated SQL) triple to JSON.  The record fails when a swept
+  ``REQUIRED`` entry has no recording.  Run it once at HEAD and once in
+  a worktree at the last proven commit.
 
   mode ``diff``: byte-compare the two recordings.  Identical inputs ->
   identical outputs means the historical driver greens still prove the
@@ -32,6 +36,29 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+# entries whose translations go through module-level aliases of
+# translate_clickhouse_sql (api.py, operators/mutations.py): a recording
+# without them means the alias patching missed a path
+REQUIRED = ("dialect_final", "api_query_roundtrip")
+
+
+def _patch_aliases(real, recorder) -> list[tuple[object, str]]:
+    """Point every module-level binding of ``real`` in the package at
+    ``recorder``; modules imported later bind the patched ``dialect``
+    attribute.  Returns the (module, name) pairs to restore."""
+    patched = []
+    for mod_name, mod in list(sys.modules.items()):
+        if mod is None or not mod_name.startswith(
+            "clickhouse_flatfile_tool_spark"
+        ):
+            continue
+        for name, value in list(vars(mod).items()):
+            if value is real:
+                setattr(mod, name, recorder)
+                patched.append((mod, name))
+    return patched
+
+
 def record(out_path: str, sf_dir: str, only: list[str]) -> int:
     from clickhouse_flatfile_tool_spark import dialect, get_spark
 
@@ -44,7 +71,7 @@ def record(out_path: str, sf_dir: str, only: list[str]) -> int:
         recorded.setdefault(current[0], []).append([sql, out])
         return out
 
-    dialect.translate_clickhouse_sql = recorder
+    patched = _patch_aliases(real, recorder)
     import __spark_entry__ as entrymod
 
     spark = get_spark(app_name="cfts-dialect-equiv")
@@ -58,7 +85,8 @@ def record(out_path: str, sf_dir: str, only: list[str]) -> int:
             qs[name](spark, sf_dir)  # construction triggers translation
         except Exception as e:  # noqa: BLE001 — record, don't abort the sweep
             errors[name] = f"{type(e).__name__}: {e}"
-    dialect.translate_clickhouse_sql = real
+    for mod, name in patched:
+        setattr(mod, name, real)
     payload = {
         "sf_dir": sf_dir,
         "translations": recorded,
@@ -71,6 +99,10 @@ def record(out_path: str, sf_dir: str, only: list[str]) -> int:
         f"recorded {n} translations across {len(recorded)} entries -> "
         f"{out_path}; construct errors: {len(errors)}"
     )
+    missing = [e for e in REQUIRED if e in names and e not in recorded]
+    if missing:
+        print(f"FAILED: no translation recorded for {', '.join(missing)}")
+        return 1
     return 0
 
 

@@ -9,6 +9,9 @@ the class extinct as new rewrites land:
 
   1. SELF-COMPOSITION: every call-rewritten name f, f(f(f(lit))) 3 deep
      — translate, bound the output size, Spark-ANALYZE (no execution).
+     The names are the rows of the dialect's call tables (_EARLY_CALLS,
+     _CALLS, _LITERAL_CALLS) and _WRAPS; a curried row is probed in its
+     curried shape f(p)(lit).
   2. PAIRS: f(g(lit)) over every pair of unary-working seeds.
 
 Flags: translate exceptions other than the guard's own ValueError,
@@ -45,24 +48,25 @@ LITS = ["'abcdefgh'", "12345", "1.5", "('a', 'b')"]
 
 
 def rewrite_names() -> list[str]:
-    """Record every name the rewrite chain registers by RUNNING it once
-    with a spy on _rewrite_call — no per-function gating exists, so one
-    translate visits every registration, including loop/f-string/dict
-    forms a static regex misses (the r9 review found the single-line
-    regex saw 238 of the 404 registered names)."""
-    recorded: set[str] = set()
-    orig = _dialect._rewrite_call
+    """Every name the dialect rewrites, read from its tables: the call
+    tables (curried and literal-aware rows included) and _WRAPS."""
+    return sorted(
+        {name for table in _dialect._CALL_TABLES for name, _, _ in table}
+    )
 
-    def spy(chunk, name, make):
-        recorded.add(name)
-        return orig(chunk, name, make)
 
-    _dialect._rewrite_call = spy
-    try:
-        tr("SELECT 1")
-    finally:
-        _dialect._rewrite_call = orig
-    return sorted(recorded)
+def call_shapes(name: str) -> list[str]:
+    """``name(...)`` shapes with one ``{}`` argument slot — the curried
+    rows are probed as ``name(p)(arg)``."""
+    forms = {
+        form
+        for table in _dialect._CALL_TABLES
+        for n, _, form in table
+        if n == name
+    }
+    if "curried" in forms:
+        return [f"{name}(0.5)({{}})", f"{name}(1)({{}})"]
+    return [f"{name}({{}})"]
 
 
 def main() -> int:
@@ -79,16 +83,18 @@ def main() -> int:
             return False, str(e).split("\n")[0][:140]
 
     issues: list[tuple] = []
+    # (call shape with a {} slot, literal) per name whose depth-1 call
+    # analyzes
     seeds: list[tuple[str, str]] = []
     for n in names:
-        for lit in LITS:
+        for shape, lit in itertools.product(call_shapes(n), LITS):
             try:
-                t1 = tr(f"SELECT {n}({lit}) AS v")
+                t1 = tr(f"SELECT {shape.format(lit)} AS v")
             except Exception:  # noqa: BLE001
                 continue
             ok, _ = analyzes(t1)
             if ok:
-                seeds.append((n, lit))
+                seeds.append((shape, lit))
                 break
 
     # non-guard translate-time ValueErrors are reported but SOFT: several
@@ -103,7 +109,7 @@ def main() -> int:
 
     if mode != "--pairs-only":
         for n, lit in seeds:
-            expr = f"{n}({n}({n}({lit})))"
+            expr = n.format(n.format(n.format(lit)))
             try:
                 t3 = tr(f"SELECT {expr} AS v")
             except ValueError as e:
@@ -134,7 +140,7 @@ def main() -> int:
         for f, g, hi in sorted(triples):
             h, lit = seeds[hi]
             try:
-                t = tr(f"SELECT {f}({g}({h}({lit}))) AS v")
+                t = tr(f"SELECT {f.format(g.format(h.format(lit)))} AS v")
             except ValueError as e:
                 if classify_ve(e) == "other":
                     soft.append((f, g, h, lit, "TRANSLATE-VE", str(e)[:120]))
@@ -157,7 +163,7 @@ def main() -> int:
     if pairs:
         for f, (g, lit) in pairs:
             try:
-                t = tr(f"SELECT {f}({g}({lit})) AS v")
+                t = tr(f"SELECT {f.format(g.format(lit))} AS v")
             except ValueError as e:
                 if classify_ve(e) == "other":
                     soft.append((f, g, lit, "TRANSLATE-VE", str(e)[:120]))

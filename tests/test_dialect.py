@@ -3638,3 +3638,59 @@ def test_rewrite_expansion_guard_scales_with_entry_size():
     assert len(sql) > _MAX_REWRITE_CHARS  # bigger than the old hard cap
     out = tr(sql)  # must NOT raise ValueError
     assert " DIV " in out and inlist in out
+
+
+def test_every_rewritten_name_has_one_table_row():
+    """One row per ClickHouse name across the call tables, _WRAPS and
+    _RENAMES: a second row for a name is either dead (an earlier row
+    rewrites every valid call) or fires only at arities ClickHouse
+    rejects.  position/positionUTF8 have one row each — the 3-arg locate
+    form and the instr rename of every other arity."""
+    from collections import Counter
+
+    from clickhouse_flatfile_tool_spark import dialect
+
+    names = [n for table in dialect._CALL_TABLES for n, _, _ in table]
+    names += [src for src, _ in dialect._RENAMES]
+    dup = sorted(n for n, c in Counter(names).items() if c > 1)
+    assert dup == []
+    assert tr("SELECT position(h, 'a'), positionUTF8(h, 'a', 2)") == (
+        "SELECT instr(h, 'a'), locate('a', h, 2)"
+    )
+
+
+def test_to_interval_week_valid_arity():
+    assert tr("SELECT ts + toIntervalWeek(2) AS w FROM t") == (
+        "SELECT ts + make_interval(0, 0, (2), 0, 0, 0, 0) AS w FROM t"
+    )
+
+
+def test_fuzz_names_cover_wraps_and_curried_rewrites():
+    """scripts/fuzz_dialect.py reads its names from the tables, so the
+    _WRAPS rows and the curried rows get self-composition seeds too."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).parents[1] / "scripts" / "fuzz_dialect.py"
+    spec = importlib.util.spec_from_file_location("fuzz_dialect", path)
+    fuzz = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fuzz)
+    names = set(fuzz.rewrite_names())
+    assert {"toStartOfDay", "uniqUpTo", "quantileMerge"} <= names
+
+
+def test_same_name_nested_in_subquery_translates():
+    """-If and curried rows run through the one engine innermost-first: a
+    same-name call inside the outer call's arguments (a scalar subquery)
+    is translated too, not copied through untranslated."""
+    out = tr("SELECT sumIf(x, y > (SELECT sumIf(z, w > 0) FROM u)) FROM t")
+    assert out == (
+        "SELECT sum(CASE WHEN y > (SELECT sum(CASE WHEN w > 0 THEN z END) "
+        "FROM u) THEN x END) FROM t"
+    )
+    out = tr(
+        "SELECT quantile(0.5)(x - (SELECT quantile(0.5)(y) FROM u)) FROM t"
+    )
+    assert out == (
+        "SELECT percentile(x - (SELECT percentile(y, 0.5) FROM u), 0.5) FROM t"
+    )
