@@ -1208,12 +1208,22 @@ def query_profile(
     (collected on the executors during the SAME pass — no second job,
     no driver materialization of the result), and the physical plan.
     The result itself is discarded (profiling is about cost, not data —
-    pair with :func:`query` to fetch rows)."""
+    pair with :func:`query` to fetch rows).
+
+    ``codegen_compiles`` is the number of generated classes Spark compiled
+    (Janino) while the statement ran — the analog of ClickHouse's
+    ``CompiledExpressionCacheMisses``; 0 means every class came from the
+    codegen cache.  It is a delta of the JVM-wide ``CodegenMetrics``
+    counter, so statements running concurrently in the same JVM share it
+    and each sees the others' compiles."""
     import time as _time
 
     from pyspark.sql import Observation
 
     try:
+        metrics = spark._jvm.org.apache.spark.metrics.source  # noqa: SLF001
+        compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+        c0 = compiles.getCount()
         df, translated, _ = _select_frame(spark, _prepare(spark, sql, params))
         obs = Observation()
         observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -1225,6 +1235,7 @@ def query_profile(
             "translated_sql": translated,
             "result_rows": obs.get["rows"],
             "query_duration_ms": round(wall * 1000.0, 1),
+            "codegen_compiles": compiles.getCount() - c0,
             "physical_plan": df._jdf.queryExecution().executedPlan().toString(),
         }
     except Exception as e:  # noqa: BLE001

@@ -182,6 +182,11 @@ def test_query_profile_reports_rows_time_plan(spark):
     assert out["query_duration_ms"] > 0
     assert "count" in out["translated_sql"]  # uniqExact -> count(DISTINCT
     assert "qprof_t" in out["physical_plan"] or "Scan" in out["physical_plan"]
+    # a literal no other statement uses is inlined into a fresh class; the
+    # exact repeat finds every class in the codegen cache
+    fresh = "SELECT id * 7907 + g AS x FROM qprof_t WHERE g < 2"
+    assert api.query_profile(spark, fresh)["codegen_compiles"] >= 1
+    assert api.query_profile(spark, fresh)["codegen_compiles"] == 0
     bad = api.query_profile(spark, "SELECT definitely_not_a_col FROM qprof_t")
     assert not bad["success"]
 

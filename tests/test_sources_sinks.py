@@ -345,6 +345,25 @@ def test_port_retry_session_confs(spark):
     assert s2.sparkContext is not None
 
 
+def test_codegen_cache_holds_session_working_set(spark):
+    """The session keeps more generated classes than Spark's default 100, so
+    a second sweep over 150 plan shapes reuses every class instead of
+    recompiling the ones the LRU evicted."""
+    from clickhouse_flatfile_tool_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def sweep():
+        c0 = compiles.getCount()
+        for i in range(150):
+            spark.range(10).selectExpr(f"id * {i} + 7817 AS x").collect()
+        return compiles.getCount() - c0
+
+    assert sweep() > 0
+    assert sweep() == 0
+
+
 def test_csv_rfc4180_quoting(spark, tmp_path):
     """Quoted fields with embedded separators and doubled quotes (the
     csv-parse defaults the reference relies on, server.js:478-480)."""
