@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_flatfile_tool_spark.dialect import (
+    _split_top_comma,
     bind_parameters,
     drop_dictionary,
     drop_join_table,
@@ -698,8 +699,8 @@ def _create_table(
             return {"success": True, "table": name, "created": False}
         raise ValueError(f"table {name!r} already exists")
     fields = []
-    for coldef in _split_top_level_commas(col_body):
-        parts = coldef.strip().split(None, 1)
+    for coldef in filter(None, _split_top_comma(col_body)):
+        parts = coldef.split(None, 1)
         if len(parts) != 2:
             raise ValueError(f"CREATE TABLE: cannot parse column {coldef!r}")
         cname, ctype = parts[0].strip("`"), parts[1].strip()
@@ -749,22 +750,6 @@ def _register_engine(
         # probe the wrong key); it stays unregistered and errors by name.
         if len(args) == 3:
             register_join_table(name, name, args[2])
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    """Split on commas outside any parenthesis nesting (column defs can
-    carry parametrized types like Decimal(10, 2))."""
-    out, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-    out.append(s[start:])
-    return [p for p in out if p.strip()]
 
 
 def _insert_into_view(

@@ -622,35 +622,93 @@ def _split_literals(sql: str) -> list[tuple[bool, str]]:
     return out
 
 
-def _match_paren(chunk: str, start: int) -> int:
-    """Index just past the ``)`` closing the ``(`` at ``start``."""
-    depth, j = 1, start + 1
-    while j < len(chunk) and depth:
-        if chunk[j] == "(":
+def _mask_literals(sql: str, split=_split_literals) -> tuple[str, list[str]]:
+    """``sql`` with each string literal replaced by a ``\\x00<i>\\x00``
+    placeholder, and the literals in placeholder order."""
+    literals: list[str] = []
+    masked: list[str] = []
+    for is_lit, seg in split(sql):
+        if is_lit:
+            masked.append(f"\x00{len(literals)}\x00")
+            literals.append(seg)
+        else:
+            masked.append(seg)
+    return "".join(masked), literals
+
+
+def _unmask_literals(s: str, literals: list[str]) -> str:
+    """Put the literals :func:`_mask_literals` took out back into ``s``."""
+    return re.sub(
+        "\x00(\\d+)\x00", lambda m: f"'{literals[int(m.group(1))]}'", s
+    )
+
+
+_BRACKETS = r"`[^`]*`|[(\[]|[)\]]"
+
+
+@functools.lru_cache(maxsize=None)
+def _top_level_pat(words: tuple[str, ...]) -> re.Pattern:
+    """:func:`_top_level`'s token pattern, compiled once per word tuple."""
+    alts = [
+        rf"(?<![\w.])(?i:{w})(?!\w)" if w[0].isalpha() else w for w in words
+    ]
+    return re.compile("|".join([_BRACKETS, *alts]))
+
+
+def _top_level(chunk: str, words: tuple[str, ...] = (), start: int = 0):
+    """The one top-level scanner.  Yields ``(index, text)`` for every
+    occurrence of ``words`` (regex fragments: keywords, or ``","``) at
+    depth 0 from ``start``, then ``(end, None)``.  The first match is
+    ``next(_top_level(...))``.  Rules, the same for every caller:
+
+    * depth counts ``(`` and ``[``;
+    * masked string literals (``\\x00<i>\\x00``) and backtick identifiers
+      are opaque — nothing inside one is a bracket, comma or keyword;
+    * a keyword matches case-insensitively; it must not be preceded by
+      ``[\\w.]`` (``t.where`` is a column) or followed by ``\\w``;
+    * a scan that starts inside a block stops at the closer that ends
+      that block: ``end`` is that closer's index, else ``len(chunk)``."""
+    depth = 0
+    for m in _top_level_pat(words).finditer(chunk, start):
+        tok = m.group()
+        if tok in "([":
             depth += 1
-        elif chunk[j] == ")":
+        elif tok in ")]":
+            if not depth:
+                yield m.start(), None
+                return
             depth -= 1
-        j += 1
-    return j
+        elif not depth and tok[0] != "`":
+            yield m.start(), tok
+    yield len(chunk), None
+
+
+def _match_bracket(chunk: str, i: int) -> int:
+    """The partner of the bracket at ``i``: for an opener, the index just
+    past its closer (``len(chunk)`` when unclosed); for a closer, the
+    index of its opener (0 when unopened)."""
+    if chunk[i] in "([":
+        end, _ = next(_top_level(chunk, (), i + 1))
+        return min(end + 1, len(chunk))
+    depth = 0
+    for m in reversed(list(_top_level_pat(()).finditer(chunk, 0, i))):
+        if m.group() in ")]":
+            depth += 1
+        elif m.group() in "([":
+            if not depth:
+                return m.start()
+            depth -= 1
+    return 0
 
 
 def _split_top_comma(args: str) -> list[str]:
-    """Split on commas at paren AND bracket depth 0 (argument
-    boundaries) — a ClickHouse ``[1, 2, 3]`` array literal argument must
-    stay one argument."""
-    parts, depth, buf = [], 0, []
-    for ch in args:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf).strip())
-    return parts
+    """Split on top-level commas (argument boundaries), each part
+    stripped — a ClickHouse ``[1, 2, 3]`` array literal argument stays
+    one argument."""
+    cuts = [i for i, tok in _top_level(args, (",",)) if tok]
+    return [
+        args[a + 1 : b].strip() for a, b in zip([-1, *cuts], [*cuts, len(args)])
+    ]
 
 
 # Ceiling on a statement chunk's size after any single rewrite splice.
@@ -719,13 +777,13 @@ def _rewrite_call(chunk: str, name: str, make, form: str = "args") -> str:
         if not matches:
             return chunk
         m = matches[-1]
-        end = _match_paren(chunk, m.end() - 1)
+        end = _match_bracket(chunk, m.end() - 1)
         inner = chunk[m.end() : end - 1]
         if form == "raw":
             repl = make(inner)
         elif form == "curried":
             if end < len(chunk) and chunk[end] == "(":
-                x_end = _match_paren(chunk, end)
+                x_end = _match_bracket(chunk, end)
                 repl = make(inner, chunk[end + 1 : x_end - 1])
                 end = x_end
             else:
@@ -735,7 +793,7 @@ def _rewrite_call(chunk: str, name: str, make, form: str = "args") -> str:
             repl = None
             if ov:
                 ov_end = (
-                    _match_paren(chunk, ov.end() - 1)
+                    _match_bracket(chunk, ov.end() - 1)
                     if ov.group(1) == "("
                     else ov.end()
                 )
@@ -1589,7 +1647,7 @@ def _rewrite_any_join(chunk: str, spark) -> str:
             return chunk
         table = tm.group(1)
         alias = tm.group(2) or tm.group(3) or table
-        cond_end = _asof_condition_span(chunk, tm.end())
+        cond_end, _ = next(_top_level(chunk, _ASOF_CLAUSE_END, tm.end()))
         cond = chunk[tm.end() : cond_end]
         keys: list[str] | None = []
         for part in re.split(r"(?i)\bAND\b", cond):
@@ -1624,6 +1682,12 @@ def _rewrite_any_join(chunk: str, spark) -> str:
     return chunk
 
 
+_WHERE_ALIAS_END = (
+    "GROUP", "ORDER", "LIMIT", "HAVING", "WINDOW", "UNION", "SETTINGS",
+    "FORMAT", "INTO",
+)
+
+
 def _rewrite_where_aliases(chunk: str) -> str:
     """ClickHouse lets WHERE reference SELECT-list aliases (`SELECT x + 1
     AS y … WHERE y > 0`) — aliases substitute everywhere in CH's
@@ -1633,80 +1697,33 @@ def _rewrite_where_aliases(chunk: str) -> str:
     clause (only there — Spark itself resolves aliases in GROUP BY and
     ORDER BY).  Matches CH's alias-shadows-column semantics; plain
     column passthroughs (`col AS alias`) substitute harmlessly."""
-    sm = re.match(r"(?is)^(\s*SELECT\s+)(.*)$", chunk)
+    sm = re.match(r"(?is)^\s*SELECT\s+", chunk)
     if not sm:
         return chunk
-    # find the top-level FROM that ends the select list
-    body = sm.group(2)
-    depth = 0
-    from_at = None
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and body[i : i + 4].upper() == "FROM" and (
-            i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")
-        ) and (
-            i + 4 == len(body)
-            or not (body[i + 4].isalnum() or body[i + 4] == "_")
-        ):
-            from_at = i
-            break
-        i += 1
-    if from_at is None:
+    # the top-level FROM ends the select list
+    from_at, w = next(_top_level(chunk, ("FROM",), sm.end()))
+    if w is None:
         return chunk
     aliases = []
-    for item in _split_top_comma(body[:from_at]):
+    for item in _split_top_comma(chunk[sm.end() : from_at]):
         im = re.match(r"(?is)^(.+?)\s+AS\s+(\w+)\s*$", item.strip())
         if im and not re.fullmatch(r"(?is)\w+", im.group(1).strip()):
             aliases.append((im.group(1).strip(), im.group(2)))
     if not aliases:
         return chunk
     # top-level WHERE span within the rest of the statement
-    rest = body[from_at:]
-    wm = None
-    depth = 0
-    for j in range(len(rest)):
-        ch = rest[j]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and rest[j : j + 5].upper() == "WHERE" and (
-            j == 0 or not (rest[j - 1].isalnum() or rest[j - 1] == "_")
-        ):
-            wm = j
-            break
-    if wm is None:
+    w_at, w = next(_top_level(chunk, ("WHERE",), from_at))
+    if w is None:
         return chunk
-    w_end = len(rest)
-    depth = 0
-    k = wm + 5
-    while k < len(rest):
-        ch = rest[k]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and re.match(
-            r"(?i)(GROUP|ORDER|LIMIT|HAVING|WINDOW|UNION|SETTINGS|FORMAT"
-            r"|INTO)\b",
-            rest[k:],
-        ) and not (rest[k - 1].isalnum() or rest[k - 1] == "_"):
-            w_end = k
-            break
-        k += 1
-    where = rest[wm:w_end]
+    w_end, _ = next(_top_level(chunk, _WHERE_ALIAS_END, w_at + len(w)))
+    where = chunk[w_at:w_end]
     for expr, alias in aliases:
         where = re.sub(
             r"\b" + re.escape(alias) + r"\b",
             lambda _m, e=expr: f"({e})",
             where,
         )
-    return sm.group(1) + body[:from_at] + rest[:wm] + where + rest[w_end:]
+    return chunk[:w_at] + where + chunk[w_end:]
 
 
 def _rewrite_scalar_with(chunk: str) -> str:
@@ -1723,23 +1740,9 @@ def _rewrite_scalar_with(chunk: str) -> str:
     m = re.match(r"(?is)^(\s*)WITH\s+", chunk)
     if not m:
         return chunk
-    # find the top-level SELECT that ends the WITH item list
-    i = m.end()
-    depth = 0
-    items_end = None
-    while i < len(chunk):
-        ch = chunk[i]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and chunk[i : i + 6].upper() == "SELECT" and (
-            i + 6 == len(chunk) or not (chunk[i + 6].isalnum() or chunk[i + 6] == "_")
-        ):
-            items_end = i
-            break
-        i += 1
-    if items_end is None:
+    # the top-level SELECT ends the WITH item list
+    items_end, w = next(_top_level(chunk, ("SELECT",), m.end()))
+    if w is None:
         return chunk
     items = _split_top_comma(chunk[m.end() : items_end].strip())
     pairs = []
@@ -2259,14 +2262,7 @@ def _rewrite_array_literals(chunk: str) -> str:
                 # position, but Spark can't parse `IN array(...)` — emit a
                 # plain parenthesized value list instead
                 in_list = word == "IN"
-        # find the matching ']' at bracket/paren depth 0
-        depth, e = 1, i + 1
-        while e < len(chunk) and depth:
-            if chunk[e] in "([":
-                depth += 1
-            elif chunk[e] in ")]":
-                depth -= 1
-            e += 1
+        e = _match_bracket(chunk, i)
         inner = chunk[i + 1 : e - 1]
         if is_literal:
             if in_list:
@@ -2291,17 +2287,7 @@ def _rewrite_array_literals(chunk: str) -> str:
             i = s
             continue
         if chunk[s] in ")]":
-            closer = chunk[s]
-            opener = "(" if closer == ")" else "["
-            d = 1
-            s -= 1
-            while s >= 0 and d:
-                if chunk[s] == closer:
-                    d += 1
-                elif chunk[s] == opener:
-                    d -= 1
-                s -= 1
-            s += 1
+            s = _match_bracket(chunk, s)
         # prefix identifier (function name / qualified column)
         while s > 0 and (chunk[s - 1].isalnum() or chunk[s - 1] in "_."):
             s -= 1
@@ -2311,60 +2297,31 @@ def _rewrite_array_literals(chunk: str) -> str:
     return chunk
 
 
-def _find_top_level_word(chunk: str, words: tuple[str, ...], start: int = 0):
-    """First occurrence of any of ``words`` at paren depth 0 from ``start``
-    (case-insensitive, word-bounded).  Returns (index, word) or (None, None).
-    Depth tracking keeps a WHERE inside a subquery — ``PREWHERE a IN (SELECT
-    ... WHERE q) WHERE y`` — from being mistaken for the outer WHERE."""
-    upper = chunk.upper()
-    depth = 0
-    i = start
-    n = len(chunk)
-    while i < n:
-        ch = chunk[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            if i == 0 or not (chunk[i - 1].isalnum() or chunk[i - 1] == "_"):
-                for w in words:
-                    j = i + len(w)
-                    if upper.startswith(w, i) and (
-                        j >= n or not (chunk[j].isalnum() or chunk[j] == "_")
-                    ):
-                        return i, w
-            # skip the rest of this identifier in one go
-            while i + 1 < n and (chunk[i + 1].isalnum() or chunk[i + 1] == "_"):
-                i += 1
-        i += 1
-    return None, None
-
-
 _CLAUSE_TERMINATORS = ("GROUP", "ORDER", "LIMIT", "HAVING", "FORMAT", "WINDOW")
 
 
 def _merge_prewhere(chunk: str) -> str:
     """``PREWHERE x WHERE y`` → ``WHERE (x) AND (y)``, with both the WHERE
-    and the clause terminator located at paren depth 0 so predicates that
-    contain subqueries (their own WHERE/GROUP/LIMIT) merge intact.
+    and the clause terminator found by :func:`_top_level`, so predicates
+    that contain subqueries (their own WHERE/GROUP/LIMIT) merge intact and
+    a column named like a keyword (`` `where` ``, ``t.where``) is no clause.
 
     Scope: merges the top-level pair only.  A *subquery* that itself uses
     both PREWHERE and WHERE is out of scope for name-level rewriting (its
     PREWHERE is renamed to WHERE, producing SQL Spark will reject with a
-    clear parse error rather than silently mis-merging)."""
-    pre_at, _ = _find_top_level_word(chunk, ("PREWHERE",))
-    if pre_at is None:
+    clear parse error rather than silently mis-merging).  That rename, in
+    :func:`_rewrite_clauses`, is a whole-statement regex rather than this
+    scanner: it also renames a backtick name `` `prewhere` ``."""
+    pre_at, w = next(_top_level(chunk, ("PREWHERE",)))
+    if w is None:
         return chunk
     body_start = pre_at + len("PREWHERE")
-    where_at, _ = _find_top_level_word(chunk, ("WHERE",), body_start)
-    if where_at is None:
+    where_at, w = next(_top_level(chunk, ("WHERE",), body_start))
+    if w is None:
         return chunk  # standalone PREWHERE; caller renames it to WHERE
-    term_at, _ = _find_top_level_word(
-        chunk, _CLAUSE_TERMINATORS, where_at + len("WHERE")
+    term_at, _ = next(
+        _top_level(chunk, _CLAUSE_TERMINATORS, where_at + len("WHERE"))
     )
-    if term_at is None:
-        term_at = len(chunk)
     pre = chunk[body_start:where_at].strip()
     where = chunk[where_at + len("WHERE") : term_at].strip()
     return chunk[:pre_at] + f"WHERE ({pre}) AND ({where}) " + chunk[term_at:]
@@ -2388,8 +2345,8 @@ def _rewrite_limit_by(chunk: str) -> str:
     if not m:
         return chunk
     n = m.group(1)
-    ord_at, _ = _find_top_level_word(chunk, ("ORDER",))
-    if ord_at is None or ord_at > m.start():
+    ord_at, w = next(_top_level(chunk, ("ORDER",)))
+    if w is None or ord_at > m.start():
         return chunk
     om = re.compile(r"ORDER\s+BY\s+", re.IGNORECASE).match(chunk, ord_at)
     if not om:
@@ -2421,32 +2378,21 @@ def _merge_with_totals(chunk: str) -> str:
     empty strings (its JSON formats carry totals out-of-band); NULL is the
     faithful relational encoding.  Depth-0 only (a subquery's GROUP BY
     keeps its own TOTALS untouched and errors by name in Spark)."""
-    g_at, _ = _find_top_level_word(chunk, ("GROUP",))
-    if g_at is None:
+    g_at, w = next(_top_level(chunk, ("GROUP",)))
+    if w is None:
         return chunk
     m = re.compile(r"GROUP\s+BY\s+", re.IGNORECASE).match(chunk, g_at)
     if not m:
         return chunk
-    list_start = m.end()
-    t = re.compile(r"\bWITH\s+TOTALS\b", re.IGNORECASE)
-    # find WITH TOTALS at paren depth 0 after the list
-    depth = 0
-    for i in range(list_start, len(chunk)):
-        ch = chunk[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            mt = t.match(chunk, i)
-            if mt:
-                cols = chunk[list_start : i].strip().rstrip(",")
-                return (
-                    chunk[: g_at]
-                    + f"GROUP BY GROUPING SETS (({cols}), ())"
-                    + chunk[mt.end():]
-                )
-    return chunk
+    t_at, w = next(_top_level(chunk, (r"WITH\s+TOTALS",), m.end()))
+    if w is None:
+        return chunk
+    cols = chunk[m.end() : t_at].strip().rstrip(",")
+    return (
+        chunk[:g_at]
+        + f"GROUP BY GROUPING SETS (({cols}), ())"
+        + chunk[t_at + len(w) :]
+    )
 
 
 def _rewrite_array_join_clause(chunk: str) -> str:
@@ -2561,10 +2507,10 @@ _ASOF_TABLE_PAT = re.compile(
     r"\s+ON\b",
     re.IGNORECASE,
 )
-_ASOF_CLAUSE_END = re.compile(
-    r"(WHERE|GROUP|ORDER|LIMIT|HAVING|UNION|WINDOW|JOIN|LEFT|RIGHT|FULL"
-    r"|INNER|CROSS|ASOF|SETTINGS|FORMAT)\b",
-    re.IGNORECASE,
+# words that end an ON condition (as does the closer of its block)
+_ASOF_CLAUSE_END = (
+    "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "WINDOW", "JOIN",
+    "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "SETTINGS", "FORMAT",
 )
 _ASOF_INEQ = re.compile(r"(<=|>=|<|>)")
 
@@ -2575,29 +2521,6 @@ _ASOF_LEFT_TABLE_PAT = re.compile(
     r"\s*$",
     re.IGNORECASE,
 )
-
-
-def _asof_condition_span(chunk: str, cond_start: int) -> int:
-    """End index of an ON condition: the next top-level clause keyword or
-    unbalanced ``)`` at paren depth 0."""
-    depth, k, end = 0, cond_start, len(chunk)
-    while k < len(chunk):
-        ch = chunk[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            if depth == 0:
-                return k
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            prev_ok = k == 0 or not (chunk[k - 1].isalnum() or chunk[k - 1] in "_.")
-            if prev_ok and _ASOF_CLAUSE_END.match(chunk, k):
-                return k
-            while k < len(chunk) and (chunk[k].isalnum() or chunk[k] == "_"):
-                k += 1
-            continue
-        k += 1
-    return end
 
 
 def _asof_split_condition(cond: str, r_alias: str):
@@ -2681,7 +2604,7 @@ def _rewrite_asof_join(chunk: str) -> str:
         r_table = tm.group(1)
         r_alias = tm.group(2) or tm.group(3) or r_table.split(".")[-1]
         cond_start = tm.end()
-        end = _asof_condition_span(chunk, cond_start)
+        end, _ = next(_top_level(chunk, _ASOF_CLAUSE_END, cond_start))
         cond = chunk[cond_start:end].strip()
         lm = _ASOF_LEFT_TABLE_PAT.search(chunk, 0, m.start())
         eq_pairs, ineq = _asof_split_condition(cond, r_alias)
@@ -2767,18 +2690,6 @@ _PASTE_STOP = {
 }
 
 
-def _rmatch_paren(chunk: str, close: int) -> int:
-    """Index of the ``(`` matching the ``)`` at ``close`` (backward scan)."""
-    depth, j = 1, close - 1
-    while j >= 0 and depth:
-        if chunk[j] == ")":
-            depth += 1
-        elif chunk[j] == "(":
-            depth -= 1
-        j -= 1
-    return j + 1
-
-
 def _paste_left_operand(chunk: str, kw_start: int):
     """Parse the FROM item ending just before ``kw_start``: a plain
     table/view name or a parenthesized subquery, optionally aliased
@@ -2800,7 +2711,7 @@ def _paste_left_operand(chunk: str, kw_start: int):
     j = _skip_ws_back(kw_start)
     alias = None
     if j > 0 and chunk[j - 1] == ")":
-        start = _rmatch_paren(chunk, j - 1)
+        start = _match_bracket(chunk, j - 1)
         sql = chunk[start:j]
     else:
         i, w = _back_word(j)
@@ -2808,14 +2719,14 @@ def _paste_left_operand(chunk: str, kw_start: int):
             return None
         p = _skip_ws_back(i)
         if p > 0 and chunk[p - 1] == ")":  # (subq) alias
-            start = _rmatch_paren(chunk, p - 1)
+            start = _match_bracket(chunk, p - 1)
             sql, alias = chunk[start:p], w
         else:
             i2, w2 = _back_word(p)
             if w2.upper() == "AS":
                 p2 = _skip_ws_back(i2)
                 if p2 > 0 and chunk[p2 - 1] == ")":  # (subq) AS alias
-                    start = _rmatch_paren(chunk, p2 - 1)
+                    start = _match_bracket(chunk, p2 - 1)
                     sql, alias = chunk[start:p2], w
                 else:  # tbl AS alias
                     start, sql = _back_word(p2)
@@ -2843,7 +2754,7 @@ def _paste_right_operand(chunk: str, pos: int):
     while j < len(chunk) and chunk[j].isspace():
         j += 1
     if j < len(chunk) and chunk[j] == "(":
-        end = _match_paren(chunk, j)
+        end = _match_bracket(chunk, j)
         sql = chunk[j:end]
     else:
         m = re.match(r"[A-Za-z_][\w.]*", chunk[j:])
@@ -2980,24 +2891,13 @@ def _rewrite_distinct_on(chunk: str) -> str:
     )
     if not m:
         return chunk
-    keys_end = _match_paren(chunk, m.end() - 1)
+    keys_end = _match_bracket(chunk, m.end() - 1)
     keys = chunk[m.end() : keys_end - 1].strip()
     body = chunk[keys_end:]
     # split off a trailing top-level ORDER BY … [LIMIT …] tail
-    depth = 0
-    o_at = None
-    for i in range(len(body)):
-        ch = body[i]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and body[i : i + 5].upper() == "ORDER" and (
-            i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")
-        ):
-            o_at = i
-    if o_at is not None:
-        inner_body, tail = body[:o_at], body[o_at:]
+    orders = [i for i, w in _top_level(body, ("ORDER",)) if w]
+    if orders:
+        inner_body, tail = body[: orders[-1]], body[orders[-1] :]
         om = re.match(r"(?is)ORDER\s+BY\s+(.+?)(\s+LIMIT\s+.*)?$", tail)
         order = om.group(1).strip() if om else keys
     else:
@@ -3010,6 +2910,9 @@ def _rewrite_distinct_on(chunk: str) -> str:
     )
 
 
+_QUALIFY_END = ("ORDER", "LIMIT", "UNION", "SETTINGS", "FORMAT", "INTO")
+
+
 def _rewrite_qualify(chunk: str) -> str:
     """``… QUALIFY <window-pred> [tail]`` (ClickHouse 23.x; no Spark
     support) — filter on window-function results computed over the
@@ -3017,42 +2920,14 @@ def _rewrite_qualify(chunk: str) -> str:
     predicate evaluates in an outer projection (SELECT aliases are now
     plain columns, windows run post-aggregation — QUALIFY's definition),
     and the filter + tail apply outside.  Top-level occurrence only."""
-    depth = 0
-    q_at = None
-    for i, ch in enumerate(chunk):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and chunk[i : i + 7].upper() == "QUALIFY" and (
-            i == 0 or not (chunk[i - 1].isalnum() or chunk[i - 1] == "_")
-        ) and (
-            i + 7 == len(chunk)
-            or not (chunk[i + 7].isalnum() or chunk[i + 7] == "_")
-        ):
-            q_at = i
-            break
-    if q_at is None:
+    q_at, w = next(_top_level(chunk, ("QUALIFY",)))
+    if w is None:
         return chunk
     inner = chunk[:q_at].strip()
-    rest = chunk[q_at + 7 :]
+    pred_at = q_at + len(w)
     # predicate runs to the next top-level clause keyword
-    depth = 0
-    p_end = len(rest)
-    k = 0
-    while k < len(rest):
-        ch = rest[k]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and re.match(
-            r"(?i)(ORDER|LIMIT|UNION|SETTINGS|FORMAT|INTO)\b", rest[k:]
-        ) and (k == 0 or not (rest[k - 1].isalnum() or rest[k - 1] == "_")):
-            p_end = k
-            break
-        k += 1
-    pred, tail = rest[:p_end].strip(), rest[p_end:]
+    p_end, _ = next(_top_level(chunk, _QUALIFY_END, pred_at))
+    pred, tail = chunk[pred_at:p_end].strip(), chunk[p_end:]
     return (
         f"SELECT * EXCEPT(__qual) FROM (SELECT *, ({pred}) AS __qual "
         f"FROM ({inner}) __qsub) WHERE __qual {tail}"
@@ -3072,10 +2947,10 @@ def _rewrite_limit_with_ties(chunk: str) -> str:
     )
     if not m:
         return chunk
-    # the ORDER BY must be top-level: no unbalanced parens before it
-    head = chunk[: m.start()]
-    if head.count("(") != head.count(")"):
+    # the ORDER BY must be top-level
+    if m.start() not in {i for i, w in _top_level(chunk, ("ORDER",)) if w}:
         return chunk
+    head = chunk[: m.start()]
     order, n = m.group(1).strip(), m.group(2)
     return (
         f"SELECT * EXCEPT(__r) FROM (SELECT __q0.*, RANK() OVER "
@@ -3147,7 +3022,7 @@ def _wrap_empty_sites(chunk: str, flags: list[bool]) -> str:
     # flag in textual order, which the innermost-first engine can't give
     m = _EMPTY_SITE_PAT.search(chunk)
     while m:
-        j = _match_paren(chunk, m.end() - 1)
+        j = _match_bracket(chunk, m.end() - 1)
         inner = chunk[m.end() : j - 1]
         fn = "size" if (idx < len(flags) and flags[idx]) else "length"
         op = "= 0" if m.group(1) == "empty" else "> 0"
@@ -6678,10 +6553,9 @@ _MOD_BASE_PAT = re.compile(
     r"(?<![\w.`'\"])(\*|COLUMNS\()", re.IGNORECASE
 )
 _MOD_KW_PAT = re.compile(r"\s*(EXCEPT|REPLACE|APPLY)\s*\(", re.IGNORECASE)
-_MOD_TAIL_STOP = re.compile(
-    r"\b(GROUP|HAVING|ORDER|LIMIT|WINDOW|QUALIFY|UNION|INTERSECT"
-    r"|EXCEPT\s+(?:ALL|DISTINCT|SELECT))\b",
-    re.IGNORECASE,
+_MOD_TAIL_STOP = (
+    "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW", "QUALIFY", "UNION",
+    "INTERSECT", r"EXCEPT\s+(?:ALL|DISTINCT|SELECT)",
 )
 
 
@@ -6707,30 +6581,17 @@ def _expand_select_modifiers(sql: str, spark=None) -> str:
     literal containing ``' * REPLACE(x AS y) ... FROM t'`` would match the
     modifier patterns and get corrupted) and restored at exit; the schema
     probe un-masks its FROM-tail slice before calling ``spark.sql``."""
-    literals: list[str] = []
-    masked_parts: list[str] = []
-    for is_lit, seg in _split_literals_spark(sql):
-        if is_lit:
-            masked_parts.append(f"\x00{len(literals)}\x00")
-            literals.append(seg)
-        else:
-            masked_parts.append(seg)
-
-    def _unmask(s: str) -> str:
-        return re.sub(
-            "\x00(\\d+)\x00", lambda m: f"'{literals[int(m.group(1))]}'", s
-        )
-
-    i, out = 0, "".join(masked_parts)
+    out, literals = _mask_literals(sql, _split_literals_spark)
+    i = 0
     while True:
         m = _MOD_BASE_PAT.search(out, i)
         if not m:
-            return _unmask(out)
+            return _unmask_literals(out, literals)
         base = m.group(1)
         pos = m.end()
         cols_regex = None
         if base != "*":  # COLUMNS('re') — the literal arrives masked
-            close = _match_paren(out, m.end() - 1)
+            close = _match_bracket(out, m.end() - 1)
             lit = re.fullmatch(
                 r"\s*(?:'([^']*)'|\x00(\d+)\x00)\s*",
                 out[m.end() : close - 1],
@@ -6750,7 +6611,7 @@ def _expand_select_modifiers(sql: str, spark=None) -> str:
             km = _MOD_KW_PAT.match(out, pos)
             if not km:
                 break
-            kend = _match_paren(out, km.end() - 1)
+            kend = _match_bracket(out, km.end() - 1)
             mods.append(
                 (
                     km.group(1).upper(),
@@ -6797,43 +6658,14 @@ def _expand_select_modifiers(sql: str, spark=None) -> str:
             i = m.start() + len(repl_sql)
             continue
         # schema path: probe the enclosing block's FROM tail
-        depth, j, from_idx = 0, pos, None
-        while j < len(out):
-            ch = out[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and out[j : j + 4].upper() == "FROM" and (
-                j + 4 == len(out) or not (out[j + 4].isalnum() or out[j + 4] == "_")
-            ) and (j == 0 or not (out[j - 1].isalnum() or out[j - 1] in "_.")):
-                from_idx = j
-                break
-            j += 1
-        if from_idx is None:
+        from_idx, w = next(_top_level(out, ("FROM",), pos))
+        if w is None:
             i = pos
             continue
-        depth, j, end_idx = 0, from_idx, len(out)
-        while j < len(out):
-            ch = out[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end_idx = j
-                    break
-                depth -= 1
-            elif depth == 0:
-                sm = _MOD_TAIL_STOP.match(out, j)
-                if sm and not (out[j - 1].isalnum() or out[j - 1] in "_."):
-                    end_idx = j
-                    break
-            j += 1
+        end_idx, _ = next(_top_level(out, _MOD_TAIL_STOP, from_idx))
         try:
             cols = spark.sql(
-                "SELECT * " + _unmask(out[from_idx:end_idx])
+                "SELECT * " + _unmask_literals(out[from_idx:end_idx], literals)
             ).columns
         except Exception:  # noqa: BLE001 — unprobeable tail: leave as-is
             i = pos
@@ -6934,7 +6766,11 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
     Unknown names pass through; string literals are never modified — they
     are masked with ``\\x00<i>\\x00`` placeholders for the duration of the
     rewrites (so a ``'...'`` inside an argument list can't confuse paren or
-    comma matching) and restored verbatim at the end.
+    comma matching) and restored verbatim at the end.  The clause, join
+    and call passes find brackets, argument commas and clause keywords
+    with :func:`_top_level`, whose docstring states the scanning rules
+    once for all of them (the keyword renames in :func:`_rewrite_clauses`
+    are plain whole-statement regexes).
 
     Pipeline: zero-arg names, then the clause and join passes, then the
     call tables in order — ``_EARLY_CALLS``, the bracket-syntax pass,
@@ -6949,15 +6785,7 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
     statement fails analysis the translator retries with ``size()`` at
     each call site (fewest substitutions first) until one analyzes —
     covering ClickHouse's array/map ``empty()`` without a SQL parser."""
-    literals: list[str] = []
-    masked: list[str] = []
-    for is_lit, seg in _split_literals(sql):
-        if is_lit:
-            masked.append(f"\x00{len(literals)}\x00")
-            literals.append(seg)
-        else:
-            masked.append(seg)
-    chunk = "".join(masked)
+    chunk, literals = _mask_literals(sql)
 
     # ClickHouse double-quoted IDENTIFIERS ("user id" — ANSI identifier
     # quoting, NOT a string literal) → Spark backticks; Spark's default
@@ -7000,9 +6828,7 @@ def _translate_once(sql: str, spark=None, where_aliases: bool = False) -> str:
         c = _apply_calls(c, _WRAP_CALLS)
         for pat, dst in _RENAME_PATS:
             c = pat.sub(dst, c)
-        return re.sub(
-            "\x00(\\d+)\x00", lambda m: f"'{literals[int(m.group(1))]}'", c
-        )
+        return _unmask_literals(c, literals)
 
     default = finish([False] * n_empty)
     if spark is None or n_empty == 0:

@@ -31,36 +31,18 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql
+from clickhouse_flatfile_tool_spark.dialect import (
+    _mask_literals,
+    _split_top_comma,
+    _top_level,
+    _unmask_literals,
+    translate_clickhouse_sql,
+)
 
 _ALTER_PAT = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(\S+)\s+(UPDATE|DELETE)\s+(.*?)\s*;?\s*$"
 )
-_WHERE_PAT = re.compile(r"(?is)\bWHERE\b")
-
-
-def _split_assignments(text: str) -> dict[str, str]:
-    """Split ``a = e1, b = e2`` on depth-0 commas (expressions may contain
-    function calls with their own commas)."""
-    parts, depth, buf = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    out: dict[str, str] = {}
-    for p in parts:
-        m = re.match(r"(?s)^\s*(\w+|`[^`]+`)\s*=\s*(.+?)\s*$", p)
-        if not m:
-            raise ValueError(f"malformed UPDATE assignment: {p!r}")
-        out[m.group(1).strip("`")] = m.group(2)
-    return out
+_ASSIGN_PAT = re.compile(r"(?s)^(\w+|`[^`]+`)\s*=\s*(.+)$")
 
 
 def parse_mutation(sql: str) -> tuple[str, str, dict[str, str] | None, str]:
@@ -69,23 +51,37 @@ def parse_mutation(sql: str) -> tuple[str, str, dict[str, str] | None, str]:
     Returns ``(table, kind, assignments, where)`` with ``kind`` in
     {"update", "delete"}; assignment/predicate expressions are already
     translated to Spark SQL.  WHERE is REQUIRED (as in ClickHouse — an
-    unconditional mutation must say ``WHERE 1``)."""
-    m = _ALTER_PAT.match(sql)
+    unconditional mutation must say ``WHERE 1``).  The statement is
+    parsed with its string literals masked, so the top-level WHERE and
+    the assignment commas are found by the dialect's top-level scanner:
+    a comma or WHERE inside a literal, a subquery or a backtick name is
+    not a boundary."""
+    masked, literals = _mask_literals(sql)
+    m = _ALTER_PAT.match(masked)
     if not m:
         raise ValueError(f"not a mutation statement: {sql!r}")
     table, kind, rest = m.group(1), m.group(2).lower(), m.group(3)
-    wm = _WHERE_PAT.search(rest)
-    if not wm:
+    w_at, w = next(_top_level(rest, ("WHERE",)))
+    if w is None:
         raise ValueError("ClickHouse mutations require a WHERE clause")
-    where = translate_clickhouse_sql(rest[wm.end() :].strip())
+    where = translate_clickhouse_sql(
+        _unmask_literals(rest[w_at + len(w) :].strip(), literals)
+    )
     if kind == "delete":
-        if rest[: wm.start()].strip():
+        if rest[:w_at].strip():
             raise ValueError("DELETE takes no assignments")
         return table, kind, None, where
-    assignments = {
-        k: translate_clickhouse_sql(v)
-        for k, v in _split_assignments(rest[: wm.start()]).items()
-    }
+    assignments = {}
+    for part in _split_top_comma(rest[:w_at]):
+        am = _ASSIGN_PAT.match(part)
+        if not am:
+            raise ValueError(
+                "malformed UPDATE assignment: "
+                f"{_unmask_literals(part, literals)!r}"
+            )
+        assignments[am.group(1).strip("`")] = translate_clickhouse_sql(
+            _unmask_literals(am.group(2), literals)
+        )
     return table, kind, assignments, where
 
 

@@ -448,10 +448,6 @@ def aggregate(
     return grouped.agg(*exprs)
 
 
-def distinct_values(df: DataFrame, columns: list[str]) -> DataFrame:
-    return df.select(*columns).distinct()
-
-
 def integrity_report(
     relationships: list[tuple[str, DataFrame, str, DataFrame, str]],
 ) -> DataFrame:

@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
+from clickhouse_flatfile_tool_spark.dialect import _split_top_comma
+
 # ---------------------------------------------------------------------------
 # ClickHouse → Spark type mapping (SURVEY.md §1.2)
 # ---------------------------------------------------------------------------
@@ -54,24 +56,6 @@ _SIMPLE: dict[str, T.DataType] = {
 _PAREN_RE = re.compile(r"^\s*([A-Za-z0-9_]+)\s*(?:\((.*)\))?\s*$", re.S)
 
 
-def _split_args(arg_str: str) -> list[str]:
-    """Split a ClickHouse type argument list on top-level commas."""
-    parts, depth, buf = [], 0, []
-    for ch in arg_str:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf).strip())
-    return parts
-
-
 def clickhouse_to_spark(ch_type: str) -> tuple[T.DataType, bool]:
     """Map a ClickHouse type string to (Spark DataType, nullable).
 
@@ -99,7 +83,7 @@ def clickhouse_to_spark(ch_type: str) -> tuple[T.DataType, bool]:
     if base in ("Enum8", "Enum16"):
         return T.StringType(), False  # decode to label
     if base == "Decimal" and args:
-        ps = _split_args(args)
+        ps = _split_top_comma(args)
         if len(ps) == 2:
             return T.DecimalType(int(ps[0]), int(ps[1])), False
     if base in ("Decimal32", "Decimal64", "Decimal128") and args:
@@ -111,7 +95,7 @@ def clickhouse_to_spark(ch_type: str) -> tuple[T.DataType, bool]:
         return T.ArrayType(elem, containsNull=elem_null), False
     if base == "Tuple" and args:
         fields = []
-        for i, a in enumerate(_split_args(args)):
+        for i, a in enumerate(_split_top_comma(args)):
             # named tuple element: "name Type"
             nm = re.match(r"^([A-Za-z_][A-Za-z0-9_]*)\s+(.+)$", a)
             name, atype = (nm.group(1), nm.group(2)) if nm else (f"_{i + 1}", a)
@@ -119,7 +103,7 @@ def clickhouse_to_spark(ch_type: str) -> tuple[T.DataType, bool]:
             fields.append(T.StructField(name, ft, fn))
         return T.StructType(fields), False
     if base == "Map" and args:
-        ps = _split_args(args)
+        ps = _split_top_comma(args)
         if len(ps) == 2:
             kt, _ = clickhouse_to_spark(ps[0])
             vt, vn = clickhouse_to_spark(ps[1])

@@ -75,11 +75,8 @@ def get_spark(
         # 30min default lets them pile up for the whole session.  Measured
         # (OPTIMIZATION_r11.md): a 33-query sequence at 8g degrades
         # late queries ~2x (margin_pairs 8.2s vs 4.3s with a 60s interval).
-        # 2min is conservative for any heap size; env-tunable per deployment.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC") or "2min",
-        )
+        # 2min is conservative for any heap size.
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

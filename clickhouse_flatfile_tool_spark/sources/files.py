@@ -231,14 +231,6 @@ def read_table_dir(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view for spark.sql use."""
-    dfs = read_table_dir(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def read_json_each_row(
     spark: SparkSession, path: str, schema: str | None = None
 ) -> DataFrame:

@@ -610,26 +610,3 @@ def parse_kafka_values(df: DataFrame, value_schema: str) -> DataFrame:
         F.col("timestamp").alias("_timestamp"),
         parsed.alias("__row"),
     ).select("_topic", "_partition", "_offset", "_timestamp", "__row.*")
-
-
-def kafka_stream(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    value_schema: str,
-    starting_offsets: str = "latest",
-    **option_overrides,
-) -> DataFrame:
-    """ClickHouse Kafka table engine, Spark-shaped: ``readStream.format
-    ("kafka")`` with :func:`kafka_reader_options` + JSONEachRow value
-    parsing — feed the result to ``stream_mv`` for the classic Kafka →
-    MV → AggregatingMergeTree pipeline.  Requires the
-    ``spark-sql-kafka-0-10`` connector on the classpath (not bundled in
-    this sandbox — the reader raises Spark's DATA_SOURCE_NOT_FOUND; the
-    option/parse halves are covered broker-free by the tests)."""
-    opts = kafka_reader_options(brokers, topic, starting_offsets)
-    opts.update({k: str(v) for k, v in option_overrides.items()})
-    reader = spark.readStream.format("kafka")
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    return parse_kafka_values(reader.load(), value_schema)

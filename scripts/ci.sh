@@ -14,6 +14,9 @@ python bench.py 2>/dev/null | tail -1
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== perfbench self-tests (tracer patches the dialect/api translate aliases) =="
+python -m pytest perfbench -q
+
 echo "== oracle differential (selfcheck @ ${SF}) =="
 python scripts/selfcheck.py "${SF}" 2>/dev/null | tail -3
 

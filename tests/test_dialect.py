@@ -4,6 +4,9 @@ and computes the ClickHouse semantics."""
 
 from __future__ import annotations
 
+import pytest
+
+from clickhouse_flatfile_tool_spark.dialect import _rewrite_where_aliases
 from clickhouse_flatfile_tool_spark.dialect import translate_clickhouse_sql as tr
 
 
@@ -2358,6 +2361,88 @@ def test_with_totals_sql(spark):
     assert len(rows2) == 4
     totals = [r for r in rows2 if r.g is None and r.h is None]
     assert len(totals) == 1 and totals[0].s == 7
+
+
+def test_with_totals_backtick_key_executes(spark):
+    """A grouping key spelled like the GROUP keyword (`group`) is a
+    column, not the clause: WITH TOTALS still becomes the grand-total
+    grouping set and runs."""
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 10)], "group string, v long"
+    ).createOrReplaceTempView("wt_k")
+    rows = spark.sql(
+        tr("SELECT `group`, sum(v) AS s FROM wt_k GROUP BY `group` WITH TOTALS")
+    ).collect()
+    assert {(r["group"], r.s) for r in rows} == {
+        ("a", 3), ("b", 10), (None, 13)
+    }
+
+
+# A keyword inside a backtick or double-quoted identifier, or after a
+# qualifier dot, is a name: the clause passes share one top-level scanner
+# that skips it.
+_SCANNER_CASES = [
+    (tr, "SELECT a, `qualify` FROM t", "SELECT a, `qualify` FROM t"),
+    (tr, 'SELECT a, "qualify" FROM t', "SELECT a, `qualify` FROM t"),
+    (tr, "SELECT a, t.qualify FROM t", "SELECT a, t.qualify FROM t"),
+    (
+        tr,
+        "SELECT DISTINCT ON (a) a, t.order FROM t",
+        "SELECT * EXCEPT(__dn) FROM (SELECT __q0.*, ROW_NUMBER() OVER "
+        "(PARTITION BY a ORDER BY a) AS __dn FROM (SELECT  a, t.order "
+        "FROM t) AS __q0) WHERE __dn = 1 ",
+    ),
+    (
+        tr,
+        "SELECT a FROM t PREWHERE `where` > 1 WHERE b < 2",
+        "SELECT a FROM t WHERE (`where` > 1) AND (b < 2) ",
+    ),
+    (
+        tr,
+        "SELECT `group`, count() AS c FROM t GROUP BY `group` WITH TOTALS",
+        "SELECT `group`, count(*) AS c FROM t "
+        "GROUP BY GROUPING SETS ((`group`), ())",
+    ),
+    (
+        tr,
+        'SELECT "group", count() AS c FROM t GROUP BY "group" WITH TOTALS',
+        "SELECT `group`, count(*) AS c FROM t "
+        "GROUP BY GROUPING SETS ((`group`), ())",
+    ),
+    (
+        tr,
+        "SELECT t.group, count() AS c FROM t GROUP BY t.group WITH TOTALS",
+        "SELECT t.group, count(*) AS c FROM t "
+        "GROUP BY GROUPING SETS ((t.group), ())",
+    ),
+    (
+        tr,
+        "SELECT `order` AS o, a FROM t ORDER BY a LIMIT 2 BY b",
+        "SELECT * EXCEPT (__rn) FROM (SELECT __q.*, row_number() OVER "
+        "(PARTITION BY b ORDER BY a) AS __rn FROM (SELECT `order` AS o, a "
+        "FROM t) AS __q) WHERE __rn <= 2 ORDER BY a",
+    ),
+    (
+        _rewrite_where_aliases,
+        "SELECT x + 1 AS y FROM t WHERE `group` = 1 AND y > 0",
+        "SELECT x + 1 AS y FROM t WHERE `group` = 1 AND (x + 1) > 0",
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "rewrite,sql,want",
+    _SCANNER_CASES,
+    ids=[
+        "qualify-backtick", "qualify-double-quoted", "qualify-qualified",
+        "distinct-on-qualified-order", "prewhere-backtick-where",
+        "totals-backtick-group", "totals-double-quoted-group",
+        "totals-qualified-group", "limit-by-backtick-order",
+        "where-aliases-backtick-group",
+    ],
+)
+def test_clause_keywords_inside_names(rewrite, sql, want):
+    assert rewrite(sql) == want
 
 
 def test_batch18_functions(spark):

@@ -24,6 +24,22 @@ def test_parse_update_and_delete():
         M.parse_mutation("ALTER TABLE ev UPDATE a = 1")  # no WHERE
     with pytest.raises(ValueError):
         M.parse_mutation("SELECT 1")
+    # a comma or WHERE inside a literal, a subquery or a backtick name
+    # is not a boundary
+    for stmt, want_asg in [
+        ("ALTER TABLE t UPDATE s = 'a,b' WHERE id = 1", {"s": "'a,b'"}),
+        (
+            "ALTER TABLE t UPDATE s = 'go WHERE x' WHERE id = 1",
+            {"s": "'go WHERE x'"},
+        ),
+        (
+            "ALTER TABLE t UPDATE a = (SELECT max(b) FROM u WHERE c > 0) "
+            "WHERE id = 1",
+            {"a": "(SELECT max(b) FROM u WHERE c > 0)"},
+        ),
+        ("ALTER TABLE t UPDATE `where` = 1 WHERE id = 1", {"where": "1"}),
+    ]:
+        assert M.parse_mutation(stmt) == ("t", "update", want_asg, "id = 1")
 
 
 def test_update_simultaneous_assignment(spark):
@@ -36,6 +52,17 @@ def test_update_simultaneous_assignment(spark):
     )
     out = {r.a: r.b for r in M.mutated_frame(df, kind, asg, where).collect()}
     assert out == {10: 1, 2: 20}
+
+
+def test_update_literal_with_comma_and_where(spark):
+    """A string literal holding a comma and the word WHERE is one
+    assigned value, executed as such."""
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, s string")
+    _, kind, asg, where = M.parse_mutation(
+        "ALTER TABLE t UPDATE s = 'a, b WHERE c' WHERE id = 1"
+    )
+    out = {r.id: r.s for r in M.mutated_frame(df, kind, asg, where).collect()}
+    assert out == {1: "a, b WHERE c", 2: "y"}
 
 
 def test_delete_null_predicate_keeps_row(spark):
