@@ -310,6 +310,7 @@ def main() -> None:
         os.sched_setaffinity(0, cpus)
     cpu_mask = _format_mask(sorted(os.sched_getaffinity(0)))
     load_start = _loadavg()
+    started = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())  # names the record copy
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark(app_name="cfts-bench")
@@ -533,11 +534,13 @@ def main() -> None:
     # window — VERDICT r4 #7).  The complete result goes to BENCH_FULL.json
     # at the repo root for round-over-round comparison; the printed line
     # carries the headline subset and is length-capped so it always parses.
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
-        "w",
-    ) as f:
-        json.dump(result, f, indent=1, sort_keys=True)
+    # BENCH_FULL.json is the latest run; bench_records/ keeps every run's
+    # copy under its UTC start time, so the next run destroys no record.
+    root = os.path.dirname(os.path.abspath(__file__))
+    os.makedirs(os.path.join(root, "bench_records"), exist_ok=True)
+    for path in ("BENCH_FULL.json", f"bench_records/BENCH_FULL_{started}.json"):
+        with open(os.path.join(root, path), "w") as f:
+            json.dump(result, f, indent=1, sort_keys=True)
     headline = [
         "ingest_csv",
         *[f"tpch_q{i}" for i in range(1, 23)],

@@ -10,7 +10,8 @@ text analysis, event windows) — as an idiomatic PySpark library:
 SparkSession in, DataFrame out, Catalyst does the optimizing.
 
 Design rules (100 TB intent):
-  * no ``collect()`` inside operator paths — everything returns a lazy DataFrame
+  * operators return lazy DataFrames; the eager driver actions that remain
+    are counted in README's scale rules
   * built-in ``pyspark.sql.functions`` (JVM/codegen) in hot paths; Arrow-batched
     pandas UDFs only where array math genuinely needs them
   * joins broadcast small dimensions; aggregations rely on partial (map-side)

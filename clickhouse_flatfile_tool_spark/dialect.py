@@ -643,7 +643,8 @@ def _unmask_literals(s: str, literals: list[str]) -> str:
     )
 
 
-_BRACKETS = r"`[^`]*`|[(\[]|[)\]]"
+_BACKTICK = r"`[^`]*`"
+_BRACKETS = _BACKTICK + r"|[(\[]|[)\]]"
 
 
 @functools.lru_cache(maxsize=None)
@@ -681,6 +682,27 @@ def _top_level(chunk: str, words: tuple[str, ...] = (), start: int = 0):
         elif not depth and tok[0] != "`":
             yield m.start(), tok
     yield len(chunk), None
+
+
+@functools.lru_cache(maxsize=None)
+def _keyword_pat(pattern: str) -> re.Pattern:
+    """:func:`_sub_keyword`'s pattern: a backtick identifier, or ``pattern``
+    case-insensitively.  The backtick alternative captures nothing, so
+    ``pattern``'s group numbers hold."""
+    return re.compile(f"{_BACKTICK}|(?i:{pattern})")
+
+
+def _sub_keyword(pattern: str, repl, chunk: str) -> str:
+    """``re.sub(pattern, repl, chunk, flags=re.I)`` for a whole-statement
+    keyword rewrite, with backtick identifiers opaque as in
+    :func:`_top_level`: `` `prewhere` `` is a name, not a clause."""
+
+    def sub(m: re.Match) -> str:
+        if m.group()[0] == "`":
+            return m.group()
+        return repl(m) if callable(repl) else m.expand(repl)
+
+    return _keyword_pat(pattern).sub(sub, chunk)
 
 
 def _match_bracket(chunk: str, i: int) -> int:
@@ -2310,8 +2332,8 @@ def _merge_prewhere(chunk: str) -> str:
     both PREWHERE and WHERE is out of scope for name-level rewriting (its
     PREWHERE is renamed to WHERE, producing SQL Spark will reject with a
     clear parse error rather than silently mis-merging).  That rename, in
-    :func:`_rewrite_clauses`, is a whole-statement regex rather than this
-    scanner: it also renames a backtick name `` `prewhere` ``."""
+    :func:`_rewrite_clauses`, is a whole-statement :func:`_sub_keyword`
+    rather than this scanner; a backtick name `` `prewhere` `` stays."""
     pre_at, w = next(_top_level(chunk, ("PREWHERE",)))
     if w is None:
         return chunk
@@ -2973,14 +2995,11 @@ def _rewrite_clauses(chunk: str) -> str:
       every read in the reference appends it, server.js:141/232/458) —
       stripped; output format is the writer's job in Spark.
     """
-    chunk = re.sub(r"\s+FORMAT\s+\w+\s*;?\s*$", "", chunk, flags=re.IGNORECASE)
+    chunk = _sub_keyword(r"\s+FORMAT\s+\w+\s*;?\s*$", "", chunk)
     # SETTINGS name=value[, ...] — ClickHouse per-query knobs; Spark's
     # equivalents are session confs, so the clause is dropped
-    chunk = re.sub(
-        r"\s+SETTINGS\s+\w+\s*=\s*\S+(\s*,\s*\w+\s*=\s*\S+)*\s*;?\s*$",
-        "",
-        chunk,
-        flags=re.IGNORECASE,
+    chunk = _sub_keyword(
+        r"\s+SETTINGS\s+\w+\s*=\s*\S+(\s*,\s*\w+\s*=\s*\S+)*\s*;?\s*$", "", chunk
     )
     chunk = _rewrite_array_join_clause(chunk)
     chunk = _rewrite_limit_by(chunk)
@@ -2990,21 +3009,17 @@ def _rewrite_clauses(chunk: str) -> str:
     # modifier (≡ standard join semantics) — also dropped.  ANY JOIN
     # (first-match-only) is NOT translated: its semantics differ, so it
     # passes through and Spark errors by name.
-    chunk = re.sub(r"\bGLOBAL\s+(?=IN\b|JOIN\b|LEFT\b|RIGHT\b|INNER\b|FULL\b|CROSS\b|ANY\b|ALL\b)", "", chunk, flags=re.IGNORECASE)
-    chunk = re.sub(r"\bALL\s+(?=((LEFT|RIGHT|INNER|FULL)\s+)?JOIN\b)", "", chunk, flags=re.IGNORECASE)
+    chunk = _sub_keyword(r"\bGLOBAL\s+(?=IN\b|JOIN\b|LEFT\b|RIGHT\b|INNER\b|FULL\b|CROSS\b|ANY\b|ALL\b)", "", chunk)
+    chunk = _sub_keyword(r"\bALL\s+(?=((LEFT|RIGHT|INNER|FULL)\s+)?JOIN\b)", "", chunk)
     chunk = _merge_with_totals(chunk)
     chunk = _merge_prewhere(chunk)
-    chunk = re.sub(r"\bPREWHERE\b", "WHERE", chunk, flags=re.IGNORECASE)
-    chunk = re.sub(
+    chunk = _sub_keyword(r"\bPREWHERE\b", "WHERE", chunk)
+    chunk = _sub_keyword(
         r"\bSAMPLE\s+0?\.(\d+)\b",
         lambda m: f"TABLESAMPLE ({float('0.' + m.group(1)) * 100:g} PERCENT)",
         chunk,
-        flags=re.IGNORECASE,
     )
-    chunk = re.sub(
-        r"\bSAMPLE\s+(\d+)\b", r"TABLESAMPLE (\1 ROWS)", chunk, flags=re.IGNORECASE
-    )
-    return chunk
+    return _sub_keyword(r"\bSAMPLE\s+(\d+)\b", r"TABLESAMPLE (\1 ROWS)", chunk)
 
 
 _EMPTY_SITE_PAT = re.compile(r"\b(empty|notEmpty)\(")

@@ -2445,6 +2445,18 @@ def test_clause_keywords_inside_names(rewrite, sql, want):
     assert rewrite(sql) == want
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["`prewhere`", "`sample 5`", "`global in`", "`all join`"],
+    ids=["prewhere", "sample", "global", "all"],
+)
+def test_keyword_rewrites_leave_backtick_names(name):
+    """The whole-statement PREWHERE/SAMPLE/GLOBAL/ALL rewrites treat a
+    backtick identifier as opaque, as the clause scanner does."""
+    sql = f"SELECT {name} FROM t"
+    assert tr(sql) == sql
+
+
 def test_batch18_functions(spark):
     """Batch 18: dateTrunc rename, toWeek mode 0/3, ngramDistance/Search
     (distinct-set 4-gram variants), JSONLength, toJSONString,

@@ -364,6 +364,138 @@ def test_codegen_cache_holds_session_working_set(spark):
     assert sweep() == 0
 
 
+def _zip_files_probe():
+    """mapInArrow body reporting the worker's pid and the id of its
+    pyspark.zip importer's directory dict (a closure, so it pickles by value)."""
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        files = [f._files for p, f in sys.path_importer_cache.items()
+                 if isinstance(f, zipimport.zipimporter) and p.endswith("pyspark.zip")]
+        yield pa.RecordBatch.from_pylist([{"pid": os.getpid(), "files": id(files[0]) if files else -1}])
+
+    return probe
+
+
+def test_python_worker_keeps_zip_directories_across_tasks(spark):
+    """A reused Python worker does not re-read pyspark.zip's central directory
+    for each task: two tasks served by one worker see the same zipimporter
+    ``_files`` dict (the stock daemon's ``invalidate_caches`` replaces it)."""
+    df = spark.range(1, numPartitions=1)
+    seen = {}
+    # Idle workers are handed out first-in first-out, so single-partition
+    # jobs cycle through the idle pool until one worker serves a second task.
+    for _ in range(16):
+        row = df.mapInArrow(_zip_files_probe(), "pid long, files long").collect()[0]
+        assert row.files != -1
+        if row.pid in seen:
+            assert row.files == seen[row.pid]
+            return
+        seen[row.pid] = row.files
+    pytest.fail(f"no Python worker served two of 16 tasks: {sorted(seen)}")
+
+
+@pytest.mark.parametrize("kind", ["zip", "py"])
+def test_add_py_file_after_tasks_is_importable(spark, tmp_path, kind):
+    """Code shipped with ``addPyFile`` after workers have run tasks imports in
+    those workers: a zip lands on a new path entry, a ``.py`` file in the
+    ``userFiles`` directory whose finder is still invalidated."""
+    import uuid
+    import zipfile
+
+    df = spark.range(1, numPartitions=1)
+    df.mapInArrow(_zip_files_probe(), "pid long, files long").collect()
+    name = f"cfts_shipped_{kind}_{uuid.uuid4().hex[:8]}"
+    source = "def value():\n    return 42\n"
+    if kind == "zip":
+        path = tmp_path / f"{name}.zip"
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr(f"{name}.py", source)
+    else:
+        path = tmp_path / f"{name}.py"
+        path.write_text(source)
+    spark.sparkContext.addPyFile(str(path))
+
+    def use(batches):
+        import importlib
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{"v": importlib.import_module(name).value()}])
+
+    assert [r.v for r in df.mapInArrow(use, "v long").collect()] == [42]
+
+
+def test_worker_daemon_patch_and_fallback(tmp_path, monkeypatch):
+    """The daemon patches only a ``worker_util`` of the known shape and leaves
+    any other untouched (the stock path); its ``invalidate_caches`` keeps a
+    zipimporter's directory but still invalidates directory finders."""
+    import importlib
+    import sys
+    import types
+    import zipfile
+    import zipimport
+
+    from clickhouse_flatfile_tool_spark import _worker_daemon as wd
+
+    def stand_in(**attrs):
+        mod = types.ModuleType("worker_util")
+        mod.__dict__.update(attrs)
+        return mod
+
+    for mod in (stand_in(), stand_in(importlib=importlib),
+                stand_in(setup_spark_files=lambda infile: None),
+                stand_in(importlib=types.ModuleType("importlib"), setup_spark_files=len)):
+        before = dict(vars(mod))
+        assert wd.install(mod) is False
+        assert vars(mod) == before
+    mod = stand_in(importlib=importlib, setup_spark_files=lambda infile: None)
+    assert wd.install(mod) is True
+    assert mod.importlib.invalidate_caches is wd.invalidate_caches_keeping_zips
+    assert mod.importlib.import_module is importlib.import_module
+
+    archive = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("cfts_zip_probe.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.syspath_prepend(str(tmp_path))
+    importlib.import_module("cfts_zip_probe")
+    monkeypatch.delitem(sys.modules, "cfts_zip_probe")
+    zip_finder = sys.path_importer_cache[archive]
+    dir_finder = sys.path_importer_cache[str(tmp_path)]
+    assert isinstance(zip_finder, zipimport.zipimporter)
+    files = zip_finder._files
+    (tmp_path / "cfts_dir_probe.py").write_text("Y = 2\n")
+    wd.invalidate_caches_keeping_zips()
+    assert sys.path_importer_cache[archive] is zip_finder and zip_finder._files is files
+    assert sys.path_importer_cache[str(tmp_path)] is dir_finder
+    assert importlib.import_module("cfts_dir_probe").Y == 2
+    monkeypatch.delitem(sys.modules, "cfts_dir_probe")
+    importlib.invalidate_caches()
+    assert zip_finder._files is not files
+
+
+def test_worker_daemon_only_where_workers_import_package(monkeypatch, tmp_path):
+    """The daemon module is set only when a worker started in the working
+    directory, or on ``$PYTHONPATH``, finds this package; elsewhere the stock
+    daemon runs rather than every Python task failing."""
+    from clickhouse_flatfile_tool_spark import session
+
+    monkeypatch.setattr(session, "_PACKAGE_PARENT", str(tmp_path))
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    assert session._workers_import_package() is False
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/nonexistent", str(tmp_path)]))
+    assert session._workers_import_package() is True
+
+
 def test_csv_rfc4180_quoting(spark, tmp_path):
     """Quoted fields with embedded separators and doubled quotes (the
     csv-parse defaults the reference relies on, server.js:478-480)."""
