@@ -86,7 +86,9 @@ def preview(
 ) -> dict:
     """/preview: paginated, projected read with count metadata
     (server.js:426-527).  Deterministic: pages are ordered by ``order_by``
-    (default: all projected columns)."""
+    (default: all projected columns).  ``pagination.total`` is counted
+    once per table or file and reused by later pages and column choices
+    until the source changes (:func:`relational.count_rows`)."""
     try:
         if source == "clickhouse":
             df = spark.table(table_or_path)

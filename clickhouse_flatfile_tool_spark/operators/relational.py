@@ -23,8 +23,13 @@ explicit ``broadcast()`` escape hatch for known-small dimensions.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -90,14 +95,97 @@ def preview(
     page_size: int = DEFAULT_PAGE_SIZE,
 ) -> tuple[DataFrame, Pagination]:
     """The /preview endpoint's shape (server.js:426-527): projected,
-    deterministically paged data + pagination metadata from one count."""
+    deterministically paged data + pagination metadata.
+
+    ``total`` comes from :func:`count_rows` on the unprojected ``df``: the
+    first page of a source runs one count job, and later pages or column
+    choices of the same table, join or file reuse it until the source's
+    plan or input files change.  Only the page itself stays lazy."""
     page_size = min(page_size, MAX_PAGE_SIZE)
     projected = project(df, columns)
-    total = projected.count()
+    total = count_rows(df)
     return (
         page_slice(projected, order_by, page, page_size),
         Pagination(total=total, page=page, page_size=page_size),
     )
+
+
+# Row counts kept per JVM (see count_rows); an LRU of this many sources.
+COUNT_CACHE_ENTRIES = 256
+_counts: OrderedDict = OrderedDict()
+_counts_lock = threading.Lock()
+# leaves whose rows the plan itself fixes (file relations are keyed by their files)
+_FIXED_LEAVES = frozenset({"LocalRelation", "Range", "OneRowRelation"})
+
+
+def _count_key(df: DataFrame) -> tuple | None:
+    """The key under which ``df``'s row count may be reused, with the plan
+    to confirm it: ``((app id, semantic hash, file fingerprint), plan)``.
+    None when the count must run every time: a nondeterministic or
+    streaming plan, a subquery expression, a leaf other than a file
+    relation or a fixed local relation (JDBC/ClickHouse sources, RDDs), or
+    an input file that is not a local ``file:`` path that stats."""
+    plan = df._jdf.queryExecution().analyzed()
+    subquery = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()
+    if not plan.deterministic() or plan.isStreaming() or plan.containsPattern(subquery):
+        return None
+    while plan.nodeName() == "Project":  # a projection keeps the row count
+        plan = plan.child()
+    files: set[str] = set()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation" and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation":
+            files.update(leaf.relation().location().inputFiles())
+        elif kind not in _FIXED_LEAVES:
+            return None
+    fingerprint = []
+    for uri in sorted(files):
+        parts = urlparse(uri)
+        if parts.scheme != "file":
+            return None
+        try:
+            st = os.stat(url2pathname(parts.path))
+        except OSError:
+            return None
+        fingerprint.append((uri, st.st_size, st.st_mtime_ns))
+    app = df.sparkSession.sparkContext.applicationId
+    return (app, plan.semanticHash(), tuple(fingerprint)), plan
+
+
+def count_rows(df: DataFrame) -> int:
+    """The row count of ``df``, run once per source in a session.
+
+    The count is kept under ``df``'s analyzed plan with its top
+    projections stripped, so every page and column choice of one table,
+    join or file shares it, plus the ``(path, size, mtime_ns)`` of every
+    input file, stat'ed at each lookup.  A hit also needs Catalyst's
+    ``sameResult`` on the two plans (``semanticHash`` only picks the
+    candidate).  Nothing hooks writes: every write the engine makes
+    changes the plan (INSERT into a temp view, TRUNCATE, RENAME and
+    ``createOrReplaceTempView`` re-register the view) or the files
+    (``ingest``, ``append_table``, Spark INSERT, mutations, a rewritten
+    CSV), so the key stops matching.  Plans :func:`_count_key` rejects
+    are counted on every call.  The table is a bounded LRU behind a lock,
+    since :mod:`api` is server-shaped."""
+    found = _count_key(df)
+    if found is not None:
+        key, plan = found
+        with _counts_lock:
+            hit = _counts.get(key)
+            if hit is not None:
+                _counts.move_to_end(key)
+        if hit is not None and plan.sameResult(hit[0]):
+            return hit[1]
+    total = df.count()
+    if found is not None:
+        with _counts_lock:
+            _counts[key] = (plan, total)
+            _counts.move_to_end(key)
+            while len(_counts) > COUNT_CACHE_ENTRIES:
+                _counts.popitem(last=False)
+    return total
 
 
 def total_count(df: DataFrame) -> DataFrame:

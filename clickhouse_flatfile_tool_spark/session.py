@@ -38,15 +38,19 @@ Config choices (rationale):
     finders, including the ``userFiles`` directory ``addFile`` fills, and
     every ``sys.meta_path`` finder are still invalidated, and a zip shipped
     by ``addPyFile`` gets a fresh importer on its new path entry.  The
-    stock daemon runs when ``pyspark.worker_util`` has another shape, or
-    when a worker could not import this package (a driver started outside
-    the checkout without it on ``$PYTHONPATH``).
+    stock daemon runs when ``pyspark.worker_util`` has another shape.
+  * Workers find this package wherever the driver was started:
+    ``spark.executorEnv.PYTHONPATH`` starts with the package's parent
+    directory (before any value ``extra_conf`` passes).  Python workers
+    see only their working directory, ``$PYTHONPATH`` and Spark's zips,
+    and cloudpickle ships package functions by reference, so a driver
+    started outside the checkout with the package only on ``sys.path``
+    could neither start the daemon above nor run a UDF operator.
 """
 
 from __future__ import annotations
 
 import os
-import site
 
 from pyspark.sql import SparkSession
 
@@ -56,14 +60,6 @@ CODEGEN_CACHE_ENTRIES = 4096
 # Python worker daemon (see "Config choices" above).
 WORKER_DAEMON_MODULE = "clickhouse_flatfile_tool_spark._worker_daemon"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _workers_import_package() -> bool:
-    """Whether the Python daemon can import this package: the JVM this
-    process launches runs ``python -m`` in this working directory, with
-    ``$PYTHONPATH`` after Spark's own zips."""
-    search = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
-    return os.path.realpath(_PACKAGE_PARENT) in {os.path.realpath(p) for p in search if p}
 
 
 def get_spark(
@@ -107,10 +103,12 @@ def get_spark(
         # 2min is conservative for any heap size.
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
     )
-    if _workers_import_package():
-        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    worker_path = [_PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", "")]
+    builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, worker_path)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from clickhouse_flatfile_tool_spark.operators import relational
+
 
 def create_table_if_absent(
     df: DataFrame, table: str, sort_by: list[str] | None = None
@@ -42,12 +44,14 @@ def append_table(df: DataFrame, table: str, sort_by: list[str] | None = None) ->
     """Append rows; returns the number of rows written (the reference's
     ingested-row accounting, server.js:640, 703, 717).
 
-    The count costs one extra action; callers that don't need it should use
-    ``df.write`` directly — never count in a hot path at scale.
+    The count goes through :func:`relational.count_rows`, so a source that
+    was already previewed or ingested unchanged in this session is not
+    scanned again; otherwise it costs one extra action, and callers that
+    don't need it should use ``df.write`` directly.
     """
     out = df.sortWithinPartitions(*sort_by) if sort_by else df
     out.write.mode("append").format("parquet").saveAsTable(table)
-    return df.count()
+    return relational.count_rows(df)
 
 
 def export_csv(df: DataFrame, path: str, single_file: bool = True) -> str:

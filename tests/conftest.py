@@ -37,3 +37,23 @@ def tables(spark, sf_dir):
     from clickhouse_flatfile_tool_spark.sources.files import read_table_dir
 
     return read_table_dir(spark, sf_dir)
+
+
+@pytest.fixture()
+def jobs_fired(spark):
+    """``jobs_fired(fn)`` -> (fn's result, number of Spark jobs it fired),
+    counted by a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"cfts-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -55,6 +55,76 @@ def test_ingest_and_join(spark, people_csv, tmp_path):
     assert got == {("alice", "10"), ("bob", "20")}
 
 
+def _total(spark, source, name):
+    out = api.preview(spark, source, name, page=1, page_size=2)
+    assert out["success"], out
+    return out["pagination"]["total"]
+
+
+def test_preview_total_follows_every_write(spark, people_csv, tmp_path):
+    """Each write between two pages changes the reported total: a CSV
+    rewrite (the same byte size too), ``ingest`` into a permanent table,
+    Spark INSERT, INSERT into a temp view, TRUNCATE, and DROP then
+    re-create.  RENAME keeps the total under the new name."""
+    assert _total(spark, "file", people_csv) == 3
+    with open(people_csv, "a") as fh:
+        fh.write("4,dave\n")
+    assert _total(spark, "file", people_csv) == 4
+    same_size = tmp_path / "same.csv"
+    same_size.write_text("id,name\n1,aa\n2,bb\n")
+    assert _total(spark, "file", str(same_size)) == 2
+    same_size.write_text("id,name\n1,a\n2,b\n3\n")
+    assert _total(spark, "file", str(same_size)) == 3
+
+    spark.sql("DROP TABLE IF EXISTS t_pages")
+    assert api.ingest(spark, "file", people_csv, "t_pages")["count"] == 4
+    assert _total(spark, "clickhouse", "t_pages") == 4
+    assert api.ingest(spark, "file", people_csv, "t_pages")["count"] == 4
+    assert _total(spark, "clickhouse", "t_pages") == 8
+    spark.sql("INSERT INTO t_pages VALUES ('5', 'erin')")
+    assert _total(spark, "clickhouse", "t_pages") == 9
+    spark.sql("DROP TABLE t_pages")
+    assert api.ingest(spark, "file", str(same_size), "t_pages")["count"] == 3
+    assert _total(spark, "clickhouse", "t_pages") == 3
+
+    spark.createDataFrame([(1, "x")], "id long, s string").createOrReplaceTempView("pages_v")
+    assert _total(spark, "clickhouse", "pages_v") == 1
+    assert api.query(spark, "INSERT INTO pages_v VALUES (2, 'y'), (3, 'z')")["success"]
+    assert _total(spark, "clickhouse", "pages_v") == 3
+    assert api.query(spark, "RENAME TABLE pages_v TO pages_w")["success"]
+    assert _total(spark, "clickhouse", "pages_w") == 3
+    assert api.query(spark, "TRUNCATE TABLE pages_w")["success"]
+    assert _total(spark, "clickhouse", "pages_w") == 0
+    assert api.query(spark, "DROP TABLE pages_w")["success"]
+    assert api.query(spark, "CREATE TABLE pages_w (id Int64) ENGINE = MergeTree ORDER BY id")["success"]
+    assert api.query(spark, "INSERT INTO pages_w VALUES (7)")["success"]
+    assert _total(spark, "clickhouse", "pages_w") == 1
+    spark.sql("DROP TABLE t_pages")
+
+
+def test_ingest_counts_a_previewed_file_once(spark, people_csv, jobs_fired):
+    """columns -> preview -> ingest of one file scans it for the count
+    once: the ingest reuses the preview's total, so it fires only its
+    write jobs."""
+    from clickhouse_flatfile_tool_spark.sinks.writers import create_table_if_absent
+    from clickhouse_flatfile_tool_spark.sources.files import read_csv
+
+    def write_only(table):
+        df = read_csv(spark, people_csv)[0]
+        create_table_if_absent(df.limit(0), table)
+        df.write.mode("append").format("parquet").saveAsTable(table)
+
+    spark.sql("DROP TABLE IF EXISTS t_once")
+    spark.sql("DROP TABLE IF EXISTS t_once_ref")
+    assert _total(spark, "file", people_csv) == 3
+    out, ingest_jobs = jobs_fired(lambda: api.ingest(spark, "file", people_csv, "t_once"))
+    assert out["count"] == 3
+    _, write_jobs = jobs_fired(lambda: write_only("t_once_ref"))
+    assert ingest_jobs == write_jobs
+    spark.sql("DROP TABLE t_once")
+    spark.sql("DROP TABLE t_once_ref")
+
+
 def test_joinable_tables(spark):
     out = api.joinable_tables(spark)
     assert out["success"] and "suggestions" in out

@@ -42,6 +42,51 @@ def test_preview_metadata(tables):
     assert df.columns == ["l_orderkey"]
 
 
+def test_preview_reuses_source_count(spark, tables, jobs_fired):
+    """A second page of a counted source, with other columns, fires one
+    Spark job: the page.  The total is the first page's count, also when
+    the source arrives projected, as an ``execute_join`` frame does."""
+    li = tables["lineitem"].filter("l_quantity > 3")
+    keys = ["l_orderkey", "l_linenumber"]
+    total = li.count()
+    first = R.preview(li, keys + ["l_tax"], keys, page=1, page_size=10)[1]
+    assert first.total == total
+
+    def second_page():
+        df, meta = R.preview(li.select(*keys, "l_quantity"), keys + ["l_quantity"], keys,
+                             page=2, page_size=10)
+        return meta, df.collect()
+
+    (meta, rows), jobs = jobs_fired(second_page)
+    assert meta.total == total and len(rows) == 10
+    assert jobs == 1
+
+
+def test_count_rows_recounts_nondeterministic_plan(tables, jobs_fired):
+    """A plan with rand() is counted on every call, never reused."""
+    sampled = tables["lineitem"].filter(F.rand() < 0.5)
+    assert R._count_key(sampled) is None
+    for _ in range(2):
+        _, jobs = jobs_fired(lambda: R.count_rows(sampled))
+        assert jobs >= 1
+
+
+def test_count_rows_follows_file_rewrite_and_mutation(spark, tmp_path):
+    """A rewritten parquet file and a mutation's directory swap each change
+    the input fingerprint, so the next count is fresh."""
+    from clickhouse_flatfile_tool_spark import api
+    from clickhouse_flatfile_tool_spark.sources.files import read_parquet
+
+    p = str(tmp_path / "src")
+    spark.createDataFrame([(i, float(i)) for i in range(5)], "id int, v double").write.parquet(p)
+    assert R.count_rows(read_parquet(spark, p)) == 5
+    assert R.count_rows(read_parquet(spark, p).select("v")) == 5
+    assert api.mutate(spark, p, "ALTER TABLE t DELETE WHERE id < 2")["success"]
+    assert R.count_rows(read_parquet(spark, p)) == 3
+    spark.createDataFrame([(9, 9.0)], "id int, v double").write.mode("overwrite").parquet(p)
+    assert R.count_rows(read_parquet(spark, p)) == 1
+
+
 def test_chain_join_matches_sql(spark, tables):
     for name, df in tables.items():
         df.createOrReplaceTempView(name)

@@ -483,17 +483,37 @@ def test_worker_daemon_patch_and_fallback(tmp_path, monkeypatch):
     assert zip_finder._files is not files
 
 
-def test_worker_daemon_only_where_workers_import_package(monkeypatch, tmp_path):
-    """The daemon module is set only when a worker started in the working
-    directory, or on ``$PYTHONPATH``, finds this package; elsewhere the stock
-    daemon runs rather than every Python task failing."""
-    from clickhouse_flatfile_tool_spark import session
+def test_package_udfs_run_from_outside_checkout(tmp_path):
+    """A driver started outside the checkout, with the package only on
+    ``sys.path``, runs the package's UDF operators: ``get_spark`` puts the
+    package's parent first on the workers' ``PYTHONPATH`` and keeps a value
+    passed in ``extra_conf``."""
+    import subprocess
+    import sys
 
-    monkeypatch.setattr(session, "_PACKAGE_PARENT", str(tmp_path))
-    monkeypatch.delenv("PYTHONPATH", raising=False)
-    assert session._workers_import_package() is False
-    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/nonexistent", str(tmp_path)]))
-    assert session._workers_import_package() is True
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    extra = str(tmp_path / "extra")
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from clickhouse_flatfile_tool_spark import get_spark
+from clickhouse_flatfile_tool_spark.operators import multimodal
+spark = get_spark(master="local[1]", shuffle_partitions=1, extra_conf={{
+    "spark.sql.warehouse.dir": {str(tmp_path / "wh")!r},
+    "spark.ui.enabled": "false",
+    "spark.executorEnv.PYTHONPATH": {extra!r}}})
+df = spark.createDataFrame([(1, bytearray(b"abc"))], "doc_id long, payload binary")
+print("ROW", multimodal.decode_features(df).collect()[0].n_bytes)
+print("PATH", spark.conf.get("spark.executorEnv.PYTHONPATH"))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    lines = dict(line.split(" ", 1) for line in run.stdout.splitlines() if line[:4] in ("ROW ", "PATH"))
+    assert lines.get("ROW") == "3", run.stderr[-3000:]
+    assert lines["PATH"].split(os.pathsep) == [root, extra]
 
 
 def test_csv_rfc4180_quoting(spark, tmp_path):
