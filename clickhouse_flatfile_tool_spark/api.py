@@ -593,12 +593,19 @@ def query(
             r"(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", sql
         )
         if dt:
-            existed = spark.catalog.dropTempView(dt.group(2))
-            mergetree._ENGINE_REGISTRY.pop(dt.group(2).lower(), None)
-            drop_join_table(dt.group(2))
+            t = dt.group(2)
+            # a session table (temp view) shadows a catalog table of the
+            # same name, as in name resolution; else drop the catalog
+            # table (the one api.ingest made)
+            existed = spark.catalog.dropTempView(t)
+            if not existed and spark.catalog.tableExists(t):
+                spark.sql(f"DROP TABLE `{t}`")
+                existed = True
+            mergetree._ENGINE_REGISTRY.pop(t.lower(), None)
+            drop_join_table(t)
             if not existed and not dt.group(1):
-                raise ValueError(f"table {dt.group(2)!r} does not exist")
-            return {"success": True, "table": dt.group(2), "dropped": existed}
+                raise ValueError(f"table {t!r} does not exist")
+            return {"success": True, "table": t, "dropped": existed}
         scm = re.match(
             r"(?is)^\s*SHOW\s+CREATE\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", sql
         )
@@ -877,7 +884,7 @@ def _materialize_file_calls(spark: SparkSession, sql: str) -> str:
         elif fmt == "orc":
             df = fsrc.read_orc(spark, path)
         elif fmt == "jsoneachrow":
-            df = fsrc.read_json_each_row(spark, path)
+            df = fsrc.read_jsonl(spark, path)
         elif fmt in ("csv", "tsv", "tabseparated"):
             df, _ = fsrc.read_csv(
                 spark, path, has_header=False,

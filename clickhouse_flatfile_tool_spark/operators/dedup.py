@@ -9,16 +9,24 @@ Scale design:
     partial aggregation so it stays cheap; the window-filter form in
     ``incremental_exact_dedup`` does not (see its docstring for when that
     matters).
-  * MinHash-LSH = shingle → minhash signature → band → bucket-join: candidate
-    pairs only ever meet inside a band bucket, so the join is equi-join
-    shaped (shuffle on band-hash), never a cross join.
+  * MinHash-LSH = shingle → minhash signature → band → bucket: candidate
+    pairs only ever meet inside a band bucket (one groupBy on (band,
+    bucket), or an equi-join for new×corpus), never a cross join.  One
+    builder, :func:`_minhash`, makes the signatures and band rows for both
+    hash primitives (xxhash64 fast path, md5 portable path).
   * SimHash = 64-bit signature, near-dups share signature under small
-    Hamming distance; grouping by signature bands gives candidates.
+    Hamming distance; grouping by signature bands gives candidates.  Both
+    families emit their ``(id, band, bucket)`` rows through
+    :func:`_band_rows` and pair them through :func:`_bucket_pairs`.
   * all candidate verification (exact Jaccard) happens per-pair after LSH
-    pruning — the O(n²) step never materializes.
+    pruning — the O(n²) step never materializes; :func:`_verify_and_drop`
+    is the one verify-then-drop-greater-id step (``minhash_dedup`` and
+    both curation funnels).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -162,22 +170,77 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signatures as ``num_hashes`` long columns ``mh_0..mh_{H-1}``:
     for hash i, the minimum of ``xxhash64(shingle, seed+i)`` over the doc's
-    shingle set.
+    shingle set (:func:`_minhash` builds them)."""
+    return _minhash(df, id_col, text_col, shingle_n, num_hashes, seed)
 
-    Shape: explode hashed shingles → per-row xxhash64(long, i) for each hash
-    function → groupBy(id) min-agg.  The shingle string is hashed ONCE; the
-    per-function re-hash works on an 8-byte long, not the text.  The min-agg
-    combines map-side, so the shuffle carries one signature row per
-    document — the layout that scales (a single nested
+
+def _minhash(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    seed: int | None,
+    bands: int | None = None,
+) -> DataFrame:
+    """The one MinHash builder: signatures ``(id, mh_0..mh_{H-1})``, or with
+    ``bands`` the banded ``(id, band, bucket)`` rows over them.
+
+    ``seed`` picks the hash primitive.  An int is the Spark fast path:
+    hash i is ``xxhash64(shingle hash, seed+i)`` and a band's bucket is
+    ``xxhash64`` of its components, 8-byte longs through every shuffle.
+    ``None`` is the engine-portable path: hash i is ``md5(shingle || '#' ||
+    i)``, the component is the lexicographic MIN of the hex strings and a
+    bucket is ``md5`` of the band's components joined by ``'|'`` —
+    identical in any engine with md5 and string min, so the whole LSH
+    pipeline replays on DuckDB (the xxhash64 path is rows-only checked).
+
+    Shape: explode shingles → per-row hash for each function → groupBy(id)
+    min-agg.  The shingle string is hashed ONCE on the fast path; the
+    per-function re-hash works on an 8-byte long, not the text.  The
+    min-agg combines map-side, so the shuffle carries one signature row
+    per document — the layout that scales (a single nested
     array_min(transform(...))×H expression recomputes the shingle array H
-    times and blows up codegen; measured 30× slower).
-    """
-    exploded = shingle_postings(df, id_col, text_col, shingle_n)
-    mins = [
-        F.min(F.xxhash64("__s", F.lit(seed + i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*mins)
+    times and blows up codegen; measured 30× slower)."""
+    portable = seed is None
+    posts = shingle_postings(df, id_col, text_col, shingle_n, hashed=not portable)
+
+    def component(i: int) -> Column:
+        if portable:
+            return F.md5(F.concat_ws("#", F.col("__s"), F.lit(str(i))))
+        return F.xxhash64("__s", F.lit(seed + i))
+
+    sigs = posts.groupBy(id_col).agg(
+        *[F.min(component(i)).alias(f"mh_{i}") for i in range(num_hashes)]
+    )
+    if bands is None:
+        return sigs
+    rows_per_band = num_hashes // bands
+
+    def bucket(b: int) -> Column:
+        members = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
+        return F.md5(F.concat_ws("|", *members)) if portable else F.xxhash64(*members)
+
+    return _band_rows(sigs, id_col, bands, bucket)
+
+
+def _band_rows(
+    sigs: DataFrame, id_col: str, bands: int, bucket: Callable[[int], Column]
+) -> DataFrame:
+    """``(id, band, bucket)`` rows, one per document and band, where
+    ``bucket(b)`` is band b's bucket column over ``sigs`` — the banding
+    step shared by MinHash-LSH (both primitives) and SimHash."""
+    return sigs.select(
+        F.col(id_col),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket"))
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, "bb.band", "bb.bucket")
 
 
 def minhash_lsh_candidates(
@@ -193,37 +256,17 @@ def minhash_lsh_candidates(
     """Near-duplicate candidate pairs via banded MinHash-LSH.
 
     signature (num_hashes) → ``bands`` bands of rows = num_hashes/bands →
-    band-hash → self-equi-join on (band_idx, band_hash).  Two docs become a
-    candidate iff they collide in ≥1 band — the classic S-curve.  Returns
-    distinct (id_a, id_b) with id_a < id_b.
+    band-hash → candidate pairs inside each (band, bucket).  Two docs
+    become a candidate iff they collide in ≥1 band — the classic S-curve.
+    Returns distinct (id_a, id_b) with id_a < id_b.
 
     Scale: the only shuffles are the signature groupBy, ONE groupBy on
-    (band, bucket) — singleton buckets (the overwhelming majority) are
-    dropped before any pair exists — and the final pair-distinct.  Pairs are
-    enumerated inside each bucket from the sorted id array with built-in
-    transform/slice (no self-join: the old a⋈b form shuffled the banded rows
-    twice and couldn't skip singletons).  A hot bucket (boilerplate text)
-    still blows up as |bucket|²; 'dedupe near-exact first' is the
-    operational fix, and AQE handles moderate skew in the groupBy.
+    (band, bucket) and the final pair-distinct (:func:`_bucket_pairs`).
+    A hot bucket (boilerplate text) still blows up as |bucket|²; 'dedupe
+    near-exact first' is the operational fix, and AQE handles moderate
+    skew in the groupBy.
     """
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, shingle_n, num_hashes, seed)
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = _minhash(df, id_col, text_col, shingle_n, num_hashes, seed, bands)
     return _bucket_pairs(banded, id_col, max_bucket_size)
 
 
@@ -277,21 +320,45 @@ def minhash_dedup(
     **lsh_kwargs,
 ) -> DataFrame:
     """Full near-dup dedup: LSH candidates → exact Jaccard verify → drop the
-    higher id of every verified pair.  Returns the surviving rows.
-
-    Transitivity note: we drop any doc that is the greater id in some
-    verified pair (greedy, not connected-components — identical policy to
-    common corpus-dedup pipelines; CC is a multi-round join loop we can add
-    when needed).
-    """
+    higher id of every verified pair (:func:`_verify_and_drop`).  Returns
+    the surviving rows."""
     cands = minhash_lsh_candidates(df, id_col, text_col, **lsh_kwargs)
-    verified = jaccard_verify(df, cands, id_col, text_col, lsh_kwargs.get("shingle_n", 3))
+    return _verify_and_drop(
+        df, cands, id_col, text_col, lsh_kwargs.get("shingle_n", 3),
+        jaccard_threshold,
+    )
+
+
+def _verify_and_drop(
+    docs: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    jaccard_threshold: float,
+    verify_docs: DataFrame | None = None,
+) -> DataFrame:
+    """``docs`` minus the ``id_b`` side of every candidate pair whose exact
+    Jaccard (:func:`jaccard_verify`) reaches the threshold — the greater
+    id of a within-set pair.  ``verify_docs`` supplies the text of both
+    pair sides when it is wider than ``docs``: the incremental funnel
+    verifies ``(corpus_id, new_id)`` pairs over corpus ∪ delta and drops
+    only delta docs.
+
+    Transitivity note: any doc that is the greater id in some verified
+    pair is dropped (greedy, not connected components — the policy of
+    common corpus-dedup pipelines; :func:`cc_dedup` is the transitive
+    one)."""
+    verified = jaccard_verify(
+        docs if verify_docs is None else verify_docs,
+        pairs, id_col, text_col, shingle_n,
+    )
     losers = (
         verified.filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    return df.join(losers, on=id_col, how="left_anti")
+    return docs.join(losers, on=id_col, how="left_anti")
 
 
 def jaccard_verify(
@@ -461,22 +528,12 @@ def simhash_candidates(
     MinHash-LSH (:func:`_bucket_pairs`)."""
     bits_per = 64 // bands
     sigs = simhash_signatures(df, id_col, text_col, 64, seed)
-    banded = sigs.withColumnRenamed("simhash", "__sig").select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("__sig"), b * bits_per)
-                        .bitwiseAND(F.lit((1 << bits_per) - 1))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = _band_rows(
+        sigs.withColumnRenamed("simhash", "__sig"), id_col, bands,
+        lambda b: F.shiftrightunsigned(F.col("__sig"), b * bits_per).bitwiseAND(
+            F.lit((1 << bits_per) - 1)
+        ),
+    )
     return _bucket_pairs(banded, id_col, max_bucket_size)
 
 
@@ -584,18 +641,22 @@ def decontaminate(
     )
     posts = shingle_postings(train, id_col, text_col, n)
     hits = posts.join(bench_sh.withColumn("__hit", F.lit(1)), "__s", "left")
+    return _overlap_report(hits, id_col, min_overlap)
+
+
+def _overlap_report(hits: DataFrame, id_col: str, min_overlap: int) -> DataFrame:
+    """The per-document decontamination report from shingle postings
+    left-joined to benchmark hits (``__hit`` = 1 or NULL): ``(id,
+    n_shingles, n_overlap, overlap_ratio, contaminated)``.  Shared by
+    :func:`decontaminate` and :func:`bloom_decontaminate`, whose outputs
+    must be identical."""
+    n = F.count(F.lit(1))
+    overlap = F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
     return hits.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long")).alias("n_overlap"),
-        F.round(
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-            / F.count(F.lit(1)),
-            6,
-        ).alias("overlap_ratio"),
-        (
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-            >= F.lit(min_overlap)
-        ).alias("contaminated"),
+        n.alias("n_shingles"),
+        overlap.alias("n_overlap"),
+        F.round(overlap / n, 6).alias("overlap_ratio"),
+        (overlap >= F.lit(min_overlap)).alias("contaminated"),
     )
 
 
@@ -650,48 +711,6 @@ def incremental_exact_dedup(
         .filter(F.col(id_col) == F.col("__minid"))
         .drop("__fp", "__minid")
     )
-
-
-def incremental_lsh_dedup_candidates(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **lsh_kwargs,
-) -> DataFrame:
-    """Near-dup candidates of NEW docs against the historical corpus:
-    band signatures for both sides, equi-join new×old on (band, bucket) —
-    never a corpus self-join, so daily cost is O(batch) not O(corpus).
-    Returns distinct (new_id, corpus_id).  At scale the corpus's banded
-    signatures are precomputed once and stored bucketed on (band, bucket)."""
-    num_hashes = lsh_kwargs.get("num_hashes", 16)
-    bands = lsh_kwargs.get("bands", 8)
-    shingle_n = lsh_kwargs.get("shingle_n", 3)
-    seed = lsh_kwargs.get("seed", 42)
-    rows_per_band = num_hashes // bands
-
-    def banded(df: DataFrame, alias: str) -> DataFrame:
-        sigs = minhash_signatures(df, id_col, text_col, shingle_n, num_hashes, seed)
-        return sigs.select(
-            F.col(id_col).alias(alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(alias, "bb.band", "bb.bucket")
-
-    n = banded(new_df, "new_id")
-    c = banded(corpus_df, "corpus_id")
-    return n.join(c, on=["band", "bucket"]).select("new_id", "corpus_id").distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -777,68 +796,8 @@ def cc_dedup(
 
 
 # ---------------------------------------------------------------------------
-# Engine-portable (oracle-checkable) MinHash variant
+# Engine-portable (oracle-checkable) MinHash-LSH and the corpus artifacts
 # ---------------------------------------------------------------------------
-
-def minhash_signatures_portable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """MinHash with md5-hex minimums: hash function i is
-    ``md5(shingle || '#' || i)`` and the signature component is the
-    lexicographic MIN of the hex strings — identical in any engine with
-    md5 + string min, which makes the *whole* LSH pipeline differentially
-    testable against DuckDB (the xxhash64 fast path is Spark-specific and
-    can only be rows-only checked).  Keep :func:`minhash_signatures` for
-    production throughput; keep this for verification parity.
-    """
-    exploded = shingle_postings(df, id_col, text_col, shingle_n, hashed=False)
-    mins = [
-        F.min(F.md5(F.concat_ws("#", F.col("__s"), F.lit(str(i))))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*mins)
-
-
-def _portable_banded(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
-    """(id, band, bucket) rows over the portable md5 signatures: band
-    bucket = md5('|'-concat of the band's signature components).  Shared
-    by the within-set and incremental (new-vs-corpus) candidate paths."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures_portable(df, id_col, text_col, shingle_n, num_hashes)
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"mh_{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-
 
 def minhash_lsh_candidates_portable(
     df: DataFrame,
@@ -850,18 +809,14 @@ def minhash_lsh_candidates_portable(
     max_bucket_size: int | None = None,
     banded: DataFrame | None = None,
 ) -> DataFrame:
-    """Banded LSH over the portable md5 signatures: band bucket =
-    md5(concat of the band's signature components); candidates = distinct
-    (id_a < id_b) sharing any (band, bucket).  Same bucket-grouping shape as
-    the fast path — only the hash primitive differs.  Pass ``banded`` (a
-    prebuilt :func:`_portable_banded` frame for ``df``) to share the
-    signature/banding work with another consumer — the incremental
-    curation funnel bands the delta ONCE for both its within-delta and
-    delta-vs-corpus passes."""
+    """:func:`minhash_lsh_candidates` over the portable md5 signatures
+    (:func:`_minhash` with ``seed=None``) — same bucket-grouping shape, only
+    the hash primitive differs.  Pass ``banded`` (prebuilt portable band
+    rows for ``df``) to share the signature/banding work with another
+    consumer — the incremental curation funnel bands the delta ONCE for
+    both its within-delta and delta-vs-corpus passes."""
     if banded is None:
-        banded = _portable_banded(
-            df, id_col, text_col, shingle_n, num_hashes, bands
-        )
+        banded = _minhash(df, id_col, text_col, shingle_n, num_hashes, None, bands)
     return _bucket_pairs(banded, id_col, max_bucket_size)
 
 
@@ -876,8 +831,7 @@ def incremental_lsh_candidates_portable(
     new_banded: DataFrame | None = None,
     corpus_banded: DataFrame | None = None,
 ) -> DataFrame:
-    """Portable-md5 twin of :func:`incremental_lsh_dedup_candidates`:
-    near-dup candidates of NEW docs against the historical corpus as
+    """Near-dup candidates of NEW docs against the historical corpus as
     distinct ``(corpus_id, new_id)`` — band both sides with the SAME md5
     signature scheme and equi-join new×corpus on (band, bucket).  Never a
     corpus self-join, so a daily batch costs O(batch), and the md5
@@ -892,12 +846,12 @@ def incremental_lsh_candidates_portable(
     bucketed table).  ``corpus_banded`` MUST have been built with the
     same ``(shingle_n, num_hashes, bands)`` — a mismatch silently
     yields wrong candidates, so the frame's shape is checked but the
-    parameters are the caller's contract.  ``new_banded`` (a prebuilt
-    :func:`_portable_banded` frame for ``new_df``) shares the delta's
-    banding with the within-delta pass (the minhash_lsh twin's note)."""
+    parameters are the caller's contract.  ``new_banded`` (prebuilt
+    portable band rows for ``new_df``) shares the delta's banding with
+    the within-delta pass (:func:`minhash_lsh_candidates_portable`)."""
     if new_banded is None:
-        new_banded = _portable_banded(
-            new_df, id_col, text_col, shingle_n, num_hashes, bands
+        new_banded = _minhash(
+            new_df, id_col, text_col, shingle_n, num_hashes, None, bands
         )
     n = new_banded.withColumnRenamed(id_col, "new_id")
     if corpus_banded is None:
@@ -906,8 +860,8 @@ def incremental_lsh_candidates_portable(
                 "incremental_lsh_candidates_portable: need corpus_df or "
                 "corpus_banded"
             )
-        corpus_banded = _portable_banded(
-            corpus_df, id_col, text_col, shingle_n, num_hashes, bands
+        corpus_banded = _minhash(
+            corpus_df, id_col, text_col, shingle_n, num_hashes, None, bands
         )
     elif set(corpus_banded.columns) != {id_col, "band", "bucket"}:
         raise ValueError(
@@ -921,6 +875,31 @@ def incremental_lsh_candidates_portable(
         .select("corpus_id", "new_id")
         .distinct()
     )
+
+
+def _corpus_artifacts(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+) -> dict[str, tuple[DataFrame, list[str]]]:
+    """The corpus artifacts of ``docs`` as ``name → (frame, bucket keys)``:
+    distinct text fingerprints (``__fp``) and portable banded MinHash rows
+    (``(id, band, bucket)``).  :func:`write_corpus_artifacts` and
+    :func:`append_corpus_artifacts` both build from here, so an append
+    adds exactly what a write of the same docs would hold."""
+    return {
+        "fingerprints": (
+            docs.select(fingerprint(text_col).alias("__fp")).distinct(),
+            ["__fp"],
+        ),
+        "banded": (
+            _minhash(docs, id_col, text_col, shingle_n, num_hashes, None, bands),
+            ["band", "bucket"],
+        ),
+    }
 
 
 def write_corpus_artifacts(
@@ -942,8 +921,8 @@ def write_corpus_artifacts(
         fingerprints (``__fp``), keyed/bucketed on ``__fp``: the probe
         side of :func:`incremental_exact_dedup`.
       ``<out_dir>/banded`` — the corpus's portable-md5 banded MinHash
-        signatures ``(id, band, bucket)`` from :func:`_portable_banded`,
-        keyed/bucketed on ``(band, bucket)``: the probe side of
+        signatures ``(id, band, bucket)``, keyed/bucketed on ``(band,
+        bucket)``: the probe side of
         :func:`incremental_lsh_candidates_portable`.
 
     With ``table_prefix`` set, each artifact is a REAL bucketed catalog
@@ -960,14 +939,9 @@ def write_corpus_artifacts(
     num_hashes, bands)`` it was built with — pass the same values to the
     consumers."""
     spark = corpus.sparkSession
-    fps = corpus.select(fingerprint(text_col).alias("__fp")).distinct()
-    banded = _portable_banded(
+    specs = _corpus_artifacts(
         corpus, id_col, text_col, shingle_n, num_hashes, bands
     )
-    specs = {
-        "fingerprints": (fps, ["__fp"]),
-        "banded": (banded, ["band", "bucket"]),
-    }
     out: dict[str, DataFrame] = {}
     for name, (frame, keys) in specs.items():
         path = f"{out_dir}/{name}"
@@ -1010,27 +984,22 @@ def append_corpus_artifacts(
     :func:`write_corpus_artifacts`'s once-per-generation contract
     forbids).
 
-    Appends are O(delta): the delta's artifacts are computed with the
-    same construction as the writer and appended into the same bucketed
-    layout (``insertInto`` keeps bucket spills correct for catalog
-    tables; plain-Parquet mode appends hash-repartitioned files).
-    Fingerprint duplicates across appends are harmless — the consumer
-    is an anti-join (:func:`incremental_exact_dedup`'s note) — but the
-    delta's fingerprints are still deduped locally to keep the table
-    from accreting copies.  Pytest proves append(write(corpus), delta)
-    is funnel-equivalent to write(corpus ∪ delta).
+    Appends are O(delta): the delta's artifacts come from the writer's
+    own construction (:func:`_corpus_artifacts`) and are appended into
+    the same bucketed layout (``insertInto`` keeps bucket spills correct
+    for catalog tables; plain-Parquet mode appends hash-repartitioned
+    files).  Fingerprint duplicates across appends are harmless — the
+    consumer is an anti-join (:func:`incremental_exact_dedup`'s note) —
+    but the delta's fingerprints are still deduped locally to keep the
+    table from accreting copies.  Pytest proves append(write(corpus),
+    delta) is funnel-equivalent to write(corpus ∪ delta).
 
     Pass the same ``(shingle_n, num_hashes, bands, num_buckets,
     table_prefix)`` the artifacts were written with."""
     spark = accepted_delta.sparkSession
-    fps = accepted_delta.select(fingerprint(text_col).alias("__fp")).distinct()
-    banded = _portable_banded(
+    specs = _corpus_artifacts(
         accepted_delta, id_col, text_col, shingle_n, num_hashes, bands
     )
-    specs = {
-        "fingerprints": (fps, ["__fp"]),
-        "banded": (banded, ["band", "bucket"]),
-    }
     out: dict[str, DataFrame] = {}
     for name, (frame, keys) in specs.items():
         if table_prefix is not None:
@@ -1281,19 +1250,7 @@ def bloom_decontaminate(
     # exact verify: candidates ∩ benchmark — both sides small now
     true_hits = cand.join(bench_sh, "__s").withColumn("__hit", F.lit(1))
     hits = posts.join(true_hits, "__s", "left")
-    return hits.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long")).alias("n_overlap"),
-        F.round(
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-            / F.count(F.lit(1)),
-            6,
-        ).alias("overlap_ratio"),
-        (
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0)).cast("long"))
-            >= F.lit(min_overlap)
-        ).alias("contaminated"),
-    )
+    return _overlap_report(hits, id_col, min_overlap)
 
 
 # ---------------------------------------------------------------------------
@@ -1767,7 +1724,7 @@ def winnow_fingerprints(
     bounds whole-document resemblance, winnowing detects local overlap.
 
     Hash primitive is md5 hex with lexicographic window-min — the
-    portable-oracle convention (see minhash_signatures_portable), so the
+    portable-oracle convention (see :func:`_minhash`), so the
     whole pipeline is differentially testable in DuckDB.  Density: ~2/(w+1)
     of positions are selected, the paper's bound.
 

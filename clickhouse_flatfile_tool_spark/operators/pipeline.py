@@ -12,15 +12,18 @@ an EXT capability), but each stage is an already-proven operator:
   2. c4      — :func:`text.c4_rules` page-level gates
   3. exact   — :func:`dedup.exact_dedup_canonical` (min-id survivor)
   4. neardup — :func:`dedup.minhash_lsh_candidates_portable` →
-               :func:`dedup.jaccard_verify` ≥ threshold → drop greater id
+               :func:`dedup._verify_and_drop` (exact Jaccard ≥ threshold
+               → drop the greater id; the step ``minhash_dedup`` runs)
   5. spans   — :func:`dedup.remove_repeated_spans` (Lee et al. 2022
                keep-one policy; docs are MODIFIED, not dropped)
   6. decon   — :func:`dedup.decontaminate` vs the benchmark set → drop
                contaminated
 
 Scale shape: every stage is the proven operator's own plan (banded LSH,
-shingle groupBy, broadcast benchmark — no all-pairs anywhere).  The
-funnel needs each stage's cardinality, so intermediate survivor sets
+shingle groupBy, broadcast benchmark — no all-pairs anywhere); the
+incremental funnel below runs the same near-dup step on delta×corpus and
+within-delta candidates from one banding of the delta.  The funnel
+needs each stage's cardinality, so intermediate survivor sets
 must not be recomputed: counting stage k through lazy lineage re-runs
 stages 1..k-1, turning a 6-stage pipeline into a quadratic re-scan.  Two
 materialization modes, chosen by ``checkpoint_dir``:
@@ -173,13 +176,12 @@ def curation_pipeline(
         cands = dedup.minhash_lsh_candidates(
             s3, id_col, text_col, shingle_n, num_hashes, bands
         )
-    verified = dedup.jaccard_verify(s3, cands, id_col, text_col, shingle_n)
-    losers = (
-        verified.filter(F.col("jaccard") >= jaccard_threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    s4 = _stage(
+        dedup._verify_and_drop(
+            s3, cands, id_col, text_col, shingle_n, jaccard_threshold
+        ),
+        "stage4_neardup",
     )
-    s4 = _stage(s3.join(losers, id_col, "left_anti"), "stage4_neardup")
 
     spans = _stage(
         dedup.remove_repeated_spans(
@@ -282,8 +284,9 @@ def curation_pipeline_incremental(
       4. neardup— :func:`dedup.incremental_lsh_candidates_portable`
                   (delta×corpus, never a corpus self-join) UNION the
                   within-delta :func:`dedup.minhash_lsh_candidates_portable`
-                  pairs → exact Jaccard verify ≥ threshold → drop the
-                  delta doc (corpus docs are never dropped)
+                  pairs → :func:`dedup._verify_and_drop` over corpus ∪
+                  delta text: drop the delta doc (each pair's ``id_b``;
+                  corpus docs are never dropped)
       5. decon  — :func:`dedup.decontaminate` vs the benchmark set
 
     Scale shape: the corpus-side artifacts are computed once per corpus
@@ -350,8 +353,8 @@ def curation_pipeline_incremental(
     # band the DELTA once — the dominant per-run cost (shingle explode +
     # md5 min-hash aggregation) is shared by both candidate passes via
     # the persisted frame (ADVICE r7: released below, branch-dependent)
-    delta_banded = dedup._portable_banded(
-        s3, id_col, text_col, shingle_n, num_hashes, bands
+    delta_banded = dedup._minhash(
+        s3, id_col, text_col, shingle_n, num_hashes, seed=None, bands=bands
     ).persist()
     cross = dedup.incremental_lsh_candidates_portable(
         s3, corp, id_col, text_col, shingle_n, num_hashes, bands,
@@ -392,15 +395,13 @@ def curation_pipeline_incremental(
         # more than the cache at this mode's scale).
         pairs = cross.union(within)
         verify_docs = corp.union(s3)
-    verified = dedup.jaccard_verify(
-        verify_docs, pairs, id_col, text_col, shingle_n
+    s4 = _stage(
+        dedup._verify_and_drop(
+            s3, pairs, id_col, text_col, shingle_n, jaccard_threshold,
+            verify_docs=verify_docs,
+        ),
+        "stage4_neardup",
     )
-    losers = (
-        verified.filter(F.col("jaccard") >= jaccard_threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    s4 = _stage(s3.join(losers, id_col, "left_anti"), "stage4_neardup")
 
     dec = dedup.decontaminate(s4, benchmark, id_col, text_col, n=shingle_n)
     s5 = _stage(

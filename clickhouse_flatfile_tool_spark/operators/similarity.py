@@ -462,61 +462,6 @@ def cosine_dedup_pairs(
     return rep.groupBy("bi", "bj").applyInPandas(score, _PAIR_SCHEMA)
 
 
-def cosine_dedup_pairs_broadcast(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cos_threshold: float = 0.9,
-    max_broadcast_rows: int = 1_000_000,
-) -> DataFrame:
-    """Broadcast fast path for exact cosine dedup: the L2-normalized corpus
-    matrix is materialized on the driver ONCE and broadcast; each partition
-    BLAS-multiplies its own rows against it.  Zero shuffles, but driver/
-    executor memory is O(N×d) — so it REFUSES to run above
-    ``max_broadcast_rows`` (fail loudly rather than OOM the driver at scale;
-    use :func:`cosine_dedup_pairs` — distributed block-pairs — instead).
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    n = df.count()
-    if n > max_broadcast_rows:
-        raise ValueError(
-            f"cosine_dedup_pairs_broadcast: corpus has {n} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}; driver-side "
-            "materialization would not scale — use cosine_dedup_pairs "
-            "(block-pair exact) or embedding_dedup_candidates (LSH)."
-        )
-    rows = df.select(F.col(id_col), F.col(vec_col)).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_mat = bc.value
-        for pdf in batches:
-            my_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            v = np.array(list(pdf[vec_col]), dtype=np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
-            sims = v @ all_mat.T
-            keep = (sims >= cos_threshold) & (my_ids[:, None] < all_ids[None, :])
-            ai, bi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "id_a": my_ids[ai],
-                    "id_b": all_ids[bi],
-                    "cos_sim": np.round(sims[ai, bi], 6),
-                }
-            )
-
-    from clickhouse_flatfile_tool_spark.partitioning import ensure_parallelism
-
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(gen, _PAIR_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # ANN: IVF (inverted-file) coarse quantizer
 # ---------------------------------------------------------------------------

@@ -106,20 +106,6 @@ def bootstrap_sample_data(spark: SparkSession, table: str = "sample_data") -> Da
     return spark.table(table)
 
 
-def export_json_each_row(df: DataFrame, path: str) -> str:
-    """Write newline-delimited JSON (ClickHouse JSONEachRow wire format) —
-    the export analog of the reference's read-side transfer encoding."""
-    df.write.mode("overwrite").json(path)
-    return path
-
-
-def export_orc(df: DataFrame, path: str) -> str:
-    """Write ORC — ClickHouse's other native columnar interchange format
-    (``FORMAT ORC``); pairs with :func:`sources.files.read_orc`."""
-    df.write.mode("overwrite").orc(path)
-    return path
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -231,23 +231,6 @@ def read_table_dir(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def read_json_each_row(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Read newline-delimited JSON — ClickHouse's JSONEachRow wire format,
-    the transfer encoding for every read in the reference
-    (/root/reference/server/server.js:141, 232, 458, 469, 615).
-
-    An explicit ``schema`` (DDL string) skips Spark's sampling pass; without
-    one, inference reads the data once — fine for previews, pass a schema in
-    pipelines.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC columnar scan — the second columnar format ClickHouse speaks
     natively (``FORMAT ORC``); same vectorized-reader/pushdown/pruning

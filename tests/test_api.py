@@ -83,7 +83,7 @@ def test_preview_total_follows_every_write(spark, people_csv, tmp_path):
     assert _total(spark, "clickhouse", "t_pages") == 8
     spark.sql("INSERT INTO t_pages VALUES ('5', 'erin')")
     assert _total(spark, "clickhouse", "t_pages") == 9
-    spark.sql("DROP TABLE t_pages")
+    assert api.query(spark, "DROP TABLE t_pages")["dropped"]
     assert api.ingest(spark, "file", str(same_size), "t_pages")["count"] == 3
     assert _total(spark, "clickhouse", "t_pages") == 3
 
@@ -153,6 +153,40 @@ def test_download_formats(spark, tmp_path, people_csv):
         assert reader(str(tmp_path / f"dl_{fmt}")).count() == n
     bad = api.download(spark, "t_dl2", str(tmp_path / "x"), fmt="xml")
     assert not bad["success"]
+
+    # values survive the JSONEachRow and ORC writers: a comma inside a
+    # string, a NULL double, and (ORC) the exact schema
+    from clickhouse_flatfile_tool_spark.sources.files import read_jsonl, read_orc
+
+    ddl = "id long, name string, v double"
+    typed = spark.createDataFrame([(1, "John Doe", 25.5), (2, "Jane, Smith", None)], ddl)
+    typed.createOrReplaceTempView("t_dl_typed")
+    want = sorted(map(tuple, typed.collect()))
+    for fmt, read in (
+        ("jsonl", lambda p: read_jsonl(spark, p, ddl)),
+        ("orc", lambda p: read_orc(spark, p)),
+    ):
+        path = str(tmp_path / f"typed_{fmt}")
+        assert api.download(spark, "t_dl_typed", path, fmt=fmt)["success"]
+        back = read(path)
+        if fmt == "orc":
+            assert back.schema == typed.schema
+        assert sorted(map(tuple, back.collect())) == want
+    spark.catalog.dropTempView("t_dl_typed")
+
+
+def test_query_drop_table_drops_ingested_table(spark, people_csv):
+    """DROP TABLE through the SQL endpoint drops a catalog table made by
+    ``ingest``, not only session tables; IF EXISTS on a missing table
+    reports ``dropped: False`` and a bare second DROP errors."""
+    spark.sql("DROP TABLE IF EXISTS t_drop_ing")
+    assert api.ingest(spark, "file", people_csv, "t_drop_ing")["success"]
+    out = api.query(spark, "DROP TABLE t_drop_ing")
+    assert out["success"] and out["dropped"], out
+    assert not spark.catalog.tableExists("t_drop_ing")
+    again = api.query(spark, "DROP TABLE IF EXISTS t_drop_ing")
+    assert again["success"] and again["dropped"] is False
+    assert not api.query(spark, "DROP TABLE t_drop_ing")["success"]
 
 
 def test_run_with_progress_reports_real_tasks(spark):

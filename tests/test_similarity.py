@@ -83,25 +83,30 @@ def test_cosine_dedup_pairs_exact(spark):
     assert got == {(1, 2), (1, 4), (2, 4)}
 
 
-def test_block_pair_matches_broadcast(emb):
-    """The distributed block-pair exact path and the guarded broadcast fast
-    path must produce identical pair sets (they implement the same exact
-    semantics with different physical plans)."""
+def test_block_pair_matches_numpy(emb):
+    """The distributed block-pair exact path returns exactly the
+    above-threshold pairs of a numpy all-pairs cosine computation."""
+    import numpy as np
+
     sub = emb.filter("vec_id < 200")
     blocked = {
         (r.id_a, r.id_b, r.cos_sim)
         for r in S.cosine_dedup_pairs(sub, cos_threshold=0.4, n_blocks=5).collect()
     }
-    bcast = {
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in S.cosine_dedup_pairs_broadcast(sub, cos_threshold=0.4).collect()
+    rows = sorted((r.vec_id, r.embedding) for r in sub.collect())
+    ids = np.array([i for i, _ in rows], dtype=np.int64)
+    m = np.array([v for _, v in rows], dtype=np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
+    ai, bi = np.nonzero((sims >= 0.4) & (ids[:, None] < ids[None, :]))
+    want = {
+        (int(ids[a]), int(ids[b]), round(float(sims[a, b]), 6))
+        for a, b in zip(ai, bi)
     }
-    assert blocked == bcast and len(blocked) > 0
-
-
-def test_broadcast_guard_raises(emb):
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        S.cosine_dedup_pairs_broadcast(emb, max_broadcast_rows=10)
+    assert len(want) > 0
+    assert {(a, b) for a, b, _ in blocked} == {(a, b) for a, b, _ in want}
+    got = {(a, b): c for a, b, c in blocked}
+    assert all(abs(got[(a, b)] - c) <= 2e-6 for a, b, c in want)
 
 
 def test_ivf_recall_against_exact(emb):

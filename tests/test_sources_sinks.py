@@ -103,19 +103,6 @@ def test_nanos_parquet_read(spark, sf_dir):
     assert df.count() > 0
 
 
-def test_json_each_row_roundtrip(spark, tmp_path):
-    from clickhouse_flatfile_tool_spark.sinks.writers import export_json_each_row
-    from clickhouse_flatfile_tool_spark.sources.files import read_json_each_row
-
-    df = spark.createDataFrame(
-        [(1, "John Doe", 25.5), (2, "Jane, Smith", None)], "id long, name string, v double"
-    )
-    path = str(tmp_path / "jer")
-    export_json_each_row(df, path)
-    back = read_json_each_row(spark, path, "id long, name string, v double")
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
 def test_bucketed_join_has_no_exchange(spark, tables):
     """Two tables bucketed on the join key must sort-merge-join with zero
     Exchange operators — the write-once-shuffle-never contract."""
@@ -154,20 +141,6 @@ def test_tsv_read(spark, tmp_path):
     assert df.columns == ["id", "name", "price"]
     rows = sorted(map(tuple, df.collect()))
     assert rows == [("1", "alpha", "10.5"), ("2", "beta", "20.0")]
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    from clickhouse_flatfile_tool_spark.sinks.writers import export_orc
-    from clickhouse_flatfile_tool_spark.sources.files import read_orc
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id long, name string, v double"
-    )
-    path = str(tmp_path / "orc_out")
-    export_orc(df, path)
-    back = read_orc(spark, path)
-    assert back.schema == df.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_partitioned_write_prunes_partitions(spark, tables, tmp_path):

@@ -297,7 +297,7 @@ def test_incremental_lsh_finds_cross_corpus_near_dup(tables, spark):
     from pyspark.sql import functions as F
 
     from clickhouse_flatfile_tool_spark.operators.dedup import (
-        incremental_lsh_dedup_candidates,
+        incremental_lsh_candidates_portable,
     )
 
     docs = tables["documents"]
@@ -305,7 +305,7 @@ def test_incremental_lsh_finds_cross_corpus_near_dup(tables, spark):
     # batch: odd ids plus an exact copy of corpus doc 0 under a new id
     clone = docs.where("doc_id = 0").withColumn("doc_id", F.lit(999_999).cast("long"))
     batch = docs.where("doc_id % 2 = 1").unionByName(clone)
-    cands = incremental_lsh_dedup_candidates(batch, corpus)
+    cands = incremental_lsh_candidates_portable(batch, corpus)
     got = {(r.new_id, r.corpus_id) for r in cands.collect()}
     assert (999_999, 0) in got
     # never pairs corpus with corpus or batch with batch
