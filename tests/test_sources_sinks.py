@@ -103,6 +103,29 @@ def test_nanos_parquet_read(spark, sf_dir):
     assert df.count() > 0
 
 
+def test_json_each_row_roundtrip(spark, tmp_path):
+    """JSONEachRow out through ``api.download`` and back in through the
+    SQL ``file(..., 'JSONEachRow')`` table function: a comma inside a
+    string and a NULL double survive."""
+    from clickhouse_flatfile_tool_spark import api
+
+    df = spark.createDataFrame(
+        [(1, "John Doe", 25.5), (2, "Jane, Smith", None)], "id long, name string, v double"
+    )
+    df.createOrReplaceTempView("t_jer")
+    path = str(tmp_path / "jer")
+    assert api.download(spark, "t_jer", path, fmt="jsonl")["success"]
+    back = api.query(
+        spark, f"SELECT id, name, v FROM file('{path}', 'JSONEachRow') ORDER BY id"
+    )
+    assert back["success"], back
+    assert back["data"] == [
+        {"id": 1, "name": "John Doe", "v": 25.5},
+        {"id": 2, "name": "Jane, Smith", "v": None},
+    ]
+    spark.catalog.dropTempView("t_jer")
+
+
 def test_bucketed_join_has_no_exchange(spark, tables):
     """Two tables bucketed on the join key must sort-merge-join with zero
     Exchange operators — the write-once-shuffle-never contract."""
@@ -141,6 +164,27 @@ def test_tsv_read(spark, tmp_path):
     assert df.columns == ["id", "name", "price"]
     rows = sorted(map(tuple, df.collect()))
     assert rows == [("1", "alpha", "10.5"), ("2", "beta", "20.0")]
+
+
+def test_orc_roundtrip(spark, tmp_path):
+    """ORC out through ``api.download`` and back in through the SQL
+    ``file(..., 'ORC')`` table function: same schema, same rows."""
+    import re
+
+    from clickhouse_flatfile_tool_spark import api
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.5), (2, "b", 2.5)], "id long, name string, v double"
+    )
+    df.createOrReplaceTempView("t_orc")
+    path = str(tmp_path / "orc_out")
+    assert api.download(spark, "t_orc", path, fmt="orc")["success"]
+    back = api.query(spark, f"SELECT * FROM file('{path}', 'ORC')")
+    assert back["success"], back
+    view = re.search(r"file__\w+", back["translated_sql"]).group(0)
+    assert spark.table(view).schema == df.schema
+    assert sorted(tuple(r.values()) for r in back["data"]) == sorted(map(tuple, df.collect()))
+    spark.catalog.dropTempView("t_orc")
 
 
 def test_partitioned_write_prunes_partitions(spark, tables, tmp_path):
