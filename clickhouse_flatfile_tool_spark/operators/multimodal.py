@@ -2,20 +2,25 @@
 (image/audio/video) with typed metadata, processed by Arrow-batched pandas
 UDFs over ``mapInPandas``.
 
-The decode step is STUBBED — image/audio libraries are not in this container
-— but everything Spark-side is real and tested: schema, batch iteration,
-partition sizing, UDF signatures.  Swap ``_decode_stub`` for PIL/ffmpeg and
-the pipeline is production-shaped.
+Pixel and sample decoding is STUBBED — image/audio libraries are not in
+this environment (swap ``_decode_stub`` for PIL/ffmpeg in
+``decode_features``) — but the WAV, PNG, JPEG and BMP headers are built
+and parsed for real, with no external library.
 
 Design: binary payloads ride a ``binary`` column; metadata is a struct
 (media_type, width, height, …).  ``mapInPandas`` receives an iterator of
 Arrow record batches, so one task never materializes its whole partition —
 the only layout that survives multi-MB payloads at scale.  Repartition by
 byte budget, not row count, before heavy decode (``repartition_for_payloads``).
+Every per-row synthesizer runs through ``_with_payload`` and every decoder
+through ``_decode_meta``, whose output columns and types are a ``*_META``
+struct; the tile synthesizer and ``dhash64`` are vectorized numpy instead.
 """
 
 from __future__ import annotations
 
+import struct
+import zlib
 from collections.abc import Iterator
 from typing import Callable
 
@@ -69,6 +74,62 @@ def _decode_stub(payload: bytes) -> dict:
     return {"n_bytes": len(payload), "checksum": int.from_bytes(payload[:4], "big")}
 
 
+def _with_payload(
+    df: DataFrame, payload_col: str, make: Callable[[pd.Series], bytes]
+) -> DataFrame:
+    """``df`` plus a binary ``payload_col`` built by ``make(row)`` for each
+    row — the one Arrow-batch loop of the per-row payload synthesizers."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf.copy()
+            out[payload_col] = pdf.apply(make, axis=1)
+            yield out
+
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType(), False)]
+    )
+    return df.mapInPandas(run, schema)
+
+
+def _decode_meta(
+    df: DataFrame,
+    payload_col: str,
+    keep: list[str] | None,
+    meta: T.StructType,
+    parse: Callable[[bytes], tuple],
+) -> DataFrame:
+    """The ``keep`` columns of ``df`` (``None``: all but the payload) plus
+    one column per field of ``meta``, filled from ``parse(payload)``'s
+    tuple — the one Arrow-batch loop of the payload decoders.  Arrow casts
+    each value to its field's declared type; ``None`` becomes NULL.  The
+    payload never survives the operator, so downstream shuffles carry only
+    the metadata."""
+    if keep is None:
+        keep = [f.name for f in df.schema.fields if f.name != payload_col]
+    out_schema = T.StructType(
+        [f for f in df.schema.fields if f.name in keep] + list(meta.fields)
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            parsed = [parse(b) for b in pdf[payload_col]]
+            out = pdf[keep].copy()
+            for i, name in enumerate(meta.names):
+                out[name] = [t[i] for t in parsed]
+            yield out
+
+    return df.mapInPandas(run, out_schema)
+
+
+_FEATURES_META = T.StructType(
+    [
+        T.StructField("n_bytes", T.IntegerType(), False),
+        T.StructField("checksum", T.LongType(), False),
+    ]
+)
+
+
 def decode_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -81,58 +142,12 @@ def decode_features(
     extraction never carries raw media bytes.
     """
     decode = decode or _decode_stub
-    out_fields = [f for f in df.schema.fields if f.name != payload_col] + [
-        T.StructField("n_bytes", T.IntegerType(), False),
-        T.StructField("checksum", T.LongType(), False),
-    ]
-    out_schema = T.StructType(out_fields)
-    keep = [f.name for f in out_fields if f.name not in ("n_bytes", "checksum")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf[payload_col].map(lambda b: decode(bytes(b)))
-            out = pdf[keep].copy()
-            out["n_bytes"] = feats.map(lambda d: d["n_bytes"]).astype("int32")
-            out["checksum"] = feats.map(lambda d: d["checksum"]).astype("int64")
-            yield out
+    def parse(b: bytes) -> tuple:
+        feats = decode(bytes(b))
+        return feats["n_bytes"], feats["checksum"]
 
-    return df.mapInPandas(run, out_schema)
-
-
-def resize_payloads(
-    df: DataFrame,
-    target_width: int,
-    target_height: int,
-    payload_col: str = "payload",
-    resize: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize image payloads via mapInPandas (Arrow batches).
-
-    The pixel work is STUBBED (no imaging libs in this container): the
-    default 'resize' re-hashes the payload with the target dims — a
-    deterministic stand-in with the same schema/flow a PIL/opencv kernel
-    would have.  ``media_meta`` is updated to the target dimensions, so
-    downstream consumers see consistent metadata.
-    """
-    import hashlib
-
-    resize = resize or (
-        lambda b, w, h: hashlib.sha256(b + f"{w}x{h}".encode()).digest()
-    )
-    schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = out[payload_col].map(
-                lambda b: resize(bytes(b), target_width, target_height)
-            )
-            out["media_meta"] = out["media_meta"].map(
-                lambda m: {**m, "width": target_width, "height": target_height}
-            )
-            yield out
-
-    return df.mapInPandas(run, schema)
+    return _decode_meta(df, payload_col, None, _FEATURES_META, parse)
 
 
 def synthesize_wav_payloads(
@@ -149,37 +164,26 @@ def synthesize_wav_payloads(
     a genuine byte-format parser, not a stand-in, and the whole
     synthesize→parse round-trip is oracle-checkable (the oracle recomputes
     the expected metadata straight from the table columns)."""
-    import struct
-
     rates = [8000, 16000, 44100]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def make(row):
-                rid = int(row[id_col])
-                rate = rates[rid % 3]
-                channels = 1 + (rid % 2)
-                n = int(row[n_samples_col])
-                data_len = n * channels * 2  # 16-bit PCM
-                byte_rate = rate * channels * 2
-                hdr = (
-                    b"RIFF"
-                    + struct.pack("<I", 36 + data_len)
-                    + b"WAVEfmt "
-                    + struct.pack("<IHHIIHH", 16, 1, channels, rate, byte_rate, channels * 2, 16)
-                    + b"data"
-                    + struct.pack("<I", data_len)
-                )
-                return hdr + b"\x00" * data_len
+    def make(row):
+        rid = int(row[id_col])
+        rate = rates[rid % 3]
+        channels = 1 + (rid % 2)
+        n = int(row[n_samples_col])
+        data_len = n * channels * 2  # 16-bit PCM
+        byte_rate = rate * channels * 2
+        hdr = (
+            b"RIFF"
+            + struct.pack("<I", 36 + data_len)
+            + b"WAVEfmt "
+            + struct.pack("<IHHIIHH", 16, 1, channels, rate, byte_rate, channels * 2, 16)
+            + b"data"
+            + struct.pack("<I", data_len)
+        )
+        return hdr + b"\x00" * data_len
 
-            out = pdf.copy()
-            out[payload_col] = pdf.apply(make, axis=1)
-            yield out
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType(), False)]
-    )
-    return df.mapInPandas(run, schema)
+    return _with_payload(df, payload_col, make)
 
 
 WAV_META = T.StructType(
@@ -201,12 +205,6 @@ def decode_wav_meta(
     (sample_rate, channels, bits_per_sample, n_samples, duration_ms).
     Arrow-batched ``mapInPandas``; the payload never survives the operator,
     so downstream shuffles carry only the 5-field metadata struct."""
-    import struct
-
-    keep = keep or [f.name for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name in keep] + list(WAV_META.fields)
-    )
 
     def parse(b: bytes) -> tuple:
         if b[:4] != b"RIFF" or b[8:12] != b"WAVE" or b[12:16] != b"fmt ":
@@ -216,18 +214,7 @@ def decode_wav_meta(
         n = data_len // block_align if block_align else 0
         return rate, channels, bits, n, n * 1000 // rate
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[payload_col].map(lambda b: parse(bytes(b)))
-            out = pdf[keep].copy()
-            out["sample_rate"] = parsed.map(lambda t: t[0]).astype("int32")
-            out["channels"] = parsed.map(lambda t: t[1]).astype("int32")
-            out["bits_per_sample"] = parsed.map(lambda t: t[2]).astype("int32")
-            out["n_samples"] = parsed.map(lambda t: t[3]).astype("int64")
-            out["duration_ms"] = parsed.map(lambda t: t[4]).astype("int64")
-            yield out
-
-    return df.mapInPandas(run, out_schema)
+    return _decode_meta(df, payload_col, keep or None, WAV_META, parse)
 
 
 def repartition_for_payloads(
@@ -286,34 +273,22 @@ def synthesize_png_payloads(
     is exactly what a 100 TB curation pass reads, and it keeps the
     synthesized corpus bytes-small; pixel decoding stays honestly gated on
     imaging libs absent from this container."""
-    import struct
-    import zlib
-
     color_types = [0, 2, 6]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(row):
-            rid = int(row[id_col])
-            width = int(row[size_col]) % 640 + 1
-            height = rid % 480 + 1
-            ihdr = struct.pack(">IIBBBBB", width, height, 8, color_types[rid % 3], 0, 0, 0)
-            chunk = b"IHDR" + ihdr
-            iend = b"IEND"
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + struct.pack(">I", 13) + chunk + struct.pack(">I", zlib.crc32(chunk))
-                + struct.pack(">I", 0) + iend + struct.pack(">I", zlib.crc32(iend))
-            )
+    def make(row):
+        rid = int(row[id_col])
+        width = int(row[size_col]) % 640 + 1
+        height = rid % 480 + 1
+        ihdr = struct.pack(">IIBBBBB", width, height, 8, color_types[rid % 3], 0, 0, 0)
+        chunk = b"IHDR" + ihdr
+        iend = b"IEND"
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + struct.pack(">I", 13) + chunk + struct.pack(">I", zlib.crc32(chunk))
+            + struct.pack(">I", 0) + iend + struct.pack(">I", zlib.crc32(iend))
+        )
 
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = pdf.apply(make, axis=1)
-            yield out
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType(), False)]
-    )
-    return df.mapInPandas(run, schema)
+    return _with_payload(df, payload_col, make)
 
 
 def decode_png_meta(
@@ -324,13 +299,6 @@ def decode_png_meta(
     yielding garbage metadata.  Emits (width, height, bit_depth,
     color_type, channels, n_pixels); the payload never survives the
     operator, so downstream shuffles carry only the metadata struct."""
-    import struct
-    import zlib
-
-    keep = keep or [f.name for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name in keep] + list(PNG_META.fields)
-    )
 
     def parse(b: bytes) -> tuple:
         if b[:8] != b"\x89PNG\r\n\x1a\n":
@@ -346,18 +314,7 @@ def decode_png_meta(
             raise ValueError(f"unsupported color type {color}")
         return width, height, depth, color, _PNG_CHANNELS[color], width * height
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[payload_col].map(lambda b: parse(bytes(b)))
-            out = pdf[keep].copy()
-            for i, (name, dtype) in enumerate(
-                [("width", "int32"), ("height", "int32"), ("bit_depth", "int32"),
-                 ("color_type", "int32"), ("channels", "int32"), ("n_pixels", "int64")]
-            ):
-                out[name] = parsed.map(lambda t, i=i: t[i]).astype(dtype)
-            yield out
-
-    return df.mapInPandas(run, out_schema)
+    return _decode_meta(df, payload_col, keep or None, PNG_META, parse)
 
 
 JPEG_META = T.StructType(
@@ -387,39 +344,29 @@ def synthesize_jpeg_payloads(
     WAV paths.  Entropy-coded scan data is omitted: marker-level metadata
     (dimensions, component count, baseline-vs-progressive) is what a
     100 TB curation pass reads without decoding pixels."""
-    import struct
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(row):
-            rid = int(row[id_col])
-            width = int(row[size_col]) % 640 + 1
-            height = rid % 480 + 1
-            ncomp = 1 if rid % 2 else 3
-            sof_marker = b"\xff\xc2" if rid % 5 == 0 else b"\xff\xc0"
-            app0 = b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 72, 72, 0, 0)
-            comment = f"doc {rid}".encode()
-            comps = b"".join(
-                struct.pack(">BBB", c + 1, 0x11 if c else 0x22, 0 if c == 0 else 1)
-                for c in range(ncomp)
-            )
-            sof = struct.pack(">BHHB", 8, height, width, ncomp) + comps
-            return (
-                b"\xff\xd8"
-                + b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
-                + b"\xff\xfe" + struct.pack(">H", 2 + len(comment)) + comment
-                + sof_marker + struct.pack(">H", 2 + len(sof)) + sof
-                + b"\xff\xd9"
-            )
+    def make(row):
+        rid = int(row[id_col])
+        width = int(row[size_col]) % 640 + 1
+        height = rid % 480 + 1
+        ncomp = 1 if rid % 2 else 3
+        sof_marker = b"\xff\xc2" if rid % 5 == 0 else b"\xff\xc0"
+        app0 = b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 72, 72, 0, 0)
+        comment = f"doc {rid}".encode()
+        comps = b"".join(
+            struct.pack(">BBB", c + 1, 0x11 if c else 0x22, 0 if c == 0 else 1)
+            for c in range(ncomp)
+        )
+        sof = struct.pack(">BHHB", 8, height, width, ncomp) + comps
+        return (
+            b"\xff\xd8"
+            + b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
+            + b"\xff\xfe" + struct.pack(">H", 2 + len(comment)) + comment
+            + sof_marker + struct.pack(">H", 2 + len(sof)) + sof
+            + b"\xff\xd9"
+        )
 
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = pdf.apply(make, axis=1)
-            yield out
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType(), False)]
-    )
-    return df.mapInPandas(run, schema)
+    return _with_payload(df, payload_col, make)
 
 
 def parse_jpeg_meta_record(b: bytes) -> tuple:
@@ -430,8 +377,6 @@ def parse_jpeg_meta_record(b: bytes) -> tuple:
     missing SOF, zero dimensions) raise ``ValueError`` deterministically —
     module-level so the rejection contract is unit-testable without the
     Spark boundary (a worker-crash wrapper must never be the only evidence)."""
-    import struct
-
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: bad SOI")
     i = 2
@@ -472,24 +417,16 @@ def decode_jpeg_meta(
     ``progressive``).  Corrupt streams raise instead of yielding garbage.
     The payload never survives the operator — downstream shuffles carry
     only the metadata struct."""
-    keep = keep or [f.name for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name in keep] + list(JPEG_META.fields)
-    )
+    return _decode_meta(df, payload_col, keep or None, JPEG_META, parse_jpeg_meta_record)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[payload_col].map(lambda b: parse_jpeg_meta_record(bytes(b)))
-            out = pdf[keep].copy()
-            for i, (name, dtype) in enumerate(
-                [("width", "int32"), ("height", "int32"), ("precision", "int32"),
-                 ("n_components", "int32"), ("progressive", "bool"),
-                 ("n_pixels", "int64")]
-            ):
-                out[name] = parsed.map(lambda t, i=i: t[i]).astype(dtype)
-            yield out
 
-    return df.mapInPandas(run, out_schema)
+_BMP_META = T.StructType(
+    [
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("bits_per_pixel", T.IntegerType(), True),
+    ]
+)
 
 
 def synthesize_bmp_payloads(
@@ -505,31 +442,20 @@ def synthesize_bmp_payloads(
     so the decode round-trip is oracle-checkable from table columns alone
     (the WAV/PNG/JPEG scheme).  BMP is the little-endian counterpart to
     PNG's big-endian layout — the decoder pair proves both byte orders."""
-    import struct
-
     depths = [1, 4, 8, 24, 32]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(row):
-            rid = int(row[id_col])
-            width = int(row[size_col]) % 640 + 1
-            height = rid % 480 + 1
-            bpp = depths[rid % 5]
-            info = struct.pack(
-                "<IiiHHIIiiII", 40, width, height, 1, bpp, 0, 0, 2835, 2835, 0, 0
-            )
-            header = b"BM" + struct.pack("<IHHI", 14 + 40, 0, 0, 54)
-            return header + info
+    def make(row):
+        rid = int(row[id_col])
+        width = int(row[size_col]) % 640 + 1
+        height = rid % 480 + 1
+        bpp = depths[rid % 5]
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, width, height, 1, bpp, 0, 0, 2835, 2835, 0, 0
+        )
+        header = b"BM" + struct.pack("<IHHI", 14 + 40, 0, 0, 54)
+        return header + info
 
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = pdf.apply(make, axis=1)
-            yield out
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(payload_col, T.BinaryType(), False)]
-    )
-    return df.mapInPandas(run, schema)
+    return _with_payload(df, payload_col, make)
 
 
 def decode_bmp_meta(
@@ -544,39 +470,22 @@ def decode_bmp_meta(
     failing structural validation yield NULL metadata instead of
     erroring — corrupt binaries are data, not exceptions, in a 100 TB
     scan.  Arrow-batched mapInPandas; map-only."""
-    import struct
 
-    keep = keep or []
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(b):
-            try:
-                if b is None or len(b) < 54 or b[:2] != b"BM":
-                    return (None, None, None)
-                _size, _r1, _r2, offset = struct.unpack("<IHHI", b[2:14])
-                (
-                    bisize, width, height, planes, bpp, comp, *_rest
-                ) = struct.unpack("<IiiHHIIiiII", b[14:54])
-                if bisize != 40 or planes != 1 or offset < 54:
-                    return (None, None, None)
-                return (width, abs(height), bpp)
-            except Exception:  # noqa: BLE001 — corrupt binary = NULL row
+    def parse(b):
+        try:
+            if b is None or len(b) < 54 or b[:2] != b"BM":
                 return (None, None, None)
+            _size, _r1, _r2, offset = struct.unpack("<IHHI", b[2:14])
+            (
+                bisize, width, height, planes, bpp, comp, *_rest
+            ) = struct.unpack("<IiiHHIIiiII", b[14:54])
+            if bisize != 40 or planes != 1 or offset < 54:
+                return (None, None, None)
+            return (width, abs(height), bpp)
+        except Exception:  # noqa: BLE001 — corrupt binary = NULL row
+            return (None, None, None)
 
-        for pdf in batches:
-            meta = pdf[payload_col].map(parse)
-            out = pdf[keep].copy()
-            out["width"] = [m[0] for m in meta]
-            out["height"] = [m[1] for m in meta]
-            out["bits_per_pixel"] = [m[2] for m in meta]
-            yield out
-
-    fields = [f for f in df.schema.fields if f.name in keep] + [
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("bits_per_pixel", T.IntegerType(), True),
-    ]
-    return df.mapInPandas(run, T.StructType(fields))
+    return _decode_meta(df, payload_col, keep or [], _BMP_META, parse)
 
 
 def synthesize_tile_payloads(

@@ -12,6 +12,13 @@ Two tiers, as a real 100 TB pipeline would ship them:
     vector maps to a signature; query and candidate meet only when bucket
     signatures collide (equi-join), turning O(Q·N) into O(collisions).
     Recall is tunable via tables × bits.
+
+Each shared decision is written once: ``_top_cosines`` is the exact
+re-rank (cos DESC, id ASC, round 6) every cosine search and rerank ends
+with; ``_adc_luts``/``_adc_topk`` are the PQ and IVF-PQ lookup tables and
+shortlist merge; ``_pairs_within`` is the within-set GEMM pair kernel of
+the block-pair and SemDeDup paths; ``_train_sample`` is the hash-ordered
+sample every quantizer trains on.
 """
 
 from __future__ import annotations
@@ -63,6 +70,26 @@ def normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _scored(pairs: DataFrame, *extra: str) -> DataFrame:
+    """Candidate pairs ``(query_id, neighbor_id, *extra, __qv, __cv)`` →
+    ``(query_id, neighbor_id, *extra, __cos)``, the exact cosine."""
+    return pairs.select(
+        "query_id", "neighbor_id", *extra, cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
+    )
+
+
+def _top_cosines(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The exact re-rank every cosine search ends with: top-``k`` per
+    ``query_id`` by (``__cos`` DESC, ``neighbor_id`` ASC) — the oracles'
+    tie rule — then ``cos_sim`` rounded to 6."""
+    ranked = top_k_per_group(
+        scored, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
+    )
+    return ranked.select(
+        "query_id", "neighbor_id", *extra, F.round("__cos", 6).alias("cos_sim")
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -88,19 +115,7 @@ def cosine_topk(
     pairs = q.crossJoin(c)
     if not include_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qv"), F.col("__cv")).alias("__cos"),
-    )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    )
-    return ranked.select(
-        "query_id",
-        "neighbor_id",
-        F.round("__cos", 6).alias("cos_sim"),
-    )
+    return _top_cosines(_scored(pairs), k)
 
 
 def _directional_topk(
@@ -332,7 +347,7 @@ def ann_cosine_topk(
     candidate set.  Recall rises with ``tables``; cost with bucket size
     (·2^-bits).
     """
-    def bucketed(df: DataFrame, id_alias: str) -> DataFrame:
+    def bucketed(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
         rows = []
         for t in range(tables):
             planes = _hyperplanes(dim, bits, t, seed)
@@ -341,27 +356,19 @@ def ann_cosine_topk(
             )
         return df.select(
             F.col("__id").alias(id_alias),
-            F.col(vec_col).alias(f"__{id_alias}_v"),
+            F.col(vec_col).alias(vec_alias),
             F.explode(F.array(*rows)).alias("b"),
-        ).select(id_alias, f"__{id_alias}_v", "b.tbl", "b.sig")
+        ).select(id_alias, vec_alias, "b.tbl", "b.sig")
 
-    q = bucketed(queries.withColumn("__id", F.col(query_id)), "query_id")
-    c = bucketed(corpus.withColumn("__id", F.col(corpus_id)), "neighbor_id")
+    q = bucketed(queries.withColumn("__id", F.col(query_id)), "query_id", "__qv")
+    c = bucketed(corpus.withColumn("__id", F.col(corpus_id)), "neighbor_id", "__cv")
     cands = (
         q.join(c, on=["tbl", "sig"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__query_id_v", "__neighbor_id_v")
+        .select("query_id", "neighbor_id", "__qv", "__cv")
         .distinct()
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__query_id_v"), F.col("__neighbor_id_v")).alias("__cos"),
-    )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    )
-    return ranked.select("query_id", "neighbor_id", F.round("__cos", 6).alias("cos_sim"))
+    return _top_cosines(_scored(cands), k)
 
 
 _PAIR_SCHEMA = "id_a long, id_b long, cos_sim double"
@@ -389,9 +396,6 @@ def cosine_dedup_pairs(
     :func:`embedding_dedup_candidates` is the LSH-bucketed scale path with
     identical output semantics minus recall.
     """
-    import numpy as np
-    import pandas as pd
-
     if n_blocks is None:
         # one cheap count (parquet metadata / light scan) sizes the grid so a
         # block-pair task multiplies ~rows_per_block² doubles — bounded memory
@@ -424,42 +428,46 @@ def cosine_dedup_pairs(
 
     def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = key
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
+        a = pdf[pdf["role"] == "a"]
         if bi == bj:
-            sub = pdf[pdf["role"] == "a"]
-            if len(sub) < 2:
-                return empty
-            ids = sub["id"].to_numpy(dtype=np.int64)
-            m = np.array(list(sub["v"]), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            sims = m @ m.T
-            keep = (sims >= cos_threshold) & (ids[:, None] < ids[None, :])
-            ai, bix = np.nonzero(keep)
-            id_a, id_b = ids[ai], ids[bix]
-            cs = sims[ai, bix]
-        else:
-            a = pdf[pdf["role"] == "a"]
-            b = pdf[pdf["role"] == "b"]
-            if not len(a) or not len(b):
-                return empty
-            ia = a["id"].to_numpy(dtype=np.int64)
-            ib = b["id"].to_numpy(dtype=np.int64)
-            ma = np.array(list(a["v"]), dtype=np.float64)
-            mb = np.array(list(b["v"]), dtype=np.float64)
-            ma /= np.linalg.norm(ma, axis=1, keepdims=True)
-            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
-            sims = ma @ mb.T
-            ai, bix = np.nonzero(sims >= cos_threshold)
-            cs = sims[ai, bix]
-            # blocks are disjoint, so ordering within a pair is arbitrary —
-            # canonicalize to id_a < id_b
-            id_a = np.minimum(ia[ai], ib[bix])
-            id_b = np.maximum(ia[ai], ib[bix])
+            return _pairs_within(a["id"], a["v"], cos_threshold)
+        b = pdf[pdf["role"] == "b"]
+        if not len(a) or not len(b):
+            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
+        ia = a["id"].to_numpy(dtype=np.int64)
+        ib = b["id"].to_numpy(dtype=np.int64)
+        ma = np.array(list(a["v"]), dtype=np.float64)
+        mb = np.array(list(b["v"]), dtype=np.float64)
+        ma /= np.linalg.norm(ma, axis=1, keepdims=True)
+        mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+        sims = ma @ mb.T
+        ai, bix = np.nonzero(sims >= cos_threshold)
+        # blocks are disjoint, so ordering within a pair is arbitrary —
+        # canonicalize to id_a < id_b
         return pd.DataFrame(
-            {"id_a": id_a, "id_b": id_b, "cos_sim": np.round(cs, 6)}
+            {
+                "id_a": np.minimum(ia[ai], ib[bix]),
+                "id_b": np.maximum(ia[ai], ib[bix]),
+                "cos_sim": np.round(sims[ai, bix], 6),
+            }
         )
 
     return rep.groupBy("bi", "bj").applyInPandas(score, _PAIR_SCHEMA)
+
+
+def _pairs_within(ids: pd.Series, vecs: pd.Series, threshold: float) -> pd.DataFrame:
+    """Every pair of one set with ``id_a < id_b`` and cosine ≥
+    ``threshold``: one normalized self-GEMM; ``cos_sim`` rounded to 6."""
+    if len(ids) < 2:
+        return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
+    ids = ids.to_numpy(dtype=np.int64)
+    m = np.array(list(vecs), dtype=np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
+    ai, bi = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
+    return pd.DataFrame(
+        {"id_a": ids[ai], "id_b": ids[bi], "cos_sim": np.round(sims[ai, bi], 6)}
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -483,6 +491,17 @@ def _kmeans_centroids(mat, n_lists: int, seed: int, iters: int = 10):
                 cent[c] = members.mean(axis=0)
         cent /= np.linalg.norm(cent, axis=1, keepdims=True)
     return cent
+
+
+def _train_sample(corpus: DataFrame, vec_col: str, n: int) -> np.ndarray:
+    """Up to ``n`` vectors ordered by xxhash64 of the vector, collected as
+    a float64 matrix — the training sample of every quantizer here.
+    Deterministic like a prefix, but uniform over the whole corpus: a plain
+    ``limit()`` on an ingestion-ordered table would train on the first
+    partitions only and can yield degenerate centroids.
+    TakeOrderedAndProject keeps it a distributed top-n, not a full sort."""
+    rows = corpus.select(vec_col).orderBy(F.xxhash64(F.col(vec_col))).limit(n).collect()
+    return np.array([r[0] for r in rows], dtype=np.float64)
 
 
 def ivf_cosine_topk(
@@ -510,18 +529,7 @@ def ivf_cosine_topk(
     """
     from pyspark.sql import types as T
 
-    # Hash-ordered sample: deterministic like a prefix, but draws uniformly
-    # from the whole corpus (a plain limit() on an ingestion-ordered parquet
-    # table would train k-means on the first partitions only and can yield
-    # degenerate centroids).  TakeOrderedAndProject keeps this a distributed
-    # top-k, not a full sort.
-    sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col)))
-        .limit(sample_size)
-        .collect()
-    )
-    cent = _kmeans_centroids(np.array([r[0] for r in sample], dtype=np.float64), n_lists, seed)
+    cent = _kmeans_centroids(_train_sample(corpus, vec_col, sample_size), n_lists, seed)
     bc = corpus.sparkSession.sparkContext.broadcast(cent)
 
     @F.pandas_udf(T.IntegerType())
@@ -552,14 +560,8 @@ def ivf_cosine_topk(
     cands = q_idx.join(c_idx, on="__list").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    scored = cands.select(
-        "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
-    )
-    ranked = top_k_per_group(
-        scored.dropDuplicates(["query_id", "neighbor_id"]),
-        ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k,
-    )
-    return ranked.select("query_id", "neighbor_id", F.round("__cos", 6).alias("cos_sim"))
+    # dedup after scoring: ahead of the cosine it would carry both vectors
+    return _top_cosines(_scored(cands).dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def ivf_build_centroids(
@@ -577,17 +579,7 @@ def ivf_build_centroids(
     sample is hash-ordered (xxhash64 of the vector) so it is deterministic
     yet uniform over the corpus — a raw prefix limit() would see only the
     first partitions of an ingestion-ordered table."""
-    import numpy as np
-
-    sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col)))
-        .limit(sample_size)
-        .collect()
-    )
-    cent = _kmeans_centroids(
-        np.array([r[0] for r in sample], dtype=np.float64), n_lists, seed
-    )
+    cent = _kmeans_centroids(_train_sample(corpus, vec_col, sample_size), n_lists, seed)
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)]
     return corpus.sparkSession.createDataFrame(
         rows, "list_id int, centroid array<double>"
@@ -701,13 +693,7 @@ def ivf_search(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
-    )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    )
-    return ranked.select("query_id", "neighbor_id", F.round("__cos", 6).alias("cos_sim"))
+    return _top_cosines(_scored(cands), k)
 
 
 def quantize_embeddings(
@@ -831,18 +817,7 @@ def semantic_dedup_pairs(
         raise ValueError(f"semantic_dedup_pairs: assign={assign!r}")
 
     def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        m = np.array(list(pdf["__v"]), dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        sims = m @ m.T
-        keep = (sims >= cos_threshold) & (ids[:, None] < ids[None, :])
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"id_a": ids[ai], "id_b": ids[bi], "cos_sim": np.round(sims[ai, bi], 6)}
-        )
+        return _pairs_within(pdf["__id"], pdf["__v"], cos_threshold)
 
     grouped = assigned.select(
         F.col(id_col).cast("long").alias("__id"),
@@ -1088,13 +1063,7 @@ def pq_train(
     is m·k×(d/m) — tiny).  Plain L2 k-means per subspace (PQ quantizes
     residual geometry; spherical normalization would distort subvectors).
     """
-    sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col)))
-        .limit(sample_size)
-        .collect()
-    )
-    mat = np.array([r[0] for r in sample], dtype=np.float64)
+    mat = _train_sample(corpus, vec_col, sample_size)
     d = mat.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -1193,6 +1162,49 @@ def pq_decode(
     return df.withColumn(out_col, decode(F.col(codes_col)))
 
 
+_ADC_SCHEMA = "query_id long, neighbor_id long, approx_dist double"
+
+
+def _adc_luts(qvecs: list, cb: np.ndarray) -> np.ndarray:
+    """ADC lookup tables ``LUT[q, s, c] = ‖q_s − c_{s,c}‖²`` of the query
+    vectors ``qvecs`` against the (m, k, dsub) codebook array ``cb``."""
+    mm, kk, dsub = cb.shape
+    qmat = np.asarray(qvecs, dtype=np.float64).reshape(len(qvecs), mm * dsub)
+    luts = np.empty((len(qmat), mm, kk), dtype=np.float64)
+    for s in range(mm):
+        diff = qmat[:, None, s * dsub : (s + 1) * dsub] - cb[s][None, :, :]
+        luts[:, s, :] = (diff**2).sum(axis=2)
+    return luts
+
+
+def _adc_topk(
+    per_part: DataFrame,
+    queries: DataFrame,
+    enc: DataFrame,
+    k: int,
+    rerank: int | None,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """Merge the per-partition ADC shortlists (``_ADC_SCHEMA`` rows):
+    drop each query's own row, then either keep the top ``k`` by
+    (approx_dist, neighbor_id) with ``approx_dist`` rounded to 6
+    (``rerank=None``), or keep a ``rerank``-row shortlist and re-rank it by
+    exact cosine against the true vectors ``enc`` carries."""
+    merged = per_part.filter(F.col("query_id") != F.col("neighbor_id"))
+    by_dist = [F.asc("approx_dist"), F.asc("neighbor_id")]
+    if rerank is None:
+        return top_k_per_group(merged, ["query_id"], by_dist, k).select(
+            "query_id", "neighbor_id", F.round("approx_dist", 6).alias("approx_dist")
+        )
+    ranked = top_k_per_group(merged, ["query_id"], by_dist, max(k, rerank))
+    qv = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("__qv"))
+    cv = enc.select(F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+    exact = ranked.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
+    return _top_cosines(_scored(exact), k)
+
+
 def pq_topk(
     queries: DataFrame,
     encoded_corpus: DataFrame,
@@ -1224,20 +1236,11 @@ def pq_topk(
     rerank stage touches shortlist·|Q| rows only."""
     shortlist = max(k, rerank or 0)
     cb = _codebook_array(codebooks)
-    mm, kk, dsub = cb.shape
+    mm = cb.shape[0]
     qrows = queries.select(query_id, vec_col).collect()
     qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    # LUT[q, s, c] = ‖q_s − c_{s,c}‖²
-    luts = np.empty((len(qids), mm, kk), dtype=np.float64)
-    for s in range(mm):
-        qs = qmat[:, s * dsub : (s + 1) * dsub]
-        diff = qs[:, None, :] - cb[s][None, :, :]
-        luts[:, s, :] = (diff**2).sum(axis=2)
-    sc = encoded_corpus.sparkSession.sparkContext
-    bc = sc.broadcast((qids, luts))
-
-    schema = "query_id long, neighbor_id long, approx_dist double"
+    luts = _adc_luts([r[1] for r in qrows], cb)
+    bc = encoded_corpus.sparkSession.sparkContext.broadcast((qids, luts))
 
     def scan(batches):
         qids_, luts_ = bc.value
@@ -1265,31 +1268,10 @@ def pq_topk(
 
     per_part = encoded_corpus.select(
         F.col(corpus_id).alias("__nid"), F.col(codes_col)
-    ).mapInPandas(scan, schema)
-    merged = per_part.filter(F.col("query_id") != F.col("neighbor_id"))
-    ranked = top_k_per_group(
-        merged, ["query_id"], [F.asc("approx_dist"), F.asc("neighbor_id")], shortlist
+    ).mapInPandas(scan, _ADC_SCHEMA)
+    return _adc_topk(
+        per_part, queries, encoded_corpus, k, rerank, query_id, corpus_id, vec_col
     )
-    if rerank is None:
-        return top_k_per_group(
-            ranked, ["query_id"], [F.asc("approx_dist"), F.asc("neighbor_id")], k
-        ).select(
-            "query_id", "neighbor_id", F.round("approx_dist", 6).alias("approx_dist")
-        )
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    cv = encoded_corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    )
-    exact = (
-        ranked.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos"))
-    )
-    return top_k_per_group(
-        exact, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", F.round("__cos", 6).alias("cos_sim"))
 
 
 def ivfpq_topk(
@@ -1379,7 +1361,7 @@ def ivfpq_search(
     # per-(query, probed-list) residual LUTs — |Q|·n_probe·m·k doubles,
     # tiny for any sane query batch
     cbarr = _codebook_array(cb)
-    mm, kk, dsub = cbarr.shape
+    mm = cbarr.shape[0]
     qa = ivf_assign(queries, cent, query_id, vec_col, n_probe=n_probe)
     q_rows = (
         qa.join(F.broadcast(centd), "list_id")
@@ -1390,12 +1372,7 @@ def ivfpq_search(
         .collect()
     )
     luts_by_list: dict[int, list] = {}
-    for r in q_rows:
-        qres = np.array(r["__qres"], dtype=np.float64)
-        lut = np.empty((mm, kk), dtype=np.float64)
-        for s in range(mm):
-            diff = qres[s * dsub : (s + 1) * dsub][None, :] - cbarr[s]
-            lut[s] = (diff**2).sum(axis=1)
+    for r, lut in zip(q_rows, _adc_luts([r["__qres"] for r in q_rows], cbarr)):
         luts_by_list.setdefault(int(r["list_id"]), []).append((r[0], lut))
     bc = queries.sparkSession.sparkContext.broadcast(luts_by_list)
     shortlist = max(k, rerank or 0)
@@ -1431,31 +1408,8 @@ def ivfpq_search(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    per_part = enc.select("__nid", "list_id", "codes").mapInPandas(
-        scan, "query_id long, neighbor_id long, approx_dist double"
-    )
-    merged = per_part.filter(F.col("query_id") != F.col("neighbor_id"))
-    ranked = top_k_per_group(
-        merged, ["query_id"], [F.asc("approx_dist"), F.asc("neighbor_id")], shortlist
-    )
-    if rerank is None:
-        return top_k_per_group(
-            ranked, ["query_id"], [F.asc("approx_dist"), F.asc("neighbor_id")], k
-        ).select(
-            "query_id", "neighbor_id", F.round("approx_dist", 6).alias("approx_dist")
-        )
-    qv = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("__qv"))
-    cv = enc.select(F.col("__nid").alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    exact = (
-        ranked.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
-        )
-    )
-    return top_k_per_group(
-        exact, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", F.round("__cos", 6).alias("cos_sim"))
+    per_part = enc.select("__nid", "list_id", "codes").mapInPandas(scan, _ADC_SCHEMA)
+    return _adc_topk(per_part, queries, enc, k, rerank, query_id, "__nid", vec_col)
 
 
 def pq_build_index(
@@ -1553,24 +1507,13 @@ def hard_negatives(
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
-        F.col(label_col).alias("__cl"),
+        F.col(label_col).alias("neg_label"),
     )
     pairs = q.crossJoin(c).filter(
         (F.col("query_id") != F.col("neighbor_id"))
-        & ~F.col("__ql").eqNullSafe(F.col("__cl"))
+        & ~F.col("__ql").eqNullSafe(F.col("neg_label"))
     )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.col("__cl").alias("neg_label"),
-        cosine(F.col("__qv"), F.col("__cv")).alias("__cos"),
-    )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.desc("__cos"), F.asc("neighbor_id")], k
-    )
-    return ranked.select(
-        "query_id", "neighbor_id", "neg_label", F.round("__cos", 6).alias("cos_sim")
-    )
+    return _top_cosines(_scored(pairs, "neg_label"), k, "neg_label")
 
 
 def embedding_drift(
@@ -1628,7 +1571,6 @@ def semantic_decontaminate(
     corpus_id: str = "vec_id",
     bench_id: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
     max_benchmark: int = 500_000,
 ) -> DataFrame:
     """Embedding-space decontamination (the semantic complement of the
@@ -1638,79 +1580,55 @@ def semantic_decontaminate(
     decontamination misses it (Yang et al. 2023, "Rethinking Benchmark
     and Contamination").  Returns (corpus_id, max_cos, contaminated).
 
-    Plan shape: broadcast(benchmark) ⋈ corpus — benchmarks are small
-    (eval suites, thousands of rows), the corpus NEVER shuffles and is
-    scanned exactly once; the per-document max is a map-side-combinable
-    aggregate on the corpus id.  At 100 TB this is a single pass."""
-    if use_arrow:
-        # Arrow GEMM path (the _directional_topk shape): the L2-normalized
-        # benchmark matrix ships once in the closure, each corpus
-        # partition is one float64 numpy GEMM + row max — ~10x the
-        # per-pair codegen fold at fixture scale, same doubles modulo
-        # summation order (both engines already differ there; round 6
-        # absorbs it, the cosine_topk oracle precedent).
-        b_rows = benchmark.select(
-            F.col(bench_id), F.col(vec_col)
-        ).limit(max_benchmark + 1).collect()
-        if len(b_rows) > max_benchmark:
-            raise ValueError(
-                f"semantic_decontaminate: benchmark exceeds {max_benchmark} "
-                "rows — eval suites are small by design; split the set"
+    Plan shape: one Arrow ``mapInPandas`` over the corpus, no join — the
+    :func:`_directional_topk` shape.  The benchmark (eval suites are small;
+    RAISES past ``max_benchmark`` rows) is collected, L2-normalized and
+    shipped once in the closure; each corpus batch is one float64 GEMM +
+    row max, so the corpus NEVER shuffles and is scanned exactly once.
+    ~10x the per-pair codegen fold at fixture scale, same doubles modulo
+    summation order (round 6 absorbs it; the ``semantic_decon`` DuckDB
+    oracle checks it).  An empty benchmark yields zero rows."""
+    b_rows = benchmark.select(
+        F.col(bench_id), F.col(vec_col)
+    ).limit(max_benchmark + 1).collect()
+    if len(b_rows) > max_benchmark:
+        raise ValueError(
+            f"semantic_decontaminate: benchmark exceeds {max_benchmark} "
+            "rows — eval suites are small by design; split the set"
+        )
+    if not b_rows:
+        # np.asarray([]) is 1-D, so norm(axis=1) and bm.T would raise
+        # AxisError on the driver/executor
+        return corpus.select(
+            F.col(corpus_id),
+            F.lit(None).cast("double").alias("max_cos"),
+            F.lit(False).alias("contaminated"),
+        ).limit(0)
+    bm = np.asarray([r[1] for r in b_rows], dtype=np.float64)
+    bm /= np.maximum(np.linalg.norm(bm, axis=1, keepdims=True), 1e-30)
+    thr = float(threshold)
+    cid, vcol = corpus_id, vec_col
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.asarray(list(pdf[vcol]), dtype=np.float64)
+            m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
+            mx = (m @ bm.T).max(axis=1)
+            yield pd.DataFrame(
+                {
+                    cid: pdf[cid].values,
+                    "max_cos": np.round(mx, 6),
+                    "contaminated": mx >= thr,
+                }
             )
-        if not b_rows:
-            # empty benchmark: mirror the broadcast-join path (cross join
-            # with an empty side aggregates to ZERO rows) instead of
-            # crashing — np.asarray([]) is 1-D, so norm(axis=1) and bm.T
-            # would raise AxisError on the driver/executor
-            return corpus.select(
-                F.col(corpus_id),
-                F.lit(None).cast("double").alias("max_cos"),
-                F.lit(False).alias("contaminated"),
-            ).limit(0)
-        bm = np.asarray([r[1] for r in b_rows], dtype=np.float64)
-        bm /= np.maximum(np.linalg.norm(bm, axis=1, keepdims=True), 1e-30)
-        thr = float(threshold)
-        cid, vcol = corpus_id, vec_col
 
-        def score(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.asarray(list(pdf[vcol]), dtype=np.float64)
-                m /= np.maximum(
-                    np.linalg.norm(m, axis=1, keepdims=True), 1e-30
-                )
-                mx = (m @ bm.T).max(axis=1)
-                yield pd.DataFrame(
-                    {
-                        cid: pdf[cid].values,
-                        "max_cos": np.round(mx, 6),
-                        "contaminated": mx >= thr,
-                    }
-                )
-
-        id_t = dict(corpus.dtypes)[corpus_id]
-        # single-split corpora would serialize the GEMM on one core (see
-        # _directional_topk); never repartitions down, no shuffle at scale
-        return ensure_parallelism(corpus.select(corpus_id, vec_col)).mapInPandas(
-            score, f"{corpus_id} {id_t}, max_cos double, contaminated boolean"
-        )
-    b = F.broadcast(
-        benchmark.select(
-            F.col(bench_id).alias("__bid"), F.col(vec_col).alias("__bv")
-        )
-    )
-    c = corpus.select(F.col(corpus_id).alias("__cid"), F.col(vec_col).alias("__cv"))
-    scored = c.crossJoin(b).select(
-        "__cid", cosine(F.col("__cv"), F.col("__bv")).alias("__cos")
-    )
-    agg = scored.groupBy("__cid").agg(F.max("__cos").alias("__mx"))
-    return agg.select(
-        F.col("__cid").alias(corpus_id),
-        F.round("__mx", 6).alias("max_cos"),
-        (F.col("__mx") >= F.lit(float(threshold))).alias("contaminated"),
+    id_t = dict(corpus.dtypes)[corpus_id]
+    # single-split corpora would serialize the GEMM on one core (see
+    # _directional_topk); never repartitions down, no shuffle at scale
+    return ensure_parallelism(corpus.select(corpus_id, vec_col)).mapInPandas(
+        score, f"{corpus_id} {id_t}, max_cos double, contaminated boolean"
     )
 
 

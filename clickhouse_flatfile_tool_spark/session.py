@@ -7,8 +7,10 @@ one long-lived session reused across queries (SURVEY.md §2.9 C2).
 Config choices (rationale):
   * AQE on — runtime re-plan: skew-join splitting, partition coalescing,
     dynamic broadcast; this is the 100 TB safety net.
-  * ``spark.sql.shuffle.partitions`` default 32 matches the local[32] harness;
-    at cluster scale AQE coalescing makes the static number far less critical.
+  * ``spark.sql.shuffle.partitions`` is the ``shuffle_partitions`` argument,
+    default 32, which matches the local[32] harness; no environment variable
+    overrides it.  The test session and ``scripts/selfcheck.py`` pass 8.  At
+    cluster scale AQE coalescing makes the static number far less critical.
   * Arrow enabled — every pandas UDF transfers columnar batches, not rows.
   * ``maxPartitionBytes`` left at default 128 MB — correct for both local
     parquet fixtures and a 100 TB scan (≈800k input splits on 1000 executors).
@@ -65,7 +67,7 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def get_spark(
     app_name: str = "clickhouse-flatfile-tool-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -77,8 +79,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)

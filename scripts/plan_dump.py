@@ -2,10 +2,11 @@
 ``<plans-dir>/<name>_<tag>.txt``, the before/after plan evidence a change
 that rewrites a plan commits next to its numbers.
 
-Expression ids (``doc_id#123``) and exchange plan ids (``[plan_id=45]``)
-are masked to ``#N`` and ``plan_id=N``: both count up per session, so two
-runs of the same plan differ only in them, and masking lets a before/after
-pair diff cleanly.  Timing is perfbench's job; this script
+Expression ids (``doc_id#123``), exchange plan ids (``[plan_id=45]``) and
+lambda-variable counters (``lambda x_287``) are masked to ``#N``,
+``plan_id=N`` and ``lambda x_N``: all three count up per session, so two
+builds of the same plan differ only in them, and masking lets a
+before/after pair diff cleanly.  Timing is perfbench's job; this script
 only builds each entry's DataFrame and explains it.
 
 Usage:
@@ -28,11 +29,12 @@ import __spark_entry__ as entrymod  # noqa: E402
 from clickhouse_flatfile_tool_spark import get_spark  # noqa: E402
 from clickhouse_flatfile_tool_spark.plans import explain_str  # noqa: E402
 
-_SESSION_IDS = re.compile(r"(#|plan_id=)\d+")
+_SESSION_IDS = re.compile(r"(#|plan_id=|lambda \w+_)\d+")
 
 
 def mask_ids(plan: str) -> str:
-    """The plan text with every expression id and plan id masked."""
+    """The plan text with every expression id, plan id and lambda-variable
+    counter masked."""
     return _SESSION_IDS.sub(r"\1N", plan)
 
 

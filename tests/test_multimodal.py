@@ -32,17 +32,6 @@ def test_decode_features_deterministic(tables):
     assert all(r[1] == 64 for r in a)
 
 
-def test_resize_updates_meta_and_payload(tables):
-    df = M.attach_payload(docs_sample(tables))
-    out = M.resize_payloads(df, 224, 224)
-    assert out.schema == df.schema  # schema-preserving
-    row = out.first()
-    assert row.media_meta.width == 224 and row.media_meta.height == 224
-    orig = {r.doc_id: bytes(r.payload) for r in df.collect()}
-    for r in out.collect():
-        assert bytes(r.payload) != orig[r.doc_id]  # payload actually transformed
-
-
 def test_frame_sample_counts(tables):
     df = M.attach_payload(
         docs_sample(tables), media_type="video", duration_expr=F.col("n_chars") * 40

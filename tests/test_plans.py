@@ -347,3 +347,20 @@ def test_tpch_q21_one_lineitem_scan(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("lineitem.parquet") <= 1 or plan.count("lineitem") <= 2, plan
+
+
+def test_plan_dump_masks_session_counters(spark):
+    """Two builds of one plan differ only in session counters: expression
+    ids, and the lambda-variable suffix every higher-order function call
+    draws afresh.  ``plan_dump.mask_ids`` masks both, so the two dumps
+    compare equal."""
+    from scripts.plan_dump import mask_ids
+
+    df = spark.createDataFrame([(1, [1.0, 2.0])], "id long, v array<double>")
+
+    def build():
+        return df.select(F.aggregate("v", F.lit(0.0), lambda a, x: a + x).alias("s"))
+
+    a, b = explain_str(build()), explain_str(build())
+    assert "lambda x_" in a and a != b
+    assert mask_ids(a) == mask_ids(b)

@@ -624,40 +624,40 @@ def test_embedding_drift_identical_and_opposite(spark):
 
 def test_semantic_decontaminate_flags_and_scale_shape(spark):
     """Hand-built vectors: a corpus doc equal to a benchmark vector flags
-    at threshold 0.95; an orthogonal one doesn't.  The plan broadcasts
-    the benchmark (no corpus shuffle before the aggregate)."""
+    at threshold 0.95; an orthogonal one doesn't.  The rows equal a numpy
+    max-cosine over the same vectors, and the plan is one Arrow pass over
+    the corpus with no join."""
+    import numpy as np
+
     from clickhouse_flatfile_tool_spark.operators.similarity import (
         semantic_decontaminate,
     )
 
+    bench_vecs = {100: [1.0, 0.0, 0.0], 101: [0.0, 1.0, 0.0]}
+    corpus_vecs = {1: [2.0, 0.0, 0.0], 2: [0.0, 0.0, 3.0], 3: [1.0, 1.0, 0.0]}
     bench = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<float>",
+        list(bench_vecs.items()), "vec_id long, embedding array<float>"
     )
     corpus = spark.createDataFrame(
-        [(1, [2.0, 0.0, 0.0]), (2, [0.0, 0.0, 3.0]), (3, [1.0, 1.0, 0.0])],
-        "vec_id long, embedding array<float>",
+        list(corpus_vecs.items()), "vec_id long, embedding array<float>"
     )
-    got = {
-        r.vec_id: (r.max_cos, r.contaminated)
-        for r in semantic_decontaminate(corpus, bench, threshold=0.95).collect()
-    }
+    out = semantic_decontaminate(corpus, bench, threshold=0.95)
+    got = {r.vec_id: (r.max_cos, r.contaminated) for r in out.collect()}
     assert got[1] == (1.0, True)          # parallel to bench 100
     assert got[2][1] is False             # orthogonal to both
     assert abs(got[3][0] - 0.707107) < 1e-6 and got[3][1] is False
-    # the codegen-fold fallback computes identical rows (oracle twin),
-    # and its plan broadcasts the benchmark side
-    fold = semantic_decontaminate(corpus, bench, threshold=0.95, use_arrow=False)
-    assert {
-        r.vec_id: (r.max_cos, r.contaminated) for r in fold.collect()
-    } == got
-    plan = fold._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-    # empty benchmark: both paths return zero rows — the Arrow path used
-    # to AxisError on np.asarray([]) before collecting (ADVICE r4)
-    empty = bench.limit(0)
-    assert semantic_decontaminate(corpus, empty).count() == 0
-    assert semantic_decontaminate(corpus, empty, use_arrow=False).count() == 0
+    bm = np.array(list(bench_vecs.values()))
+    bm /= np.linalg.norm(bm, axis=1, keepdims=True)
+    want = {}
+    for vid, v in corpus_vecs.items():
+        mx = float((bm @ (np.array(v) / np.linalg.norm(v))).max())
+        want[vid] = (round(mx, 6), mx >= 0.95)
+    assert got == want
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and "Join" not in plan
+    # empty benchmark: zero rows — np.asarray([]) used to AxisError
+    # before collecting (ADVICE r4)
+    assert semantic_decontaminate(corpus, bench.limit(0)).count() == 0
 
 
 def test_cosine_topk_fast_equals_fold(spark, sf_dir):
